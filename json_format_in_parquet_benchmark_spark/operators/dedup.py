@@ -166,8 +166,14 @@ def minhash_signatures(
 
 def minhash_signatures_arrow(docsets: DataFrame, k: int = 16) -> DataFrame:
     """Single-pass Arrow kernel for the MinHash signature stage: one row per
-    doc with k MinHash components m0..m{k-1}, bit-identical to the
-    explode+groupBy form in :func:`minhash_signatures`.
+    doc with k MinHash components m0..m{k-1}, whose values are bit-identical
+    to those of the explode+groupBy form in :func:`minhash_signatures`.
+
+    NOT a drop-in replacement: the output lacks the ``n_sh`` shingle-count
+    column :func:`minhash_signatures` emits.  It is kept only as the
+    reproducible rejected arm of the round-12 MinHash-kernel experiment
+    (measured slower than the JVM form; scripts/probe_minhash_kernel.py and
+    scripts/dump_r12_plans.py), so do not register a plan on it.
 
     ``docsets`` is the persisted (doc_id, shset) frame every MinHash
     pipeline already materializes.  Because the shingle set is ALREADY

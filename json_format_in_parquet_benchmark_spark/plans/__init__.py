@@ -42,7 +42,7 @@ from . import queries_pipeline  # noqa: E402,F401
 # r6-stale entries (cheap singles first; the slow composed/streaming
 # ones sit past the window as the round-13 TODO so a truncated pass
 # still covers everything cheap).  After this round the stalest
-# evidence is r6 with the 19 staged entries left.
+# evidence is r6 with the 16 staged entries left.
 _EVIDENCE_PRIORITY = (
     # -- the r11-added entry with NO driver evidence yet (verdict item 1) --
     "dedup_url_canonical",
@@ -101,7 +101,7 @@ _EVIDENCE_PRIORITY = (
     "scan_pyds_ndjson_ranges",
     "graph_bfs_distance",
 )
-# ROUND-13 EVIDENCE TODO (registry-checked below): the 19 r6-stale
+# ROUND-13 EVIDENCE TODO (registry-checked below): the 16 r6-stale
 # entries the round-12 window could not fit -- the slow composed /
 # streaming ones, deliberately deferred as a block so this round's
 # window stays inside the driver's time budget.  Fill the round-13

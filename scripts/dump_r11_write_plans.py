@@ -7,6 +7,8 @@ Intercepts DataFrameWriter.parquet, dumps the writer's source-frame plan to
 <out_dir>/<query>_write<N>_<suffix>.txt, then performs the real write.
 
 Usage: python scripts/dump_r11_write_plans.py <out_dir> <suffix> <sf_dir> name [name ...]
+
+Exits 1 if any query raised or had no write plan captured.
 """
 
 from __future__ import annotations
@@ -54,6 +56,7 @@ def main() -> None:
     _STATE["out_dir"], _STATE["suffix"] = out_dir, suffix
     rw.DataFrameWriter.parquet = _capturing_parquet
     spark = get_spark(app_name="jfipb-r11-write-plans")
+    failed = False
     for name in names:
         q = REGISTRY.get(name)
         if q is None:
@@ -63,6 +66,7 @@ def main() -> None:
         try:
             q.fn(spark, sf_dir).collect()
         except Exception as exc:
+            failed = True
             print(f"ERROR {name}: {exc}", file=sys.stderr)
         # Evidence-completeness guard (ADVICE r11): only
         # DataFrameWriter.parquet is intercepted, so a query writing via
@@ -70,6 +74,7 @@ def main() -> None:
         # uncaptured -- fail loudly instead of emitting a hole in the
         # evidence set.
         if _STATE["n"] == 0:
+            failed = True
             print(
                 f"ERROR {name}: zero write plans captured -- the query "
                 "either does not write or writes through a sink this "
@@ -80,6 +85,8 @@ def main() -> None:
             )
         release_caches()
     spark.stop()
+    if failed:
+        sys.exit(1)
 
 
 if __name__ == "__main__":
