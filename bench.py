@@ -88,17 +88,24 @@ _EXEC_METRIC_KEYS = {
     "localBytesRead": "shuffle_read_bytes",
     "remoteBytesRead": "shuffle_read_bytes",
     "filesSize": "scan_bytes",
+    # Python boundary (timing metrics are in ms): boot = forking a worker,
+    # init = per-task set-up before the first batch, total = the whole run
+    "pythonBootTime": "python_boot_ms",
+    "pythonInitTime": "python_init_ms",
+    "pythonTotalTime": "python_total_ms",
 }
 
 
 def _exec_metrics(df) -> dict:
     """Aggregate executed-plan SQL metrics (post-collect): total shuffle
-    write/read bytes, bytes scanned, and exchange/broadcast node counts.
-    These quantify the shuffle-discipline claims mechanically -- a plan
-    regression that doubles shuffled bytes shows up here even when wall
-    time hides in machine noise."""
+    write/read bytes, bytes scanned, exchange/broadcast node counts, and
+    the Python-worker boot/init/total ms summed over the plan's Python
+    nodes.  These quantify the shuffle-discipline claims mechanically -- a
+    plan regression that doubles shuffled bytes shows up here even when
+    wall time hides in machine noise."""
     acc = {"shuffle_write_bytes": 0, "shuffle_read_bytes": 0, "scan_bytes": 0,
-           "n_shuffles": 0, "n_broadcasts": 0}
+           "n_shuffles": 0, "n_broadcasts": 0, "python_boot_ms": 0,
+           "python_init_ms": 0, "python_total_ms": 0}
 
     def walk(node):
         cls = node.getClass().getSimpleName()
@@ -179,11 +186,13 @@ def main() -> None:
     # timings reflect the plan, not first-run codegen/JIT -- the same
     # warmup-then-measure discipline as the reference's criterion harness
     # (/root/reference/benches/encode.rs runs criterion warmup iterations).
-    for q in bench_queries.values():
+    # A failed warm-up does not stop the bench; it is recorded, not hidden.
+    warmup_failures: dict[str, str] = {}
+    for name, q in bench_queries.items():
         try:
             q.fn(spark, "/root/testdata/sf0.001").count()
-        except Exception:
-            pass  # a warmup failure will resurface, timed, in the real run
+        except Exception as exc:
+            warmup_failures[name] = repr(exc)
 
     t_phase = _phase("warmup", t_phase)
 
@@ -451,6 +460,7 @@ def main() -> None:
             for n, t in timings.items()
         },
         "sf": infer_sf(SF_DIR),
+        "warmup_failures": warmup_failures,
         "rows": rows,
         "queries_trials": trials,
         "plan_hash": plan_hashes,

@@ -20,6 +20,12 @@ Layout:
   operators/ - dedup, similarity, as-of join, multimodal plumbing
   plans/     - the query registry driving __spark_entry__ (query + oracle SQL)
   streaming/ - Structured Streaming variants (windowed aggs, sessionization)
+
+Importing the package installs ``_zipimport_gate``, which stops each Python
+worker task from re-reading unchanged zip archives (pyspark.zip, the
+spark-core jar) on CPython < 3.13.
 """
+
+from . import _zipimport_gate  # noqa: F401
 
 __version__ = "0.1.0"

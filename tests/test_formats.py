@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import json
 
+import pyarrow as pa
 import pytest
 
 from json_format_in_parquet_benchmark_spark.formats import FORMATS, get_format
@@ -172,8 +173,6 @@ def test_tape_kernels_match_pure_functions_across_arrow_batches(spark):
 def test_tape_row_cursors_on_sliced_list_arrays():
     """The batch walker reads offsets into the UNSLICED child pools, so a
     sliced ListArray (non-zero array offset) decodes its own rows."""
-    import pyarrow as pa
-
     from json_format_in_parquet_benchmark_spark.formats.jsonc_tape import (
         _row_cursors,
     )
@@ -187,6 +186,55 @@ def test_tape_row_cursors_on_sliced_list_arrays():
     sliced = [c.slice(2) for c in cols]
     got = [None if cur is None else cur.read() for cur in _row_cursors(*sliced)]
     assert got == values[2:]
+
+
+def test_arrow_udf_after_tape_decode_runs_under_zipimport_gate(spark):
+    """A plain arrow_udf chained on the tape decode runs in the worker that
+    unpickled the engine's decode kernel (a chained UDF runs in one Python
+    worker), so the package is imported there.  It returns correct values
+    and reports that the worker's ``zipimporter.invalidate_caches`` is the
+    engine's gated one: the gate reaches executors."""
+    import sys
+
+    from pyspark.sql.functions import arrow_udf
+
+    from json_format_in_parquet_benchmark_spark.formats.jsonc_tape import (
+        JsoncTapeFormat,
+    )
+
+    # pa is a module global: this module's annotations are strings that
+    # arrow_udf resolves against the function's globals
+    @arrow_udf("struct<n:int,gate:string>")
+    def probe(docs: pa.Array) -> pa.Array:
+        import zipimport
+
+        method = zipimport.zipimporter.invalidate_caches
+        n = [None if d is None else len(json.loads(d)) for d in docs.to_pylist()]
+        return pa.StructArray.from_arrays(
+            [
+                pa.array(n, pa.int32()),
+                pa.array([f"{method.__module__}.{method.__name__}"] * len(docs)),
+            ],
+            names=["n", "gate"],
+        )
+
+    docs = FLAT_DOCS + NESTED_DOCS + [None]
+    fmt = JsoncTapeFormat()
+    tape = fmt.encode(_docs_df(spark, docs))
+    decoded = fmt.decode(tape)
+    rows = [r for r in decoded.collect() if r.doc is not None]
+    assert _reparse(rows) == _reparse(docs[:-1])
+    got = decoded.select(probe("doc").alias("p")).collect()
+
+    expected_gate = (
+        "json_format_in_parquet_benchmark_spark._zipimport_gate.invalidate_caches"
+        if sys.version_info < (3, 13)
+        else "zipimport.invalidate_caches"
+    )
+    assert sorted((r.p.n for r in got), key=lambda n: (n is None, n)) == [
+        1, 2, 2, 2, 3, 3, None
+    ]
+    assert {r.p.gate for r in got} == {expected_gate}
 
 
 def test_reference_corpus_roundtrip(spark):
@@ -376,3 +424,21 @@ def test_shredded_variant_scan_prunes_to_path(spark, tmp_path):
         spark.conf.set("spark.sql.variant.pushVariantIntoScan", old)
     read_schema = plan.split("ReadSchema:")[1].splitlines()[0]
     assert "struct<0:string>" in read_schema, read_schema
+
+
+def test_bench_exec_metrics_report_python_boundary(spark):
+    """bench._exec_metrics sums the Python nodes' boot/init/total ms: a tape
+    decode (two Arrow UDF nodes) reports a Python run time, a JVM-only plan
+    reports zeros."""
+    import bench
+
+    fmt = get_format("jsonc")
+    tape = fmt.decode(fmt.encode(_docs_df(spark, FLAT_DOCS)))
+    tape.collect()
+    jvm = _docs_df(spark, FLAT_DOCS).groupBy("doc").count()
+    jvm.collect()
+    keys = ("python_boot_ms", "python_init_ms", "python_total_ms")
+    py, plain = bench._exec_metrics(tape), bench._exec_metrics(jvm)
+    assert py["python_total_ms"] > 0
+    assert all(py[k] >= 0 for k in keys)
+    assert [plain[k] for k in keys] == [0, 0, 0]
