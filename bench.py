@@ -118,10 +118,7 @@ def _exec_metrics(df) -> dict:
             kv = it.next()
             key = _EXEC_METRIC_KEYS.get(kv._1())
             if key:
-                try:
-                    acc[key] += max(0, kv._2().value())
-                except Exception:
-                    pass
+                acc[key] += max(0, kv._2().value())
         if cls == "AdaptiveSparkPlanExec":
             walk(node.executedPlan())
             return
@@ -134,6 +131,63 @@ def _exec_metrics(df) -> dict:
 
     walk(df._jdf.queryExecution().executedPlan())
     return acc
+
+
+def _run_headliners(spark, queries: dict, sf_dir: str) -> dict:
+    """Time each query three times and keep the min, plus its row count,
+    plan fingerprint and executed-plan metrics.  The min squeezes out GC /
+    machine-load noise so round-over-round numbers track plan changes, not
+    scheduler luck (criterion reports a statistical min the same way).
+
+    Failures are loud and local: a query that raises is recorded in
+    ``query_failures`` {name: repr(exc)} and the loop moves on to the next
+    query; a fingerprint or metric read that raises lands in
+    ``plan_hash_failures`` / ``exec_metric_failures`` instead of a
+    placeholder value.  Returns one dict per ``bench_full.json`` key."""
+    from json_format_in_parquet_benchmark_spark.operators.dedup import (
+        release_caches,
+    )
+
+    out: dict[str, dict] = {
+        k: {}
+        for k in (
+            "queries", "queries_trials", "rows", "plan_hash", "exec_metrics",
+            "query_failures", "plan_hash_failures", "exec_metric_failures",
+        )
+    }
+    for name, q in sorted(queries.items()):
+        # Drop persisted intermediates left by the PREVIOUS query: Spark's
+        # CacheManager substitutes canonically-matching cached fragments
+        # into later plans, so without this a query's measured plan (and
+        # its fingerprint) depends on which queries ran before it.  The
+        # three iterations of one query still share their own caches.
+        release_caches()
+        per_trial = []
+        try:
+            for _ in range(3):
+                t0 = time.perf_counter()
+                df = q.fn(spark, sf_dir)
+                rows = df.collect()
+                per_trial.append(round(time.perf_counter() - t0, 4))
+        except Exception as exc:
+            out["query_failures"][name] = repr(exc)
+            continue
+        # min is the headline (criterion's low-noise statistic); the raw
+        # per-trial list is kept so a reader can see the spread/outliers
+        # the same way criterion's sampled distributions do.
+        out["queries"][name] = min(per_trial)
+        out["queries_trials"][name] = per_trial
+        out["rows"][name] = len(rows)
+        # post-collect, so AQE's final (re-optimized) plan is hashed
+        for key, failures, read in (
+            ("plan_hash", "plan_hash_failures", _plan_fingerprint),
+            ("exec_metrics", "exec_metric_failures", _exec_metrics),
+        ):
+            try:
+                out[key][name] = read(df)
+            except Exception as exc:
+                out[failures][name] = repr(exc)
+    return out
 
 
 def _latest_compact_reported(repo_root: str) -> set[str]:
@@ -215,46 +269,8 @@ def main() -> None:
 
     t_phase = _phase("calibration", t_phase)
 
-    # Three measured runs per query, report the min -- squeezes out GC /
-    # machine-load noise so round-over-round numbers track plan changes,
-    # not scheduler luck (criterion reports a statistical min the same way).
-    timings: dict[str, float] = {}
-    trials: dict[str, list[float]] = {}
-    rows: dict[str, int] = {}
-    plan_hashes: dict[str, str] = {}
-    exec_metrics: dict[str, dict] = {}
-    from json_format_in_parquet_benchmark_spark.operators.dedup import (
-        release_caches as _release_caches,
-    )
-
-    for name, q in sorted(bench_queries.items()):
-        # Drop persisted intermediates left by the PREVIOUS query: Spark's
-        # CacheManager substitutes canonically-matching cached fragments
-        # into later plans, so without this a query's measured plan (and
-        # its fingerprint) depends on which queries ran before it.  The
-        # three iterations of one query still share their own caches.
-        _release_caches()
-        per_trial = []
-        for _ in range(3):
-            t0 = time.perf_counter()
-            df = q.fn(spark, SF_DIR)
-            out = df.collect()
-            per_trial.append(round(time.perf_counter() - t0, 4))
-        # min is the headline (criterion's low-noise statistic); the raw
-        # per-trial list is kept so a reader can see the spread/outliers
-        # the same way criterion's sampled distributions do.
-        timings[name] = min(per_trial)
-        trials[name] = per_trial
-        rows[name] = len(out)
-        try:
-            # post-collect, so AQE's final (re-optimized) plan is hashed
-            plan_hashes[name] = _plan_fingerprint(df)
-        except Exception:
-            plan_hashes[name] = "err"
-        try:
-            exec_metrics[name] = _exec_metrics(df)
-        except Exception:
-            exec_metrics[name] = {"error": "unavailable"}
+    headliners = _run_headliners(spark, bench_queries, SF_DIR)
+    timings = headliners["queries"]
 
     t_phase = _phase("headline_queries", t_phase)
 
@@ -461,10 +477,7 @@ def main() -> None:
         },
         "sf": infer_sf(SF_DIR),
         "warmup_failures": warmup_failures,
-        "rows": rows,
-        "queries_trials": trials,
-        "plan_hash": plan_hashes,
-        "exec_metrics": exec_metrics,
+        **{k: v for k, v in headliners.items() if k != "queries"},
         "storage": storage,
         "storage_zstd9": storage_zstd9,
         "storage_default_pages": storage_default_pages,

@@ -8,7 +8,9 @@ transformation and the "state" is the DataFrame itself:
   encode : raw-line DataFrame (column `doc` string) -> representation DF
   decode : representation DF -> canonical JSON text DF (column `doc`)
   flush  : representation DF -> Parquet (ZSTD), partitioned by Spark
-  load   : Parquet -> representation DF
+  load   : Parquet -> representation DF, read with the format's declared
+           ``schema`` (no schema-inference job); a directory whose files
+           lack a declared column raises ValueError
 
 Deliberate departures from the reference, for scale:
 - flush writes one file per partition and lets Parquet manage row groups;
@@ -53,6 +55,9 @@ class JsonFormatBase(abc.ABC):
     cycle (O2-O17 in SURVEY.md section 2.1)."""
 
     name: str = "base"
+    # DDL of the frame ``encode`` returns and ``flush`` writes; ``load``
+    # reads the Parquet back with it.
+    schema: str
 
     @abc.abstractmethod
     def encode(self, raw: DataFrame) -> DataFrame:
@@ -101,6 +106,33 @@ class JsonFormatBase(abc.ABC):
         w.parquet(path)
 
     def load(self, spark: SparkSession, path: str) -> DataFrame:
-        """Read the representation back (column types round-trip through
-        Spark's vectorized Parquet reader)."""
-        return spark.read.parquet(path)
+        """Read the representation back with the declared ``schema``, the
+        DDL ``encode`` produces and ``flush`` writes (the reference's load
+        reads each format by its one fixed schema, too).
+
+        A declared schema spares Spark its schema-inference job, one
+        footer-reading task per read.  But Spark reads a declared column
+        that the files lack as all-null, so one footer is checked on the
+        driver: ValueError if the directory holds no Parquet files, or if
+        a file lacks a declared top-level column (e.g. a plain_json
+        directory loaded as jsonb).  The check reads the footer through
+        the JVM gateway (parquet-java's ParquetFileReader), so it needs a
+        classic, not a Spark Connect, session.  On a 4-vCPU VM a jsonc
+        load took ~25 ms with the check against ~75 ms with the inference
+        job (results/bench_notes.md)."""
+        df = spark.read.schema(self.schema).parquet(path)
+        files = df.inputFiles()
+        if not files:
+            raise ValueError(f"{self.name}: no Parquet files under {path}")
+        jvm = spark._jvm
+        footer = jvm.org.apache.parquet.hadoop.ParquetFileReader.readFooter(
+            spark._jsc.hadoopConfiguration(), jvm.org.apache.hadoop.fs.Path(files[0])
+        )
+        file_schema = footer.getFileMetaData().getSchema()
+        missing = [c for c in df.columns if not file_schema.containsField(c)]
+        if missing:
+            raise ValueError(
+                f"{self.name}: {files[0]} lacks declared column(s) {missing} "
+                f"of schema {self.schema!r}"
+            )
+        return df

@@ -19,6 +19,7 @@ VARIANT_COL = "v"
 
 class JsonbVariantFormat(JsonFormatBase):
     name = "jsonb"
+    schema = f"{VARIANT_COL} variant"
 
     # The reference's jsonb (src/format/jsonb.rs) is a PURE binary document
     # -- one opaque column, no typed subcolumns.  Spark 4.1 shreds variant
@@ -89,8 +90,8 @@ class JsonbShreddedVariantFormat(JsonbVariantFormat):
     after any scope would have been restored, so a build-time
     set/restore would be dead code -- the reader relies on the session
     defaults (``allowReadingShredded`` and ``pushVariantIntoScan`` both
-    default true in 4.1.2), and a plain ``spark.read.parquet``
-    reconstructs the variant column so decode() sees the same logical
+    default true in 4.1.2), and reading with the declared ``v variant``
+    schema reconstructs the variant column so decode() sees the same logical
     shape as ``jsonb``."""
 
     name = "jsonb_shredded"

@@ -334,6 +334,7 @@ def _decode_udf():
 
 class JsoncTapeFormat(JsonFormatBase):
     name = "jsonc"
+    schema = TAPE_SCHEMA
 
     def encode(self, raw: DataFrame) -> DataFrame:
         from ..session import ship_package

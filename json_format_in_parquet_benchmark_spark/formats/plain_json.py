@@ -15,6 +15,7 @@ from .base import DOC_COL, JsonFormatBase
 
 class PlainJsonFormat(JsonFormatBase):
     name = "plain_json"
+    schema = f"{DOC_COL} string"
 
     def encode(self, raw: DataFrame) -> DataFrame:
         # UTF-8 validation happened at read time (spark.read.text); identity.

@@ -7,8 +7,9 @@ attributes.event_attributes, variant.rs:22-52,95-97), and load is
 
 Spark-first: ``from_json`` with a declared schema IS shredding -- Catalyst
 plans the field extraction, the Parquet writer lays out real typed columns,
-and nested-schema pruning + predicate pushdown then work on them.  Load is
-trivially `spark.read.parquet` (we implement the arm the reference left out).
+and nested-schema pruning + predicate pushdown then work on them.  Load reads
+the Parquet back with the same DDL (we implement the arm the reference left
+out).
 The default schema is the reference's events schema; any DDL string works.
 """
 
@@ -29,11 +30,11 @@ class VariantShredFormat(JsonFormatBase):
     name = "variant"
 
     def __init__(self, ddl: str = EVENTS_SHRED_DDL):
-        self.ddl = ddl
+        self.schema = ddl
         self._fields = [f.strip().split()[0] for f in _split_top_level(ddl)]
 
     def encode(self, raw: DataFrame) -> DataFrame:
-        return raw.select(F.from_json(F.col(DOC_COL), self.ddl).alias("s")).select("s.*")
+        return raw.select(F.from_json(F.col(DOC_COL), self.schema).alias("s")).select("s.*")
 
     def decode(self, encoded: DataFrame) -> DataFrame:
         return encoded.select(

@@ -72,6 +72,27 @@ def test_nested_roundtrip(spark, fmt_name):
     assert _reparse(out) == _reparse(NESTED_DOCS)
 
 
+def _shape(schema):
+    """Field names and types of a schema, nullability ignored."""
+    return [(f.name, f.dataType.simpleString()) for f in schema.fields]
+
+
+def _spark_jobs_started(spark, fn):
+    """Call ``fn()`` under a fresh job group; return the ids of the Spark
+    jobs it started."""
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+    group = f"jobs-started-{id(fn)}"
+    bus.waitUntilEmpty()
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setJobGroup(None, None)
+    bus.waitUntilEmpty()  # the status store learns of jobs through the bus
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
 @pytest.mark.parametrize("fmt_name", sorted(FORMATS))
 def test_flush_load_roundtrip(spark, tmp_path, fmt_name):
     fmt = (
@@ -84,10 +105,43 @@ def test_flush_load_roundtrip(spark, tmp_path, fmt_name):
     path = str(tmp_path / fmt_name)
     fmt.flush(encoded, path)
     loaded = fmt.load(spark, path)
-    assert sorted(loaded.columns) == sorted(encoded.columns)
+    # load's declared schema is the one encode produces
+    assert _shape(loaded.schema) == _shape(encoded.schema)
     assert _reparse(fmt.decode(loaded).collect()) == _reparse(
         fmt.decode(encoded).collect()
     )
+
+
+@pytest.mark.parametrize("fmt_name", sorted(FORMATS))
+def test_load_starts_no_spark_job(spark, tmp_path, fmt_name):
+    """load reads with the format's declared schema, so Spark runs no
+    schema-inference job (one footer-reading task) before the first
+    action; the footer check behind it runs on the driver."""
+    fmt = get_format(fmt_name)
+    path = str(tmp_path / fmt_name)
+    fmt.flush(fmt.encode(_docs_df(spark, FLAT_DOCS)), path)
+    assert _spark_jobs_started(spark, lambda: fmt.load(spark, path)) == []
+
+
+def test_load_rejects_directory_without_declared_columns(spark, tmp_path):
+    """Spark reads a declared column the files lack as all-null; load's
+    footer check turns that into a ValueError naming the column, and a
+    directory with no Parquet files raises too."""
+    df = _docs_df(spark, FLAT_DOCS)
+    for written, read_as, missing in (
+        ("plain_json", "jsonb", "v"),
+        ("jsonc", "plain_json", "doc"),
+    ):
+        path = str(tmp_path / written)
+        fmt = get_format(written)
+        fmt.flush(fmt.encode(df), path)
+        want = rf"lacks declared column\(s\) \['{missing}'\]"
+        with pytest.raises(ValueError, match=want):
+            get_format(read_as).load(spark, path)
+    empty = tmp_path / "empty"
+    empty.mkdir()
+    with pytest.raises(ValueError, match="no Parquet files"):
+        get_format("jsonb").load(spark, str(empty))
 
 
 def test_tape_encoder_pure():
@@ -414,7 +468,7 @@ def test_shredded_variant_scan_prunes_to_path(spark, tmp_path):
     try:
         spark.conf.set("spark.sql.variant.pushVariantIntoScan", "true")
         plan = (
-            spark.read.parquet(path)
+            fmt.load(spark, path)
             .select(F.variant_get("v", "$.a", "string").alias("a"))
             ._jdf.queryExecution()
             .executedPlan()
@@ -442,3 +496,29 @@ def test_bench_exec_metrics_report_python_boundary(spark):
     assert py["python_total_ms"] > 0
     assert all(py[k] >= 0 for k in keys)
     assert [plain[k] for k in keys] == [0, 0, 0]
+
+
+def test_bench_headliner_failure_is_recorded_and_loop_continues(spark):
+    """A headliner that raises lands in query_failures with its repr and
+    the loop moves on: the next query is still timed, counted, hashed
+    and measured, and no failure map carries a placeholder."""
+    from types import SimpleNamespace
+
+    import bench
+
+    def missing_input(spark, sf_dir):
+        raise FileNotFoundError(f"{sf_dir}/logs.json")
+
+    queries = {
+        "a_missing_input": SimpleNamespace(fn=missing_input),
+        "b_ok": SimpleNamespace(fn=lambda spark, sf_dir: spark.range(3)),
+    }
+    out = bench._run_headliners(spark, queries, "/nonexistent/sf")
+    assert out["query_failures"] == {
+        "a_missing_input": repr(FileNotFoundError("/nonexistent/sf/logs.json"))
+    }
+    assert list(out["queries"]) == ["b_ok"]
+    assert len(out["queries_trials"]["b_ok"]) == 3
+    assert out["rows"] == {"b_ok": 3}
+    assert list(out["plan_hash"]) == list(out["exec_metrics"]) == ["b_ok"]
+    assert out["plan_hash_failures"] == out["exec_metric_failures"] == {}
