@@ -144,9 +144,7 @@ def _run_headliners(spark, queries: dict, sf_dir: str) -> dict:
     query; a fingerprint or metric read that raises lands in
     ``plan_hash_failures`` / ``exec_metric_failures`` instead of a
     placeholder value.  Returns one dict per ``bench_full.json`` key."""
-    from json_format_in_parquet_benchmark_spark.operators.dedup import (
-        release_caches,
-    )
+    from json_format_in_parquet_benchmark_spark.runtime import release_caches
 
     out: dict[str, dict] = {
         k: {}
@@ -452,7 +450,7 @@ def main() -> None:
 
     t_phase = _phase("path_query_golden", t_phase)
 
-    from json_format_in_parquet_benchmark_spark.operators.dedup import release_caches
+    from json_format_in_parquet_benchmark_spark.runtime import release_caches
 
     release_caches()  # drop persisted dedup intermediates before exit
 

@@ -13,7 +13,8 @@ n-gram Jaccard / embedding-cosine), similarity search, text analysis, and
 streaming.
 
 Layout:
-  session    - tuned SparkSession factory (AQE, zstd, UTC)
+  session    - tuned SparkSession factory (AQE, zstd, UTC), package shipping
+  runtime    - query scope: tracked caches, their release, shipping per query
   tables     - testdata table loaders / temp-view registration
   formats/   - the four JSON physical representations (reference parity)
   functions/ - shared column expressions (portable hashing, text, vectors)

@@ -337,9 +337,6 @@ class JsoncTapeFormat(JsonFormatBase):
     schema = TAPE_SCHEMA
 
     def encode(self, raw: DataFrame) -> DataFrame:
-        from ..session import ship_package
-
-        ship_package(raw.sparkSession)
         return raw.select(_encode_udf()(F.col(DOC_COL)).alias("tape")).select(
             F.col("tape.nodes").alias("nodes"),
             F.col("tape.strings").alias("strings"),
@@ -347,9 +344,6 @@ class JsoncTapeFormat(JsonFormatBase):
         )
 
     def decode(self, encoded: DataFrame) -> DataFrame:
-        from ..session import ship_package
-
-        ship_package(encoded.sparkSession)
         return encoded.select(
             _decode_udf()(F.col("nodes"), F.col("strings"), F.col("numbers")).alias(
                 DOC_COL

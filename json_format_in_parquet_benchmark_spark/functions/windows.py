@@ -24,6 +24,8 @@ import re
 from pyspark.sql import Column, Window
 from pyspark.sql import functions as F
 
+from ..runtime import track_persist
+
 _PLAIN_NAME = re.compile(r"^[A-Za-z_][A-Za-z0-9_]*$")
 _INTEGRAL = ("tinyint", "smallint", "int", "bigint")
 
@@ -129,8 +131,6 @@ def prefix_sum_two_phase(
     pair -- see :func:`_null_first_bucket`.  Returns ``df`` plus
     ``out_col``.
     """
-    from ..operators.dedup import _track_persist
-
     _require_integral(df, order_col, "prefix_sum_two_phase", "order")
     _require_width("prefix_sum_two_phase", "bucket_width", bucket_width)
     bn, b = _null_first_bucket(order_col, bucket_width)
@@ -143,7 +143,7 @@ def prefix_sum_two_phase(
     # Persist the pre-window projection: BOTH phases read it (the running
     # sum and the per-bucket totals); without the cache Catalyst recomputes
     # the upstream lineage once per branch (the round-4 fan-out rule).
-    staged = _track_persist(df.withColumn("_pfx_bn", bn).withColumn("_pfx_b", b))
+    staged = track_persist(df.withColumn("_pfx_bn", bn).withColumn("_pfx_b", b))
     sized = staged.withColumn(
         "_pfx_intra", F.sum(size_col).over(w_in) - F.col(size_col)
     )
@@ -270,8 +270,6 @@ def rank_two_phase(
     ordering).  Fan-out becomes NDV x tie_range/tie_width, which GROWS
     with the dimension instead of capping at the NDV.
     """
-    from ..operators.dedup import _track_persist
-
     _require_integral(df, value_col, "rank_two_phase", "value")
     _require_width("rank_two_phase", "bucket_width", bucket_width)
     bn, b = _null_first_bucket(value_col, bucket_width)
@@ -298,7 +296,7 @@ def rank_two_phase(
         Window.partitionBy(part_col, *keys).orderBy(value_col, *order_extra)
     )
     # Same two-consumer persist reasoning as pack_shards_two_phase.
-    staged = _track_persist(staged)
+    staged = track_persist(staged)
     bucketed = staged.withColumn("_rk_intra", F.row_number().over(w_in))
     counts = staged.groupBy(part_col, *keys).agg(
         F.count(F.lit(1)).alias("_rk_c")

@@ -48,55 +48,8 @@ from pyspark.sql import functions as F
 
 from ..functions.hashing import hash64_sql_spark
 from ..functions.text import shingles_spark, tokens_spark
-
-# Persisted intermediates created by operators in this module.  A persist
-# inside a returned-lazy plan cannot be unpersisted before the caller
-# materializes the result, so long-lived sessions (the driver runs all
-# registered queries in one session) call :func:`release_caches` between
-# query families instead; bench.py and the pytest session teardown do.
-# Spark's CacheManager matches by canonicalized plan, so re-running the same
-# query re-uses (not re-adds) an entry -- the registry stays bounded.
-_ACTIVE_CACHES: list[tuple[str, DataFrame]] = []
-
-# Current cache owner (the registry query being built, "" outside one);
-# a single-item list so the registry wrapper can swap it in place.
-_CACHE_OWNER: list[str] = [""]
-
-
-def _track_persist(df: DataFrame, storage_level=None) -> DataFrame:
-    """Persist and track for release_caches.  ``storage_level`` overrides
-    the DataFrame default (MEMORY_AND_DISK_DESER) -- pass the SERIALIZED
-    MEMORY_AND_DISK when the cached rows are wide arrays whose
-    deserialized form is several x the on-wire size (measured: the DSIR
-    bucket-array cache)."""
-    _ACTIVE_CACHES.append(
-        (_CACHE_OWNER[0],
-         df.persist(storage_level) if storage_level is not None else df.persist())
-    )
-    return df
-
-
-def release_caches(except_owner: str | None = None) -> None:
-    """Unpersist tracked operator caches (idempotent).
-
-    With ``except_owner``, caches tagged to that registry query survive --
-    the registry wrapper uses this so rebuilding the SAME query (bench's
-    three measured iterations) keeps its warm caches while a long-lived
-    consumer running many DIFFERENT queries in one JVM (the external
-    driver's correctness pass) never accumulates more than one query's
-    persisted intermediates.
-    """
-    keep: list[tuple[str, DataFrame]] = []
-    while _ACTIVE_CACHES:
-        owner, df = _ACTIVE_CACHES.pop()
-        if except_owner is not None and owner == except_owner and owner:
-            keep.append((owner, df))
-            continue
-        try:
-            df.unpersist()
-        except Exception:  # session already stopped
-            pass
-    _ACTIVE_CACHES.extend(reversed(keep))
+from ..runtime import local_checkpoint_release, track_persist, track_release
+from ..runtime import release_caches  # noqa: F401  (perfbench imports it from here)
 
 
 def _spread(df: DataFrame) -> DataFrame:
@@ -164,71 +117,6 @@ def minhash_signatures(
     return sh.groupBy("doc_id").agg(*aggs, F.count(F.lit(1)).alias("n_sh"))
 
 
-def minhash_signatures_arrow(docsets: DataFrame, k: int = 16) -> DataFrame:
-    """Single-pass Arrow kernel for the MinHash signature stage: one row per
-    doc with k MinHash components m0..m{k-1}, whose values are bit-identical
-    to those of the explode+groupBy form in :func:`minhash_signatures`.
-
-    NOT a drop-in replacement: the output lacks the ``n_sh`` shingle-count
-    column :func:`minhash_signatures` emits.  It is kept only as the
-    reproducible rejected arm of the round-12 MinHash-kernel experiment
-    (measured slower than the JVM form; scripts/probe_minhash_kernel.py and
-    scripts/dump_r12_plans.py), so do not register a plan on it.
-
-    ``docsets`` is the persisted (doc_id, shset) frame every MinHash
-    pipeline already materializes.  Because the shingle set is ALREADY
-    per-doc, the signature needs no shuffle at all -- each ``mapInArrow``
-    task hands its record batches to an embedded DuckDB which computes the
-    identical portable hash (md5 hex -> 60-bit BIGINT -> mod P31) and all k
-    universal-hash mins natively in one vectorized pass.  DuckDB's md5 is
-    the SAME byte-identical digest the oracle relies on (functions.hashing
-    module docstring), so the signatures -- and therefore the band hashes
-    and the final verified pair set -- are bit-equal to the JVM form
-    (pinned by tests/test_properties.py and the interleaved probe in
-    scripts/probe_minhash_kernel.py).
-
-    Docs with NULL or empty shingle sets emit no row, matching explode()'s
-    drop behavior (DuckDB unnest does the same).
-    """
-    from ..functions.hashing import P31, perm_consts
-
-    id_type = docsets.schema["doc_id"].dataType.simpleString()
-    out_schema = f"doc_id {id_type}, " + ", ".join(
-        f"m{j} bigint" for j in range(k)
-    )
-    sig_cols = ", ".join(
-        f"MIN(({a} * h + {b}) % {P31}) AS m{j}"
-        for j, (a, b) in enumerate(perm_consts(k))
-    )
-    query = f"""
-        SELECT doc_id, {sig_cols}
-        FROM (
-          SELECT doc_id,
-                 ('0x' || substr(md5(sh), 1, 15))::BIGINT % {P31} AS h
-          FROM (SELECT doc_id, unnest(shset) AS sh FROM batch_tbl)
-        )
-        GROUP BY doc_id
-    """
-
-    def kernel(batches):
-        import duckdb
-        import pyarrow as pa
-
-        con = duckdb.connect()  # once per task (guide 4.5)
-        # One DuckDB thread per Spark task: the task slots ARE the
-        # parallelism; 32 tasks x default-32 DuckDB threads would
-        # oversubscribe the box 32x and thrash.
-        con.execute("PRAGMA threads=1")
-        for batch in batches:
-            tbl = pa.Table.from_batches([batch])
-            con.register("batch_tbl", tbl)
-            out = con.execute(query).arrow()
-            con.unregister("batch_tbl")
-            yield from out.to_batches()
-
-    return docsets.select("doc_id", "shset").mapInArrow(kernel, out_schema)
-
-
 def minhash_lsh_pairs(
     df: DataFrame,
     text_col: str,
@@ -267,7 +155,7 @@ def minhash_lsh_pairs(
     # persisted ``docsets`` (doc_id, shset) to both so the corpus is
     # shingled once, not per arm.
     if docsets is None:
-        docsets = _track_persist(
+        docsets = track_persist(
             _spread(df).select(
                 F.col(id_col).alias("doc_id"),
                 F.expr(shingles_spark(tokens_spark(text_col), n)).alias("shset"),
@@ -302,7 +190,7 @@ def minhash_lsh_pairs(
     # aggregate/broadcast pass.  Persisted: both self-join sides consume it,
     # and without the cache each side re-runs the signature pipeline.
     wb = Window.partitionBy("band_idx", "band_hash")
-    banded = _track_persist(
+    banded = track_persist(
         sig.select("doc_id", F.explode(F.array(*band_cols)).alias("bb"))
         .select(
             "doc_id",
@@ -379,7 +267,7 @@ def ngram_jaccard_pairs(
     - ``"index"``: the original DF-capped inverted-index self-join, kept
       as the measured comparison arm (scripts/run_scale_probe.py).
     """
-    docsets = _track_persist(
+    docsets = track_persist(
         _spread(df).select(
             F.col(id_col).alias("doc_id"),
             F.expr(shingles_spark(tokens_spark(text_col), n)).alias("shset"),
@@ -403,7 +291,7 @@ def ngram_jaccard_pairs(
         # three times (broadcast keys, b-side prune, final semi-join) and
         # an unpersisted plan re-runs the whole prefix candidate+verify
         # chain per consumer (measured 2.8s -> 7.7s at 50k docs).
-        pairs = _track_persist(
+        pairs = track_persist(
             ngram_jaccard_pairs_prefix(
                 df,
                 text_col,
@@ -524,7 +412,7 @@ def ngram_jaccard_pairs_prefix(
     """
     t = threshold_num / threshold_den
     if docsets is None:
-        docsets = _track_persist(
+        docsets = track_persist(
             _spread(df).select(
                 F.col(id_col).alias("doc_id"),
                 F.expr(shingles_spark(tokens_spark(text_col), n)).alias("shset"),
@@ -636,7 +524,7 @@ def winnow_span_pairs(
     n-gram index, bounding the posting-list self-join to df_cap^2 per
     fingerprint) -- the contamination / copied-passage detector a training
     pipeline runs between corpus snapshots."""
-    fps = _track_persist(winnow_fingerprints(df, text_col, id_col, k, w))
+    fps = track_persist(winnow_fingerprints(df, text_col, id_col, k, w))
     hot = (
         fps.groupBy("fp")
         .agg(F.count(F.lit(1)).alias("df"))
@@ -653,55 +541,6 @@ def winnow_span_pairs(
         .agg(F.count(F.lit(1)).alias("n_shared"))
         .where(F.col("n_shared") >= min_shared)
     )
-
-
-def _local_checkpoint_rdd(df: DataFrame):
-    """Best-effort handle to the JVM RDD behind a ``localCheckpoint`` frame.
-
-    ``df.unpersist()`` is a NO-OP on a locally-checkpointed DataFrame: the
-    blocks belong to the checkpointed *internal* RDD, not the CacheManager,
-    so they stay pinned in the block manager until session end.  The
-    analyzed plan of such a frame is a ``LogicalRDD`` whose ``rdd()``
-    accessor is the checkpointed RDD; returns None if the Py4J surface
-    differs (caller then falls back to the bounded leak)."""
-    try:
-        plan = df._jdf.queryExecution().analyzed()
-        if plan.getClass().getName().endswith("LogicalRDD"):
-            return plan.rdd()
-    except Exception:
-        pass
-    return None
-
-
-class _CheckpointHandle:
-    """Duck-typed stand-in registered in ``_ACTIVE_CACHES`` for the FINAL
-    locally-checkpointed label frame: ``release_caches`` calls
-    ``unpersist()`` on every tracked entry, which is a no-op on the
-    checkpointed DataFrame itself, so this handle frees the underlying
-    checkpointed RDD's blocks instead.  Freed only when a DIFFERENT query's
-    build releases the owner's caches -- the same already-consumed
-    assumption every tracked persist makes (the checkpoint is merely
-    non-recomputable rather than recomputable after release)."""
-
-    def __init__(self, jrdd) -> None:
-        self._jrdd = jrdd
-
-    def unpersist(self) -> None:
-        _free_checkpoint_rdd(self._jrdd)
-
-
-def _free_checkpoint_rdd(jrdd) -> None:
-    """Release a locally-checkpointed RDD's blocks (non-blocking).
-
-    Local checkpoints are non-recomputable, so this is only safe once no
-    live lineage can reach the RDD -- i.e. after the NEXT checkpoint has
-    materialized and every intermediate frame has been unpersisted."""
-    if jrdd is None:
-        return
-    try:
-        jrdd.unpersist(False)
-    except Exception:
-        pass
 
 
 def connected_components(
@@ -794,7 +633,7 @@ def connected_components(
     # -- one cheap aggregate per round instead of a change-detection join.
     prev_sum = labels.agg(F.sum("label")).first()[0]
     converged = False
-    prev_ckpt_rdd = None  # checkpoint k-1, freed when checkpoint k lands
+    prev_ckpt_free = None  # frees checkpoint k-1 once checkpoint k lands
     pending_free = None
     for it in range(max_iter):
         # One round = one aggregation: min over (own label ∪ labels arriving
@@ -825,9 +664,9 @@ def connected_components(
             # checkpoints).  At most two checkpointed label frames (|V|
             # rows each) are ever live; the final one stays pinned because
             # the returned frame's lineage may still read it.
-            pending_free, prev_ckpt_rdd = (
-                prev_ckpt_rdd,
-                _local_checkpoint_rdd(new_labels),
+            pending_free, prev_ckpt_free = (
+                prev_ckpt_free,
+                local_checkpoint_release(new_labels),
             )
         else:
             new_labels = round_df.persist()
@@ -835,7 +674,7 @@ def connected_components(
         labels.unpersist()
         labels = new_labels
         if pending_free is not None:
-            _free_checkpoint_rdd(pending_free)
+            pending_free()
             pending_free = None
         if new_sum == prev_sum:
             converged = True
@@ -852,14 +691,14 @@ def connected_components(
             RuntimeWarning,
             stacklevel=2,
         )
-    _ACTIVE_CACHES.append((_CACHE_OWNER[0], labels))
-    if prev_ckpt_rdd is not None:
+    track_release(labels.unpersist)
+    if prev_ckpt_free is not None:
         # The final checkpoint's blocks are invisible to labels.unpersist()
         # (they belong to the checkpointed internal RDD, not the
         # CacheManager); track them so release_caches reclaims them when
         # this query's caches are released instead of pinning them for the
         # life of the session.
-        _ACTIVE_CACHES.append((_CACHE_OWNER[0], _CheckpointHandle(prev_ckpt_rdd)))
+        track_release(prev_ckpt_free)
     return labels.select(F.col("node").alias("doc_id"), F.col("label").alias("cluster_rep"))
 
 
@@ -1004,7 +843,7 @@ def simhash_pairs(
     # and a sims cache would be populated once and never re-read.
     sims = simhash_docs(df, text_col, id_col, bits=bits)
     if max_bucket is None:
-        sims = _track_persist(sims)
+        sims = track_persist(sims)
     band_structs = [
         F.struct(
             F.lit(idx).alias("band_idx"),
@@ -1028,7 +867,7 @@ def simhash_pairs(
         # exchange, no separate aggregate pass (the minhash_lsh_pairs
         # pattern).  Persisted so both self-join sides reuse it.
         wb = Window.partitionBy("band_idx", "band_val")
-        banded = _track_persist(
+        banded = track_persist(
             banded.withColumn("bsz", F.count(F.lit(1)).over(wb))
             .where(F.col("bsz") <= max_bucket)
             .drop("bsz")
@@ -1081,7 +920,7 @@ def embedding_near_dup_pairs(
     # codegen: per candidate PAIR they would cost O(candidates * dim)
     # interpreted work.  cos = dot / (norm_a * norm_b) is the identical IEEE
     # computation the oracle runs (same dot, same sqrt operands), factored.
-    vecs = _track_persist(
+    vecs = track_persist(
         _spread(df).select(
             F.col(id_col).alias("vec_id"),
             F.col(vec_col).alias("v"),
@@ -1324,7 +1163,7 @@ def containment_pairs(
     from ..functions.hashing import hash64_sql_spark
 
     wdoc = Window.partitionBy("doc_id")
-    sh = _track_persist(
+    sh = track_persist(
         _spread(df)
         .select(
             F.col(id_col).alias("doc_id"),
@@ -1370,7 +1209,7 @@ def containment_pairs(
     # verify chain twice concurrently (measured: heap OOM at the 500k
     # probe tier before the persist existed; the cached frame is |pairs|
     # rows of five numerics, the natural materialization point).
-    verified = _track_persist(
+    verified = track_persist(
         cand.join(left, "doc_a")
         .join(
             right,

@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..runtime import track_persist
+
 RANK_SCALE = 10**12  # integer grid PageRank mass lives on
 DAMP_NUM, DAMP_DEN = 85, 100  # damping factor 0.85 as an exact rational
 
@@ -74,8 +76,6 @@ def pagerank(
     All quantities are positive BIGINTs, divisions floor, sums are
     order-free -- bit-identical in any engine.  Returns (node, rank_q).
     """
-    from .dedup import _track_persist
-
     # The graph is iterated n_iters times: persist the EDGE LIST ONLY, with
     # an explicit partition count, so each superstep starts from the cache
     # instead of re-deriving edges from the base tables (the oracle's
@@ -87,7 +87,7 @@ def pagerank(
     # than caching edges alone and letting AQE coalesce the rest.
     spark = edges.sparkSession
     par = spark.sparkContext.defaultParallelism
-    edges = _track_persist(edges.repartition(par, "src"))
+    edges = track_persist(edges.repartition(par, "src"))
     # Callers pass symmetric edge lists (both directions present), so the
     # node set is distinct(src) -- scanning dst too would double the pass.
     nodes = edges.select(F.col("src").alias("node")).distinct()
@@ -144,11 +144,9 @@ def label_propagation(
     contract as :func:`pagerank`: edges scanned once per superstep, no
     driver-side graph state.
     """
-    from .dedup import _track_persist
-
     spark = edges.sparkSession
     par = spark.sparkContext.defaultParallelism
-    edges = _track_persist(edges.repartition(par, "src"))
+    edges = track_persist(edges.repartition(par, "src"))
     labels = edges.select(F.col("src").alias("node")).distinct().withColumn(
         "label", F.col("node").cast("bigint")
     )

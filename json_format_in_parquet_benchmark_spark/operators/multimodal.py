@@ -34,6 +34,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..runtime import track_persist
+
 KINDS = ("image", "audio", "video")
 
 # resize target: fit the longest side to 224 px, integer floor arithmetic
@@ -323,9 +325,7 @@ def phash_nearest_neighbor(feats: DataFrame) -> DataFrame:
     LEFT join back to the signatures keeps isolated media in the result with
     null neighbor columns.
     """
-    from .dedup import _track_persist
-
-    feats = _track_persist(feats)
+    feats = track_persist(feats)
     mask = (1 << PHASH_BAND_WIDTH) - 1
     band_structs = [
         F.struct(

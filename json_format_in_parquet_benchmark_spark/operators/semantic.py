@@ -36,7 +36,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.vectors import dot_spark
-from .dedup import _track_persist
+from ..runtime import track_persist
 
 # Element quantization for order-free centroid sums.  ONE constant feeds
 # both sides: Spark exprs and the DuckDB oracle splice QUANT_SQL (an
@@ -141,7 +141,7 @@ def semantic_dup_flags(
     LOWER id has cosine >= threshold (the kept representative is always the
     lowest id, so the rule is deterministic and engine-independent)."""
     final = kmeans_assign(emb, vec_col, id_col, k=k, iters=iters, dim=dim)
-    scored = _track_persist(
+    scored = track_persist(
         final.withColumn("nrm", F.sqrt(F.expr(dot_spark("vd", "vd"))))
     )
     sizes = scored.groupBy("cluster").agg(F.count(F.lit(1)).alias("n_cluster"))

@@ -193,9 +193,6 @@ def ivf_assign_fast(
     import numpy as np
     import pandas as pd
 
-    from ..session import ship_package
-
-    ship_package(df.sparkSession)
     cents = np.array(centroids(n_cells, dim), dtype=np.float64).T  # dim x cells
 
     def assign(batches):
@@ -247,9 +244,6 @@ def ivf_assign_hier(
     import numpy as np
     import pandas as pd
 
-    from ..session import ship_package
-
-    ship_package(df.sparkSession)
     cents = np.array(centroids(n_cells, dim), dtype=np.float64)  # cells x dim
     g = n_groups or max(1, int(round(n_cells ** 0.5)))
     if not 1 <= g <= n_cells:
@@ -349,9 +343,6 @@ def ivf_assign_hier_exact(
     import numpy as np
     import pandas as pd
 
-    from ..session import ship_package
-
-    ship_package(df.sparkSession)
     g = hier_groups(n_cells, n_groups)
     gsize = n_cells // g
     cint = np.array(centroids_int(n_cells, dim), dtype=np.int64)  # cells x dim
@@ -679,9 +670,6 @@ def knn_graph_ivf_exact(
     import numpy as np
     import pandas as pd
 
-    from ..session import ship_package
-
-    ship_package(df.sparkSession)
     cells = (
         assigned
         if assigned is not None

@@ -48,6 +48,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.hashing import HASH_BITS, hash64_sql_duckdb, hash64_sql_spark
+from ..runtime import track_persist
 
 
 def alpha_m(m: int) -> float:
@@ -262,15 +263,13 @@ def histogram_quantiles(
 
     Plan shape: the corpus is scanned EXACTLY ONCE, into the per-value
     count table (a map-side-combined groupBy).  That table is
-    sketch-sized, persisted (released via :func:`release_caches`), and
+    sketch-sized, persisted (released via :func:`runtime.release_caches`), and
     every other relation -- bins, total, cumulative sums, rank targets --
     derives from it, so the half-dozen plan branches below re-read a few
     hundred cached rows, not the corpus.
     """
-    from .dedup import _track_persist
-
     v = f"cast({value_expr} as bigint)"
-    vals = _track_persist(
+    vals = track_persist(
         df.selectExpr(f"{v} as v")
         .groupBy("v")
         .agg(F.count(F.lit(1)).alias("vcnt"))

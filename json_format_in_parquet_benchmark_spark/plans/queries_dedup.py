@@ -19,6 +19,7 @@ from ..operators.dedup import (
     normalized_dedup,
     simhash_pairs,
 )
+from ..runtime import track_persist
 from ..tables import load_table
 from .registry import register
 
@@ -880,12 +881,12 @@ def dedup_minhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     from ..functions.text import shingles_spark, tokens_spark
-    from ..operators.dedup import _spread, _track_persist
+    from ..operators.dedup import _spread
 
     docs = load_table(spark, sf_dir, "documents")
     # Shingle the corpus ONCE (the dominant scan-side cost) and hand the
     # same persisted sets to both arms.
-    docsets = _track_persist(
+    docsets = track_persist(
         _spread(docs).select(
             F.col("doc_id"),
             F.expr(
@@ -1041,10 +1042,7 @@ FROM hits GROUP BY 1, 2
     tags=("dedup", "evaluation", "generator"),
 )
 def dedup_planted_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.dedup import (
-        _track_persist,
-        ngram_jaccard_pairs_prefix,
-    )
+    from ..operators.dedup import ngram_jaccard_pairs_prefix
     from .queries_generator import DOCGEN_N, _docgen_text
 
     base = spark.range(DOCGEN_N).selectExpr(
@@ -1053,10 +1051,10 @@ def dedup_planted_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         " when id % 20 = 18 then id - 2 else id end as src_id",
         "cast(id % 20 = 18 as int) as mutate",
     )
-    docs = _track_persist(
+    docs = track_persist(
         base.selectExpr("doc_id", f"{_docgen_text(spark_side=True)} as text")
     )
-    truth = _track_persist(
+    truth = track_persist(
         base.where("doc_id % 20 = 19")
         .selectExpr("src_id as doc_a", "doc_id as doc_b", "'exact' as kind")
         .unionByName(

@@ -37,6 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..runtime import track_persist
 from ..tables import load_table
 from .registry import register
 
@@ -325,8 +326,6 @@ def kcenter_select(
     returns (sel_round, vec_id, sel_dist_q) rows including the round-(k+1)
     coverage-objective probe.  Reused by the scale probe on synthetic
     corpora."""
-    from ..operators.dedup import _track_persist
-
     q = emb.select(
         "vec_id",
         F.expr(
@@ -334,7 +333,7 @@ def kcenter_select(
             f" x -> cast(floor(x * {KC_GRID}.0d) as bigint))"
         ).alias("qv"),
     )
-    _track_persist(q)
+    track_persist(q)
     seed = q.orderBy("vec_id").select("vec_id", "qv").first()
     picks = [(1, seed["vec_id"], 0)]
     center_qv = list(seed["qv"])
@@ -356,7 +355,7 @@ def kcenter_select(
         # Persist each round's folded min-distance frame: the next round
         # folds ONE new center against it (k linear passes total), instead
         # of re-deriving r distance passes from the base (k^2).
-        _track_persist(cur)
+        track_persist(cur)
         mind = "mind"
         top = cur.orderBy(F.desc("mind"), F.asc("vec_id")).first()
         # cur is materialized now; the round before it can never be read

@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.graph import DAMP_DEN, DAMP_NUM, RANK_SCALE, pagerank
+from ..runtime import track_persist
 from ..tables import load_table
 from .registry import register
 
@@ -407,8 +408,6 @@ def graph_kcore_word(spark: SparkSession, sf_dir: str) -> DataFrame:
         .repartition(spark.sparkContext.defaultParallelism, "a", "b")
         .distinct()
     )
-    from ..operators.dedup import _track_persist
-
     # Persist each round's SHRINKING edge set: without it the lineage
     # doubles per round (degree agg + two semi-joins each re-derive the
     # full prior chain) and the plan recomputes exponentially -- measured
@@ -416,7 +415,7 @@ def graph_kcore_word(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-keyed on u at cluster parallelism so the cached layout stays
     # narrow and co-located for the next round's semi-joins.
     par = spark.sparkContext.defaultParallelism
-    edges = _track_persist(
+    edges = track_persist(
         adj.select(
             F.least("a", "b").alias("u"), F.greatest("a", "b").alias("v")
         )
@@ -431,7 +430,7 @@ def graph_kcore_word(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count(F.lit(1)).alias("deg"))
         )
         keep = deg.where(F.col("deg") >= KCORE_K).select("node")
-        edges = _track_persist(
+        edges = track_persist(
             edges.join(
                 F.broadcast(keep.withColumnRenamed("node", "ku")),
                 edges.u == F.col("ku"),
@@ -599,7 +598,6 @@ d{k} AS MATERIALIZED (
 )
 def graph_bfs_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.text import tokens_spark
-    from ..operators.dedup import _track_persist
 
     toks = tokens_spark("text")
     docs = load_table(spark, sf_dir, "documents").where(
@@ -640,7 +638,7 @@ def graph_bfs_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Partition by the per-round join key before the persist: co-locates
     # each round's frontier join with the cached edge layout (measured
     # with the width fixes together: 27s -> ~3s collect).
-    edges = _track_persist(
+    edges = track_persist(
         adj.selectExpr("u AS src", "v AS dst")
         .unionAll(adj.selectExpr("v AS src", "u AS dst"))
         .repartition(spark.sparkContext.defaultParallelism, "src")
@@ -706,12 +704,10 @@ LIMIT {LINKPRED_TOP}
     tags=("graph", "link-prediction", "join"),
 )
 def graph_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.dedup import _track_persist
-
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
     par = spark.sparkContext.defaultParallelism
-    eraw = _track_persist(
+    eraw = track_persist(
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .select(
             F.col("l_suppkey").alias("supp"), F.col("o_custkey").alias("cust")
@@ -1004,8 +1000,6 @@ LIMIT {BC_TOP}
     tags=("graph", "centrality", "iterative"),
 )
 def graph_betweenness_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.dedup import _track_persist
-
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
     eraw = (
@@ -1016,7 +1010,7 @@ def graph_betweenness_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    edges = _track_persist(
+    edges = track_persist(
         eraw.selectExpr("a AS src", "b AS dst")
         .unionAll(eraw.selectExpr("b AS src", "a AS dst"))
         .repartition(spark.sparkContext.defaultParallelism, "src")

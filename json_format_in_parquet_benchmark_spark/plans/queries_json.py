@@ -35,6 +35,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..runtime import track_persist
 from ..tables import load_table
 from .registry import register
 
@@ -440,8 +441,6 @@ def json_paths_census(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("doc")
     )
-    from ..operators.dedup import _track_persist
-
     frontier = docs.select(
         F.lit("$").alias("path"), F.parse_json("doc").alias("v")
     )
@@ -451,7 +450,7 @@ def json_paths_census(spark: SparkSession, sf_dir: str) -> DataFrame:
         # consume `typed`, and each leaf_parts[k] would otherwise embed
         # the whole unpersisted chain back to the scan -- the union would
         # re-parse every document once per depth level (O(depth^2) work).
-        typed = _track_persist(
+        typed = track_persist(
             frontier.select(
                 "path", "v", F.expr("schema_of_variant(v)").alias("t")
             )

@@ -25,6 +25,7 @@ from ..functions.windows import (
     rank_cut_duck,
     rank_cut_spark,
 )
+from ..runtime import track_persist
 from ..tables import load_table
 from .registry import register
 
@@ -367,7 +368,6 @@ def pipeline_multimodal_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Caption-alignment gate: positive-pair CLIP-stub cosine >= 19/20.
     # Same towers as multimodal_clip_pairing, pos pairs only (text_doc ==
     # media_id), so the dot is a co-keyed join on (id, bucket).
-    from ..operators.dedup import _track_persist
     from ..operators.multimodal import clip_media_embeddings
 
     docs = load_table(spark, sf_dir, "documents").where(F.length("text") >= 4)
@@ -375,8 +375,8 @@ def pipeline_multimodal_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     # unpersisted, the gram hashing (and the Python media stage) re-runs
     # per consumer -- measured 0.7s -> 6.9s on the sf0.1 bench before
     # these persists.
-    tvec = _track_persist(_clip_text_vectors(docs))
-    mvec = _track_persist(clip_media_embeddings(_media(spark, sf_dir)))
+    tvec = track_persist(_clip_text_vectors(docs))
+    mvec = track_persist(clip_media_embeddings(_media(spark, sf_dir)))
     tnorm = tvec.groupBy("doc_id").agg(
         F.sum(F.col("tval") * F.col("tval")).cast("bigint").alias("t_norm2")
     )
@@ -646,12 +646,11 @@ def _clip_text_vectors(docs: DataFrame) -> DataFrame:
 def multimodal_clip_pairing(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    from ..operators.dedup import _track_persist
     from ..operators.multimodal import clip_media_embeddings
 
     docs = load_table(spark, sf_dir, "documents").where(F.length("text") >= 4)
-    tvec = _track_persist(_clip_text_vectors(docs))
-    mvec = _track_persist(
+    tvec = track_persist(_clip_text_vectors(docs))
+    mvec = track_persist(
         clip_media_embeddings(_media(spark, sf_dir).where(F.length(F.col("payload").cast("string")) >= 4))
     )
     tnorm = tvec.groupBy("doc_id").agg(
@@ -801,10 +800,9 @@ FROM best WHERE rn = 1
 def multimodal_audio_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    from ..operators.dedup import _track_persist
     from ..operators.multimodal import audio_landmarks
 
-    lms = _track_persist(audio_landmarks(_media(spark, sf_dir)))
+    lms = track_persist(audio_landmarks(_media(spark, sf_dir)))
     queries = (
         lms.where(
             (F.col("media_id") % FP_Q_STRIDE == 1)

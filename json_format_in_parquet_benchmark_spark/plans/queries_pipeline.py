@@ -29,6 +29,7 @@ from ..functions.text import (
     tokens_spark,
 )
 from ..operators.dedup import connected_components, minhash_lsh_pairs
+from ..runtime import track_persist
 from ..tables import load_table
 from .queries_dedup import (
     MINHASH_BANDS,
@@ -457,7 +458,7 @@ def pipeline_contamination_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..functions.hashing import hash64_sql_spark
     from ..functions.text import shingles_spark
-    from ..operators.dedup import _track_persist, substring_dup_spans
+    from ..operators.dedup import substring_dup_spans
     from .queries_dedup import SUBSTR_L
     from .queries_text import (
         DECON_BENCH_PCT,
@@ -478,7 +479,7 @@ def pipeline_contamination_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         "dn", F.row_number().over(Window.partitionBy("th").orderBy("doc_id"))
     )
     dup_docs = s1.where(F.col("dn") > 1).select("doc_id", "text")
-    surv1 = _track_persist(s1.where(F.col("dn") == 1).select("doc_id", "text"))
+    surv1 = track_persist(s1.where(F.col("dn") == 1).select("doc_id", "text"))
     grams4 = shingles_spark(toks, DECON_N)
     bench_grams = (
         docs.where(F.expr(is_bench))
@@ -492,7 +493,7 @@ def pipeline_contamination_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     capped = bench_grams.join(hot, "g", "left_anti")
     train_g = surv1.select("doc_id", F.explode(F.expr(grams4)).alias("g"))
-    cont = _track_persist(
+    cont = track_persist(
         train_g.join(F.broadcast(capped), "g")
         .groupBy("doc_id", "bench_doc")
         .agg(F.count(F.lit(1)).alias("n_shared"))
@@ -501,10 +502,10 @@ def pipeline_contamination_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     dropped_cont = surv1.join(F.broadcast(cont), "doc_id", "left_semi")
-    surv2 = _track_persist(
+    surv2 = track_persist(
         surv1.join(F.broadcast(cont), "doc_id", "left_anti")
     )
-    perdoc = _track_persist(
+    perdoc = track_persist(
         substring_dup_spans(surv2, "text", "doc_id", anchor_len=SUBSTR_L)
         .select("doc_id", "dup_chars")
     )
@@ -664,16 +665,14 @@ def pipeline_rag_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             "chunk_text"
         ),
     )
-    from ..operators.dedup import _track_persist
-
     # Width discipline for cached subtrees (the graph_bfs_distance
     # lesson): cached plans pin their exchanges outside AQE.
     par = spark.sparkContext.defaultParallelism
-    chunks = _track_persist(chunks.repartition(par, "doc_id"))
+    chunks = track_persist(chunks.repartition(par, "doc_id"))
     q = chunks.where(F.col("n_tok") >= RAG_CHUNK_MIN)
     short = chunks.where(F.col("n_tok") < RAG_CHUNK_MIN)
     wd = Window.partitionBy(F.md5("chunk_text")).orderBy("doc_id", "chunk_idx")
-    dd = _track_persist(
+    dd = track_persist(
         q.repartition(par, F.md5("chunk_text")).withColumn(
             "rn", F.row_number().over(wd)
         )
@@ -681,7 +680,7 @@ def pipeline_rag_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     kept = dd.where(F.col("rn") == 1).select("doc_id", "chunk_idx")
     dup = dd.where(F.col("rn") > 1).select("doc_id", "chunk_idx")
     emb_ids = emb.select(F.col("vec_id").alias("doc_id"))
-    kept = _track_persist(kept)
+    kept = track_persist(kept)
     withemb = kept.join(F.broadcast(emb_ids), "doc_id", "left_semi")
     noemb = kept.join(F.broadcast(emb_ids), "doc_id", "left_anti")
     kept_docs = withemb.select("doc_id").distinct()

@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.hashing import hash64_sql_duckdb, hash64_sql_spark
+from ..runtime import track_persist
 from ..tables import load_table
 from .registry import register
 
@@ -3737,12 +3738,10 @@ def dq_outlier_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("med_cents")
     )
-    from ..operators.dedup import _track_persist
-
     # Persisted: consumed by both the MAD rank pass and the final
     # aggregate -- unpersisted, the second consumer re-scans events and
     # re-runs the median join.
-    dev = _track_persist(
+    dev = track_persist(
         base.join(F.broadcast(med), "event_type").select(
             "event_type",
             "cents",
@@ -4304,9 +4303,7 @@ def events_bitmap_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(f"unix_micros(ts) div {_BM_DAY_US}").alias("day"),
         "user_id",
     ).distinct()
-    from ..operators.dedup import _track_persist
-
-    bm = _track_persist(
+    bm = track_persist(
         pres.groupBy(
             "day", F.expr("user_id div 63").alias("word")
         )
@@ -4554,8 +4551,6 @@ FROM agg
     tags=("events", "statistics", "bootstrap", "aggregation"),
 )
 def events_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.dedup import _track_persist
-
     events = load_table(spark, sf_dir, "events")
     base = events.select(
         F.expr("cast(cast(value as decimal(18,2)) * 100 as bigint)").alias(
@@ -4571,7 +4566,7 @@ def events_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Persist the uniform stage: projection collapse would otherwise
     # re-inline each md5 into every CASE branch of the weight expression
     # (the duplicated-lambda trap, results/bench_notes.md).
-    _track_persist(base)
+    track_persist(base)
     w = base.select(
         "cents",
         *[
@@ -4587,7 +4582,7 @@ def events_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
         aggs.append(F.expr(f"cast(sum(w{b} * cents) as bigint)").alias(f"s{b}"))
         aggs.append(F.expr(f"cast(sum(w{b}) as bigint)").alias(f"m{b}"))
     agg = w.agg(*aggs)
-    _track_persist(agg)
+    track_persist(agg)
     stack_expr = "stack({}, {}) as (s, m)".format(
         _BOOT_B, ", ".join(f"s{b}, m{b}" for b in range(_BOOT_B))
     )
@@ -4690,8 +4685,6 @@ FROM flags
     bench=True,
 )
 def events_funnel_exclusion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.dedup import _track_persist
-
     ev = load_table(spark, sf_dir, "events").select(
         "user_id",
         F.expr("unix_micros(ts)").alias("t"),
@@ -4699,7 +4692,7 @@ def events_funnel_exclusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # Three stage frames branch from this projection; persist it so the
     # source is scanned once, not once per branch.
-    _track_persist(ev)
+    track_persist(ev)
     a = (
         ev.where(F.col("event_type") == "click")
         .groupBy("user_id")
@@ -4874,8 +4867,6 @@ SELECT * FROM per_class UNION ALL SELECT * FROM missed
     tags=("relational", "join", "entity-resolution", "blocking"),
 )
 def join_entity_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.dedup import _track_persist
-
     cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey",
         "c_name",
@@ -4883,7 +4874,7 @@ def join_entity_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         "c_mktsegment",
         F.expr("cast(round(c_acctbal * 100) as bigint)").alias("cents"),
     )
-    _track_persist(cust)
+    track_persist(cust)
     imp = cust.where(F.expr("c_custkey % 3 in (0, 1)")).select(
         (F.col("c_custkey") + 10_000_000).alias("import_id"),
         F.expr(
@@ -4908,7 +4899,7 @@ def join_entity_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
             "case when c_custkey % 3 = 1 then -1 else c_custkey end"
         ).alias("true_key"),
     )
-    _track_persist(imp)
+    track_persist(imp)
     by_nation = imp.join(
         cust, imp.i_nation == cust.c_nationkey
     ).select("import_id", "c_custkey")
@@ -4917,7 +4908,7 @@ def join_entity_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(f"cents div {_ER_BAND}") == F.expr(f"i_cents div {_ER_BAND}"),
     ).select("import_id", "c_custkey")
     cand = by_nation.union(by_band).distinct()
-    _track_persist(cand)
+    track_persist(cand)
     scored = (
         cand.join(imp, "import_id")
         .join(cust, "c_custkey")

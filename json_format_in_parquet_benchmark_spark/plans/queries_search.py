@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.text import tokens_duckdb, tokens_spark
+from ..runtime import track_persist
 from ..tables import load_table
 from .registry import register
 
@@ -358,8 +359,6 @@ ORDER BY rerank_rank
 def search_rerank_proximity(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    from ..operators.dedup import _track_persist
-
     docs = load_table(spark, sf_dir, "documents")
     tf = docs.selectExpr(
         "doc_id",
@@ -393,9 +392,9 @@ def search_rerank_proximity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cand fans out to the occ semi-join AND the final join; occ fans out
     # to both self-join sides AND the feature aggregate -- persist both so
     # the BM25 chain / position explode run once, not per consumer.
-    cand = _track_persist(cand)
+    cand = track_persist(cand)
     terms_arr = ", ".join(f"'{t}'" for t in QUERY_TERMS)
-    occ = _track_persist(
+    occ = track_persist(
         docs.join(F.broadcast(cand.select("doc_id")), "doc_id", "left_semi")
         .select("doc_id", F.posexplode(F.expr(_TOKS_S)).alias("p0", "term"))
         .where(F.expr(f"term in ({terms_arr})"))
@@ -555,11 +554,9 @@ def search_mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from pyspark.sql import Window
 
-    from ..operators.dedup import _track_persist
-
     # Persisted: consumed twice (the rel collect and the pair-sim join) --
     # an unpersisted pool would re-run the BM25 scan per consumer.
-    ranked = _track_persist(
+    ranked = track_persist(
         tf.join(emb.select(F.col("vec_id").alias("doc_id")), "doc_id")
         .join(F.broadcast(stats))
         .select("doc_id", F.expr(_SCORE).alias("score"))

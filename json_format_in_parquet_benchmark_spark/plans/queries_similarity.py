@@ -17,6 +17,7 @@ from ..operators.similarity import (
     topk_ivf,
     topk_lsh,
 )
+from ..runtime import track_persist
 from ..tables import load_table
 from .registry import register
 
@@ -1062,8 +1063,6 @@ GROUP BY 1
     tags=("similarity", "quantization", "evaluation"),
 )
 def similarity_sq8_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.dedup import _track_persist
-
     emb = load_table(spark, sf_dir, "embeddings")
     dims = (
         emb.select(
@@ -1082,7 +1081,7 @@ def similarity_sq8_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             "transform(array_sort(collect_list(struct(pos, mx))), s -> s.mx)"
         ).alias("mx_l"),
     )
-    recon = _track_persist(
+    recon = track_persist(
         emb.crossJoin(F.broadcast(lists))
         .select("vec_id", "embedding", F.expr(_SQ_QUANT_S).alias("qv"), "mn_l", "mx_l")
         .select("vec_id", F.expr(_SQ_RECON_S).alias("xhat"))

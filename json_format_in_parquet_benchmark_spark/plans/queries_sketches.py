@@ -25,6 +25,7 @@ from ..operators.sketches import (
     kmv_estimate,
     kmv_estimate_duckdb,
 )
+from ..runtime import track_persist
 from ..tables import load_table
 from .registry import register
 
@@ -544,7 +545,6 @@ JOIN exact_type x ON x.event_type = e.event_type
     bench=True,
 )
 def events_rollup_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.dedup import _track_persist
     from ..operators.sketches import alpha_m
 
     alpha = alpha_m(_R_M)
@@ -564,7 +564,7 @@ def events_rollup_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The finest-grain register table is the ONLY thing derived from the raw
     # scan; both the day estimates and the merged per-type estimates (and
     # nothing else) read it -- persist it once, like a stored rollup level.
-    regs_day = _track_persist(
+    regs_day = track_persist(
         rho.groupBy("event_type", "day", "bucket").agg(F.max("rho").alias("M"))
     )
 

@@ -31,6 +31,7 @@ from ..functions.text import (
     tokens_duckdb,
     tokens_spark,
 )
+from ..runtime import track_persist
 from ..tables import load_table
 from .registry import register
 
@@ -973,13 +974,11 @@ def bigram_lm_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").where(
         F.length("text") >= 2
     )
-    from ..operators.dedup import _track_persist
-
     # Bigram generation as explode(sequence) + substring keeps the whole
     # training scan inside whole-stage codegen (a transform(...) lambda
     # would run interpreted); the counts aggregate is NDV-sized and is
     # persisted because two driver actions (total, vocabulary) read it.
-    counts = _track_persist(
+    counts = track_persist(
         docs.select(
             F.explode(F.expr("sequence(1, length(text) - 1)")).alias("i"),
             "text",
@@ -1631,10 +1630,8 @@ def bpe_train_merges(words: DataFrame, rounds: int = BPE_MERGE_ROUNDS) -> DataFr
 
     Separated from the registry query so tests can drive it on crafted
     corpora against a pure-Python reference trainer."""
-    from ..operators.dedup import _track_persist
-
     spark = words.sparkSession
-    vocab = _track_persist(
+    vocab = track_persist(
         words.select(
             F.regexp_replace("w", "(.)", "<$1>").alias("enc"),
             F.col("c").cast("bigint").alias("c"),
@@ -1668,7 +1665,7 @@ def bpe_train_merges(words: DataFrame, rounds: int = BPE_MERGE_ROUNDS) -> DataFr
         lft, rgt, pc = best["lft"], best["rgt"], best["pair_count"]
         merges.append((r, lft, rgt, lft + rgt, pc))
         if r < rounds:
-            vocab = _track_persist(
+            vocab = track_persist(
                 vocab.select(
                     F.replace(
                         F.col("enc"),
@@ -1754,11 +1751,9 @@ GROUP BY t.doc_id
     tags=("text", "tokenizer", "bpe"),
 )
 def text_bpe_encode_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.dedup import _track_persist
-
     docs = load_table(spark, sf_dir, "documents")
     tok = docs.select("doc_id", F.explode(F.expr(_TOKS_S)).alias("w"))
-    words = _track_persist(
+    words = track_persist(
         tok.groupBy("w").agg(F.count(F.lit(1)).cast("bigint").alias("c"))
     )
     merges = [
@@ -1968,10 +1963,8 @@ LIMIT {COSINE_TOP_PAIRS}
     bench=True,
 )
 def text_tf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.dedup import _track_persist
-
     docs = load_table(spark, sf_dir, "documents")
-    postings = _track_persist(
+    postings = track_persist(
         docs.select(
             "doc_id", F.explode(F.expr(_TOKS_S)).alias("term")
         )
@@ -1988,7 +1981,7 @@ def text_tf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.expr(f"df between 2 and {_COSINE_CAP_SPARK}"))
         .select("term")
     )
-    capped = _track_persist(postings.join(vocab, "term").select(
+    capped = track_persist(postings.join(vocab, "term").select(
         "doc_id", "term", "tf"
     ))
     norms = capped.groupBy("doc_id").agg(
@@ -2086,9 +2079,7 @@ LIMIT {_PMI_TOP}
 def text_collocations_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(F.expr(_TOKS_S).alias("t"))
-    from ..operators.dedup import _track_persist
-
-    _track_persist(toks)
+    track_persist(toks)
     bigrams = toks.where(F.expr("size(t) >= 2")).select(
         F.explode(
             F.expr(
@@ -2191,11 +2182,9 @@ LIMIT {_BURST_TOP}
     tags=("text", "statistics", "burstiness"),
 )
 def text_term_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.dedup import _track_persist
-
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select("doc_id", F.expr(_TOKS_S).alias("t"))
-    _track_persist(toks)
+    track_persist(toks)
     n_docs = toks.agg(F.count(F.lit(1)).cast("bigint").alias("n"))
     per_doc = (
         toks.select("doc_id", F.explode("t").alias("w"))
@@ -2320,7 +2309,6 @@ FROM picked GROUP BY lang
 )
 def sample_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.hashing import hash64_sql_spark
-    from ..operators.dedup import _track_persist
 
     docs = load_table(spark, sf_dir, "documents").where(
         F.expr(f"size({_TOKS_S}) > 0")
@@ -2334,7 +2322,7 @@ def sample_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (results/scale_probe.txt, round 8).
     from pyspark import StorageLevel
 
-    bs = _track_persist(
+    bs = track_persist(
         docs.select(
             "doc_id",
             "lang",

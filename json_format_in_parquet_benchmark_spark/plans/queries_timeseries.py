@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..runtime import track_persist
 from ..tables import load_table
 from .registry import register
 
@@ -793,9 +794,7 @@ def events_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("d2_q"),
         )
     )
-    from ..operators.dedup import _track_persist
-
-    dev = _track_persist(dev)
+    dev = track_persist(dev)
     denom = dev.groupBy("event_type").agg(
         F.sum("d2_q").cast("bigint").alias("ss_q")
     )

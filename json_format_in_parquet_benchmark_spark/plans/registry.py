@@ -30,6 +30,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..runtime import query_scope
+
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
 
@@ -59,27 +61,8 @@ def register(
 
         @functools.wraps(fn)
         def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
-            # A long-lived consumer (the external driver runs EVERY sampled
-            # query in one vanilla 1g-heap JVM and never releases anything)
-            # must not accumulate the tracked persists of every previous
-            # query: building a query frees OTHER queries' caches, keeping
-            # at most one query's intermediates live.  Its OWN caches
-            # survive a rebuild (owner tag), so bench.py's repeated
-            # measured iterations stay warm via Spark's CacheManager.
-            from ..operators import dedup as _cache_reg
-
-            prev_owner = _cache_reg._CACHE_OWNER[0]
-            if not prev_owner:
-                # Only the OUTERMOST build evicts other queries' caches;
-                # a registered query invoked from inside another (composed
-                # pipelines call sibling builders) must not free its
-                # caller's persisted intermediates mid-build.
-                _cache_reg.release_caches(except_owner=name)
-            _cache_reg._CACHE_OWNER[0] = name
-            try:
+            with query_scope(spark, name):
                 return fn(spark, sf_dir)
-            finally:
-                _cache_reg._CACHE_OWNER[0] = prev_owner
 
         REGISTRY[name] = Query(
             name=name, fn=wrapped, oracle=oracle, doc=doc or (fn.__doc__ or ""), tags=tags, bench=bench

@@ -1,0 +1,118 @@
+"""Query-cache lifecycle: the one home of tracked persists and query scopes.
+
+A persist inside a returned-lazy plan cannot be unpersisted before the
+caller materializes the result, so operators register each persisted
+intermediate here (:func:`track_persist`, or :func:`track_release` for
+blocks ``unpersist()`` cannot reach) and long-lived sessions free them
+later.  Every registered query builds inside :func:`query_scope`, which
+tags what the build tracks with the query's name:
+
+- only the OUTERMOST build frees other queries' caches -- a registered
+  query invoked from inside another (composed pipelines call sibling
+  builders) must not free its caller's intermediates mid-build;
+- a query's OWN caches survive its rebuild, so bench.py's repeated
+  measured iterations stay warm via Spark's CacheManager;
+- the previous owner is restored on exit.
+
+So a long-lived consumer (the external driver runs every sampled query in
+one vanilla 1g-heap JVM and never releases anything) keeps at most one
+query's persisted intermediates live.  Spark's CacheManager matches by
+canonicalized plan, so re-running a query re-uses (not re-adds) an entry.
+
+The scope also ships the package to executor Python workers
+(:func:`session.ship_package`), so a query's Python kernels import in any
+session, run order and cwd.
+
+This module imports nothing from the package at load time, so any module
+may import it at top level.
+"""
+
+from __future__ import annotations
+
+from collections.abc import Callable, Iterator
+from contextlib import contextmanager
+
+from pyspark.sql import DataFrame, SparkSession
+
+# (owner, release) per tracked cache; owner is the registry query whose
+# build tracked it ("" outside any query scope).
+_TRACKED: list[tuple[str, Callable[[], None]]] = []
+_owner = ""
+
+
+def track_release(release: Callable[[], None]) -> None:
+    """Register ``release`` to run when the current owner's caches go."""
+    _TRACKED.append((_owner, release))
+
+
+def track_persist(df: DataFrame, storage_level=None) -> DataFrame:
+    """Persist and track for :func:`release_caches`.  ``storage_level``
+    overrides the DataFrame default (MEMORY_AND_DISK_DESER) -- pass the
+    SERIALIZED MEMORY_AND_DISK when the cached rows are wide arrays whose
+    deserialized form is several x the on-wire size (measured: the DSIR
+    bucket-array cache)."""
+    if storage_level is None:
+        df.persist()
+    else:
+        df.persist(storage_level)
+    track_release(df.unpersist)
+    return df
+
+
+def local_checkpoint_release(df: DataFrame) -> Callable[[], None] | None:
+    """Release callable for the blocks behind a ``localCheckpoint`` frame.
+
+    ``df.unpersist()`` is a NO-OP on a locally-checkpointed DataFrame: the
+    blocks belong to the checkpointed *internal* RDD, not the CacheManager,
+    so they stay pinned in the block manager until session end.  The
+    analyzed plan of such a frame is a ``LogicalRDD`` whose ``rdd()``
+    accessor is the checkpointed RDD; the callable unpersists it
+    (non-blocking).  Local checkpoints are non-recomputable, so call it
+    only once no live lineage can reach the RDD.  Returns None if the Py4J
+    surface differs (the caller then keeps the bounded leak)."""
+    try:
+        plan = df._jdf.queryExecution().analyzed()
+        if not plan.getClass().getName().endswith("LogicalRDD"):
+            return None
+        jrdd = plan.rdd()
+    except Exception:
+        return None
+    return lambda: jrdd.unpersist(False)
+
+
+def _release(keep_owner: str = "") -> None:
+    """Run every tracked release except those of ``keep_owner`` (idempotent)."""
+    kept: list[tuple[str, Callable[[], None]]] = []
+    while _TRACKED:
+        owner, release = _TRACKED.pop()
+        if owner and owner == keep_owner:
+            kept.append((owner, release))
+            continue
+        try:
+            release()
+        except Exception:  # session already stopped
+            pass
+    _TRACKED.extend(reversed(kept))
+
+
+def release_caches() -> None:
+    """Free every tracked cache (idempotent)."""
+    _release()
+
+
+@contextmanager
+def query_scope(spark: SparkSession, name: str) -> Iterator[None]:
+    """Build registry query ``name``: ship the package, free other
+    queries' caches when outermost, and own what the build tracks."""
+    global _owner
+    from . import session
+
+    session.ship_package(spark)
+    prev = _owner
+    if not prev:
+        _release(keep_owner=name)
+    _owner = name
+    try:
+        yield
+    finally:
+        _owner = prev

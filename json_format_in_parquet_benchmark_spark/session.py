@@ -24,7 +24,7 @@ from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
-_SHIPPED_SESSIONS: set[int] = set()
+_SHIPPED_APPS: set[str] = set()
 
 
 def ship_package(spark: SparkSession) -> None:
@@ -35,11 +35,12 @@ def ship_package(spark: SparkSession) -> None:
     include the repo -- any Pandas-UDF stage would then fail to unpickle.
     Zipping the package and ``addPyFile``-ing it is the standard Spark
     deployment path and is exactly what a 1000-executor cluster needs too.
-    Idempotent per SparkContext.
+    Idempotent per SparkContext, keyed on its application id (an ``id()``
+    can be reused by a context created after an earlier one was freed).
     """
     sc = spark.sparkContext
-    key = id(sc)
-    if key in _SHIPPED_SESSIONS:
+    key = sc.applicationId
+    if key in _SHIPPED_APPS:
         return
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
     base = os.path.join(
@@ -48,7 +49,7 @@ def ship_package(spark: SparkSession) -> None:
     zip_path = shutil.make_archive(base, "zip", os.path.dirname(pkg_dir),
                                    os.path.basename(pkg_dir))
     sc.addPyFile(zip_path)
-    _SHIPPED_SESSIONS.add(key)
+    _SHIPPED_APPS.add(key)
 
 
 def default_cpus() -> int:
@@ -64,7 +65,8 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Build (or reuse) a SparkSession with the engine's standard config."""
+    """Build (or reuse) a SparkSession with the engine's standard config,
+    with the package shipped to its executors."""
     cpus = cpus or default_cpus()
     shuffle_partitions = shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS
     builder = (
@@ -89,4 +91,5 @@ def get_spark(
             builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    ship_package(spark)
     return spark

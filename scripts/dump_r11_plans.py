@@ -18,8 +18,8 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from json_format_in_parquet_benchmark_spark.operators.dedup import release_caches
 from json_format_in_parquet_benchmark_spark.plans import REGISTRY
+from json_format_in_parquet_benchmark_spark.runtime import release_caches
 from json_format_in_parquet_benchmark_spark.session import get_spark
 
 

@@ -20,8 +20,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import pyspark.sql.readwriter as rw
 
-from json_format_in_parquet_benchmark_spark.operators.dedup import release_caches
 from json_format_in_parquet_benchmark_spark.plans import REGISTRY
+from json_format_in_parquet_benchmark_spark.runtime import release_caches
 from json_format_in_parquet_benchmark_spark.session import get_spark
 
 _STATE = {"query": "", "n": 0, "out_dir": "", "suffix": ""}

@@ -56,6 +56,7 @@ from json_format_in_parquet_benchmark_spark.operators.similarity import (
     pq_topk,
     topk_ivf,
 )
+from json_format_in_parquet_benchmark_spark.runtime import release_caches
 from json_format_in_parquet_benchmark_spark.session import get_spark
 
 VOCAB = 50_000  # large vocab keeps shingle document-frequency low, like real text
@@ -214,7 +215,7 @@ def timed(fn, label: str = "") -> tuple[float, int]:
         # Release the operator's persisted intermediates between trials and
         # measurements: no run should inherit a predecessor's cache, and
         # leaked blocks inflate later timings via memory/GC pressure.
-        dedup.release_caches()
+        release_caches()
         best = secs if best is None else min(best, secs)
     return best, rows
 
@@ -443,7 +444,7 @@ def main() -> None:
                         ),
                         flush=True,
                     )
-                dedup.release_caches()
+                release_caches()
             truth.unpersist()
             r["planted_recall"] = (round(time.time() - t0, 2), n_truth)
         r["embedding_near_dup"] = timed_l("embedding_near_dup",

@@ -25,7 +25,7 @@ TEST_SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001"
 def spark():
     s = get_spark(app_name="jfipb-tests", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "8")))
     yield s
-    from json_format_in_parquet_benchmark_spark.operators.dedup import release_caches
+    from json_format_in_parquet_benchmark_spark.runtime import release_caches
 
     release_caches()
     s.stop()

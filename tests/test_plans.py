@@ -310,9 +310,7 @@ def test_q6_filters_push_to_parquet(spark):
 
 
 def test_pagerank_has_no_cartesian_and_caches_edges(spark):
-    from json_format_in_parquet_benchmark_spark.operators.dedup import (
-        release_caches,
-    )
+    from json_format_in_parquet_benchmark_spark.runtime import release_caches
 
     plan = plan_of(spark, "graph_pagerank_trading")
     assert "CartesianProduct" not in plan
@@ -336,9 +334,7 @@ def test_gapfill_single_join_no_python(spark):
 
 
 def test_bigram_lm_scoring_stage_is_arrow_batched(spark):
-    from json_format_in_parquet_benchmark_spark.operators.dedup import (
-        release_caches,
-    )
+    from json_format_in_parquet_benchmark_spark.runtime import release_caches
 
     plan = plan_of(spark, "text_char_bigram_lm")
     assert "MapInPandas" in plan  # hash-map scoring kernel

@@ -506,11 +506,12 @@ def test_connected_components_frees_stale_checkpoints(spark):
     localCheckpoint rounds; the loop must release each stale checkpoint's
     pinned blocks (plain unpersist() is a no-op on locally-checkpointed
     frames), leaving at most the final checkpoint + the returned labels
-    frame pinned -- not one block set per 5 rounds."""
+    frame pinned -- not one block set per 5 rounds -- and release_caches
+    must free those last two."""
     from json_format_in_parquet_benchmark_spark.operators.dedup import (
         connected_components,
-        release_caches,
     )
+    from json_format_in_parquet_benchmark_spark.runtime import release_caches
 
     jsc = spark.sparkContext._jsc.sc()
     release_caches()
@@ -528,7 +529,10 @@ def test_connected_components_frees_stale_checkpoints(spark):
     # checkpoint it reads).  8 leaked checkpoints would show up here.
     leaked = jsc.getPersistentRDDs().size() - base
     assert leaked <= 3, f"stale checkpoint blocks still pinned: {leaked}"
+    # release_caches frees the returned labels AND the final checkpoint's
+    # blocks, which labels.unpersist() alone cannot reach.
     release_caches()
+    assert jsc.getPersistentRDDs().size() == base
 
 
 def test_kmeans_assignment_is_true_argmin(spark, sf_dir):
@@ -656,8 +660,8 @@ def test_ngram_prefix_exactness_and_df_cap_subset(spark, sf_dir):
     from json_format_in_parquet_benchmark_spark.operators.dedup import (
         ngram_jaccard_pairs,
         ngram_jaccard_pairs_prefix,
-        release_caches,
     )
+    from json_format_in_parquet_benchmark_spark.runtime import release_caches
 
     docs = load_table(spark, sf_dir, "documents")
     n, t = 4, 0.4
@@ -799,13 +803,11 @@ def test_pagerank_conserves_bounded_mass(spark, sf_dir):
     RANK_SCALE and below by the pure-residual floor."""
     from pyspark.sql import functions as F
 
-    from json_format_in_parquet_benchmark_spark.operators.dedup import (
-        release_caches,
-    )
     from json_format_in_parquet_benchmark_spark.operators.graph import (
         RANK_SCALE,
         pagerank,
     )
+    from json_format_in_parquet_benchmark_spark.runtime import release_caches
 
     eraw = spark.range(200).selectExpr("id as a", "(id * 7 + 1) % 200 as b")
     edges = eraw.selectExpr("a as src", "b as dst").union(
@@ -902,13 +904,11 @@ def test_keyword_pagerank_survives_one_token_docs(spark, sf_dir):
     short docs are filtered out, matching the oracle's empty range."""
     from pyspark.sql import functions as F
 
-    from json_format_in_parquet_benchmark_spark.operators.dedup import (
-        release_caches,
-    )
     from json_format_in_parquet_benchmark_spark.operators.graph import pagerank
     from json_format_in_parquet_benchmark_spark.plans.queries_graph import (
         KW_MIN_LEN,
     )
+    from json_format_in_parquet_benchmark_spark.runtime import release_caches
 
     docs = spark.createDataFrame(
         [(1, "solo"), (2, ""), (3, "alpha beta alpha gamma beta")],

@@ -1,0 +1,199 @@
+"""The query scope (``runtime``): cache ownership across registered query
+builds, package shipping keyed per application, and Python kernels that
+import in a fresh vanilla session whatever the run order and cwd."""
+
+from __future__ import annotations
+
+import json
+import os
+import subprocess
+import sys
+import uuid
+
+import pytest
+from pyspark import StorageLevel
+
+from json_format_in_parquet_benchmark_spark import runtime, session
+from json_format_in_parquet_benchmark_spark.plans.registry import REGISTRY, register
+from json_format_in_parquet_benchmark_spark.runtime import (
+    query_scope,
+    release_caches,
+    track_persist,
+)
+
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+class _FakeContext:
+    def __init__(self, app_id: str) -> None:
+        self.applicationId = app_id
+        self.shipped: list[str] = []
+
+    def addPyFile(self, path: str) -> None:
+        self.shipped.append(path)
+
+
+class _FakeSession:
+    def __init__(self, app_id: str) -> None:
+        self.sparkContext = _FakeContext(app_id)
+
+
+def test_ship_package_ships_once_per_application():
+    app_a, app_b = f"fake-{uuid.uuid4()}", f"fake-{uuid.uuid4()}"
+    first = _FakeSession(app_a)
+    session.ship_package(first)
+    assert len(first.sparkContext.shipped) == 1
+    # The first context is freed just before the second is built, so
+    # CPython hands the second the same id(); its application id differs.
+    del first
+    second = _FakeSession(app_b)
+    session.ship_package(second)
+    session.ship_package(second)
+    assert len(second.sparkContext.shipped) == 1
+    assert second.sparkContext.shipped[0].endswith(
+        "json_format_in_parquet_benchmark_spark.zip"
+    )
+
+
+def _cached(df) -> bool:
+    return df.storageLevel != StorageLevel.NONE
+
+
+@pytest.fixture
+def scoped_queries(spark):
+    """Registers throwaway queries through ``register`` (the real wrapper)
+    and removes them afterwards, so the registry keeps its real queries."""
+    names: list[str] = []
+
+    def add(fn):
+        name = f"_scope_test_{fn.__name__}_{uuid.uuid4().hex[:8]}"
+        register(name)(fn)
+        names.append(name)
+        return REGISTRY[name].fn
+
+    release_caches()
+    yield add
+    release_caches()
+    for name in names:
+        REGISTRY.pop(name, None)
+
+
+def test_building_another_query_frees_previous_querys_caches(spark, scoped_queries):
+    frames = {}
+
+    def build_a(spark, sf_dir):
+        frames["a"] = track_persist(spark.range(10).selectExpr("id * 2 as x"))
+        return frames["a"]
+
+    def build_b(spark, sf_dir):
+        frames["b"] = track_persist(spark.range(10).selectExpr("id * 3 as y"))
+        return frames["b"]
+
+    query_a, query_b = scoped_queries(build_a), scoped_queries(build_b)
+    query_a(spark, "")
+    assert _cached(frames["a"])
+    query_b(spark, "")
+    assert not _cached(frames["a"])
+    assert _cached(frames["b"])
+
+
+def test_rebuilding_a_query_keeps_its_own_caches(spark, scoped_queries):
+    frames = []
+
+    def build_a(spark, sf_dir):
+        frames.append(track_persist(spark.range(10).selectExpr("id * 5 as x")))
+        return frames[-1]
+
+    query_a = scoped_queries(build_a)
+    query_a(spark, "")
+    query_a(spark, "")
+    assert all(_cached(df) for df in frames)
+    release_caches()
+    assert not any(_cached(df) for df in frames)
+
+
+def test_nested_registered_query_keeps_callers_caches(spark, scoped_queries):
+    frames = {}
+
+    def build_inner(spark, sf_dir):
+        frames["inner"] = track_persist(spark.range(10).selectExpr("id * 7 as x"))
+        return frames["inner"]
+
+    inner = scoped_queries(build_inner)
+
+    def build_outer(spark, sf_dir):
+        frames["outer"] = track_persist(spark.range(10).selectExpr("id * 11 as y"))
+        inner(spark, sf_dir)
+        return frames["outer"]
+
+    outer = scoped_queries(build_outer)
+    outer(spark, "")
+    assert _cached(frames["outer"]) and _cached(frames["inner"])
+    assert runtime._owner == ""
+
+
+def test_scope_restores_owner_when_the_build_raises(spark):
+    with pytest.raises(RuntimeError):
+        with query_scope(spark, "outer"):
+            with query_scope(spark, "inner"):
+                raise RuntimeError("build failed")
+    assert runtime._owner == ""
+
+
+_RUN_ORDER_SCRIPT = r"""
+import json, sys
+repo, sf_dir = sys.argv[1], sys.argv[2]
+sys.path.insert(0, repo)
+from pyspark.sql import SparkSession
+
+spark = SparkSession.builder.master("local[2]").appName("run-order").getOrCreate()
+spark.sparkContext.setLogLevel("ERROR")
+from json_format_in_parquet_benchmark_spark.plans import REGISTRY
+
+
+def semantic_fast(spark, sf_dir):
+    # operators/semantic's Python kernels back no registered query, so
+    # build one inside the same scope a registered query gets.
+    from json_format_in_parquet_benchmark_spark.operators.semantic import (
+        semantic_dup_flags_fast,
+    )
+    from json_format_in_parquet_benchmark_spark.runtime import query_scope
+    from json_format_in_parquet_benchmark_spark.tables import load_table
+
+    with query_scope(spark, "semantic_dup_flags_fast"):
+        emb = load_table(spark, sf_dir, "embeddings")
+        return semantic_dup_flags_fast(emb, "embedding", "vec_id", threshold=0.95)
+
+
+steps = [
+    ("pipeline_multimodal_curation", REGISTRY["pipeline_multimodal_curation"].fn),
+    ("multimodal_decode_features", REGISTRY["multimodal_decode_features"].fn),
+    ("semantic_dup_flags_fast", semantic_fast),
+    ("similarity_pq_topk", REGISTRY["similarity_pq_topk"].fn),
+]
+out = {}
+for name, fn in steps:
+    try:
+        out[name] = len(fn(spark, sf_dir).collect())
+    except Exception as exc:
+        out[name] = f"{type(exc).__name__}: {str(exc)[:400]}"
+spark.stop()
+print(json.dumps(out))
+"""
+
+
+def test_python_kernels_run_in_fresh_vanilla_session_outside_repo(tmp_path, sf_dir):
+    """A fresh vanilla session (the external driver's) whose cwd is not
+    the repo: executors can import the package only if it was shipped, and
+    ``pipeline_multimodal_curation`` runs first, before any query that
+    used to ship it."""
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    proc = subprocess.run(
+        [sys.executable, "-c", _RUN_ORDER_SCRIPT, REPO_ROOT, sf_dir],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=900,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    results = json.loads(proc.stdout.strip().splitlines()[-1])
+    failed = {k: v for k, v in results.items() if not isinstance(v, int)}
+    assert not failed, failed
+    assert all(n > 0 for n in results.values()), results
