@@ -19,9 +19,6 @@ inside whole-stage codegen, no Python boundary crossing.
 
 from __future__ import annotations
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-
 HASH_BITS = 60  # 15 hex chars; keeps the value positive in a signed int64
 
 
@@ -44,14 +41,6 @@ def hash64_sql_duckdb(expr: str, salt: str = "") -> str:
     _check_salt(salt)
     salted = f"'{salt}' || {expr}" if salt else expr
     return f"('0x' || substr(md5({salted}), 1, 15))::BIGINT"
-
-
-def hash64(col: Column | str, salt: str = "") -> Column:
-    """Spark Column: 60-bit deterministic hash (see module docstring)."""
-    c = F.col(col) if isinstance(col, str) else col
-    if salt:
-        c = F.concat(F.lit(salt), c)
-    return F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("bigint")
 
 
 # Universal-hash MinHash permutations: ONE md5 per shingle produces a 60-bit

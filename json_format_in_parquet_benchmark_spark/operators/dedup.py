@@ -9,8 +9,9 @@ Six strategies, each a pure DataFrame transformation:
   LSH banding for candidate generation + exact Jaccard verification.
 - :func:`simhash_pairs`          -- 60-bit SimHash + signature-band-blocked
   Hamming join (multi-index, full recall).
-- :func:`ngram_jaccard_pairs`    -- exact n-gram Jaccard via a DF-capped
-  inverted index (stop-shingles cut from candidate generation).
+- :func:`ngram_jaccard_pairs`    -- exact n-gram Jaccard: prefix-filter
+  candidates, then a DF-cap scope filter (pairs sharing only stop-shingles
+  are out of scope).
 - :func:`embedding_near_dup_pairs` -- cosine near-duplicates over an
   embedding column, sign-LSH-bucket blocked + exact verify.
 
@@ -46,7 +47,7 @@ import warnings
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.hashing import hash64_sql_spark
+from ..functions.hashing import P31, hash64_sql_spark, perm_consts
 from ..functions.text import shingles_spark, tokens_spark
 from ..runtime import local_checkpoint_release, track_persist, track_release
 from ..runtime import release_caches  # noqa: F401  (perfbench imports it from here)
@@ -83,19 +84,24 @@ def normalized_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     )
 
 
-def _doc_shingles(df: DataFrame, text_col: str, id_col: str, n: int) -> DataFrame:
-    """(id, shingle) pairs, distinct shingles per doc."""
-    return df.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(F.expr(shingles_spark(tokens_spark(text_col), n))).alias("sh"),
+def _shingle_sets(df: DataFrame, text_col: str, id_col: str, n: int) -> DataFrame:
+    """Persisted (doc_id, shset): each doc's distinct word ``n``-gram
+    shingles as one array.  Shingling (tokenize + slide + distinct) is the
+    expensive scan-side step and every shingle-based operator reads its
+    result several times (signatures or candidates, then both verify
+    sides), so it is computed ONCE and cached -- ~20 bytes/shingle, the
+    natural materialization point of these pipelines at any scale."""
+    return track_persist(
+        _spread(df).select(
+            F.col(id_col).alias("doc_id"),
+            F.expr(shingles_spark(tokens_spark(text_col), n)).alias("shset"),
+        )
     )
 
 
-def minhash_signatures(
-    df: DataFrame, text_col: str, id_col: str, n: int = 3, k: int = 16
-) -> DataFrame:
-    """One row per doc with k MinHash components m0..m{k-1} plus the shingle
-    count.
+def minhash_signatures(docsets: DataFrame, k: int = 16) -> DataFrame:
+    """One row per doc of ``docsets`` (doc_id, shset) with k MinHash
+    components m0..m{k-1}.
 
     ONE md5 per exploded shingle produces a 60-bit base hash; the k
     components are universal-hash permutations of it (exact int64
@@ -103,18 +109,18 @@ def minhash_signatures(
     -- 16x less hashing than salted-md5-per-component.  The explode+groupBy
     shape (rather than array_min(transform(...)) per component) keeps the
     md5 evaluated exactly once per shingle: projection collapse would
-    otherwise duplicate the expensive lambda into every component.
+    otherwise duplicate the expensive lambda into every component.  Docs
+    with zero shingles get no row (explode drops them).
     """
-    from ..functions.hashing import P31, hash64_sql_spark, perm_consts
-
-    sh = _doc_shingles(df, text_col, id_col, n).withColumn(
+    sh = docsets.select("doc_id", F.explode("shset").alias("sh")).withColumn(
         "h31", F.expr(f"{hash64_sql_spark('sh')} % {P31}")
     )
-    aggs = [
-        F.min(F.expr(f"({a} * h31 + {b}) % {P31}")).alias(f"m{j}")
-        for j, (a, b) in enumerate(perm_consts(k))
-    ]
-    return sh.groupBy("doc_id").agg(*aggs, F.count(F.lit(1)).alias("n_sh"))
+    return sh.groupBy("doc_id").agg(
+        *[
+            F.min(F.expr(f"({a} * h31 + {b}) % {P31}")).alias(f"m{j}")
+            for j, (a, b) in enumerate(perm_consts(k))
+        ]
+    )
 
 
 def minhash_lsh_pairs(
@@ -143,37 +149,15 @@ def minhash_lsh_pairs(
     generation only (pairs there usually co-occur in an uncapped band too);
     the cap is mirrored exactly in the DuckDB oracle.
     """
-    from ..functions.hashing import P31, hash64_sql_spark, perm_consts
-
     rows = k // bands
-    # Shingling is the expensive scan-side computation (tokenize + slide +
-    # distinct); three plan branches need its result (signatures, verify
-    # left, verify right), so compute the per-doc shingle array ONCE and
-    # persist it -- ~20 bytes/shingle, the natural materialization point of
-    # every MinHash pipeline at any scale.  Callers comparing against
-    # another shingle-based operator (the recall harness) pass the SAME
-    # persisted ``docsets`` (doc_id, shset) to both so the corpus is
-    # shingled once, not per arm.
+    # Callers comparing against another shingle-based operator (the recall
+    # harness) pass the SAME persisted ``docsets`` (doc_id, shset) to both
+    # so the corpus is shingled once, not per arm.
     if docsets is None:
-        docsets = track_persist(
-            _spread(df).select(
-                F.col(id_col).alias("doc_id"),
-                F.expr(shingles_spark(tokens_spark(text_col), n)).alias("shset"),
-            )
-        )
-    # Signatures: one explode + groupBy over the cached arrays, one md5 per
-    # shingle, k universal-hash permutations (exact int64).  Docs with zero
-    # shingles never reach banding (explode drops them), so no degenerate
+        docsets = _shingle_sets(df, text_col, id_col, n)
+    # Docs with zero shingles never reach banding, so no degenerate
     # all-empty bucket exists.
-    sh = docsets.select("doc_id", F.explode("shset").alias("sh")).withColumn(
-        "h31", F.expr(f"{hash64_sql_spark('sh')} % {P31}")
-    )
-    sig = sh.groupBy("doc_id").agg(
-        *[
-            F.min(F.expr(f"({a} * h31 + {b}) % {P31}")).alias(f"m{j}")
-            for j, (a, b) in enumerate(perm_consts(k))
-        ]
-    )
+    sig = minhash_signatures(docsets, k)
     band_cols = []
     for b in range(bands):
         parts = [F.col(f"m{b * rows + r}").cast("string") for r in range(rows)]
@@ -183,8 +167,6 @@ def minhash_lsh_pairs(
                 F.concat_ws(",", *parts).alias("band_hash"),
             ).alias(f"b{b}")
         )
-    from pyspark.sql import Window
-
     # Bucket-size guard as a window count over the SAME key the self-join
     # shuffles on -- one sort in the already-required exchange, no separate
     # aggregate/broadcast pass.  Persisted: both self-join sides consume it,
@@ -213,29 +195,7 @@ def minhash_lsh_pairs(
         .select(F.col("l.doc_id").alias("doc_a"), F.col("r.doc_id").alias("doc_b"))
         .distinct()
     )
-    # Verification: candidate pairs are rare, so broadcast them into the
-    # cached per-doc shingle arrays and intersect JVM-side (array_intersect)
-    # -- no exploded-shingle shuffle.
-    a = docsets.select(
-        F.col("doc_id").alias("doc_a"), F.col("shset").alias("sha"), F.size("shset").alias("na")
-    )
-    b = docsets.select(
-        F.col("doc_id").alias("doc_b"), F.col("shset").alias("shb"), F.size("shset").alias("nb")
-    )
-    return (
-        a.join(F.broadcast(cand), "doc_a")
-        .join(b, "doc_b")
-        .withColumn("inter", F.expr("size(array_intersect(sha, shb))"))
-        .select(
-            "doc_a",
-            "doc_b",
-            (
-                F.col("inter").cast("double")
-                / (F.col("na") + F.col("nb") - F.col("inter"))
-            ).alias("jaccard"),
-        )
-        .where(F.col("jaccard") >= threshold)
-    )
+    return _jaccard_verify(docsets, cand, threshold)
 
 
 def ngram_jaccard_pairs(
@@ -245,7 +205,6 @@ def ngram_jaccard_pairs(
     n: int = 4,
     threshold: float = 0.4,
     df_cap: int = 50,
-    candidates: str = "prefix",
 ) -> DataFrame:
     """N-gram Jaccard near-dup pairs with the DF-capped OUTPUT contract.
 
@@ -255,110 +214,90 @@ def ngram_jaccard_pairs(
     every common shingle is boilerplate (> ``df_cap`` docs) are
     deliberately out of scope.
 
-    ``candidates`` selects the physical candidate generator:
-
-    - ``"prefix"`` (default): the PPJoin prefix-filter bound
-      (:func:`ngram_jaccard_pairs_prefix`) — provably a superset of all
-      Jaccard >= t pairs, hence of this contract's output — then the
-      DF-cap scope filter is applied to the few verified pairs with two
-      broadcast-pruned scans of the shingle table.  The scale probe
-      measured the old posting-list self-join at 7.2x per 10x data vs
-      5.9x for the prefix bound, so prefix is the default at scale.
-    - ``"index"``: the original DF-capped inverted-index self-join, kept
-      as the measured comparison arm (scripts/run_scale_probe.py).
+    Candidates come from the PPJoin prefix-filter bound
+    (:func:`ngram_jaccard_pairs_prefix`) — provably a superset of all
+    Jaccard >= t pairs, hence of this contract's output — then the DF-cap
+    scope filter is applied to the few verified pairs with two
+    broadcast-pruned scans of the shingle table.  The scale probe measured
+    the earlier DF-capped posting-list self-join at 7.2x per 10x data vs
+    5.9x for the prefix bound (results/scale_probe.txt).
     """
-    docsets = track_persist(
-        _spread(df).select(
-            F.col(id_col).alias("doc_id"),
-            F.expr(shingles_spark(tokens_spark(text_col), n)).alias("shset"),
-        )
-    )
-    sh = docsets.select("doc_id", F.explode("shset").alias("sh"))
+    from fractions import Fraction
+
+    docsets = _shingle_sets(df, text_col, id_col, n)
     hot = (
-        sh.groupBy("sh")
+        docsets.select(F.explode("shset").alias("sh"))
+        .groupBy("sh")
         .agg(F.count(F.lit(1)).alias("df"))
         .where(F.col("df") > df_cap)
         .select("sh")
     )
-    if candidates == "prefix":
-        from fractions import Fraction
-
-        # Exact rational threshold so the prefix length's ceil(t*|S|) is
-        # integer arithmetic (Fraction("0.4") == 2/5 exactly; a float
-        # 0.4*|S| can round the bound the wrong way).
-        frac = Fraction(str(threshold))
-        # PERSIST the verified pairs: the scope filter below consumes them
-        # three times (broadcast keys, b-side prune, final semi-join) and
-        # an unpersisted plan re-runs the whole prefix candidate+verify
-        # chain per consumer (measured 2.8s -> 7.7s at 50k docs).
-        pairs = track_persist(
-            ngram_jaccard_pairs_prefix(
-                df,
-                text_col,
-                id_col,
-                n=n,
-                threshold_num=frac.numerator,
-                threshold_den=frac.denominator,
-                docsets=docsets,
-            )
+    # Exact rational threshold so the prefix length's ceil(t*|S|) is
+    # integer arithmetic (Fraction("0.4") == 2/5 exactly; a float
+    # 0.4*|S| can round the bound the wrong way).
+    frac = Fraction(str(threshold))
+    # PERSIST the verified pairs: the scope filter below consumes them
+    # three times (broadcast keys, b-side prune, final semi-join) and
+    # an unpersisted plan re-runs the whole prefix candidate+verify
+    # chain per consumer (measured 2.8s -> 7.7s at 50k docs).
+    pairs = track_persist(
+        ngram_jaccard_pairs_prefix(
+            df,
+            text_col,
+            id_col,
+            n=n,
+            threshold_num=frac.numerator,
+            threshold_den=frac.denominator,
+            docsets=docsets,
         )
-        if df_cap is None:
-            return pairs
-        # Scope filter: keep only pairs sharing >= 1 non-stop shingle.
-        # Evaluated on the CANDIDATE PAIRS' shingle intersections, never
-        # on the full (doc, shingle) table: the verified pair set is tiny
-        # (it is the dedup OUTPUT), so re-deriving each pair's shared
-        # shingles via array_intersect over broadcast-pruned docsets costs
-        # |pairs| * |intersection| rows.  The first cut of this filter
-        # joined the full exploded rare-shingle table against itself
-        # keyed by pair — at 500k docs AQE measured the 19M-row string
-        # side under the 32MB broadcast threshold by COMPRESSED size and
-        # OOM'd building the hash relation (the known broadcast-
-        # conversion trap, results/bench_notes.md).
-        keys = pairs.select("doc_a", "doc_b")
-        da = docsets.select(F.col("doc_id").alias("doc_a"), F.col("shset").alias("sha"))
-        # Prune the b-side to docs that appear in some pair BEFORE the
-        # pair join, so both join inputs are |pairs|-bounded (docsets
-        # rows carry whole shingle arrays — never shuffle the full table
-        # for a filter over the output).
-        db = docsets.join(
-            F.broadcast(keys.select(F.col("doc_b").alias("doc_id")).distinct()),
-            "doc_id",
-            "left_semi",
-        ).select(F.col("doc_id").alias("doc_b"), F.col("shset").alias("shb"))
-        cand_sh = (
-            da.join(F.broadcast(keys), "doc_a")
-            .join(db, "doc_b")
-            .select(
-                "doc_a",
-                "doc_b",
-                F.explode(F.expr("array_intersect(sha, shb)")).alias("sh"),
-            )
+    )
+    # Scope filter: keep only pairs sharing >= 1 non-stop shingle.
+    # Evaluated on the CANDIDATE PAIRS' shingle intersections, never
+    # on the full (doc, shingle) table: the verified pair set is tiny
+    # (it is the dedup OUTPUT), so re-deriving each pair's shared
+    # shingles via array_intersect over broadcast-pruned docsets costs
+    # |pairs| * |intersection| rows.  The first cut of this filter
+    # joined the full exploded rare-shingle table against itself
+    # keyed by pair — at 500k docs AQE measured the 19M-row string
+    # side under the 32MB broadcast threshold by COMPRESSED size and
+    # OOM'd building the hash relation (the known broadcast-
+    # conversion trap, results/bench_notes.md).
+    keys = pairs.select("doc_a", "doc_b")
+    da = docsets.select(F.col("doc_id").alias("doc_a"), F.col("shset").alias("sha"))
+    # Prune the b-side to docs that appear in some pair BEFORE the
+    # pair join, so both join inputs are |pairs|-bounded (docsets
+    # rows carry whole shingle arrays — never shuffle the full table
+    # for a filter over the output).
+    db = docsets.join(
+        F.broadcast(keys.select(F.col("doc_b").alias("doc_id")).distinct()),
+        "doc_id",
+        "left_semi",
+    ).select(F.col("doc_id").alias("doc_b"), F.col("shset").alias("shb"))
+    cand_sh = (
+        da.join(F.broadcast(keys), "doc_a")
+        .join(db, "doc_b")
+        .select(
+            "doc_a",
+            "doc_b",
+            F.explode(F.expr("array_intersect(sha, shb)")).alias("sh"),
         )
-        shared_rare = (
-            cand_sh.join(F.broadcast(hot), "sh", "left_anti")
-            .select("doc_a", "doc_b")
-            .distinct()
-        )
-        return pairs.join(shared_rare, ["doc_a", "doc_b"], "left_semi")
-    if candidates != "index":
-        raise ValueError(f"unknown candidate strategy {candidates!r}")
-    idx = sh.join(F.broadcast(hot), "sh", "left_anti")
-    a = idx.alias("a")
-    b = idx.alias("b")
-    cand = (
-        a.join(b, (F.col("a.sh") == F.col("b.sh")) & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
+    )
+    shared_rare = (
+        cand_sh.join(F.broadcast(hot), "sh", "left_anti")
+        .select("doc_a", "doc_b")
         .distinct()
     )
-    return _jaccard_verify(docsets, cand, threshold)
+    return pairs.join(shared_rare, ["doc_a", "doc_b"], "left_semi")
 
 
 def _jaccard_verify(
     docsets: DataFrame, cand: DataFrame, threshold: float
 ) -> DataFrame:
     """Exact-Jaccard verification of candidate pairs against the FULL
-    shingle sets (shared by the DF-capped and prefix-filtered variants)."""
+    shingle sets (the MinHash-LSH and prefix-filtered joins share it).
+    Candidate pairs are rare, so they are broadcast into the cached
+    per-doc shingle arrays and intersected JVM-side (array_intersect) --
+    no exploded-shingle shuffle."""
     left = docsets.select(
         F.col("doc_id").alias("doc_a"), F.col("shset").alias("sha"), F.size("shset").alias("na")
     )
@@ -412,12 +351,7 @@ def ngram_jaccard_pairs_prefix(
     """
     t = threshold_num / threshold_den
     if docsets is None:
-        docsets = track_persist(
-            _spread(df).select(
-                F.col(id_col).alias("doc_id"),
-                F.expr(shingles_spark(tokens_spark(text_col), n)).alias("shset"),
-            )
-        )
+        docsets = _shingle_sets(df, text_col, id_col, n)
     # Candidate stages run on the xxhash64 of each shingle, not the string:
     # the shingle table is the biggest thing shuffled here (twice for the
     # windows, twice for the self-join), and an int64 shuffles ~3x fewer

@@ -9,10 +9,12 @@ and are folded into the assignment expression as literals, so every
 assignment pass is a pure map-side argmin with ZERO shuffles; each Lloyd
 iteration costs exactly one groupBy shuffle (the centroid update, map-side
 combined).  The cluster count is the scale knob -- SemDeDup runs 50k
-clusters over 5B embeddings so within-cluster pair work stays ~ N^2/k; at
-production k the per-row argmin expression swaps in the BLAS-batched
-numpy kernels at the bottom of this module (same contract, same split as
-similarity.ivf_assign / ivf_assign_fast).
+clusters over 5B embeddings so within-cluster pair work stays ~ N^2/k.
+:func:`semantic_dup_flags` always runs the SQL-literal argmin
+(:func:`kmeans_assign`); the Arrow-batched numpy form at the bottom of this
+module is the separate :func:`semantic_dup_flags_fast` (same contract, same
+split as similarity.ivf_assign / ivf_assign_fast), which only the scale
+probe calls.
 
 Cross-engine exactness (the DuckDB oracle hash-matches bit-for-bit):
 

@@ -187,8 +187,8 @@ def ivf_assign_fast(
     so near-tie argmax decisions can differ in the last ulp -- fine for an
     index build (any consistent assignment works; queries probe by the
     same centroids), but not bit-reproducible in a SQL oracle.  The
-    oracle-checked registry query therefore uses :func:`ivf_assign`; bench
-    and scale paths use this.
+    oracle-checked registry queries therefore use :func:`ivf_assign`; only
+    the scale probe (scripts/run_scale_probe.py) runs this kernel.
     """
     import numpy as np
     import pandas as pd
@@ -211,74 +211,17 @@ def ivf_assign_fast(
     return src.mapInPandas(assign, schema="vec_id long, cell int")
 
 
-def ivf_assign_hier(
-    df: DataFrame,
-    vec_col: str,
-    id_col: str,
-    n_cells: int = 1024,
-    dim: int = 64,
-    n_groups: int | None = None,
-) -> DataFrame:
-    """Two-level (coarse -> fine) IVF assignment: the O(N * n_cells * dim)
-    wall of flat assignment, fixed.
-
-    When n_cells grows LINEARLY with N (the rule that keeps per-cell
-    occupancy -- and so every downstream within-cell join -- constant),
-    flat assignment's flop count N * n_cells * dim grows QUADRATICALLY:
-    measured as the dominant term at the 5M-vector probe tier (10k cells:
-    3.2e15 flops, vs 3.2e13 at 500k).  The standard fix is hierarchical
-    quantization (FAISS's IVF-on-IVF / coarse quantizer): split the
-    n_cells fine centroids into g = sqrt(n_cells) contiguous groups whose
-    COARSE centroid is the group mean; assign each vector to the best
-    group (N*g*dim), then to the best fine cell within it
-    (N*(n_cells/g)*dim) -- total O(N * 2*sqrt(n_cells) * dim), which at
-    n_cells = N/500 grows as N^1.5 in flops but with a constant so small
-    it is I/O-bound at every measured tier (results/scale_probe.txt).
-
-    The greedy coarse step is APPROXIMATE: a vector near a group boundary
-    can land in a neighboring cell vs the global argmax.  Fine for an
-    index build (any consistent assignment works -- queries probe by the
-    same two-level rule); the oracle-checked queries stay on the exact
-    flat forms, same trade as ivf_assign_fast's float-order caveat.
-    """
-    import numpy as np
-    import pandas as pd
-
-    cents = np.array(centroids(n_cells, dim), dtype=np.float64)  # cells x dim
-    g = n_groups or max(1, int(round(n_cells ** 0.5)))
-    if not 1 <= g <= n_cells:
-        # An oversized g produces duplicate linspace bounds -> empty
-        # centroid slices -> NaN coarse rows and executor-side crashes.
-        raise ValueError(f"n_groups ({g}) must be in [1, n_cells={n_cells}]")
-    bounds = np.linspace(0, n_cells, g + 1).astype(int)
-    coarse = np.stack(
-        [cents[bounds[i]:bounds[i + 1]].mean(axis=0) for i in range(g)]
-    )  # g x dim
-
-    def assign(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            X = np.array(pdf["v"].tolist(), dtype=np.float64)
-            cg = (X @ coarse.T).argmax(axis=1)
-            out = np.empty(len(X), dtype=np.int32)
-            for gi in np.unique(cg):
-                m = cg == gi
-                sub = cents[bounds[gi]:bounds[gi + 1]]
-                out[m] = bounds[gi] + (X[m] @ sub.T).argmax(axis=1)
-            yield pd.DataFrame({"vec_id": pdf["vec_id"], "cell": out})
-
-    src = df.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("v"))
-    return src.mapInPandas(assign, schema="vec_id long, cell int")
-
-
 # --- integer-exact two-level assignment (the oracle-checkable scale arm) ---
 #
-# ivf_assign_hier above fixed the O(N * n_cells * dim) assignment wall but
-# its float BLAS argmax is not bit-reproducible in a SQL oracle, so the
-# REGISTERED knn-graph query kept the flat assignment (round-7 verdict's one
-# weak item).  This variant closes that gap by moving the whole decision to
-# exact integer arithmetic:
+# When n_cells grows LINEARLY with N (the rule that keeps per-cell
+# occupancy -- and so every downstream within-cell join -- constant), flat
+# assignment's N * n_cells * dim flops grow QUADRATICALLY: the dominant term
+# at the 5M-vector probe tier (results/scale_probe.txt).  Hierarchical
+# quantization (FAISS's coarse quantizer) splits the fine centroids into
+# g ~ sqrt(n_cells) groups, assigns each vector to the best group, then to
+# the best fine cell within it: O(N * 2*sqrt(n_cells) * dim).  The round-7
+# float form of that split was not bit-reproducible in a SQL oracle, so the
+# whole decision moves to exact integer arithmetic:
 #
 # - vectors quantize once to the 1e6 grid (floor(x * 1e6) as int64 -- the
 #   same engine-portable recipe as the PQ machinery below),
@@ -338,8 +281,7 @@ def ivf_assign_hier_exact(
     at both levels).  O(N * (g + n_cells/g) * dim) integer flops in an
     Arrow-batched numpy kernel, embarrassingly parallel, zero shuffle --
     and bit-identical to :func:`hier_assign_duckdb_ctes`' SQL, so the plan
-    that survives the linear-n_cells growth rule is itself oracle-checked
-    (unlike ivf_assign_hier's float coarse step)."""
+    that survives the linear-n_cells growth rule is itself oracle-checked."""
     import numpy as np
     import pandas as pd
 
@@ -513,9 +455,8 @@ def knn_graph_ivf(
     same linear-n_cells rule and dominates from ~10^6 vectors.  The
     registered query therefore supplies ``assigned`` from
     :func:`ivf_assign_hier_exact` (two-level integer-exact quantizer,
-    O(N * 2*sqrt(n_cells) * dim), oracle-mirrored bit for bit); the
-    :func:`knn_graph_ivf_fast` BLAS scoring kernel remains the
-    bench/probe twin for the pair-cosine stage.
+    O(N * 2*sqrt(n_cells) * dim), oracle-mirrored bit for bit) and
+    scores with :func:`knn_graph_ivf_exact`.
     """
     cells = (
         assigned
@@ -547,92 +488,6 @@ def knn_graph_ivf(
     return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
 
 
-def knn_graph_ivf_fast(
-    df: DataFrame,
-    vec_col: str,
-    id_col: str,
-    k: int = 5,
-    n_cells: int = 64,
-    dim: int = 64,
-    assigned: DataFrame | None = None,
-) -> DataFrame:
-    """``knn_graph_ivf``'s float-BLAS twin: per-cell numpy top-k via
-    applyInPandas instead of a pair join + interpreted cosine + window.
-    Since round 8 this is a COMPARISON ARM, no longer the only fast
-    path: :func:`knn_graph_ivf_exact` gets within ~2x of the BLAS Gram
-    using exact int64 products and IS oracle-checkable, so the
-    registered query runs that; this float form remains the raw-cosine
-    (unquantized) reference for probe comparisons.
-
-    The SQL form materializes occupancy x N scored pairs and evaluates an
-    interpreted (non-codegen) 64-term zip_with/aggregate per pair -- the
-    measured bottleneck at the 500k tier.  Here each IVF cell arrives as
-    ONE Arrow batch and the whole cell's cosine matrix is one BLAS call
-    (X_hat @ X_hat.T on unit-normalized rows, ~occupancy^2*dim flops in
-    vectorized C), then a partial argsort per row.  Same single shuffle on
-    ``cell``; zero pair rows ever cross the wire.  Like
-    ``ivf_assign_fast``, this is the at-scale kernel -- float sums in BLAS
-    order differ from the SQL fold's left-to-right order in the last bits,
-    so the ORACLE-exact registered query stays on the SQL form and this
-    kernel backs the scale probe (results/scale_probe.txt: 9.6x faster at
-    500k vectors -- 17.5s vs 168.4s -- with flat per-vector growth).
-
-    Ties: ranked by (-cos_sim, neighbor_id) like the SQL form; a last-bit
-    cosine difference can order near-ties differently across kernels,
-    which is irrelevant at scale and why this form is not oracle-pinned.
-    """
-    import numpy as np
-    import pandas as pd
-
-    cells = (
-        assigned
-        if assigned is not None
-        else ivf_assign_fast(df, vec_col, id_col, n_cells, dim)
-    )
-    vecs = df.select(
-        F.col(id_col).alias("vec_id"), F.col(vec_col).alias("vec")
-    ).join(cells, "vec_id")
-
-    def per_cell(pdf: pd.DataFrame) -> pd.DataFrame:
-        ids = pdf["vec_id"].to_numpy()
-        X = np.asarray(pdf["vec"].to_list(), dtype=np.float64)
-        n = len(ids)
-        if n < 2:
-            return pd.DataFrame(
-                {"query_id": [], "neighbor_id": [], "cos_sim": [], "rank": []}
-            ).astype(
-                {"query_id": "int64", "neighbor_id": "int64",
-                 "cos_sim": "float64", "rank": "int32"}
-            )
-        norms = np.linalg.norm(X, axis=1)
-        norms[norms == 0] = 1.0
-        Xh = X / norms[:, None]
-        S = Xh @ Xh.T
-        np.fill_diagonal(S, -np.inf)
-        kk = min(k, n - 1)
-        # argpartition for the top-kk, then an exact (-cos, neighbor_id)
-        # sort of just those kk columns per row.
-        part = np.argpartition(-S, kk - 1, axis=1)[:, :kk]
-        rows = np.arange(n)[:, None]
-        sub = S[rows, part]
-        nbr_ids = ids[part]
-        order = np.lexsort((nbr_ids, -sub), axis=1)
-        top = part[rows, order]
-        return pd.DataFrame(
-            {
-                "query_id": np.repeat(ids, kk),
-                "neighbor_id": ids[top].ravel(),
-                "cos_sim": S[rows, top].ravel(),
-                "rank": np.tile(np.arange(1, kk + 1, dtype=np.int32), n),
-            }
-        )
-
-    return vecs.groupBy("cell").applyInPandas(
-        per_cell,
-        schema="query_id long, neighbor_id long, cos_sim double, rank int",
-    )
-
-
 def knn_graph_ivf_exact(
     df: DataFrame,
     vec_col: str,
@@ -661,8 +516,7 @@ def knn_graph_ivf_exact(
     instead of a per-pair interpreted 64-term fold: measured 173s ->
     ~17s at 500k vectors (results/scale_probe.txt, round 8).
 
-    Unlike :func:`knn_graph_ivf_fast` (float BLAS, not oracle-able),
-    every row of this output is hash-checked by the driver; per row the
+    Every row of this output is hash-checked against the oracle; per row the
     FULL cell is lexsorted by (-cos, neighbor_id), so top-k tie handling
     matches ROW_NUMBER exactly (argpartition could split a boundary
     tie differently).

@@ -422,9 +422,8 @@ WHERE CAST(i.inter AS DOUBLE) / (sa.n_sh + sb.n_sh - i.inter) >= {NGRAM_THRESHOL
     "is the PPJoin prefix bound (a provable superset of all J >= t "
     "pairs; the scale probe measured the old posting-list self-join at "
     "7.2x per 10x data vs 5.9x for prefix), with the DF-cap scope "
-    "filter applied to the verified pairs via broadcast-pruned scans; "
-    "the original inverted index survives as the probe's comparison arm "
-    "(operators/dedup.py:ngram_jaccard_pairs, candidates='index').",
+    "filter applied to the verified pairs via broadcast-pruned scans "
+    "(operators/dedup.py:ngram_jaccard_pairs).",
     tags=("dedup", "jaccard"),
     bench=True,
 )
@@ -800,9 +799,10 @@ LEFT JOIN dup d ON d.vec_id = f.vec_id
     "integer shuffle), then cosine near-dup flags computed ONLY within each "
     "final cluster.  Cluster count is the published scale knob (SemDeDup "
     "uses 50k clusters at 5B embeddings, bounding within-cluster pair work "
-    "to N^2/k); at production k the argmin pass swaps in the BLAS-batched "
-    "ivf_assign_fast kernel.  Emits one row per vector with its cluster, "
-    "cluster size, and dup verdict.",
+    "to N^2/k).  The argmin pass here is always the SQL-literal "
+    "kmeans_assign; the numpy matmul form is the separate "
+    "semantic_dup_flags_fast, which only the scale probe calls.  Emits one "
+    "row per vector with its cluster, cluster size, and dup verdict.",
     tags=("dedup", "embedding", "kmeans", "semantic"),
 )
 def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -876,24 +876,15 @@ ORDER BY sim_band
 )
 def dedup_minhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import (
+        _shingle_sets,
         minhash_lsh_pairs,
         ngram_jaccard_pairs_prefix,
     )
 
-    from ..functions.text import shingles_spark, tokens_spark
-    from ..operators.dedup import _spread
-
     docs = load_table(spark, sf_dir, "documents")
     # Shingle the corpus ONCE (the dominant scan-side cost) and hand the
     # same persisted sets to both arms.
-    docsets = track_persist(
-        _spread(docs).select(
-            F.col("doc_id"),
-            F.expr(
-                shingles_spark(tokens_spark("text"), MINHASH_SHINGLE)
-            ).alias("shset"),
-        )
-    )
+    docsets = _shingle_sets(docs, "text", "doc_id", MINHASH_SHINGLE)
     truth = ngram_jaccard_pairs_prefix(
         docs, "text", "doc_id",
         n=MINHASH_SHINGLE, threshold_num=1, threshold_den=2,

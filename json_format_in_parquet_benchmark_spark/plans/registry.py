@@ -12,7 +12,7 @@ Cross-engine exactness rules used throughout the query modules:
   varies run to run) while DuckDB sums sequentially, so raw double sums differ
   in the last bits.  Instead every money/quantity sum goes through an exact
   DECIMAL cast and is cast back to DOUBLE at the end -- bit-identical in both
-  engines (helpers ``dsum_spark`` / ``dsum_duck``).
+  engines.
 - Averages are exact-decimal sums divided by counts (IEEE division of
   identical operands is deterministic).
 - Timestamps/dates are emitted as formatted strings (testdata timestamps are
@@ -70,33 +70,3 @@ def register(
         return fn
 
     return deco
-
-
-# --- cross-engine exact aggregate helpers -------------------------------
-
-def dsum_spark(expr: str, alias: str, scale: int = 2, prec: int = 38) -> str:
-    """Spark SQL: exact decimal sum of a double expression, emitted as double."""
-    return (
-        f"cast(sum(cast({expr} as decimal({prec},{scale}))) as double) as {alias}"
-    )
-
-
-def dsum_duck(expr: str, alias: str, scale: int = 2, prec: int = 38) -> str:
-    """DuckDB SQL computing the bit-identical value of :func:`dsum_spark`."""
-    return (
-        f"CAST(SUM(CAST({expr} AS DECIMAL({prec},{scale}))) AS DOUBLE) AS {alias}"
-    )
-
-
-def davg_spark(expr: str, alias: str, scale: int = 6, prec: int = 38) -> str:
-    return (
-        f"cast(sum(cast({expr} as decimal({prec},{scale}))) as double)"
-        f" / count({expr}) as {alias}"
-    )
-
-
-def davg_duck(expr: str, alias: str, scale: int = 6, prec: int = 38) -> str:
-    return (
-        f"CAST(SUM(CAST({expr} AS DECIMAL({prec},{scale}))) AS DOUBLE)"
-        f" / COUNT({expr}) AS {alias}"
-    )

@@ -1,4 +1,4 @@
-"""Sources and sinks: NDJSON scan (raw + schema-inferred), Parquet ZSTD
-sink/scan wrappers."""
+"""Sources: the raw NDJSON scan (``ndjson``) and the Python data-source
+reader (``py_datasource``)."""
 
-from .ndjson import read_ndjson_parsed, read_ndjson_raw  # noqa: F401
+from .ndjson import read_ndjson_raw  # noqa: F401

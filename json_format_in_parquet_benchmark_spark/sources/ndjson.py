@@ -1,15 +1,12 @@
 """NDJSON source (O1, /root/reference/src/codec.rs:8-19).
 
-The reference reads a file into a vector of per-line byte strings.  Spark
-equivalents, both distributed file scans:
+The reference reads a file into a vector of per-line byte strings.  The
+Spark equivalent is a distributed file scan:
 
 - :func:`read_ndjson_raw`    -- ``spark.read.text``: one row per line, raw
   bytes preserved (feeds the format codecs, exactly the reference's read()).
-- :func:`read_ndjson_parsed` -- ``spark.read.json``: parse + schema
-  inference (or explicit schema: the declared-schema regime the reference's
-  variant format hard-codes).
 
-At 100 TB both split by HDFS/S3 block, so a single huge NDJSON file still
+At 100 TB it splits by HDFS/S3 block, so a single huge NDJSON file still
 parallelizes across executors.
 """
 
@@ -29,14 +26,3 @@ def read_ndjson_raw(spark: SparkSession, path: str) -> DataFrame:
         .select(F.col("value").alias(DOC_COL))
         .where(F.length(DOC_COL) > 0)
     )
-
-
-def read_ndjson_parsed(
-    spark: SparkSession, path: str, schema: str | None = None
-) -> DataFrame:
-    """Parsed NDJSON: explicit DDL schema if given, else Spark's sampled
-    schema inference (the dynamic-schema regime)."""
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.json(path)

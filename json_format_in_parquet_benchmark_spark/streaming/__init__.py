@@ -15,6 +15,5 @@ from .events_stream import (  # noqa: F401
     read_events_stream,
     sessionize_batch,
     sessionize_stream,
-    stage_events_dir,
     tumbling_event_counts,
 )

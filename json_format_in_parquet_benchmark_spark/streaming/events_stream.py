@@ -39,7 +39,6 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from ..tables import load_table
 
 EVENTS_SCHEMA = StructType(
     [
@@ -73,12 +72,6 @@ SESSION_STATE_SCHEMA = StructType(
         StructField("n_events", LongType()),
     ]
 )
-
-
-def stage_events_dir(spark: SparkSession, sf_dir: str, out_dir: str) -> None:
-    """Write the events table as a parquet directory a file-source stream can
-    tail (normalizes the testdata's TIMESTAMP(NANOS) to micros first)."""
-    load_table(spark, sf_dir, "events").write.mode("overwrite").parquet(out_dir)
 
 
 def read_events_stream(

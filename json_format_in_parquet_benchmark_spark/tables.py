@@ -63,10 +63,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # (unix_micros, watermarks, window()) uniformly sees TIMESTAMP.
         df = df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register all testdata tables as temp views (mirrors the DuckDB oracle
-    environment, where the same names are pre-registered)."""
-    for name in TABLES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)

@@ -1,6 +1,6 @@
 """Scale probe for the dedup/similarity family: measure wall time at
 1x / 10x / 100x of the sf0.1 corpus size and show the blocked shapes
-(band-blocked SimHash, LSH-banded MinHash, DF-capped n-gram index,
+(band-blocked SimHash, LSH-banded MinHash, prefix-bound n-gram join,
 sign-LSH-bucketed embedding pairs) scale near-linearly, not quadratically.
 
 The corpus is synthesized Spark-natively and deterministically (md5-derived
@@ -48,11 +48,9 @@ from json_format_in_parquet_benchmark_spark.operators.multimodal import (
 )
 from json_format_in_parquet_benchmark_spark.operators.similarity import (
     ivf_assign_fast,
-    ivf_assign_hier,
     ivf_assign_hier_exact,
     knn_graph_ivf,
     knn_graph_ivf_exact,
-    knn_graph_ivf_fast,
     pq_topk,
     topk_ivf,
 )
@@ -250,7 +248,7 @@ def main() -> None:
         emb_ops = {
             "embedding_near_dup", "ivf_topk", "semantic_dedup",
             "gram_matrix", "pq_topk", "kcenter_8", "knn_graph",
-            "knn_graph_fast", "knn_graph_hier_exact",
+            "knn_graph_hier_exact",
             "assign_flat_sql", "assign_hier_exact",
         }
         # zipf/CC arms synthesize their own inputs; skip the 2n-doc corpus
@@ -259,7 +257,7 @@ def main() -> None:
         doc_free_ops = {
             "zipf_join_naive", "zipf_join_naive_aqeskew", "zipf_join_salted",
             "zipf_agg_naive", "zipf_agg_salted", "cc_distributed_bigraph",
-            "knn_graph", "knn_graph_fast",  # embeddings-only: a 5M-vector
+            "knn_graph",  # embeddings-only: a 5M-vector
             "knn_graph_hier_exact", "assign_flat_sql", "assign_hier_exact",
             # tier must not pay for a 12.5M-doc corpus it never reads
         }
@@ -315,18 +313,10 @@ def main() -> None:
                     driver_max_edges=0,
                 ).count()
             )
-        # Default path since round 4: prefix-bound candidates + DF-cap
-        # scope filter (the production route).
+        # Prefix-bound candidates + DF-cap scope filter (the registered
+        # dedup_ngram_jaccard route).
         r["ngram_jaccard"] = timed_l("ngram_jaccard",
             lambda: dedup.ngram_jaccard_pairs(docs, "text", "doc_id").count()
-        )
-        # Comparison arm: the original DF-capped inverted-index self-join
-        # (measured 7.2x per 10x data at 500k, the reason prefix became
-        # the default).
-        r["ngram_index_capped"] = timed_l("ngram_index_capped",
-            lambda: dedup.ngram_jaccard_pairs(
-                docs, "text", "doc_id", candidates="index"
-            ).count()
         )
         r["ngram_prefix"] = timed_l("ngram_prefix",
             lambda: dedup.ngram_jaccard_pairs_prefix(
@@ -478,22 +468,6 @@ def main() -> None:
                 n_cells=max(16, n_emb // 500), dim=DIM,
                 assigned=ivf_assign_fast(
                     embs, "embedding", "vec_id", max(16, n_emb // 500), DIM
-                ),
-            ).count()
-        )
-        # The applyInPandas twin: whole-cell BLAS cosine + partial argsort,
-        # no pair rows materialized, with the TWO-LEVEL coarse quantizer
-        # for assignment (flat assignment's N*n_cells*dim flops go
-        # quadratic under the linear-n_cells rule and dominated the 5M
-        # tier) -- the at-scale kernel end to end; the SQL form stays the
-        # oracle path (see knn_graph_ivf_fast / ivf_assign_hier).
-        r["knn_graph_fast"] = timed_l("knn_graph_fast",
-            lambda: knn_graph_ivf_fast(
-                embs, "embedding", "vec_id", k=5,
-                n_cells=max(16, n_emb // 500), dim=DIM,
-                assigned=ivf_assign_hier(
-                    embs, "embedding", "vec_id",
-                    max(16, n_emb // 500), DIM,
                 ),
             ).count()
         )

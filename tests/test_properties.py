@@ -12,6 +12,7 @@ import random
 from pyspark.sql import functions as F
 
 from json_format_in_parquet_benchmark_spark.operators.dedup import (
+    _shingle_sets,
     minhash_signatures,
 )
 from json_format_in_parquet_benchmark_spark.operators.similarity import (
@@ -79,7 +80,9 @@ def test_minhash_identical_docs_share_signature(spark, sf_dir):
     dup = docs.select(
         (F.col("doc_id") + 1_000_000).alias("doc_id"), "text", "lang", "source", "n_chars"
     )
-    sig = minhash_signatures(docs.unionByName(dup), "text", "doc_id", n=3, k=16)
+    sig = minhash_signatures(
+        _shingle_sets(docs.unionByName(dup), "text", "doc_id", 3), k=16
+    )
     m_cols = [f"m{j}" for j in range(16)]
     orig = {r.doc_id: tuple(r[c] for c in m_cols) for r in sig.collect()}
     for doc_id, s in orig.items():
@@ -135,92 +138,11 @@ def test_lsh_topk_is_subset_of_bruteforce_scores(spark, sf_dir):
         assert math.isclose(r.cos_sim, exact[key], rel_tol=0, abs_tol=0.0)
 
 
-def test_knn_graph_fast_matches_sql_form(spark, sf_dir):
-    """The applyInPandas BLAS kernel must produce the same k-NN graph as
-    the SQL pair-join form: same (query, neighbor) pairs and ranks, with
-    cosines equal to ~1e-12 (BLAS sums reorder float adds vs the SQL
-    fold, so bit-equality is NOT expected -- that is exactly why the
-    registered query stays on the SQL form)."""
-    from json_format_in_parquet_benchmark_spark.operators.similarity import (
-        ivf_assign_fast,
-        knn_graph_ivf,
-        knn_graph_ivf_fast,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    sql_rows = {
-        (r.query_id, r.rank): (r.neighbor_id, r.cos_sim)
-        for r in knn_graph_ivf(
-            emb, "embedding", "vec_id", k=3, n_cells=8, dim=64,
-            assigned=ivf_assign_fast(emb, "embedding", "vec_id", 8, 64),
-        ).collect()
-    }
-    fast_rows = {
-        (r.query_id, r.rank): (r.neighbor_id, r.cos_sim)
-        for r in knn_graph_ivf_fast(
-            emb, "embedding", "vec_id", k=3, n_cells=8, dim=64
-        ).collect()
-    }
-    assert set(sql_rows) == set(fast_rows)
-    for key, (nbr, cos) in sql_rows.items():
-        fn, fc = fast_rows[key]
-        # The kernels may legitimately swap two neighbors whose cosines
-        # differ by ~1 ulp (BLAS pairwise sums vs the SQL fold -- the
-        # documented reason the fast form is not oracle-pinned), so a
-        # differing id is acceptable ONLY when both kernels' scores at
-        # this rank are near-equal; everything else must match exactly.
-        assert abs(fc - cos) < 1e-9, (key, cos, fc)
-        if fn != nbr:
-            assert abs(fc - cos) < 1e-12, (
-                f"rank {key} ids differ ({nbr} vs {fn}) without a "
-                f"near-tie to excuse it: {cos} vs {fc}"
-            )
-
-
-def test_ivf_assign_hier_valid_and_deterministic(spark, sf_dir):
-    """Two-level assignment must give every vector exactly one in-range
-    cell, reproduce itself exactly across runs, and agree with flat
-    assignment WITHIN each vector's coarse group (the only approximation
-    is the greedy group choice; inside the chosen group the fine argmax
-    is the same computation)."""
-    import numpy as np
-
-    from json_format_in_parquet_benchmark_spark.operators.similarity import (
-        centroids,
-        ivf_assign_fast,
-        ivf_assign_hier,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    n_cells, dim, g = 16, 64, 4
-    a1 = {r.vec_id: r.cell for r in ivf_assign_hier(
-        emb, "embedding", "vec_id", n_cells, dim, n_groups=g).collect()}
-    a2 = {r.vec_id: r.cell for r in ivf_assign_hier(
-        emb, "embedding", "vec_id", n_cells, dim, n_groups=g).collect()}
-    assert a1 == a2, "hier assignment not deterministic"
-    n_vec = emb.count()
-    assert len(a1) == n_vec
-    assert all(0 <= c < n_cells for c in a1.values())
-    # Within the same coarse group, hier == flat (same fine argmax).
-    flat = {r.vec_id: r.cell for r in ivf_assign_fast(
-        emb, "embedding", "vec_id", n_cells, dim).collect()}
-    bounds = np.linspace(0, n_cells, g + 1).astype(int)
-
-    def group_of(cell):
-        return int(np.searchsorted(bounds, cell, side="right") - 1)
-
-    same_group = [v for v in a1 if group_of(a1[v]) == group_of(flat[v])]
-    assert same_group, "no vector shares coarse group with flat argmax"
-    mismatched = [v for v in same_group if a1[v] != flat[v]]
-    assert not mismatched, f"fine argmax diverged in-group: {mismatched[:5]}"
-    _ = centroids(n_cells, dim)  # determinism anchor: same scheme both paths
-
-
 def test_ivf_assign_hier_exact_matches_duckdb(spark, sf_dir):
     """The integer-exact two-level assignment (the REGISTERED knn-graph
     scale arm) must agree with its DuckDB CTE twin bit for bit -- the
     cross-engine pin that lets the O(N*2*sqrt(n_cells)*dim) plan carry a
-    hash oracle, unlike the float-coarse ivf_assign_hier."""
+    hash oracle."""
     import duckdb
 
     from json_format_in_parquet_benchmark_spark.operators.similarity import (
