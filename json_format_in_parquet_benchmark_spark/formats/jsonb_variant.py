@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..runtime import scoped_conf
 from .base import DOC_COL, JsonFormatBase
 
 VARIANT_COL = "v"
@@ -41,32 +42,9 @@ class JsonbVariantFormat(JsonFormatBase):
             F.variant_get(F.col(VARIANT_COL), path, dtype).alias("value")
         )
 
-    @staticmethod
-    def _scoped(spark, settings):
-        saved = {}
-        for k, v in settings.items():
-            try:
-                saved[k] = spark.conf.get(k)
-            except Exception:
-                saved[k] = None
-            spark.conf.set(k, v)
-        return saved
-
-    @staticmethod
-    def _restore(spark, saved):
-        for k, old in saved.items():
-            if old is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, old)
-
     def flush(self, encoded: DataFrame, path: str, **kwargs) -> None:
-        spark = encoded.sparkSession
-        saved = self._scoped(spark, self._WRITE_CONFS)
-        try:
+        with scoped_conf(encoded.sparkSession, self._WRITE_CONFS):
             super().flush(encoded, path, **kwargs)
-        finally:
-            self._restore(spark, saved)
 
 
 class JsonbShreddedVariantFormat(JsonbVariantFormat):

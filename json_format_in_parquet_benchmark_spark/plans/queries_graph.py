@@ -362,10 +362,11 @@ def graph_kcore_word(spark: SparkSession, sf_dir: str) -> DataFrame:
     # unbounded by default, so AQE's per-stage plan-change logging
     # (AdaptiveSparkPlanExec.onUpdatePlan -> explainString) can OOM a
     # small-heap vanilla driver JVM while building a DEBUG STRING.  Cap it
-    # at runtime -- truncates diagnostics only, never results -- the same
-    # repin-at-runtime pattern tables.load_table uses for the session
-    # timezone, because the external driver's session config is not ours
-    # to set.  Deliberately NOT restored on exit: this builder returns a
+    # at runtime -- truncates diagnostics only, never results -- for the
+    # reason runtime.query_scope re-sets SESSION_PINS: the external
+    # driver's session config is not ours to set.  It stays out of
+    # SESSION_PINS because only this query needs it.  Deliberately NOT
+    # restored on exit (so not runtime.scoped_conf): this builder returns a
     # LAZY plan, and the OOM it guards against fires at execution time
     # (AQE onUpdatePlan -> explainString during the consumer's collect),
     # long after a try/finally here would have undone the cap.  The cap is

@@ -22,10 +22,14 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..runtime import scoped_conf
 from ..tables import load_table, table_path
 from .registry import register
 
 _SINK_ROOT = os.path.join(tempfile.gettempdir(), "jfipb_sinks")
+
+# Overwrite only the partitions the written frame holds, for one write.
+_DYNAMIC_OVERWRITE = {"spark.sql.sources.partitionOverwriteMode": "dynamic"}
 
 
 def partitioned_events_path(sf_dir: str) -> str:
@@ -644,17 +648,13 @@ def sink_backfill_partition(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr("cast(cast(value as decimal(18,2)) + 1 as double)"),
         )
     )
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
+    with scoped_conf(spark, _DYNAMIC_OVERWRITE):
         (
             corrected.hint("rebalance", "day")
             .write.mode("overwrite")
             .partitionBy("day")
             .parquet(out)
         )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
     back = spark.read.parquet(out)
     return back.groupBy(F.col("day").cast("string").alias("day")).agg(
         F.count(F.lit(1)).alias("n_events"),
@@ -930,17 +930,13 @@ def sink_gdpr_erasure(spark: SparkSession, sf_dir: str) -> DataFrame:
     kept_days = {
         r["day"] for r in remaining.select("day").distinct().collect()
     }
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
+    with scoped_conf(spark, _DYNAMIC_OVERWRITE):
         (
             remaining.hint("rebalance", "day")
             .write.mode("overwrite")
             .partitionBy("day")
             .parquet(out)
         )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
     # Dynamic overwrite writes nothing for a day whose every row belonged
     # to the target; those directories must be cleared explicitly.
     for day in affected:

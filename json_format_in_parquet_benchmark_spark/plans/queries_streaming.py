@@ -36,6 +36,7 @@ import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..runtime import scoped_conf
 from ..streaming.events_stream import (
     read_events_stream,
     sessionize_batch,
@@ -48,6 +49,14 @@ from .registry import register
 
 GAP_MINUTES = 480  # ~median inter-event gap in the testdata is ~7.7h
 GAP_US = GAP_MINUTES * 60 * 1_000_000
+
+# Streaming state shuffles use spark.sql.shuffle.partitions verbatim (no
+# AQE coalesce in streaming), and the partition count is frozen into the
+# checkpoint.  On a vanilla session that is 200 state-store tasks for a
+# test-scale input, so each streaming run scopes a sane width and restores
+# it after -- on a real cluster the session owner sizes it to the executor
+# count.
+_STREAM_CONFS = {"spark.sql.shuffle.partitions": "8"}
 
 _STAGE_ROOT = os.path.join(tempfile.gettempdir(), "jfipb_stream_stage")
 
@@ -100,14 +109,7 @@ def _run_to_memory(stream_df: DataFrame, name: str, output_mode: str) -> DataFra
     unique = f"{name}_{_RUN_SEQ}"
     spark = stream_df.sparkSession
     ckpt = tempfile.mkdtemp(prefix=f"jfipb_ckpt_{unique}_")
-    # Streaming state shuffles use spark.sql.shuffle.partitions verbatim (no
-    # AQE coalesce in streaming), and the partition count is frozen into the
-    # checkpoint.  On a vanilla session that is 200 state-store tasks for a
-    # test-scale input; scope a sane width to this run and restore after --
-    # on a real cluster the session owner sizes it to the executor count.
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with scoped_conf(spark, _STREAM_CONFS):
         q = (
             stream_df.writeStream.format("memory")
             .queryName(unique)
@@ -117,8 +119,6 @@ def _run_to_memory(stream_df: DataFrame, name: str, output_mode: str) -> DataFra
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     return spark.table(unique)
 
 
@@ -763,12 +763,8 @@ def stream_upsert_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     # safe when the checkpoint survives with it.
     shutil.rmtree(state_dir + ".tmp", ignore_errors=True)
     ckpt = tempfile.mkdtemp(prefix=f"jfipb_ckpt_upsert_{tag}_")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with scoped_conf(spark, _STREAM_CONFS):
         run_upsert_stream(spark, events_dir, state_dir, ckpt)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     return spark.read.parquet(state_dir)
 
 
@@ -1218,9 +1214,7 @@ def stream_parquet_file_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     out_dir = _tf.mkdtemp(prefix="jfipb_psink_out_")
     ckpt = _tf.mkdtemp(prefix="jfipb_psink_ckpt_")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with scoped_conf(spark, _STREAM_CONFS):
         q = (
             stream.writeStream.format("parquet")
             .option("path", out_dir)
@@ -1230,8 +1224,6 @@ def stream_parquet_file_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     landed = spark.read.parquet(out_dir)
     return landed.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_events"),
@@ -1377,9 +1369,7 @@ def stream_pyds_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("line_checksum"),
         F.sum(F.length("doc")).cast("bigint").alias("total_chars"),
     )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with scoped_conf(spark, _STREAM_CONFS):
         q = (
             agg.writeStream.format("memory")
             .queryName(name)
@@ -1396,8 +1386,6 @@ def stream_pyds_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             time.sleep(0.5)
         q.stop()
         q.awaitTermination(60)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     rows = spark.table(name).collect()
     assert rows and rows[0]["n_lines"] == n_expected, (
         f"replay did not drain: {rows}"
@@ -1444,9 +1432,7 @@ def stream_pyds_ndjson_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = read_events_stream(spark, events_dir).select(
         F.col("props").alias("doc")
     )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with scoped_conf(spark, _STREAM_CONFS):
         q = (
             stream.writeStream.format("jfipb_ndjson_sink")
             .option("path", out)
@@ -1455,8 +1441,6 @@ def stream_pyds_ndjson_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     files = committed_files(out)
     assert files, "sink committed no files"
     back = spark.read.text(files)

@@ -1,4 +1,5 @@
-"""Query-cache lifecycle: the one home of tracked persists and query scopes.
+"""Query runtime: the one home of tracked persists, query scopes and
+session SQL confs.
 
 A persist inside a returned-lazy plan cannot be unpersisted before the
 caller materializes the result, so operators register each persisted
@@ -21,7 +22,10 @@ canonicalized plan, so re-running a query re-uses (not re-adds) an entry.
 
 The scope also ships the package to executor Python workers
 (:func:`session.ship_package`), so a query's Python kernels import in any
-session, run order and cwd.
+session, run order and cwd, and re-sets :data:`SESSION_PINS`, because an
+external caller's session (the driver builds its own) may hold anything.
+:func:`scoped_conf` is the one save/set/restore of a conf that an eager
+action needs only while it runs.
 
 This module imports nothing from the package at load time, so any module
 may import it at top level.
@@ -33,6 +37,15 @@ from collections.abc import Callable, Iterator
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
+
+# Testdata timestamps are timezone-naive and the DuckDB oracle evaluates date
+# functions in naive/UTC terms, so a non-UTC session shifts every day/month
+# bucket.  events.parquet may carry TIMESTAMP(NANOS), which Spark rejects
+# unless read as long (tables.load_table converts it).
+SESSION_PINS = {
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
+}
 
 # (owner, release) per tracked cache; owner is the registry query whose
 # build tracked it ("" outside any query scope).
@@ -101,13 +114,38 @@ def release_caches() -> None:
 
 
 @contextmanager
+def scoped_conf(spark: SparkSession, settings: dict[str, str]) -> Iterator[None]:
+    """Set ``settings`` for the body, then restore each key's previous value
+    (unset if it was unset), also when the body raises."""
+    saved: dict[str, str | None] = {}
+    try:
+        for k, v in settings.items():
+            try:
+                saved[k] = spark.conf.get(k)
+            except Exception:
+                saved[k] = None
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, old in saved.items():
+            if old is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, old)
+
+
+@contextmanager
 def query_scope(spark: SparkSession, name: str) -> Iterator[None]:
-    """Build registry query ``name``: ship the package, free other
-    queries' caches when outermost, and own what the build tracks."""
+    """Build registry query ``name``: ship the package, pin
+    :data:`SESSION_PINS`, free other queries' caches when outermost, and own
+    what the build tracks.  The pins are never restored: the returned plan
+    is lazy and runs after the scope exits."""
     global _owner
     from . import session
 
     session.ship_package(spark)
+    for k, v in SESSION_PINS.items():
+        spark.conf.set(k, v)
     prev = _owner
     if not prev:
         _release(keep_owner=name)

@@ -7,8 +7,8 @@ config choice is made for a real multi-executor cluster at ~100 TB:
   static ``spark.sql.shuffle.partitions`` only needs to be an upper bound.
 - Parquet ZSTD everywhere (the reference writes ZSTD for all four formats,
   /root/reference/src/format/plain_json.rs:38 and equivalents).
-- Session timezone pinned to UTC so date/time results are reproducible across
-  engines (the DuckDB oracle is timezone-naive).
+- ``runtime.SESSION_PINS`` (UTC session timezone, so date/time results are
+  reproducible across engines; ``nanosAsLong`` for TIMESTAMP(NANOS) files).
 - Broadcast threshold left at default 10 MB; dimension tables (region, nation,
   part, supplier at any SF that matters) broadcast automatically, and the
   query code additionally hints ``broadcast()`` where the stats may be absent.
@@ -21,6 +21,8 @@ import shutil
 import tempfile
 
 from pyspark.sql import SparkSession
+
+from .runtime import SESSION_PINS
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
@@ -77,18 +79,13 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.parquet.compression.codec", "zstd")
-        # testdata events.parquet carries TIMESTAMP(NANOS) which Spark rejects
-        # by default; read as long and convert in tables.load_table
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
     )
-    if extra_conf:
-        for k, v in extra_conf.items():
-            builder = builder.config(k, v)
+    for k, v in {**SESSION_PINS, **(extra_conf or {})}.items():
+        builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     ship_package(spark)

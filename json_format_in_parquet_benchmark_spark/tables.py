@@ -7,6 +7,10 @@ through ``spark.read.parquet`` so Catalyst gets column pruning and predicate
 pushdown for free (the reference's hand-written Parquet load,
 /root/reference/src/format/jsonb.rs:60-73, reads one whole row group; Spark's
 vectorized reader replaces all of that).
+
+Reading sets no session conf: the ``events.ts`` handling assumes
+``runtime.SESSION_PINS`` (UTC, ``nanosAsLong``), which ``session.get_spark``
+and ``runtime.query_scope`` set.
 """
 
 from __future__ import annotations
@@ -41,14 +45,6 @@ def table_path(sf_dir: str, name: str) -> str:
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
-    # Both configs are runtime-settable and required even on externally
-    # created sessions (the driver builds its own SparkSession): testdata
-    # timestamps are timezone-naive, and the DuckDB oracle evaluates date
-    # functions in naive/UTC terms, so a non-UTC session would shift every
-    # day/month bucket.
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     df = spark.read.parquet(table_path(sf_dir, name))
     ts_type = dict(df.dtypes).get("ts")
     if name == "events" and ts_type == "bigint":
@@ -58,7 +54,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
     elif name == "events" and ts_type == "timestamp_ntz":
         # TIMESTAMP(MICROS, isAdjustedToUTC=false) reads as TIMESTAMP_NTZ.
-        # With the session timezone pinned to UTC above, the NTZ->LTZ cast
+        # With the session timezone pinned to UTC, the NTZ->LTZ cast
         # preserves the wall-clock (== epoch) micros, and downstream code
         # (unix_micros, watermarks, window()) uniformly sees TIMESTAMP.
         df = df.withColumn("ts", F.col("ts").cast("timestamp"))

@@ -54,7 +54,7 @@ from json_format_in_parquet_benchmark_spark.operators.similarity import (
     pq_topk,
     topk_ivf,
 )
-from json_format_in_parquet_benchmark_spark.runtime import release_caches
+from json_format_in_parquet_benchmark_spark.runtime import release_caches, scoped_conf
 from json_format_in_parquet_benchmark_spark.session import get_spark
 
 VOCAB = 50_000  # large vocab keeps shingle document-frequency low, like real text
@@ -164,26 +164,6 @@ def synth_zipf_events(
         .write.mode("overwrite")
         .parquet(out)
     )
-
-
-def _scoped_conf(spark: SparkSession, settings: dict[str, str]):
-    """Set session confs, returning a restore closure (None = was unset)."""
-    saved = {}
-    for k, v in settings.items():
-        try:
-            saved[k] = spark.conf.get(k)
-        except Exception:
-            saved[k] = None
-        spark.conf.set(k, v)
-
-    def restore():
-        for k, old in saved.items():
-            if old is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, old)
-
-    return restore
 
 
 def timed_l(label: str, fn) -> tuple[float, int] | None:
@@ -715,25 +695,19 @@ def main() -> None:
                 "spark.sql.autoBroadcastJoinThreshold": "-1",
                 "spark.sql.adaptive.autoBroadcastJoinThreshold": "-1",
             }
-            restore = _scoped_conf(
+            with scoped_conf(
                 spark,
                 {**no_bcast, "spark.sql.adaptive.skewJoin.enabled": "false"},
-            )
-            try:
+            ):
                 r["zipf_join_naive"] = timed_l("zipf_join_naive", _join_naive)
                 r["zipf_join_salted"] = timed_l("zipf_join_salted", _join_salted)
-            finally:
-                restore()
-            restore = _scoped_conf(
+            with scoped_conf(
                 spark,
                 {**no_bcast, "spark.sql.adaptive.skewJoin.enabled": "true"},
-            )
-            try:
+            ):
                 r["zipf_join_naive_aqeskew"] = timed_l(
                     "zipf_join_naive_aqeskew", _join_naive
                 )
-            finally:
-                restore()
             def _agg_naive():
                 return (
                     _zev()
@@ -824,19 +798,16 @@ def main() -> None:
                     .count()
                 )
 
-            restore = _scoped_conf(
+            with scoped_conf(
                 spark,
                 {**no_bcast, "spark.sql.adaptive.skewJoin.enabled": "false"},
-            )
-            try:
+            ):
                 r["zipf_join_naive_smalldim"] = timed_l(
                     "zipf_join_naive_smalldim", _sd_naive
                 )
                 r["zipf_join_salted_smalldim"] = timed_l(
                     "zipf_join_salted_smalldim", _sd_salted
                 )
-            finally:
-                restore()
 
         # Extreme-skew variant (zipf s=2.0: hottest key ~61% of ALL rows).
         # At s=1.2 the hot reducer's hash-probe cost never dominates
@@ -891,25 +862,19 @@ def main() -> None:
                     .count()
                 )
 
-            restore = _scoped_conf(
+            with scoped_conf(
                 spark,
                 {**no_bcast, "spark.sql.adaptive.skewJoin.enabled": "false"},
-            )
-            try:
+            ):
                 r["zipf2_join_naive"] = timed_l("zipf2_join_naive", _x_naive)
                 r["zipf2_join_salted"] = timed_l("zipf2_join_salted", _x_salted)
-            finally:
-                restore()
-            restore = _scoped_conf(
+            with scoped_conf(
                 spark,
                 {**no_bcast, "spark.sql.adaptive.skewJoin.enabled": "true"},
-            )
-            try:
+            ):
                 r["zipf2_join_naive_aqeskew"] = timed_l(
                     "zipf2_join_naive_aqeskew", _x_naive
                 )
-            finally:
-                restore()
 
 
         # Retention physical-strategy comparison: the SAME day-k retention

@@ -20,6 +20,7 @@ from json_format_in_parquet_benchmark_spark.formats.jsonc_tape import (
 from json_format_in_parquet_benchmark_spark.formats.variant_shred import (
     VariantShredFormat,
 )
+from json_format_in_parquet_benchmark_spark.runtime import scoped_conf
 from json_format_in_parquet_benchmark_spark.sources.ndjson import read_ndjson_raw
 
 # The reference's inline unit-test docs (plain_json.rs:74-78, jsonc.rs:168-172)
@@ -195,10 +196,7 @@ def test_tape_kernels_match_pure_functions_across_arrow_batches(spark):
     wide = json.dumps({"w": {f"k{i}": i for i in range(200)}, "a": "last"})
     docs = FLAT_DOCS + NESTED_DOCS + [wide, None]
     paths = [("a",), ("b",), ("c", "d"), ("g", "h"), ("w", "k199"), ("a", "x"), ("zz",)]
-    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
-    old = spark.conf.get(key)
-    spark.conf.set(key, "3")
-    try:
+    with scoped_conf(spark, {"spark.sql.execution.arrow.maxRecordsPerBatch": "3"}):
         # one partition and narrow projections only, so rows keep input order
         raw = spark.createDataFrame([(d,) for d in docs], "doc string").coalesce(1)
         fmt = JsoncTapeFormat()
@@ -209,8 +207,6 @@ def test_tape_kernels_match_pure_functions_across_arrow_batches(spark):
         got_paths = tape.select(
             *(get_path_udf(p)(*cols).alias(f"p{i}") for i, p in enumerate(paths))
         ).collect()
-    finally:
-        spark.conf.set(key, old)
 
     assert len(tapes) == len(decoded) == len(got_paths) == len(docs)
     for doc, t, dec, row in zip(docs, tapes, decoded, got_paths):
@@ -464,9 +460,7 @@ def test_shredded_variant_scan_prunes_to_path(spark, tmp_path):
     fmt = get_format("jsonb_shredded")
     path = str(tmp_path / "shred_prune")
     fmt.flush(fmt.encode(df).coalesce(1), path)
-    old = spark.conf.get("spark.sql.variant.pushVariantIntoScan")
-    try:
-        spark.conf.set("spark.sql.variant.pushVariantIntoScan", "true")
+    with scoped_conf(spark, {"spark.sql.variant.pushVariantIntoScan": "true"}):
         plan = (
             fmt.load(spark, path)
             .select(F.variant_get("v", "$.a", "string").alias("a"))
@@ -474,8 +468,6 @@ def test_shredded_variant_scan_prunes_to_path(spark, tmp_path):
             .executedPlan()
             .toString()
         )
-    finally:
-        spark.conf.set("spark.sql.variant.pushVariantIntoScan", old)
     read_schema = plan.split("ReadSchema:")[1].splitlines()[0]
     assert "struct<0:string>" in read_schema, read_schema
 

@@ -11,6 +11,7 @@ import re
 import pytest
 
 from json_format_in_parquet_benchmark_spark.plans import REGISTRY
+from json_format_in_parquet_benchmark_spark.runtime import scoped_conf
 
 SF = "/root/testdata/sf0.001"
 
@@ -134,21 +135,20 @@ def test_bucketed_join_needs_no_shuffle(spark, tmp_path):
     Exchange operators (the 100 TB zero-shuffle co-located join)."""
     from json_format_in_parquet_benchmark_spark.tables import load_table
 
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        orders = load_table(spark, SF, "orders")
-        li = load_table(spark, SF, "lineitem")
-        for df, name, key in ((orders, "orders_b", "o_orderkey"), (li, "lineitem_b", "l_orderkey")):
-            df.write.mode("overwrite").bucketBy(8, key).sortBy(key).saveAsTable(name)
-        j = spark.table("orders_b").join(
-            spark.table("lineitem_b"),
-            spark.table("orders_b").o_orderkey == spark.table("lineitem_b").l_orderkey,
-        )
-        plan = j._jdf.queryExecution().executedPlan().toString()
-        assert "SortMergeJoin" in plan
-        assert "Exchange" not in plan, plan
+        with scoped_conf(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"}):
+            orders = load_table(spark, SF, "orders")
+            li = load_table(spark, SF, "lineitem")
+            for df, name, key in ((orders, "orders_b", "o_orderkey"), (li, "lineitem_b", "l_orderkey")):
+                df.write.mode("overwrite").bucketBy(8, key).sortBy(key).saveAsTable(name)
+            j = spark.table("orders_b").join(
+                spark.table("lineitem_b"),
+                spark.table("orders_b").o_orderkey == spark.table("lineitem_b").l_orderkey,
+            )
+            plan = j._jdf.queryExecution().executedPlan().toString()
+            assert "SortMergeJoin" in plan
+            assert "Exchange" not in plan, plan
     finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
         spark.sql("DROP TABLE IF EXISTS orders_b")
         spark.sql("DROP TABLE IF EXISTS lineitem_b")
 

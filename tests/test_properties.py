@@ -21,6 +21,7 @@ from json_format_in_parquet_benchmark_spark.operators.similarity import (
     topk_bruteforce,
     topk_lsh,
 )
+from json_format_in_parquet_benchmark_spark.runtime import scoped_conf
 from json_format_in_parquet_benchmark_spark.streaming.events_stream import (
     sessionize_batch,
 )
@@ -664,23 +665,6 @@ def test_winnowing_guarantee_offset_independent(spark):
     assert by_doc[0] & by_doc[1], "copied passage must share a fingerprint"
     assert not (by_doc[0] & by_doc.get(2, set()))
     assert not (by_doc[1] & by_doc.get(2, set()))
-
-
-def test_load_table_repins_utc_on_hostile_session(spark):
-    """The driver builds its own SparkSession with arbitrary timezone; every
-    timestamp-bucketing query depends on load_table re-pinning UTC at call
-    time (verify skill: the non-UTC probe caught real day-bucket shifts)."""
-    from json_format_in_parquet_benchmark_spark.tables import load_table
-
-    from conftest import TEST_SF_DIR
-
-    prev = spark.conf.get("spark.sql.session.timeZone")
-    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
-    try:
-        load_table(spark, TEST_SF_DIR, "events")
-        assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
-    finally:
-        spark.conf.set("spark.sql.session.timeZone", prev)
 
 
 def test_pq_assign_fast_agrees_with_expr_path(spark, sf_dir):
@@ -1409,12 +1393,8 @@ def test_backfill_touches_only_target_partition(spark, sf_dir, tmp_path_factory)
     corrected = events.where(F.col("day") == target).withColumn(
         "value", F.expr("cast(cast(value as decimal(18,2)) + 1 as double)")
     )
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
+    with scoped_conf(spark, {"spark.sql.sources.partitionOverwriteMode": "dynamic"}):
         corrected.write.mode("overwrite").partitionBy("day").parquet(out)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
     after = {
         p: os.path.getsize(p)
         for p in glob.glob(os.path.join(out, "day=*", "*.parquet"))
@@ -1511,12 +1491,8 @@ def test_gdpr_erasure_minimal_rewrite(spark, sf_dir, tmp_path_factory):
     kept_days = {
         r["day"] for r in remaining.select("day").distinct().collect()
     }
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
+    with scoped_conf(spark, {"spark.sql.sources.partitionOverwriteMode": "dynamic"}):
         remaining.write.mode("overwrite").partitionBy("day").parquet(out)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
     for day in affected:
         if day not in kept_days:
             shutil.rmtree(

@@ -1,6 +1,7 @@
 """The query scope (``runtime``): cache ownership across registered query
-builds, package shipping keyed per application, and Python kernels that
-import in a fresh vanilla session whatever the run order and cwd."""
+builds, package shipping keyed per application, session SQL confs (scoped
+and pinned), and Python kernels that import in a fresh vanilla session
+whatever the run order and cwd."""
 
 from __future__ import annotations
 
@@ -18,6 +19,7 @@ from json_format_in_parquet_benchmark_spark.plans.registry import REGISTRY, regi
 from json_format_in_parquet_benchmark_spark.runtime import (
     query_scope,
     release_caches,
+    scoped_conf,
     track_persist,
 )
 
@@ -138,6 +140,34 @@ def test_scope_restores_owner_when_the_build_raises(spark):
             with query_scope(spark, "inner"):
                 raise RuntimeError("build failed")
     assert runtime._owner == ""
+
+
+def test_scoped_conf_restores_set_unset_and_on_raise(spark):
+    prior, unset = "spark.sql.shuffle.partitions", f"spark.jfipb.test.{uuid.uuid4().hex}"
+    before = spark.conf.get(prior)
+    with scoped_conf(spark, {prior: "3", unset: "on"}):
+        assert spark.conf.get(prior) == "3"
+        assert spark.conf.get(unset) == "on"
+    assert spark.conf.get(prior) == before
+    assert spark.conf.get(unset, None) is None
+    with pytest.raises(RuntimeError):
+        with scoped_conf(spark, {prior: "5"}):
+            raise RuntimeError("body failed")
+    assert spark.conf.get(prior) == before
+
+
+def test_query_scope_pins_session_confs_on_hostile_session(spark, sf_dir):
+    """The driver builds its own session with any timezone, and nothing but
+    the scope pins UTC and nanosAsLong before a query reads ``events``."""
+    from json_format_in_parquet_benchmark_spark.tables import load_table
+
+    tz, nanos = "spark.sql.session.timeZone", "spark.sql.legacy.parquet.nanosAsLong"
+    with scoped_conf(spark, {tz: "America/New_York", nanos: "false"}):
+        spark.conf.unset(nanos)
+        with query_scope(spark, "_pin_probe"):
+            assert spark.conf.get(tz) == "UTC"
+            assert spark.conf.get(nanos) == "true"
+            assert dict(load_table(spark, sf_dir, "events").dtypes)["ts"] == "timestamp"
 
 
 _RUN_ORDER_SCRIPT = r"""

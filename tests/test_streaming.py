@@ -15,6 +15,7 @@ from json_format_in_parquet_benchmark_spark.plans import REGISTRY
 from json_format_in_parquet_benchmark_spark.plans.queries_streaming import (
     GAP_MINUTES,
 )
+from json_format_in_parquet_benchmark_spark.runtime import scoped_conf
 from json_format_in_parquet_benchmark_spark.streaming.events_stream import (
     EVENTS_SCHEMA,
     sessionize_batch,
@@ -352,51 +353,49 @@ def test_upsert_foreachbatch_restart_exactly_once(spark):
     state_dir = tempfile.mkdtemp(prefix="jfipb_upsert_restart_state_")
     shutil.rmtree(state_dir)  # the first merge must create it
     ckpt = tempfile.mkdtemp(prefix="jfipb_upsert_restart_ckpt_")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
     try:
-        with pytest.raises(Exception, match="injected crash"):
-            run_upsert_stream(
-                spark, events_dir, state_dir, ckpt, fail_after_batch=0
-            )
-        marker = os.path.join(state_dir, "_applied_batch")
-        assert os.path.isfile(marker), "crash window never materialized"
-        with open(marker, encoding="utf-8") as fh:
-            assert fh.read().strip() == "0"
-        partial = {
-            r["user_id"]: r["n_events"]
-            for r in spark.read.parquet(state_dir).collect()
-        }
-        assert partial, "crashed run applied nothing"
+        with scoped_conf(spark, {"spark.sql.shuffle.partitions": "4"}):
+            with pytest.raises(Exception, match="injected crash"):
+                run_upsert_stream(
+                    spark, events_dir, state_dir, ckpt, fail_after_batch=0
+                )
+            marker = os.path.join(state_dir, "_applied_batch")
+            assert os.path.isfile(marker), "crash window never materialized"
+            with open(marker, encoding="utf-8") as fh:
+                assert fh.read().strip() == "0"
+            partial = {
+                r["user_id"]: r["n_events"]
+                for r in spark.read.parquet(state_dir).collect()
+            }
+            assert partial, "crashed run applied nothing"
 
-        run_upsert_stream(spark, events_dir, state_dir, ckpt)
+            run_upsert_stream(spark, events_dir, state_dir, ckpt)
 
-        got = sorted(
-            (r["user_id"], r["n_events"], r["total_vq"], r["last_us"])
-            for r in spark.read.parquet(state_dir).collect()
-        )
-        want = sorted(
-            (r["user_id"], r["n_events"], r["total_vq"], r["last_us"])
-            for r in spark.read.parquet(events_dir)
-            .groupBy("user_id")
-            .agg(
-                F.count(F.lit(1)).cast("bigint").alias("n_events"),
-                F.sum("vq").cast("bigint").alias("total_vq"),
-                F.max("us").cast("bigint").alias("last_us"),
+            got = sorted(
+                (r["user_id"], r["n_events"], r["total_vq"], r["last_us"])
+                for r in spark.read.parquet(state_dir).collect()
             )
-            .collect()
-        )
-        assert got == want, "restart double-counted or lost a batch"
-        # The restart must have made progress past the crashed batch --
-        # some user's count strictly grew (batch 1 is non-empty by the
-        # chronological split construction).
-        grew = [
-            uid for uid, n, _vq, _us in got
-            if uid in partial and n > partial[uid]
-        ] + [uid for uid, *_ in got if uid not in partial]
-        assert grew, "batch 1 never applied after restart"
+            want = sorted(
+                (r["user_id"], r["n_events"], r["total_vq"], r["last_us"])
+                for r in spark.read.parquet(events_dir)
+                .groupBy("user_id")
+                .agg(
+                    F.count(F.lit(1)).cast("bigint").alias("n_events"),
+                    F.sum("vq").cast("bigint").alias("total_vq"),
+                    F.max("us").cast("bigint").alias("last_us"),
+                )
+                .collect()
+            )
+            assert got == want, "restart double-counted or lost a batch"
+            # The restart must have made progress past the crashed batch --
+            # some user's count strictly grew (batch 1 is non-empty by the
+            # chronological split construction).
+            grew = [
+                uid for uid, n, _vq, _us in got
+                if uid in partial and n > partial[uid]
+            ] + [uid for uid, *_ in got if uid not in partial]
+            assert grew, "batch 1 never applied after restart"
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
         shutil.rmtree(state_dir, ignore_errors=True)
         shutil.rmtree(ckpt, ignore_errors=True)
 
@@ -423,50 +422,48 @@ def test_upsert_foreachbatch_swap_window_recovery(spark, monkeypatch):
     state_dir = tempfile.mkdtemp(prefix="jfipb_upsert_swap_state_")
     shutil.rmtree(state_dir)
     ckpt = tempfile.mkdtemp(prefix="jfipb_upsert_swap_ckpt_")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
 
     def torn_swap():
         raise RuntimeError("injected crash in swap window")
 
     try:
-        monkeypatch.setattr(queries_streaming, "_SWAP_WINDOW_HOOK", torn_swap)
-        with pytest.raises(Exception, match="injected crash in swap window"):
-            run_upsert_stream(spark, events_dir, state_dir, ckpt)
-        # The torn state the docstring describes must actually exist:
-        # no state_dir, complete tmp with the batch-0 marker.
-        assert not os.path.isdir(state_dir), "swap window never materialized"
-        tmp_marker = os.path.join(state_dir + ".tmp", "_applied_batch")
-        assert os.path.isfile(tmp_marker)
-        with open(tmp_marker, encoding="utf-8") as fh:
-            assert fh.read().strip() == "0"
+        with scoped_conf(spark, {"spark.sql.shuffle.partitions": "4"}):
+            monkeypatch.setattr(queries_streaming, "_SWAP_WINDOW_HOOK", torn_swap)
+            with pytest.raises(Exception, match="injected crash in swap window"):
+                run_upsert_stream(spark, events_dir, state_dir, ckpt)
+            # The torn state the docstring describes must actually exist:
+            # no state_dir, complete tmp with the batch-0 marker.
+            assert not os.path.isdir(state_dir), "swap window never materialized"
+            tmp_marker = os.path.join(state_dir + ".tmp", "_applied_batch")
+            assert os.path.isfile(tmp_marker)
+            with open(tmp_marker, encoding="utf-8") as fh:
+                assert fh.read().strip() == "0"
 
-        monkeypatch.setattr(
-            queries_streaming, "_SWAP_WINDOW_HOOK", lambda: None
-        )
-        run_upsert_stream(spark, events_dir, state_dir, ckpt)
-
-        assert not os.path.exists(state_dir + ".tmp") or os.path.isdir(
-            state_dir
-        )
-        got = sorted(
-            (r["user_id"], r["n_events"], r["total_vq"], r["last_us"])
-            for r in spark.read.parquet(state_dir).collect()
-        )
-        want = sorted(
-            (r["user_id"], r["n_events"], r["total_vq"], r["last_us"])
-            for r in spark.read.parquet(events_dir)
-            .groupBy("user_id")
-            .agg(
-                F.count(F.lit(1)).cast("bigint").alias("n_events"),
-                F.sum("vq").cast("bigint").alias("total_vq"),
-                F.max("us").cast("bigint").alias("last_us"),
+            monkeypatch.setattr(
+                queries_streaming, "_SWAP_WINDOW_HOOK", lambda: None
             )
-            .collect()
-        )
-        assert got == want, "torn swap lost or double-counted a batch"
+            run_upsert_stream(spark, events_dir, state_dir, ckpt)
+
+            assert not os.path.exists(state_dir + ".tmp") or os.path.isdir(
+                state_dir
+            )
+            got = sorted(
+                (r["user_id"], r["n_events"], r["total_vq"], r["last_us"])
+                for r in spark.read.parquet(state_dir).collect()
+            )
+            want = sorted(
+                (r["user_id"], r["n_events"], r["total_vq"], r["last_us"])
+                for r in spark.read.parquet(events_dir)
+                .groupBy("user_id")
+                .agg(
+                    F.count(F.lit(1)).cast("bigint").alias("n_events"),
+                    F.sum("vq").cast("bigint").alias("total_vq"),
+                    F.max("us").cast("bigint").alias("last_us"),
+                )
+                .collect()
+            )
+            assert got == want, "torn swap lost or double-counted a batch"
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
         shutil.rmtree(state_dir, ignore_errors=True)
         shutil.rmtree(state_dir + ".tmp", ignore_errors=True)
         shutil.rmtree(ckpt, ignore_errors=True)
@@ -663,8 +660,6 @@ def test_pyds_sink_restart_exactly_once(spark):
     register_ndjson_sink(spark)
     out = tempfile.mkdtemp(prefix="jfipb_sink_restart_out_")
     ckpt = tempfile.mkdtemp(prefix="jfipb_sink_restart_ckpt_")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
 
     def start():
         stream = read_ndjson_replay_stream(spark, _REPLAY_LOGS, chunk=128)
@@ -684,94 +679,94 @@ def test_pyds_sink_restart_exactly_once(spark):
         return rows
 
     try:
-        q1 = start()
-        deadline = time.time() + 120
-        cdir_poll = _os.path.join(ckpt, "commits")
-        while time.time() < deadline:
-            # Wait for BOTH a sink-committed batch and an engine commit
-            # entry: the sink's commit() runs before the engine records
-            # the batch, so polling the manifest alone can stop q1 inside
-            # the crash window itself (leaving nothing to delete below).
-            engine_commits = (
-                _os.path.isdir(cdir_poll)
-                and any(f.isdigit() for f in _os.listdir(cdir_poll))
+        with scoped_conf(spark, {"spark.sql.shuffle.partitions": "4"}):
+            q1 = start()
+            deadline = time.time() + 120
+            cdir_poll = _os.path.join(ckpt, "commits")
+            while time.time() < deadline:
+                # Wait for BOTH a sink-committed batch and an engine commit
+                # entry: the sink's commit() runs before the engine records
+                # the batch, so polling the manifest alone can stop q1 inside
+                # the crash window itself (leaving nothing to delete below).
+                engine_commits = (
+                    _os.path.isdir(cdir_poll)
+                    and any(f.isdigit() for f in _os.listdir(cdir_poll))
+                )
+                if len(committed_lines()) >= 128 and engine_commits:
+                    break
+                time.sleep(0.2)
+            q1.stop()
+            q1.awaitTermination(60)
+            seen = len(committed_lines())
+            assert seen > 0, "first run committed nothing"
+            if seen >= n_total:
+                import pytest
+
+                pytest.skip("stream drained before stop; restart path untestable")
+
+            # Crash-window simulation: the engine records a batch as done in
+            # checkpoint commits/<id> AFTER the sink's commit() has published
+            # the manifest.  Deleting the newest commits entry reproduces a
+            # crash between the two -- on restart the engine MUST replay that
+            # batch, and the sink's per-batchId manifest overwrite keeps the
+            # read side exactly-once.  Only delete when the commit log is
+            # LEVEL with the offset log: if the stop itself landed between
+            # offset-write and commit-write the crash window already exists,
+            # and deleting another entry would leave a 2-batch gap the engine
+            # rejects (it re-runs batch N, then offsetLog.add(N+1) hits the
+            # existing file -> SparkConcurrentModificationException).
+            cdir = _os.path.join(ckpt, "commits")
+            odir = _os.path.join(ckpt, "offsets")
+            commit_ids = sorted(
+                int(f) for f in _os.listdir(cdir) if f.isdigit()
             )
-            if len(committed_lines()) >= 128 and engine_commits:
-                break
-            time.sleep(0.2)
-        q1.stop()
-        q1.awaitTermination(60)
-        seen = len(committed_lines())
-        assert seen > 0, "first run committed nothing"
-        if seen >= n_total:
-            import pytest
-
-            pytest.skip("stream drained before stop; restart path untestable")
-
-        # Crash-window simulation: the engine records a batch as done in
-        # checkpoint commits/<id> AFTER the sink's commit() has published
-        # the manifest.  Deleting the newest commits entry reproduces a
-        # crash between the two -- on restart the engine MUST replay that
-        # batch, and the sink's per-batchId manifest overwrite keeps the
-        # read side exactly-once.  Only delete when the commit log is
-        # LEVEL with the offset log: if the stop itself landed between
-        # offset-write and commit-write the crash window already exists,
-        # and deleting another entry would leave a 2-batch gap the engine
-        # rejects (it re-runs batch N, then offsetLog.add(N+1) hits the
-        # existing file -> SparkConcurrentModificationException).
-        cdir = _os.path.join(ckpt, "commits")
-        odir = _os.path.join(ckpt, "offsets")
-        commit_ids = sorted(
-            int(f) for f in _os.listdir(cdir) if f.isdigit()
-        )
-        offset_ids = sorted(
-            int(f) for f in _os.listdir(odir) if f.isdigit()
-        )
-        assert offset_ids, "no engine offsets recorded before stop"
-        # Empty commit log == the stop landed before the FIRST engine
-        # commit: the crash window already exists for batch 0.
-        deleted_commit = bool(commit_ids) and commit_ids[-1] == offset_ids[-1]
-        if deleted_commit:
-            _os.remove(_os.path.join(cdir, str(commit_ids[-1])))
-            # Hadoop's local ChecksumFileSystem keeps a .<name>.crc sidecar;
-            # a stale one makes the replayed batch's atomic commit-log
-            # create fail as FileAlreadyExists (surfacing as the
-            # "multiple streaming queries" error) -- a crashed process
-            # would have written neither file, so remove both.
-            crc = _os.path.join(cdir, f".{commit_ids[-1]}.crc")
-            if _os.path.exists(crc):
-                _os.remove(crc)
-        files_before = set(committed_files(out))
-
-        q2 = start()
-        deadline = time.time() + 180
-        while time.time() < deadline:
-            if len(committed_lines()) == n_total:
-                break
-            time.sleep(0.3)
-        q2.stop()
-        q2.awaitTermination(60)
-
-        got = committed_lines()
-        assert len(got) == n_total, (
-            f"restart lost or duplicated rows: {len(got)} != {n_total}"
-        )
-        assert sorted(got) == sorted(corpus), "content diverged from corpus"
-        # When we deleted a sink-committed batch's engine commit entry, the
-        # replayed batch's manifest now points at the SECOND attempt's data
-        # files: at least one first-attempt file must have dropped out of
-        # the committed set (the orphan the manifest makes invisible).  In
-        # the natural-lag case (stop landed inside the crash window itself)
-        # the first attempt never reached the manifest, so there is nothing
-        # to overwrite -- the exactly-once content assertions above are the
-        # proof there.
-        if deleted_commit:
-            files_after = set(committed_files(out))
-            assert files_before - files_after, (
-                "replayed batch did not overwrite its manifest entry"
+            offset_ids = sorted(
+                int(f) for f in _os.listdir(odir) if f.isdigit()
             )
+            assert offset_ids, "no engine offsets recorded before stop"
+            # Empty commit log == the stop landed before the FIRST engine
+            # commit: the crash window already exists for batch 0.
+            deleted_commit = bool(commit_ids) and commit_ids[-1] == offset_ids[-1]
+            if deleted_commit:
+                _os.remove(_os.path.join(cdir, str(commit_ids[-1])))
+                # Hadoop's local ChecksumFileSystem keeps a .<name>.crc sidecar;
+                # a stale one makes the replayed batch's atomic commit-log
+                # create fail as FileAlreadyExists (surfacing as the
+                # "multiple streaming queries" error) -- a crashed process
+                # would have written neither file, so remove both.
+                crc = _os.path.join(cdir, f".{commit_ids[-1]}.crc")
+                if _os.path.exists(crc):
+                    _os.remove(crc)
+            files_before = set(committed_files(out))
+
+            q2 = start()
+            deadline = time.time() + 180
+            while time.time() < deadline:
+                if len(committed_lines()) == n_total:
+                    break
+                time.sleep(0.3)
+            q2.stop()
+            q2.awaitTermination(60)
+
+            got = committed_lines()
+            assert len(got) == n_total, (
+                f"restart lost or duplicated rows: {len(got)} != {n_total}"
+            )
+            assert sorted(got) == sorted(corpus), "content diverged from corpus"
+            # When we deleted a sink-committed batch's engine commit entry, the
+            # replayed batch's manifest now points at the SECOND attempt's data
+            # files: at least one first-attempt file must have dropped out of
+            # the committed set (the orphan the manifest makes invisible).  In
+            # the natural-lag case (stop landed inside the crash window itself)
+            # the first attempt never reached the manifest, so there is nothing
+            # to overwrite -- the exactly-once content assertions above are the
+            # proof there.
+            if deleted_commit:
+                files_after = set(committed_files(out))
+                assert files_before - files_after, (
+                    "replayed batch did not overwrite its manifest entry"
+                )
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
         shutil.rmtree(out, ignore_errors=True)
         shutil.rmtree(ckpt, ignore_errors=True)
 
@@ -797,8 +792,6 @@ def test_pyds_replay_checkpoint_recovery(spark):
     n_total = len(lines)
 
     ckpt = tempfile.mkdtemp(prefix="jfipb_replay_recover_")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
 
     def start(name):
         # 128-line chunks under a 1s trigger: 8 micro-batches spaced a
@@ -819,7 +812,7 @@ def test_pyds_replay_checkpoint_recovery(spark):
             .start()
         )
 
-    try:
+    with scoped_conf(spark, {"spark.sql.shuffle.partitions": "4"}):
         q1 = start("replay_rec_a")
         deadline = time.time() + 120
         while time.time() < deadline:
@@ -850,8 +843,6 @@ def test_pyds_replay_checkpoint_recovery(spark):
         assert final is not None, "restarted stream never drained"
         want_chars = sum(len(ln) for ln in lines)
         assert final["chars"] == want_chars, "restart duplicated or lost rows"
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
 def test_stream_louter_eviction_boundary(spark):
