@@ -491,8 +491,8 @@ def main() -> None:
         os.makedirs(os.path.dirname(full_path), exist_ok=True)
         with open(full_path, "w") as f:
             json.dump(full, f, indent=1)
-    except OSError:
-        pass  # a read-only checkout must not sink the bench
+    except OSError as exc:  # a read-only checkout must not sink the bench
+        print(f"[bench] could not write {full_path}: {exc}", file=sys.stderr)
 
     compact = {
         "metric": "headline_queries_total",

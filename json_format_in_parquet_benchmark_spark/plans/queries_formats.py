@@ -11,24 +11,18 @@ lossless, not just the in-memory transform.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..formats import get_format
 from ..formats.base import DOC_COL
+from ..runtime import scratch_dir
 from ..sources.ndjson import read_ndjson_raw
 from ..tables import load_table
 from .registry import register
 
 REFERENCE_LOGS = "/root/reference/json/logs.json"
-
-
-def _tmp(sf_dir: str, tag: str) -> str:
-    return os.path.join(
-        tempfile.gettempdir(), "jfipb_formats", os.path.basename(sf_dir.rstrip("/")), tag
-    )
 
 
 def _events_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -42,7 +36,7 @@ def _roundtrip_canon(spark: SparkSession, sf_dir: str, fmt_name: str) -> DataFra
 
         fmt = VariantShredFormat("k bigint")
     docs = _events_docs(spark, sf_dir)
-    path = _tmp(sf_dir, fmt_name)
+    path = scratch_dir(sf_dir, fmt_name)
     fmt.flush(fmt.encode(docs), path)
     decoded = fmt.decode(fmt.load(spark, path))
     return decoded.groupBy(F.col(DOC_COL).alias("canon")).agg(
@@ -175,7 +169,7 @@ def format_storage_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..metrics import measure_all_formats
 
     docs = _events_docs(spark, sf_dir)
-    out = _tmp(sf_dir, "storage_metrics")
+    out = scratch_dir(sf_dir, "storage_metrics")
     metrics = measure_all_formats(spark, docs, out, shred_ddl="k bigint")
     smallest = min(m.parquet_file_size for m in metrics)
     shredded = next(m for m in metrics if m.format == "variant")
@@ -225,26 +219,20 @@ GROUP BY 1
     tags=("source", "schema-evolution"),
 )
 def scan_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os as _os
-    import tempfile as _tempfile
-
     from ..tables import load_table
 
     events = load_table(spark, sf_dir, "events")
-    tag = _os.path.basename(sf_dir.rstrip("/")) or "sf"
-    root = _os.path.join(
-        _tempfile.gettempdir(), "jfipb_schema_evo", tag
-    )
+    root = scratch_dir(sf_dir, "schema_evo")
     # Snapshot v1: written before the `value` column existed.
     events.where(F.expr("event_id % 2 = 0")).select(
         "event_id", "user_id"
-    ).write.mode("overwrite").parquet(_os.path.join(root, "v1"))
+    ).write.mode("overwrite").parquet(os.path.join(root, "v1"))
     # Snapshot v2: the evolved schema adds `value`.
     events.where(F.expr("event_id % 2 = 1")).select(
         "event_id", "user_id", F.col("value").cast("double").alias("value")
-    ).write.mode("overwrite").parquet(_os.path.join(root, "v2"))
+    ).write.mode("overwrite").parquet(os.path.join(root, "v2"))
     merged = spark.read.option("mergeSchema", "true").parquet(
-        _os.path.join(root, "v1"), _os.path.join(root, "v2")
+        os.path.join(root, "v1"), os.path.join(root, "v2")
     )
     return merged.groupBy(F.col("user_id").cast("bigint").alias("user_id")).agg(
         F.count(F.lit(1)).alias("n_rows"),
@@ -253,11 +241,6 @@ def scan_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
             "total_value"
         ),
     )
-
-
-def _alt_source_path(sf_dir: str, fmt: str) -> str:
-    tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    return os.path.join(tempfile.gettempdir(), "jfipb_sources", f"events_{fmt}_{tag}")
 
 
 _ALT_SOURCE_ORACLE = """
@@ -285,7 +268,7 @@ GROUP BY event_type
 def scan_csv_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..tables import load_table
 
-    out = _alt_source_path(sf_dir, "csv")
+    out = scratch_dir(sf_dir, "events_csv")
     events = load_table(spark, sf_dir, "events").select(
         "event_id",
         F.expr("unix_micros(ts)").alias("us"),
@@ -320,7 +303,7 @@ def scan_csv_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 def scan_orc_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..tables import load_table
 
-    out = _alt_source_path(sf_dir, "orc")
+    out = scratch_dir(sf_dir, "events_orc")
     events = load_table(spark, sf_dir, "events").select(
         "event_id",
         F.expr("unix_micros(ts)").alias("us"),
@@ -353,7 +336,7 @@ def scan_orc_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 def scan_xml_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..tables import load_table
 
-    out = _alt_source_path(sf_dir, "xml")
+    out = scratch_dir(sf_dir, "events_xml")
     events = load_table(spark, sf_dir, "events").select(
         "event_id",
         F.expr("unix_micros(ts)").alias("us"),
@@ -418,10 +401,7 @@ FROM staged
 def scan_ndjson_corrupt(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..tables import load_table
 
-    tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    out = os.path.join(
-        tempfile.gettempdir(), "jfipb_sources", f"events_ndjson_dirty_{tag}"
-    )
+    out = scratch_dir(sf_dir, "events_ndjson_dirty")
     events = load_table(spark, sf_dir, "events")
     staged = events.select(
         F.expr(
@@ -478,7 +458,7 @@ GROUP BY 1
 def format_scan_shredded_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     fmt = get_format("jsonb_shredded")
     docs = _events_docs(spark, sf_dir)
-    path = _tmp(sf_dir, "jsonb_shredded_scan")
+    path = scratch_dir(sf_dir, "jsonb_shredded_scan")
     fmt.flush(fmt.encode(docs), path)
     loaded = fmt.load(spark, path)
     return (
@@ -594,19 +574,20 @@ SELECT md5(props) AS line_hash FROM events
     "compressed-drop format most external data actually arrives in.  "
     "The read is lossless (oracle = md5 per original document), and the "
     "SPLITTABILITY trap is pinned by a plan assertion in the builder: "
-    "gzip is a non-splittable codec, so each .gz file maps to exactly "
-    "ONE input partition no matter its size -- at 100 TB you either "
+    "gzip is a non-splittable codec, so each .gz file is read WHOLE by "
+    "one task no matter its size -- at 100 TB you either "
     "receive many moderate .gz files (parallelism = file count), "
     "recompress to a splittable codec (bzip2, or parquet+zstd), or "
     "accept single-task decompression per file.  The export here "
     "repartitions to 4 files so the read-back side demonstrates "
-    "file-count parallelism, and the builder asserts "
-    "partitions == files.",
+    "file-count parallelism, and the builder asserts that the planned "
+    "scan splits no file (Spark may still pack several small files "
+    "into one partition).",
     tags=("source", "ndjson", "compression"),
 )
 def scan_ndjson_gzip(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events")
-    out = _tmp(sf_dir, "ndjson_gz")
+    out = scratch_dir(sf_dir, "ndjson_gz")
     n_files = 4
     (
         events.select(F.col("props").alias("value"))
@@ -616,14 +597,24 @@ def scan_ndjson_gzip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .text(out)
     )
     back = spark.read.text(out)
-    # Non-splittable codec contract: one input partition per .gz file.
-    parts = back.rdd.getNumPartitions()
-    files = len(
-        [f for f in os.listdir(out) if f.endswith(".gz")]
+    # Non-splittable codec contract: every .gz file appears exactly once,
+    # whole, among the scan's planned FilePartitions (planning runs no job).
+    sizes = {
+        f: os.path.getsize(os.path.join(out, f))
+        for f in os.listdir(out)
+        if f.endswith(".gz")
+    }
+    scan = back._jdf.queryExecution().executedPlan().collectLeaves().head()
+    parts = scan.inputRDD().filePartitions()
+    planned = sorted(
+        (pf.toPath().getName(), pf.start(), pf.length())
+        for i in range(parts.size())
+        for pf in parts.apply(i).files()
     )
-    assert files == n_files and parts == files, (
-        f"gzip splittability contract broken: {files} files, "
-        f"{parts} partitions"
+    whole = sorted((f, 0, size) for f, size in sizes.items())
+    assert len(sizes) == n_files and planned == whole, (
+        f"gzip splittability contract broken: files {whole}, "
+        f"planned splits {planned}"
     )
     return back.select(F.md5(F.col("value")).alias("line_hash"))
 
@@ -715,27 +706,7 @@ def scan_partition_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.unix_micros("ts").alias("ts_us"),
         F.expr(f"unix_micros(ts) div {_PE_DAY_US}").alias("d"),
     )
-    tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    # Stage under a per-session root (applicationId is unique per
-    # SparkSession) so two concurrent sessions on one machine never
-    # overwrite each other's generations mid-read.  Per-session dirs would
-    # otherwise accumulate forever (the pre-round-7 fixed path was bounded
-    # by overwrite), so best-effort purge sibling sessions' staging older
-    # than 6 hours -- far beyond any live query's read window.
-    base = os.path.join(tempfile.gettempdir(), "jfipb_part_evo")
-    app_id = spark.sparkContext.applicationId
-    try:
-        import shutil
-        import time as _time
-
-        cutoff = _time.time() - 6 * 3600
-        for d in os.listdir(base) if os.path.isdir(base) else []:
-            p = os.path.join(base, d)
-            if d != app_id and os.path.isdir(p) and os.path.getmtime(p) < cutoff:
-                shutil.rmtree(p, ignore_errors=True)
-    except OSError:
-        pass  # purge is housekeeping; never sink the query
-    root = os.path.join(base, app_id, tag)
+    root = scratch_dir(sf_dir, "part_evo")
     old_dir, new_dir = os.path.join(root, "old"), os.path.join(root, "new")
     # Generation 1: week blocks (d div 7).  Generation 2: exact days.
     # Rebalance on the partition key before each dynamic partitionBy

@@ -30,12 +30,11 @@ is the slow arm the benchmark exists to demonstrate).
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..runtime import track_persist
+from ..runtime import scratch_dir, track_persist
 from ..tables import load_table
 from .registry import register
 
@@ -312,9 +311,7 @@ FROM events
 )
 def json_roundtrip_plain(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events")
-    out_dir = os.path.join(
-        tempfile.gettempdir(), "jfipb_roundtrip_plain", os.path.basename(sf_dir.rstrip("/"))
-    )
+    out_dir = scratch_dir(sf_dir, "roundtrip_plain")
     events.select(F.col("props").alias("doc")).write.mode("overwrite").parquet(
         out_dir, compression="zstd"
     )

@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.hashing import hash64_sql_duckdb, hash64_sql_spark
-from ..runtime import track_persist
+from ..runtime import scratch_dir, track_persist
 from ..tables import load_table
 from .registry import register
 
@@ -5117,9 +5117,6 @@ FROM events
     tags=("dq", "observe", "metrics", "aggregation"),
 )
 def dq_observe_inflight(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import tempfile
-
     from pyspark.sql import Observation
 
     events = load_table(spark, sf_dir, "events")
@@ -5141,11 +5138,7 @@ def dq_observe_inflight(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("max_cents"),
     )
-    out = os.path.join(
-        tempfile.gettempdir(),
-        "jfipb_observe",
-        os.path.basename(sf_dir.rstrip("/")) or "sf",
-    )
+    out = scratch_dir(sf_dir, "observe")
     # The consuming action the metrics piggyback on.
     observed.write.mode("overwrite").parquet(out)
     m = obs.get

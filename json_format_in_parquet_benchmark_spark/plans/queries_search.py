@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.text import tokens_duckdb, tokens_spark
-from ..runtime import track_persist
+from ..runtime import scratch_dir, track_persist
 from ..tables import load_table
 from .registry import register
 
@@ -635,18 +635,6 @@ def _term_shard_py(term: str) -> int:
     )
 
 
-def inverted_index_path(sf_dir: str) -> str:
-    import hashlib
-    import os
-    import tempfile
-
-    resolved = os.path.realpath(sf_dir.rstrip("/"))
-    tag = (os.path.basename(resolved) or "sf") + "_" + hashlib.md5(
-        resolved.encode()
-    ).hexdigest()[:10]
-    return os.path.join(tempfile.gettempdir(), "jfipb_inverted_idx", tag)
-
-
 @register(
     "sink_inverted_index",
     oracle=f"""
@@ -689,7 +677,7 @@ def sink_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.hashing import hash64_sql_spark
 
     docs = load_table(spark, sf_dir, "documents")
-    out = inverted_index_path(sf_dir)
+    out = scratch_dir(sf_dir, "inverted_idx")
     postings = (
         docs.select(
             "doc_id", F.explode(F.expr(_TOKS_S)).alias("term")

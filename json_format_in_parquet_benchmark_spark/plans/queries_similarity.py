@@ -17,7 +17,7 @@ from ..operators.similarity import (
     topk_ivf,
     topk_lsh,
 )
-from ..runtime import track_persist
+from ..runtime import track_persist, write_once
 from ..tables import load_table
 from .registry import register
 
@@ -149,51 +149,33 @@ def similarity_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_IVF_SINK: dict[str, str] = {}
-
-
 def ivf_partitioned_path(spark: SparkSession, sf_dir: str) -> str:
     """Write the embeddings corpus cell-partitioned (hive layout, one
     directory per IVF cell) -- the persisted ANN index layout for 100 TB:
     queries touch only their probed cells' directories.  Memoized per
     sf_dir."""
-    import os
-    import hashlib
-    import tempfile
-
     from ..operators.similarity import ivf_assign
 
-    # Keyed by a hash of the resolved sf_dir, not the basename -- two
-    # roots sharing a basename must not alias one cell layout (same rule
-    # as ivf_append_path below).
-    resolved = os.path.realpath(sf_dir.rstrip("/"))
-    tag = (
-        (os.path.basename(resolved) or "sf")
-        + "-"
-        + hashlib.md5(resolved.encode()).hexdigest()[:10]
-    )
-    if tag in _IVF_SINK:
-        return _IVF_SINK[tag]
-    out = os.path.join(tempfile.gettempdir(), "jfipb_ivf_cells", tag)
-    emb = load_table(spark, sf_dir, "embeddings")
-    assign = ivf_assign(emb, "embedding", "vec_id", N_CELLS, DIM)
-    (
-        # REBALANCE before the dynamic partitionBy write: without the
-        # pre-shuffle every task emits one file per cell it holds --
-        # O(tasks x cells) files (the 11.7x wall measured on the event
-        # sink, results/scale_probe.txt); clustered by cell the job
-        # writes ~one file per cell directory, and oversized cells are
-        # split by AQE to bounded task sizes.  Same fix as
-        # queries_sinks.py:write_partitioned_events.
-        emb.select("vec_id", "embedding")
-        .join(assign, "vec_id")
-        .hint("rebalance", "cell")
-        .write.mode("overwrite")
-        .partitionBy("cell")
-        .parquet(out)
-    )
-    _IVF_SINK[tag] = out
-    return out
+    def write(out: str) -> None:
+        emb = load_table(spark, sf_dir, "embeddings")
+        assign = ivf_assign(emb, "embedding", "vec_id", N_CELLS, DIM)
+        (
+            # REBALANCE before the dynamic partitionBy write: without the
+            # pre-shuffle every task emits one file per cell it holds --
+            # O(tasks x cells) files (the 11.7x wall measured on the event
+            # sink, results/scale_probe.txt); clustered by cell the job
+            # writes ~one file per cell directory, and oversized cells are
+            # split by AQE to bounded task sizes.  Same fix as
+            # queries_sinks.py:write_partitioned_events.
+            emb.select("vec_id", "embedding")
+            .join(assign, "vec_id")
+            .hint("rebalance", "cell")
+            .write.mode("overwrite")
+            .partitionBy("cell")
+            .parquet(out)
+        )
+
+    return write_once(sf_dir, "ivf_cells", write)
 
 
 @register(
@@ -813,7 +795,6 @@ def similarity_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 IVF_APPEND_MOD = 10  # hash slice: ~10% of vectors arrive as the new batch
-_IVF_APPEND_SINK: dict[str, str] = {}
 
 
 def ivf_append_path(spark: SparkSession, sf_dir: str) -> str:
@@ -823,51 +804,35 @@ def ivf_append_path(spark: SparkSession, sf_dir: str) -> str:
     index-maintenance operation: only the batch's cells' directories gain
     files, nothing existing is rewritten, no rebuild.  Memoized per
     sf_dir; split membership is hash-deterministic so the layout is
-    reproducible.  The sink is keyed by a hash of the FULL resolved
-    sf_dir (two roots sharing a basename must not alias one layout) and
-    by pid (two concurrent processes on one machine must not interleave
-    the overwrite/append pair into the same directory mid-query)."""
-    import hashlib
-    import os
-    import tempfile
-
+    reproducible."""
     from ..functions.hashing import hash64_sql_spark
     from ..operators.similarity import ivf_assign
 
-    resolved = os.path.abspath(sf_dir)
-    tag = (
-        (os.path.basename(resolved) or "sf")
-        + "-"
-        + hashlib.md5(resolved.encode()).hexdigest()[:10]
-        + f"-p{os.getpid()}"
-    )
-    if tag in _IVF_APPEND_SINK:
-        return _IVF_APPEND_SINK[tag]
-    out = os.path.join(tempfile.gettempdir(), "jfipb_ivf_append", tag)
-    emb = load_table(spark, sf_dir, "embeddings")
-    is_batch = (
-        F.expr(f"{hash64_sql_spark('cast(vec_id as string)', salt='ivfapp:')}")
-        % IVF_APPEND_MOD
-        == IVF_APPEND_MOD - 1
-    )
-    for arriving, mode in ((False, "overwrite"), (True, "append")):
-        part = emb.where(is_batch if arriving else ~is_batch)
-        assign = ivf_assign(part, "embedding", "vec_id", N_CELLS, DIM)
-        (
-            # Rebalance on the partition key before BOTH the base build
-            # and the incremental append -- the append otherwise adds
-            # O(tasks x touched-cells) small files on every batch, the
-            # compounding form of the file-count wall (see
-            # ivf_partitioned_path above).
-            part.select("vec_id", "embedding")
-            .join(assign, "vec_id")
-            .hint("rebalance", "cell")
-            .write.mode(mode)
-            .partitionBy("cell")
-            .parquet(out)
+    def write(out: str) -> None:
+        emb = load_table(spark, sf_dir, "embeddings")
+        is_batch = (
+            F.expr(f"{hash64_sql_spark('cast(vec_id as string)', salt='ivfapp:')}")
+            % IVF_APPEND_MOD
+            == IVF_APPEND_MOD - 1
         )
-    _IVF_APPEND_SINK[tag] = out
-    return out
+        for arriving, mode in ((False, "overwrite"), (True, "append")):
+            part = emb.where(is_batch if arriving else ~is_batch)
+            assign = ivf_assign(part, "embedding", "vec_id", N_CELLS, DIM)
+            (
+                # Rebalance on the partition key before BOTH the base build
+                # and the incremental append -- the append otherwise adds
+                # O(tasks x touched-cells) small files on every batch, the
+                # compounding form of the file-count wall (see
+                # ivf_partitioned_path above).
+                part.select("vec_id", "embedding")
+                .join(assign, "vec_id")
+                .hint("rebalance", "cell")
+                .write.mode(mode)
+                .partitionBy("cell")
+                .parquet(out)
+            )
+
+    return write_once(sf_dir, "ivf_append", write)
 
 
 @register(

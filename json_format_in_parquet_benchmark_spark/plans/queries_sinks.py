@@ -17,24 +17,20 @@ lossy sink cannot pass):
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..runtime import scoped_conf
+from ..runtime import scoped_conf, scratch_dir, sf_tag
 from ..tables import load_table, table_path
 from .registry import register
-
-_SINK_ROOT = os.path.join(tempfile.gettempdir(), "jfipb_sinks")
 
 # Overwrite only the partitions the written frame holds, for one write.
 _DYNAMIC_OVERWRITE = {"spark.sql.sources.partitionOverwriteMode": "dynamic"}
 
 
 def partitioned_events_path(sf_dir: str) -> str:
-    tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    return os.path.join(_SINK_ROOT, f"events_by_type_day_{tag}")
+    return scratch_dir(sf_dir, "events_by_type_day")
 
 
 def write_partitioned_events(spark: SparkSession, sf_dir: str) -> str:
@@ -104,8 +100,7 @@ def sink_partitioned_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sink_ndjson_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.ndjson import read_ndjson_raw
 
-    tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    out = os.path.join(_SINK_ROOT, f"events_props_ndjson_{tag}")
+    out = scratch_dir(sf_dir, "events_props_ndjson")
     events = load_table(spark, sf_dir, "events")
     events.select(F.col("props").alias("value")).write.mode("overwrite").text(out)
     back = read_ndjson_raw(spark, out)
@@ -126,16 +121,11 @@ def write_bucketed_order_tables(
     amortization: pay the shuffle once at write time, join for free every
     read after.
 
-    External tables (explicit /tmp paths) so any session's in-memory
+    External tables (explicit scratch paths) so any session's in-memory
     catalog can own them, including the driver's vanilla one; memoized per
     session+sf via the catalog itself.
     """
-    import re
-
-    # catalog identifiers can't contain '.', so "sf0.001" -> "sf0_001"
-    tag = re.sub(
-        r"[^A-Za-z0-9_]", "_", os.path.basename(sf_dir.rstrip("/")) or "sf"
-    )
+    tag = sf_tag(sf_dir)
     t_orders = f"jfipb_orders_bucketed_{tag}"
     t_li = f"jfipb_lineitem_bucketed_{tag}"
     if spark.catalog.tableExists(t_orders) and spark.catalog.tableExists(t_li):
@@ -146,7 +136,7 @@ def write_bucketed_order_tables(
         load_table(spark, sf_dir, "orders")
         .select("o_orderkey", "o_orderpriority")
         .write.mode("overwrite")
-        .option("path", os.path.join(_SINK_ROOT, f"bucketed_orders_{tag}"))
+        .option("path", scratch_dir(sf_dir, "bucketed_orders"))
         .bucketBy(N_BUCKETS, "o_orderkey")
         .sortBy("o_orderkey")
         .format("parquet")
@@ -156,7 +146,7 @@ def write_bucketed_order_tables(
         load_table(spark, sf_dir, "lineitem")
         .select("l_orderkey", "l_extendedprice", "l_discount")
         .write.mode("overwrite")
-        .option("path", os.path.join(_SINK_ROOT, f"bucketed_lineitem_{tag}"))
+        .option("path", scratch_dir(sf_dir, "bucketed_lineitem"))
         .bucketBy(N_BUCKETS, "l_orderkey")
         .sortBy("l_orderkey")
         .format("parquet")
@@ -223,10 +213,7 @@ def write_compacted_events(spark: SparkSession, sf_dir: str) -> tuple[str, int]:
     compactor (Delta OPTIMIZE, Iceberg rewrite_data_files) runs -- and a
     round-robin repartition(n) spreads rows evenly across exactly n files.
     """
-    out = os.path.join(
-        _SINK_ROOT,
-        f"events_compacted_{os.path.basename(sf_dir.rstrip('/')) or 'sf'}",
-    )
+    out = scratch_dir(sf_dir, "events_compacted")
     events = load_table(spark, sf_dir, "events")
     src = table_path(sf_dir, "events")
     if os.path.isdir(src):
@@ -312,8 +299,7 @@ def sink_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(changes.select("event_id"), "event_id", "left_anti")
         .unionByName(changes)
     )
-    tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    out = os.path.join(_SINK_ROOT, f"events_merged_{tag}")
+    out = scratch_dir(sf_dir, "events_merged")
     merged.write.mode("overwrite").parquet(out)
     back = spark.read.parquet(out)
     return back.agg(
@@ -377,8 +363,7 @@ def zvalue_sql(x: str, y: str, spark_side: bool) -> str:
 
 
 def zorder_events_path(sf_dir: str, layout: str) -> str:
-    tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    return os.path.join(_SINK_ROOT, f"events_{layout}_{tag}")
+    return scratch_dir(sf_dir, f"events_{layout}")
 
 
 _X_DEF = "user_id % 256"
@@ -626,8 +611,7 @@ GROUP BY 1
     tags=("sink", "partitioning", "backfill", "idempotent"),
 )
 def sink_backfill_partition(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    out = os.path.join(_SINK_ROOT, f"events_backfill_{tag}")
+    out = scratch_dir(sf_dir, "events_backfill")
     events = load_table(spark, sf_dir, "events").withColumn(
         "day", F.date_format(F.date_trunc("day", "ts"), "yyyy-MM-dd")
     )
@@ -782,7 +766,6 @@ FROM agg
 def sink_parquet_bloom_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     import hashlib
 
-    tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
     events = load_table(spark, sf_dir, "events")
     # Probe set: bounded driver collect (<= _BLOOM_PROBE_CAP user ids; the
     # point-lookup workload needs literal keys by definition).
@@ -809,7 +792,7 @@ def sink_parquet_bloom_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     enabled_k, ndv_k, dict_k = _bloom_hconf_keys("user_key")
     outs = {}
     for layout in ("bloom", "plain"):
-        out = os.path.join(_SINK_ROOT, f"events_bloomkey_{layout}_{tag}")
+        out = scratch_dir(sf_dir, f"events_bloomkey_{layout}")
         if layout == "bloom":
             hconf.set(enabled_k, "true")
             hconf.set(ndv_k, "20000")
@@ -888,8 +871,7 @@ GROUP BY event_type
 def sink_gdpr_erasure(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
 
-    tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    out = os.path.join(_SINK_ROOT, f"events_gdpr_{tag}")
+    out = scratch_dir(sf_dir, "events_gdpr")
     events = load_table(spark, sf_dir, "events").withColumn(
         "day", F.date_format(F.date_trunc("day", "ts"), "yyyy-MM-dd")
     )
@@ -1004,8 +986,7 @@ FROM v1
 def sink_snapshot_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     import json
 
-    tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    root = os.path.join(_SINK_ROOT, f"events_snaplog_{tag}")
+    root = scratch_dir(sf_dir, "events_snaplog")
     v0 = load_table(spark, sf_dir, "events").select(
         "event_id",
         F.expr("cast(cast(value as decimal(18,2)) * 100 as bigint)").alias(

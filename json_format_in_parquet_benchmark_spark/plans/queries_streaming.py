@@ -32,11 +32,10 @@ spark.sql.streaming.stateStore.providerClass on a real cluster).
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..runtime import scoped_conf
+from ..runtime import scoped_conf, scratch_dir, sf_tag, write_once
 from ..streaming.events_stream import (
     read_events_stream,
     sessionize_batch,
@@ -58,57 +57,41 @@ GAP_US = GAP_MINUTES * 60 * 1_000_000
 # count.
 _STREAM_CONFS = {"spark.sql.shuffle.partitions": "8"}
 
-_STAGE_ROOT = os.path.join(tempfile.gettempdir(), "jfipb_stream_stage")
-
-# sf_dir tag -> staged path.  Several registered queries stream the same
-# staged input; staging (a coalesce(1) rewrite of events) is done once per
-# sf_dir per process, not once per query.
-_STAGED: dict[str, str] = {}
-
-
-
-def _stage_tag(sf_dir: str) -> str:
-    """Collision-safe stage key: basename for readability PLUS a hash of
-    the RESOLVED sf_dir -- two roots sharing a basename (e.g. /a/sf0.01
-    and /b/sf0.01) must not alias one staged layout (the same rule the
-    IVF append sink follows)."""
-    import hashlib
-
-    resolved = os.path.realpath(sf_dir.rstrip("/"))
-    base = os.path.basename(resolved) or "sf"
-    return base + "_" + hashlib.md5(resolved.encode()).hexdigest()[:10]
-
 
 def _staged_events(spark: SparkSession, sf_dir: str) -> str:
     """Stage the events table as a single-file parquet dir for a file-source
     stream (single file => single availableNow micro-batch => deterministic
-    stateful output).  Memoized per sf_dir."""
-    tag = _stage_tag(sf_dir)
-    if tag in _STAGED:
-        return _STAGED[tag]
-    out_dir = os.path.join(_STAGE_ROOT, tag)
-    events = load_table(spark, sf_dir, "events").coalesce(1)
-    events.write.mode("overwrite").parquet(out_dir)
-    _STAGED[tag] = out_dir
-    return out_dir
+    stateful output).  Several registered queries stream it, so it is
+    written once per sf_dir per process."""
+
+    def write(out_dir: str) -> None:
+        events = load_table(spark, sf_dir, "events").coalesce(1)
+        events.write.mode("overwrite").parquet(out_dir)
+
+    return write_once(sf_dir, "stream_stage", write)
 
 
 _RUN_SEQ = 0
 
 
-def _run_to_memory(stream_df: DataFrame, name: str, output_mode: str) -> DataFrame:
-    """Execute a streaming DataFrame to completion (availableNow) into a
-    memory sink and return the sink contents as a batch DataFrame.
-
-    Checkpoint dir and sink name are unique per call: a reused checkpoint
-    would mark the staged input files as already-processed and replay prior
-    state, silently corrupting a re-run.
-    """
+def _new_run(sf_dir: str, name: str) -> tuple[str, str]:
+    """(query name, checkpoint dir) of one streaming run, unique per call:
+    a reused checkpoint would mark the staged input files as
+    already-processed and replay prior state, silently corrupting a
+    re-run."""
     global _RUN_SEQ
     _RUN_SEQ += 1
-    unique = f"{name}_{_RUN_SEQ}"
+    unique = f"{name}_{sf_tag(sf_dir)}_{_RUN_SEQ}"
+    return unique, scratch_dir(sf_dir, f"ckpt_{unique}")
+
+
+def _run_to_memory(
+    stream_df: DataFrame, sf_dir: str, name: str, output_mode: str
+) -> DataFrame:
+    """Execute a streaming DataFrame to completion (availableNow) into a
+    fresh memory sink and return the sink contents as a batch DataFrame."""
+    unique, ckpt = _new_run(sf_dir, name)
     spark = stream_df.sparkSession
-    ckpt = tempfile.mkdtemp(prefix=f"jfipb_ckpt_{unique}_")
     with scoped_conf(spark, _STREAM_CONFS):
         q = (
             stream_df.writeStream.format("memory")
@@ -227,8 +210,7 @@ def stream_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     events_dir = _staged_events(spark, sf_dir)
     stream = read_events_stream(spark, events_dir)
     agg = tumbling_event_counts(stream, "1 hour", watermark="1 hour")
-    tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
-    sink = _run_to_memory(agg, f"tumbling_wm_{tag}", "append")
+    sink = _run_to_memory(agg, sf_dir, "tumbling_wm", "append")
     return _fmt_win_start(sink)
 
 
@@ -283,8 +265,7 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("p_ts") >= F.col("c_ts"))
         & (F.col("p_ts") <= F.col("c_ts") + F.expr("INTERVAL 1 HOUR")),
     ).select("c_user", "click_id", "purchase_id")
-    tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
-    return _run_to_memory(joined, f"ssjoin_{tag}", "append")
+    return _run_to_memory(joined, sf_dir, "ssjoin", "append")
 
 
 @register(
@@ -374,8 +355,7 @@ def stream_stream_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("p_ts") <= F.col("c_ts") + F.expr("INTERVAL 1 HOUR")),
         "leftOuter",
     ).select("c_user", "click_id", "purchase_id")
-    tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
-    return _run_to_memory(joined, f"sslouter_{tag}", "append")
+    return _run_to_memory(joined, sf_dir, "sslouter", "append")
 
 
 @register(
@@ -409,8 +389,7 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     enriched = stream.join(
         F.broadcast(dim), F.col("user_id") == F.col("c_custkey")
     ).select("c_mktsegment", "value")
-    tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
-    sink = _run_to_memory(enriched, f"senrich_{tag}", "append")
+    sink = _run_to_memory(enriched, sf_dir, "senrich", "append")
     return sink.groupBy("c_mktsegment").agg(
         F.count(F.lit(1)).alias("n_events"),
         F.expr("cast(sum(cast(value as decimal(18,2))) as double)").alias(
@@ -422,14 +401,12 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _staged_events_duplicated(spark: SparkSession, sf_dir: str) -> str:
     """Stage the events table UNIONED WITH ITSELF as one parquet file -- the
     duplicated input the streaming-dedup query must collapse."""
-    tag = _stage_tag(sf_dir) + "_dup"
-    if tag in _STAGED:
-        return _STAGED[tag]
-    out_dir = os.path.join(_STAGE_ROOT, tag)
-    events = load_table(spark, sf_dir, "events")
-    events.unionByName(events).coalesce(1).write.mode("overwrite").parquet(out_dir)
-    _STAGED[tag] = out_dir
-    return out_dir
+
+    def write(out_dir: str) -> None:
+        events = load_table(spark, sf_dir, "events")
+        events.unionByName(events).coalesce(1).write.mode("overwrite").parquet(out_dir)
+
+    return write_once(sf_dir, "stream_stage_dup", write)
 
 
 @register(
@@ -453,8 +430,7 @@ def stream_dedup_watermarked(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withWatermark("ts", "1 hour")
         .dropDuplicatesWithinWatermark(["event_id"])
     )
-    tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
-    return _run_to_memory(stream.select("event_id"), f"sdedup_{tag}", "append")
+    return _run_to_memory(stream.select("event_id"), sf_dir, "sdedup", "append")
 
 
 @register(
@@ -489,8 +465,7 @@ def stream_sessionize_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     events_dir = _staged_events(spark, sf_dir)
     stream = read_events_stream(spark, events_dir)
     sessions = sessionize_stream(stream, gap_minutes=GAP_MINUTES)
-    tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
-    return _run_to_memory(sessions, f"sessions_{tag}", "append")
+    return _run_to_memory(sessions, sf_dir, "sessions", "append")
 
 
 # --- Streaming sketch: windowed HLL distinct users -------------------------
@@ -571,10 +546,10 @@ def stream_hll_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     regs = rows.groupBy(F.window("ts", "1 day").alias("win"), F.col("bucket")).agg(
         F.max("rho").alias("M")
     )
-    tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
     sink = _run_to_memory(
         regs.select(F.col("win.start").alias("win_ts"), "bucket", "M"),
-        f"hll_users_{tag}",
+        sf_dir,
+        "hll_users",
         "append",
     )
     alpha = alpha_m(_HLL_M)
@@ -685,8 +660,7 @@ def stream_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     events_dir = _staged_events(spark, sf_dir)
     stream = read_events_stream(spark, events_dir)
     agg = sliding_event_counts(stream, "2 hours", "30 minutes", watermark="1 hour")
-    tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
-    sink = _run_to_memory(agg, f"sliding_wm_{tag}", "append")
+    sink = _run_to_memory(agg, sf_dir, "sliding_wm", "append")
     return _fmt_win_start(sink)
 
 
@@ -695,19 +669,34 @@ def stream_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 SPLIT_US = 1_705_363_200_000_000  # 2024-01-16 UTC: the two-file stage split
 
 
+def _stage_batch_files(
+    sf_dir: str, name: str, ev: DataFrame, preds: list[str]
+) -> str:
+    """Stage one parquet file per predicate, ``batch-000.parquet`` onward,
+    with increasing modification times, so a ``maxFilesPerTrigger=1``
+    stream reads them as that many micro-batches in that order.  Written
+    once per sf_dir per process."""
+
+    def write(out_dir: str) -> None:
+        import shutil
+
+        os.makedirs(out_dir, exist_ok=True)
+        for i, pred in enumerate(preds):
+            tmp = f"{out_dir}_half{i}"
+            ev.where(pred).coalesce(1).write.mode("overwrite").parquet(tmp)
+            src = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
+            dst = os.path.join(out_dir, f"batch-{i:03d}.parquet")
+            shutil.copy(os.path.join(tmp, src), dst)
+            os.utime(dst, (1_000_000 + i * 1000, 1_000_000 + i * 1000))
+
+    return write_once(sf_dir, name, write)
+
+
 def _staged_events_two_files(spark: SparkSession, sf_dir: str) -> str:
     """Stage events as TWO chronological parquet files so maxFilesPerTrigger=1
     yields two deterministic micro-batches (modification times pin the
     order).  Used by the incremental-sink query, where the FINAL state must
     be independent of the batch split."""
-    import shutil
-
-    tag = "two_" + _stage_tag(sf_dir)
-    if tag in _STAGED:
-        return _STAGED[tag]
-    out_dir = os.path.join(_STAGE_ROOT, tag)
-    shutil.rmtree(out_dir, ignore_errors=True)
-    os.makedirs(out_dir, exist_ok=True)
     from pyspark.sql import functions as F
 
     ev = load_table(spark, sf_dir, "events").select(
@@ -715,15 +704,9 @@ def _staged_events_two_files(spark: SparkSession, sf_dir: str) -> str:
         F.expr("unix_micros(ts)").alias("us"),
         F.expr("cast(floor(value * 1e8) as bigint)").alias("vq"),
     )
-    for i, pred in enumerate([f"us < {SPLIT_US}", f"us >= {SPLIT_US}"]):
-        tmp = os.path.join(_STAGE_ROOT, f"{tag}_half{i}")
-        ev.where(pred).coalesce(1).write.mode("overwrite").parquet(tmp)
-        src = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
-        dst = os.path.join(out_dir, f"batch-{i:03d}.parquet")
-        shutil.copy(os.path.join(tmp, src), dst)
-        os.utime(dst, (1_000_000 + i * 1000, 1_000_000 + i * 1000))
-    _STAGED[tag] = out_dir
-    return out_dir
+    return _stage_batch_files(
+        sf_dir, "stream_stage_two", ev, [f"us < {SPLIT_US}", f"us >= {SPLIT_US}"]
+    )
 
 
 @register(
@@ -753,8 +736,7 @@ def stream_upsert_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
 
     events_dir = _staged_events_two_files(spark, sf_dir)
-    tag = (os.path.basename(sf_dir.rstrip("/")) or "sf").replace(".", "_")
-    state_dir = os.path.join(_STAGE_ROOT, f"upsert_state_{tag}")
+    state_dir = scratch_dir(sf_dir, "upsert_state")
     shutil.rmtree(state_dir, ignore_errors=True)
     # A stale tmp from a PREVIOUS run must go too: this run uses a fresh
     # checkpoint (batch ids restart at 0), so the recovery path would
@@ -762,7 +744,7 @@ def stream_upsert_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     # this run's batches (review r10).  Cross-run tmp adoption is only
     # safe when the checkpoint survives with it.
     shutil.rmtree(state_dir + ".tmp", ignore_errors=True)
-    ckpt = tempfile.mkdtemp(prefix=f"jfipb_ckpt_upsert_{tag}_")
+    _, ckpt = _new_run(sf_dir, "upsert")
     with scoped_conf(spark, _STREAM_CONFS):
         run_upsert_stream(spark, events_dir, state_dir, ckpt)
     return spark.read.parquet(state_dir)
@@ -969,8 +951,7 @@ def stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from pyspark.sql import functions as F
 
-    tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
-    sink = _run_to_memory(agg, f"session_win_{tag}", "append")
+    sink = _run_to_memory(agg, sf_dir, "session_win", "append")
     return sink.select(
         "user_id",
         F.expr("start_us div 1000").alias("start_ms"),
@@ -988,16 +969,6 @@ def _staged_events_late_first(spark: SparkSession, sf_dir: str) -> str:
     entirely LATE data arriving after the watermark is in force -- the
     arrival pattern that exercises watermark-based dropping
     deterministically."""
-    import shutil
-
-    tag = "late_" + _stage_tag(sf_dir)
-    if tag in _STAGED:
-        return _STAGED[tag]
-    out_dir = os.path.join(_STAGE_ROOT, tag)
-    shutil.rmtree(out_dir, ignore_errors=True)
-    os.makedirs(out_dir, exist_ok=True)
-    from pyspark.sql import functions as F
-
     ev = load_table(spark, sf_dir, "events").select("ts", "event_type")
     # THREE batches, not two: the late-row filter uses the watermark in
     # force DURING the previous batch (a two-batch lag -- verified
@@ -1012,15 +983,7 @@ def _staged_events_late_first(spark: SparkSession, sf_dir: str) -> str:
         f" and unix_micros(ts) < {LATE_Q3_US}",                # on time
         f"unix_micros(ts) < {SPLIT_US}",                       # late: dropped
     ]
-    for i, pred in enumerate(preds):
-        tmp = os.path.join(_STAGE_ROOT, f"{tag}_half{i}")
-        ev.where(F.expr(pred)).coalesce(1).write.mode("overwrite").parquet(tmp)
-        src = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
-        dst = os.path.join(out_dir, f"batch-{i:03d}.parquet")
-        shutil.copy(os.path.join(tmp, src), dst)
-        os.utime(dst, (1_000_000 + i * 1000, 1_000_000 + i * 1000))
-    _STAGED[tag] = out_dir
-    return out_dir
+    return _stage_batch_files(sf_dir, "stream_stage_late", ev, preds)
 
 
 @register(
@@ -1064,8 +1027,7 @@ def stream_late_data_dropped(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(events_dir)
     )
     agg = tumbling_event_counts_simple(stream, "1 hour", watermark="1 hour")
-    tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
-    sink = _run_to_memory(agg, f"late_drop_{tag}", "append")
+    sink = _run_to_memory(agg, sf_dir, "late_drop", "append")
     from pyspark.sql import functions as F
 
     return sink.select(
@@ -1080,18 +1042,16 @@ def _staged_documents_timed(spark: SparkSession, sf_dir: str) -> str:
     event time (epoch + doc_id seconds): a single small file reads as one
     sequential input partition, so 'first arrival' inside the batch is the
     lowest doc_id -- the determinism the dedup gate's oracle pins."""
-    tag = _stage_tag(sf_dir) + "_docs_ts"
-    if tag in _STAGED:
-        return _STAGED[tag]
-    out_dir = os.path.join(_STAGE_ROOT, tag)
-    docs = load_table(spark, sf_dir, "documents").selectExpr(
-        "doc_id",
-        "timestamp_micros(1704067200000000 + doc_id * 1000000) AS ts",
-        "text",
-    )
-    docs.orderBy("doc_id").coalesce(1).write.mode("overwrite").parquet(out_dir)
-    _STAGED[tag] = out_dir
-    return out_dir
+
+    def write(out_dir: str) -> None:
+        docs = load_table(spark, sf_dir, "documents").selectExpr(
+            "doc_id",
+            "timestamp_micros(1704067200000000 + doc_id * 1000000) AS ts",
+            "text",
+        )
+        docs.orderBy("doc_id").coalesce(1).write.mode("overwrite").parquet(out_dir)
+
+    return write_once(sf_dir, "stream_stage_docs_ts", write)
 
 
 def _lsh_gate_oracle() -> str:
@@ -1172,8 +1132,7 @@ def stream_lsh_dedup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .dropDuplicatesWithinWatermark(["band"])
         .select("band", "doc_id")
     )
-    tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
-    return _run_to_memory(stream, f"slshgate_{tag}", "append")
+    return _run_to_memory(stream, sf_dir, "slshgate", "append")
 
 
 @register(
@@ -1199,8 +1158,6 @@ GROUP BY 1
     tags=("streaming", "sink", "parquet"),
 )
 def stream_parquet_file_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile as _tf
-
     from pyspark.sql import functions as F
 
     from ..streaming.events_stream import EVENTS_SCHEMA
@@ -1212,8 +1169,8 @@ def stream_parquet_file_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("event_type").isin("purchase", "signup"))
         .select("event_id", "event_type", "value")
     )
-    out_dir = _tf.mkdtemp(prefix="jfipb_psink_out_")
-    ckpt = _tf.mkdtemp(prefix="jfipb_psink_ckpt_")
+    unique, ckpt = _new_run(sf_dir, "psink")
+    out_dir = scratch_dir(sf_dir, f"out_{unique}")
     with scoped_conf(spark, _STREAM_CONFS):
         q = (
             stream.writeStream.format("parquet")
@@ -1291,8 +1248,7 @@ def stream_topk_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("window.start").alias("win_start"), "user_id", "n_events"
         )
     )
-    tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
-    sink = _run_to_memory(agg, f"heavy_hitters_{tag}", "append")
+    sink = _run_to_memory(agg, sf_dir, "heavy_hitters", "append")
     w = Window.partitionBy("win_start").orderBy(
         F.desc("n_events"), F.asc("user_id")
     )
@@ -1355,10 +1311,7 @@ def stream_pyds_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     with open(_REPLAY_LOGS, "rb") as fh:
         n_expected = len([ln for ln in fh.read().split(b"\n") if ln])
 
-    global _RUN_SEQ
-    _RUN_SEQ += 1
-    name = f"pyds_replay_{_RUN_SEQ}"
-    ckpt = tempfile.mkdtemp(prefix=f"jfipb_ckpt_{name}_")
+    name, ckpt = _new_run(sf_dir, "pyds_replay")
     stream = read_ndjson_replay_stream(
         spark, _REPLAY_LOGS, chunk=_REPLAY_CHUNK
     )
@@ -1421,14 +1374,9 @@ def stream_pyds_ndjson_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     register_ndjson_sink(spark)
     events_dir = _staged_events(spark, sf_dir)
-    tag = _stage_tag(sf_dir)
-    out = os.path.join(
-        tempfile.gettempdir(), "jfipb_pyds_sink", tag
-    )
+    out = scratch_dir(sf_dir, "pyds_sink")
     shutil.rmtree(out, ignore_errors=True)
-    global _RUN_SEQ
-    _RUN_SEQ += 1
-    ckpt = tempfile.mkdtemp(prefix=f"jfipb_ckpt_pyds_sink_{_RUN_SEQ}_")
+    _, ckpt = _new_run(sf_dir, "pyds_sink")
     stream = read_events_stream(spark, events_dir).select(
         F.col("props").alias("doc")
     )

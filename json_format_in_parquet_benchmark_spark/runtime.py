@@ -1,5 +1,5 @@
-"""Query runtime: the one home of tracked persists, query scopes and
-session SQL confs.
+"""Query runtime: the one home of tracked persists, query scopes, session
+SQL confs and scratch storage.
 
 A persist inside a returned-lazy plan cannot be unpersisted before the
 caller materializes the result, so operators register each persisted
@@ -27,12 +27,27 @@ external caller's session (the driver builds its own) may hold anything.
 :func:`scoped_conf` is the one save/set/restore of a conf that an eager
 action needs only while it runs.
 
+Scratch storage (staged inputs, sinks, checkpoints, memoized layouts, the
+shipped package zip) lives under ONE root per process: a
+``tempfile.mkdtemp(prefix="jfipb_")`` under ``TMPDIR``, made on first use
+and removed at interpreter exit.  :func:`scratch_dir` places a query's
+files at ``<root>/<sf_tag(sf_dir)>/<name>``; :func:`sf_tag` keys them on
+the RESOLVED input root, so two roots sharing a basename never alias one
+layout, and two processes sharing a ``TMPDIR`` never clobber each other.
+:func:`write_once` memoizes a write per process.
+
 This module imports nothing from the package at load time, so any module
 may import it at top level.
 """
 
 from __future__ import annotations
 
+import atexit
+import hashlib
+import os
+import re
+import shutil
+import tempfile
 from collections.abc import Callable, Iterator
 from contextlib import contextmanager
 
@@ -154,3 +169,48 @@ def query_scope(spark: SparkSession, name: str) -> Iterator[None]:
         yield
     finally:
         _owner = prev
+
+
+_ROOT: str | None = None
+# Paths :func:`write_once` has written in this process.
+_WRITTEN: set[str] = set()
+
+
+def _remove_root(root: str) -> None:
+    # A caller that pointed TMPDIR into a work dir of its own may remove
+    # that dir, root included, before the interpreter exits.
+    if os.path.isdir(root):
+        shutil.rmtree(root)
+
+
+def scratch_root() -> str:
+    """This process's scratch root, made on first use and removed at exit."""
+    global _ROOT
+    if _ROOT is None:
+        _ROOT = tempfile.mkdtemp(prefix="jfipb_")
+        atexit.register(_remove_root, _ROOT)
+    return _ROOT
+
+
+def sf_tag(sf_dir: str) -> str:
+    """Identifier-safe tag of an input root: its sanitized basename (for
+    readability) plus a hash of its resolved path (for uniqueness).  Also
+    valid as a catalog table or streaming query name suffix."""
+    resolved = os.path.realpath(sf_dir)
+    base = re.sub(r"[^A-Za-z0-9_]", "_", os.path.basename(resolved)) or "sf"
+    return f"{base}_{hashlib.md5(resolved.encode()).hexdigest()[:10]}"
+
+
+def scratch_dir(sf_dir: str, name: str) -> str:
+    """Path of scratch entry ``name`` for input root ``sf_dir`` (not created)."""
+    return os.path.join(scratch_root(), sf_tag(sf_dir), name)
+
+
+def write_once(sf_dir: str, name: str, write: Callable[[str], None]) -> str:
+    """``scratch_dir(sf_dir, name)``, calling ``write(path)`` only on the
+    path's first use in this process."""
+    path = scratch_dir(sf_dir, name)
+    if path not in _WRITTEN:
+        write(path)
+        _WRITTEN.add(path)
+    return path

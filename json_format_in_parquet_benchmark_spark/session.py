@@ -18,11 +18,10 @@ from __future__ import annotations
 
 import os
 import shutil
-import tempfile
 
 from pyspark.sql import SparkSession
 
-from .runtime import SESSION_PINS
+from .runtime import SESSION_PINS, scratch_root
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
@@ -39,15 +38,15 @@ def ship_package(spark: SparkSession) -> None:
     deployment path and is exactly what a 1000-executor cluster needs too.
     Idempotent per SparkContext, keyed on its application id (an ``id()``
     can be reused by a context created after an earlier one was freed).
+    The zip goes under this process's scratch root, so processes sharing a
+    ``TMPDIR`` never overwrite each other's shipped file.
     """
     sc = spark.sparkContext
     key = sc.applicationId
     if key in _SHIPPED_APPS:
         return
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    base = os.path.join(
-        tempfile.gettempdir(), "jfipb_pyfiles", "json_format_in_parquet_benchmark_spark"
-    )
+    base = os.path.join(scratch_root(), "pyfiles", os.path.basename(pkg_dir))
     zip_path = shutil.make_archive(base, "zip", os.path.dirname(pkg_dir),
                                    os.path.basename(pkg_dir))
     sc.addPyFile(zip_path)

@@ -399,18 +399,13 @@ def test_pyds_sink_orphans_invisible(spark, sf_dir):
     import os
 
     from json_format_in_parquet_benchmark_spark.plans import REGISTRY
-    from json_format_in_parquet_benchmark_spark.plans.queries_streaming import (
-        _stage_tag,
-    )
+    from json_format_in_parquet_benchmark_spark.runtime import scratch_dir
     from json_format_in_parquet_benchmark_spark.sources.py_datasource import (
         committed_files,
     )
-    import tempfile
 
     REGISTRY["stream_pyds_ndjson_sink"].fn(spark, sf_dir).collect()
-    out = os.path.join(
-        tempfile.gettempdir(), "jfipb_pyds_sink", _stage_tag(sf_dir)
-    )
+    out = scratch_dir(sf_dir, "pyds_sink")
     before = committed_files(out)
     assert before
     orphan = os.path.join(out, "data", "part-9-deadbeef.ndjson")

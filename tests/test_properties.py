@@ -1322,7 +1322,6 @@ def test_ivf_append_never_rewrites_base_files(spark, sf_dir, tmp_path_factory):
         queries_similarity as qs,
     )
 
-    qs._IVF_APPEND_SINK.clear()
     out = os.path.join(str(tmp_path_factory.mktemp("ivfapp")), "idx")
 
     # replicate ivf_append_path's two writes with a hook between them
@@ -1414,20 +1413,18 @@ def test_parquet_bloom_prunes_absent_key(spark, sf_dir):
     pruning a point lookup on a missing key buys); a present key is
     might-contained by at least one (no false negatives)."""
     import hashlib
-    import os
 
     from json_format_in_parquet_benchmark_spark.plans import REGISTRY
     from json_format_in_parquet_benchmark_spark.plans.queries_sinks import (
-        _SINK_ROOT,
         _read_bloom_stats,
     )
+    from json_format_in_parquet_benchmark_spark.runtime import scratch_dir
     from json_format_in_parquet_benchmark_spark.tables import load_table
 
     # Build (and value-check) both layouts via the registered query.
     REGISTRY["sink_parquet_bloom_lookup"].fn(spark, sf_dir).collect()
-    tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    bloom_out = os.path.join(_SINK_ROOT, f"events_bloomkey_bloom_{tag}")
-    plain_out = os.path.join(_SINK_ROOT, f"events_bloomkey_plain_{tag}")
+    bloom_out = scratch_dir(sf_dir, "events_bloomkey_bloom")
+    plain_out = scratch_dir(sf_dir, "events_bloomkey_plain")
 
     uid = load_table(spark, sf_dir, "events").select("user_id").first()[0]
     present = hashlib.md5(str(uid).encode()).hexdigest()

@@ -1,12 +1,14 @@
 """The query scope (``runtime``): cache ownership across registered query
 builds, package shipping keyed per application, session SQL confs (scoped
-and pinned), and Python kernels that import in a fresh vanilla session
-whatever the run order and cwd."""
+and pinned), scratch storage keyed per input root and removed at exit, and
+Python kernels that import in a fresh vanilla session whatever the run
+order, cwd and core count."""
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 import subprocess
 import sys
 import uuid
@@ -14,14 +16,19 @@ import uuid
 import pytest
 from pyspark import StorageLevel
 
+from conftest import assert_oracle_match
 from json_format_in_parquet_benchmark_spark import runtime, session
 from json_format_in_parquet_benchmark_spark.plans.registry import REGISTRY, register
 from json_format_in_parquet_benchmark_spark.runtime import (
     query_scope,
     release_caches,
     scoped_conf,
+    scratch_dir,
+    sf_tag,
     track_persist,
+    write_once,
 )
+from json_format_in_parquet_benchmark_spark.tables import TABLES, table_path
 
 REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -170,6 +177,42 @@ def test_query_scope_pins_session_confs_on_hostile_session(spark, sf_dir):
             assert dict(load_table(spark, sf_dir, "events").dtypes)["ts"] == "timestamp"
 
 
+def test_scratch_dir_keys_on_resolved_root_and_write_once_writes_once(tmp_path):
+    a, b = tmp_path / "a" / "sf0.01", tmp_path / "b" / "sf0.01"
+    assert sf_tag(str(a)) != sf_tag(str(b))
+    assert sf_tag(str(a)) == sf_tag(f"{a}/")
+    assert sf_tag(str(a)).isidentifier()
+    assert scratch_dir(str(a), "x").startswith(runtime.scratch_root() + os.sep)
+    calls: list[str] = []
+    name = f"probe_{uuid.uuid4().hex}"
+    first = write_once(str(a), name, calls.append)
+    assert write_once(str(a), name, calls.append) == first
+    assert calls == [first]
+
+
+def test_same_basename_roots_do_not_alias_memoized_sinks(spark, sf_dir, tmp_path):
+    """Two input roots that share a basename get their own bucketed tables:
+    each run of the memoized sink must match its OWN root's oracle."""
+    import duckdb
+
+    testdata = os.path.dirname(os.path.realpath(sf_dir))
+    big, small = os.path.join(testdata, "sf0.01"), os.path.join(testdata, "sf0.001")
+    if not (os.path.isdir(big) and os.path.isdir(small)):
+        pytest.skip("needs the sf0.01 and sf0.001 testdata roots side by side")
+    alias = tmp_path / "x" / "sf0.01"
+    shutil.copytree(small, alias)
+    query = REGISTRY["sink_bucketed_join"]
+    for root in (big, str(alias)):
+        con = duckdb.connect()
+        for t in TABLES:
+            con.sql(
+                f"CREATE VIEW {t} AS SELECT * FROM "
+                f"read_parquet('{table_path(root, t)}')"
+            )
+        assert_oracle_match(query.fn(spark, root), con.sql(query.oracle), root)
+        con.close()
+
+
 _RUN_ORDER_SCRIPT = r"""
 import json, sys
 repo, sf_dir = sys.argv[1], sys.argv[2]
@@ -200,6 +243,7 @@ steps = [
     ("multimodal_decode_features", REGISTRY["multimodal_decode_features"].fn),
     ("semantic_dup_flags_fast", semantic_fast),
     ("similarity_pq_topk", REGISTRY["similarity_pq_topk"].fn),
+    ("scan_ndjson_gzip", REGISTRY["scan_ndjson_gzip"].fn),
 ]
 out = {}
 for name, fn in steps:
@@ -213,11 +257,16 @@ print(json.dumps(out))
 
 
 def test_python_kernels_run_in_fresh_vanilla_session_outside_repo(tmp_path, sf_dir):
-    """A fresh vanilla session (the external driver's) whose cwd is not
-    the repo: executors can import the package only if it was shipped, and
-    ``pipeline_multimodal_curation`` runs first, before any query that
-    used to ship it."""
+    """A fresh vanilla ``local[2]`` session (the external driver's) whose
+    cwd is not the repo: executors can import the package only if it was
+    shipped, ``pipeline_multimodal_curation`` runs first, before any query
+    that used to ship it, and ``scan_ndjson_gzip``'s no-split check holds
+    when Spark packs several files into one partition.  The scratch root
+    (shipped zip included) is gone once the process exits."""
+    tmpdir = tmp_path / "tmp"
+    tmpdir.mkdir()
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["TMPDIR"] = str(tmpdir)
     proc = subprocess.run(
         [sys.executable, "-c", _RUN_ORDER_SCRIPT, REPO_ROOT, sf_dir],
         cwd=tmp_path, env=env, capture_output=True, text=True, timeout=900,
@@ -227,3 +276,5 @@ def test_python_kernels_run_in_fresh_vanilla_session_outside_repo(tmp_path, sf_d
     failed = {k: v for k, v in results.items() if not isinstance(v, int)}
     assert not failed, failed
     assert all(n > 0 for n in results.values()), results
+    left = sorted(p.name for p in tmpdir.iterdir() if p.name.startswith("jfipb"))
+    assert not left, f"scratch left behind after exit: {left}"

@@ -194,6 +194,7 @@ def test_stream_stream_interval_join_matches_batch(spark, sf_dir):
             stream.where(F.col("event_type") == "click").withWatermark("ts", "2 hours"),
             stream.where(F.col("event_type") == "purchase").withWatermark("ts", "2 hours"),
         ),
+        sf_dir,
         "ssjoin",
         "append",
     )
@@ -237,7 +238,7 @@ def test_streaming_dedup_within_watermark(spark, sf_dir):
         .dropDuplicatesWithinWatermark(["event_id"])
     )
     sink = _run_to_memory(
-        stream.select("event_id"), "stream_dedup", "append"
+        stream.select("event_id"), sf_dir, "stream_dedup", "append"
     )
     n_unique = events.count()
     got = sink.count()
@@ -600,13 +601,10 @@ def test_upsert_fresh_run_ignores_previous_runs_tmp(spark, monkeypatch):
     import shutil
 
     from json_format_in_parquet_benchmark_spark.plans import REGISTRY
-    from json_format_in_parquet_benchmark_spark.plans.queries_streaming import (
-        _STAGE_ROOT,
-    )
+    from json_format_in_parquet_benchmark_spark.runtime import scratch_dir
 
     sf_dir = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
-    tag = (os.path.basename(sf_dir.rstrip("/")) or "sf").replace(".", "_")
-    state_dir = os.path.join(_STAGE_ROOT, f"upsert_state_{tag}")
+    state_dir = scratch_dir(sf_dir, "upsert_state")
     tmp = state_dir + ".tmp"
     shutil.rmtree(tmp, ignore_errors=True)
     os.makedirs(tmp)
@@ -891,7 +889,7 @@ def test_stream_louter_eviction_boundary(spark):
             & (F.col("p_ts") <= F.col("c_ts") + F.expr("INTERVAL 1 HOUR")),
             "leftOuter",
         ).select("c_user", "click_id", "purchase_id")
-        out = _run_to_memory(joined, f"louter_bnd_{tag}", "append")
+        out = _run_to_memory(joined, d, f"louter_bnd_{tag}", "append")
         return sorted(
             r.click_id for r in out.collect() if r.purchase_id is None
         )
