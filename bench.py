@@ -29,6 +29,11 @@ from json_format_in_parquet_benchmark_spark.formats.base import (
     REF_ZSTD_LEVEL,
 )
 from json_format_in_parquet_benchmark_spark.plans import REGISTRY
+from json_format_in_parquet_benchmark_spark.runtime import (
+    plan_fingerprint,
+    release_caches,
+    scratch_dir,
+)
 from json_format_in_parquet_benchmark_spark.session import get_spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -52,35 +57,15 @@ CORPUS_FORMATS = ("plain_json", "jsonb", "jsonc")
 CAL_BASELINE_S = 0.0916
 
 
-def _plan_fingerprint(df) -> str:
-    """Stable hash of the executed physical plan: expression ids, plan ids,
-    codegen ids and tmp paths are volatile across sessions, so strip them
-    before hashing -- what's left is the plan SHAPE (operators, join
-    strategies, pushed filters), which is what round-over-round comparisons
-    need to detect regressions mechanically."""
-    import hashlib
-    import re
-
-    # The FORMATTED explain string, not executedPlan().toString(): toString
-    # truncates long expression lists at a raw-character width, so the cut
-    # position shifts with expression-id lengths and two identical plans
-    # can hash differently.  Formatted mode prints every expression in full.
-    s = df.sparkSession._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
-    s = re.sub(r"#\d+[A-Za-z]*", "#", s)
-    s = re.sub(r"plan_id=\d+", "plan_id=", s)
-    s = re.sub(r"\[codegen id : \d+\]", "", s)
-    s = re.sub(r"/tmp/\S+", "<tmp>", s)
-    s = re.sub(r"0x[0-9a-f]+", "<addr>", s)
-    # AQE picks BuildLeft/BuildRight per run when both join sides fit the
-    # broadcast threshold (observed flipping between identical runs in one
-    # session) and flags isFinalPlan per materialization state -- both are
-    # immaterial to the plan SHAPE and would raise false plan-change alarms.
-    s = re.sub(r"Build(Left|Right)", "Build", s)
-    s = re.sub(r"isFinalPlan=\w+", "isFinalPlan=", s)
-    s = re.sub(r"Statistics\([^)]*\)", "Statistics()", s)
-    return hashlib.md5(s.encode()).hexdigest()[:16]
+def _best_of(run, n: int) -> float:
+    """Warm ``run`` once, then return the fastest of ``n`` timed calls (s)."""
+    run()
+    best = float("inf")
+    for _ in range(n):
+        t0 = time.perf_counter()
+        run()
+        best = min(best, time.perf_counter() - t0)
+    return round(best, 4)
 
 
 _EXEC_METRIC_KEYS = {
@@ -144,8 +129,6 @@ def _run_headliners(spark, queries: dict, sf_dir: str) -> dict:
     query; a fingerprint or metric read that raises lands in
     ``plan_hash_failures`` / ``exec_metric_failures`` instead of a
     placeholder value.  Returns one dict per ``bench_full.json`` key."""
-    from json_format_in_parquet_benchmark_spark.runtime import release_caches
-
     out: dict[str, dict] = {
         k: {}
         for k in (
@@ -176,9 +159,8 @@ def _run_headliners(spark, queries: dict, sf_dir: str) -> dict:
         out["queries"][name] = min(per_trial)
         out["queries_trials"][name] = per_trial
         out["rows"][name] = len(rows)
-        # post-collect, so AQE's final (re-optimized) plan is hashed
         for key, failures, read in (
-            ("plan_hash", "plan_hash_failures", _plan_fingerprint),
+            ("plan_hash", "plan_hash_failures", plan_fingerprint),
             ("exec_metrics", "exec_metric_failures", _exec_metrics),
         ):
             try:
@@ -257,13 +239,7 @@ def main() -> None:
             "sum((id * 2654435761) % 1000003) as s"
         ).collect()
 
-    _calibration_run()  # warm
-    calibration_s = float("inf")
-    for _ in range(5):
-        t0 = time.perf_counter()
-        _calibration_run()
-        calibration_s = min(calibration_s, time.perf_counter() - t0)
-    calibration_s = round(calibration_s, 4)
+    calibration_s = _best_of(_calibration_run, 5)
 
     t_phase = _phase("calibration", t_phase)
 
@@ -304,7 +280,7 @@ def main() -> None:
             (ZSTD_LEVEL, _TUNED_PAGE, storage_zstd9),
             (REF_ZSTD_LEVEL, 1 << 20, storage_default_pages),
         ):
-            out_dir = f"/tmp/jfipb_bench_storage_l{level}_p{page}"
+            out_dir = scratch_dir(REFERENCE_JSON_DIR, f"storage_l{level}_p{page}")
             for m in measure_all_formats(
                 spark, raw, out_dir, zstd_level=level, page_size=page
             ):
@@ -335,7 +311,7 @@ def main() -> None:
 
         for corpus in CORPUS_LOOP:
             raw = read_ndjson_raw(spark, os.path.join(REFERENCE_JSON_DIR, corpus))
-            cdir = os.path.join("/tmp/jfipb_bench_corpora", corpus.split(".")[0])
+            cdir = scratch_dir(REFERENCE_JSON_DIR, f"corpus_{corpus.split('.')[0]}")
             per_fmt: dict[str, dict] = {}
             for fmt in CORPUS_FORMATS:
                 m = measure_format(spark, raw, fmt, cdir, zstd_level=REF_ZSTD_LEVEL)
@@ -382,13 +358,7 @@ def main() -> None:
         }
         variant.count(), shredded.count()  # materialize pre-parsed arms
         for arm, run in arms.items():
-            run()  # warm
-            best = float("inf")
-            for _ in range(2):
-                t0 = time.perf_counter()
-                run()
-                best = min(best, time.perf_counter() - t0)
-            path_query[arm] = round(best, 4)
+            path_query[arm] = _best_of(run, 2)
         variant.unpersist(), shredded.unpersist()
     except Exception as exc:
         path_query = {"error": str(exc)[:200]}
@@ -434,23 +404,14 @@ def main() -> None:
                     F.variant_get("v", p, "string").alias("x")
                 ).agg(F.count("x")).collect(),
             }
-            per_arm: dict[str, float] = {}
-            for arm, run in arms.items():
-                run()  # warm
-                best = float("inf")
-                for _ in range(2):
-                    t0 = time.perf_counter()
-                    run()
-                    best = min(best, time.perf_counter() - t0)
-                per_arm[arm] = round(best, 4)
+            path_query_golden[name] = {
+                arm: _best_of(run, 2) for arm, run in arms.items()
+            }
             doc.unpersist(), variant.unpersist()
-            path_query_golden[name] = per_arm
     except Exception as exc:
         path_query_golden = {"error": str(exc)[:200]}
 
     t_phase = _phase("path_query_golden", t_phase)
-
-    from json_format_in_parquet_benchmark_spark.runtime import release_caches
 
     release_caches()  # drop persisted dedup intermediates before exit
 

@@ -11,8 +11,9 @@ lossless, not just the in-memory transform.
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, DataFrameReader, DataFrameWriter, SparkSession
 from pyspark.sql import functions as F
 
 from ..formats import get_format
@@ -219,8 +220,6 @@ GROUP BY 1
     tags=("source", "schema-evolution"),
 )
 def scan_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..tables import load_table
-
     events = load_table(spark, sf_dir, "events")
     root = scratch_dir(sf_dir, "schema_evo")
     # Snapshot v1: written before the `value` column existed.
@@ -251,6 +250,35 @@ SELECT event_type,
 FROM events
 GROUP BY event_type
 """
+_ALT_SOURCE_SCHEMA = "event_id long, us long, event_type string, value double"
+
+
+def _alt_source_roundtrip(
+    spark: SparkSession,
+    sf_dir: str,
+    name: str,
+    write: Callable[[DataFrameWriter, str], None],
+    read: Callable[[DataFrameReader, str], DataFrame],
+) -> DataFrame:
+    """The events slice (timestamps as integer micros) staged at
+    ``scratch_dir(sf_dir, name)`` by ``write``, read back by ``read`` and
+    aggregated as :data:`_ALT_SOURCE_ORACLE` does."""
+    out = scratch_dir(sf_dir, name)
+    events = load_table(spark, sf_dir, "events").select(
+        "event_id",
+        F.expr("unix_micros(ts)").alias("us"),
+        "event_type",
+        "value",
+    )
+    write(events.write.mode("overwrite"), out)
+    back = read(spark.read, out)
+    return back.groupBy("event_type").agg(
+        F.count(F.lit(1)).alias("n_events"),
+        F.expr(
+            "cast(sum(cast(value as decimal(18,2))) as double)"
+        ).alias("total_value"),
+        F.sum(F.expr("us % 1000000")).cast("bigint").alias("us_checksum"),
+    )
 
 
 @register(
@@ -266,27 +294,10 @@ GROUP BY event_type
     tags=("source", "csv", "roundtrip"),
 )
 def scan_csv_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..tables import load_table
-
-    out = scratch_dir(sf_dir, "events_csv")
-    events = load_table(spark, sf_dir, "events").select(
-        "event_id",
-        F.expr("unix_micros(ts)").alias("us"),
-        "event_type",
-        "value",
-    )
-    events.write.mode("overwrite").option("header", True).csv(out)
-    back = (
-        spark.read.schema("event_id long, us long, event_type string, value double")
-        .option("header", True)
-        .csv(out)
-    )
-    return back.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.expr(
-            "cast(sum(cast(value as decimal(18,2))) as double)"
-        ).alias("total_value"),
-        F.sum(F.expr("us % 1000000")).cast("bigint").alias("us_checksum"),
+    return _alt_source_roundtrip(
+        spark, sf_dir, "events_csv",
+        lambda w, path: w.option("header", True).csv(path),
+        lambda r, path: r.schema(_ALT_SOURCE_SCHEMA).option("header", True).csv(path),
     )
 
 
@@ -301,23 +312,10 @@ def scan_csv_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("source", "orc", "roundtrip"),
 )
 def scan_orc_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..tables import load_table
-
-    out = scratch_dir(sf_dir, "events_orc")
-    events = load_table(spark, sf_dir, "events").select(
-        "event_id",
-        F.expr("unix_micros(ts)").alias("us"),
-        "event_type",
-        "value",
-    )
-    events.write.mode("overwrite").orc(out)
-    back = spark.read.orc(out)
-    return back.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.expr(
-            "cast(sum(cast(value as decimal(18,2))) as double)"
-        ).alias("total_value"),
-        F.sum(F.expr("us % 1000000")).cast("bigint").alias("us_checksum"),
+    return _alt_source_roundtrip(
+        spark, sf_dir, "events_orc",
+        lambda w, path: w.orc(path),
+        lambda r, path: r.orc(path),
     )
 
 
@@ -334,32 +332,12 @@ def scan_orc_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("source", "xml", "roundtrip"),
 )
 def scan_xml_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..tables import load_table
-
-    out = scratch_dir(sf_dir, "events_xml")
-    events = load_table(spark, sf_dir, "events").select(
-        "event_id",
-        F.expr("unix_micros(ts)").alias("us"),
-        "event_type",
-        "value",
-    )
-    events.write.mode("overwrite").option("rootTag", "events").option(
-        "rowTag", "event"
-    ).format("xml").save(out)
-    back = (
-        spark.read.schema(
-            "event_id long, us long, event_type string, value double"
-        )
-        .option("rowTag", "event")
-        .format("xml")
-        .load(out)
-    )
-    return back.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.expr(
-            "cast(sum(cast(value as decimal(18,2))) as double)"
-        ).alias("total_value"),
-        F.sum(F.expr("us % 1000000")).cast("bigint").alias("us_checksum"),
+    return _alt_source_roundtrip(
+        spark, sf_dir, "events_xml",
+        lambda w, path: w.option("rootTag", "events")
+        .option("rowTag", "event").format("xml").save(path),
+        lambda r, path: r.schema(_ALT_SOURCE_SCHEMA)
+        .option("rowTag", "event").format("xml").load(path),
     )
 
 
@@ -399,8 +377,6 @@ FROM staged
     tags=("source", "ndjson", "corrupt", "robustness"),
 )
 def scan_ndjson_corrupt(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..tables import load_table
-
     out = scratch_dir(sf_dir, "events_ndjson_dirty")
     events = load_table(spark, sf_dir, "events")
     staged = events.select(
@@ -697,8 +673,6 @@ GROUP BY event_type
     tags=("source", "partition-evolution", "pruning"),
 )
 def scan_partition_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..tables import load_table
-
     events = load_table(spark, sf_dir, "events").select(
         "event_id",
         "event_type",

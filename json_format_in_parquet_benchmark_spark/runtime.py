@@ -1,5 +1,5 @@
 """Query runtime: the one home of tracked persists, query scopes, session
-SQL confs and scratch storage.
+SQL confs, scratch storage and plan capture.
 
 A persist inside a returned-lazy plan cannot be unpersisted before the
 caller materializes the result, so operators register each persisted
@@ -35,6 +35,12 @@ files at ``<root>/<sf_tag(sf_dir)>/<name>``; :func:`sf_tag` keys them on
 the RESOLVED input root, so two roots sharing a basename never alias one
 layout, and two processes sharing a ``TMPDIR`` never clobber each other.
 :func:`write_once` memoizes a write per process.
+
+:func:`plan_text` is the one rendering of a query's plan for dumping and
+:func:`plan_fingerprint` the one hash of it: the optimized LOGICAL plan
+with everything that differs between two runs of the same code masked,
+the scratch root included.  AQE's runtime choices (build sides, coalesced
+partitions) are not part of it, so two same-code runs agree.
 
 This module imports nothing from the package at load time, so any module
 may import it at top level.
@@ -214,3 +220,54 @@ def write_once(sf_dir: str, name: str, write: Callable[[str], None]) -> str:
         write(path)
         _WRITTEN.add(path)
     return path
+
+
+# Tokens Spark numbers from session- or process-wide counters: expression
+# ids, plan ids, AQE query stages, codegen stages, hoisted common
+# subexpressions and lambda variables (``lambda x_3#`` -> ``lambda x#``;
+# runs after the id mask, which keeps the ``#``).
+_RUN_VARYING = (
+    (r"#\d+L?", "#"),
+    (r"plan_id=\d+", "plan_id="),
+    (r"QueryStage \d+", "QueryStage "),
+    (r"\*\(\d+\)", "*()"),
+    (r"_common_expr_\d+", "_common_expr_"),
+    (r"(lambda \w+)_\d+#", r"\1#"),
+)
+
+
+def _without_aqe_reoptimized(s: str) -> str:
+    """``s`` without AQE's re-optimized blocks.  A cached relation prints
+    its physical plan, and AQE's "== Final Plan ==" there varies with
+    runtime statistics (a near-tie broadcast build side flips between
+    runs).  Each such block ends at its own "== Initial Plan ==" header;
+    the header indents do not nest, so nested pairs are counted."""
+    kept, open_blocks = [], 0
+    for line in s.splitlines(keepends=True):
+        head = line.strip()
+        if head in ("+- == Final Plan ==", "+- == Current Plan =="):
+            open_blocks += 1
+        elif head == "+- == Initial Plan ==" and open_blocks:
+            open_blocks -= 1
+            continue
+        if not open_blocks:
+            kept.append(line)
+    return "".join(kept)
+
+
+def plan_text(df: DataFrame) -> str:
+    """``df``'s optimized logical plan with the run-varying tokens, AQE's
+    re-optimized blocks and this process's scratch root masked: equal text
+    means the same plan."""
+    s = df._jdf.queryExecution().optimizedPlan().toString()
+    if _ROOT is not None:
+        s = s.replace(_ROOT, "<scratch>")
+    s = _without_aqe_reoptimized(s)
+    for pattern, repl in _RUN_VARYING:
+        s = re.sub(pattern, repl, s)
+    return s
+
+
+def plan_fingerprint(df: DataFrame) -> str:
+    """Short stable hash of :func:`plan_text`."""
+    return hashlib.md5(plan_text(df).encode()).hexdigest()[:16]

@@ -1,13 +1,18 @@
-"""Print the formatted physical plan of registry queries, with a stable
-fingerprint per plan.
+"""Print each registry query's plan text and fingerprint, plus the plan of
+every frame the query writes in batch.
 
-Purpose: make the plan SHAPE reviewable and diffable round-over-round --
-pushed filters, join strategies, codegen spans.  Each query is EXECUTED
-(collected) before hashing so the fingerprint covers AQE's final
-re-optimized plan -- the same plan state bench.py hashes post-collect --
-making `plan_hash` here directly comparable to the bench JSON: a timing
-drift can be mechanically attributed to either a plan change (fingerprint
-differs) or machine noise (fingerprint equal).
+Both come from ``runtime.plan_text`` / ``runtime.plan_fingerprint``, the
+same rendering bench.py records as ``plan_hash``, so a timing drift can be
+attributed to either a plan change (fingerprint differs) or machine noise
+(fingerprint equal).  The text masks every run-varying token, so two dumps
+of the same code are byte-identical and ``diff`` of a dump before and after
+a refactor is its plan-identity check.
+
+Each query is built and collected twice and the second build is dumped: a
+query whose own caches are materialized plans the same way bench.py's
+repeated trials do.  The write plans are those of every frame either build
+wrote through ``DataFrame.write``, in first-write order; the returned frame
+of a sink query is its read-back side and never shows them.
 
 Usage:  python scripts/dump_plans.py [sf_dir] [name ...]
 
@@ -23,8 +28,14 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from pyspark.sql.classic.dataframe import DataFrame
+
 from json_format_in_parquet_benchmark_spark.plans import REGISTRY
-from json_format_in_parquet_benchmark_spark.runtime import release_caches
+from json_format_in_parquet_benchmark_spark.runtime import (
+    plan_fingerprint,
+    plan_text,
+    release_caches,
+)
 from json_format_in_parquet_benchmark_spark.session import get_spark
 
 
@@ -37,31 +48,36 @@ def main() -> int:
     if unknown:
         print(f"not registered: {' '.join(unknown)}", file=sys.stderr)
         return 1
-    from bench import _plan_fingerprint  # single source of truth for hashing
+    # plan_text of each frame written since the current query started
+    written: list[str] = []
+    real_write = DataFrame.write
 
+    def recording_write(df: DataFrame):
+        written.append(plan_text(df))
+        return real_write.fget(df)
+
+    DataFrame.write = property(recording_write)
     spark = get_spark(app_name="jfipb-plans")
     failed: list[str] = []
     for name in names:
         q = REGISTRY[name]
+        written.clear()
         try:
-            # Run TWICE and fingerprint the second (warm) run: bench.py
-            # hashes after min-of-3 iterations, whose plan sees the
-            # query's own caches already MATERIALIZED -- a cold first
-            # run plans TableCacheQueryStage/BroadcastQueryStage wrappers
-            # differently and would spuriously disagree.  Hashing the
-            # post-collect state also captures AQE's final plan.
             q.fn(spark, sf_dir).collect()
             df = q.fn(spark, sf_dir)
             df.collect()
-            plan = spark._jvm.PythonSQLUtils.explainString(
-                df._jdf.queryExecution(), "formatted"
-            )
-            fp = _plan_fingerprint(df)
+            section = [
+                "=" * 72, f"{name}  plan_hash={plan_fingerprint(df)}", "=" * 72,
+                plan_text(df),
+            ]
         except Exception as exc:
             print(f"{name}: {type(exc).__name__}: {exc}", file=sys.stderr)
             failed.append(name)
         else:
-            print(f"{'=' * 72}\n{name}  plan_hash={fp}\n{'=' * 72}\n{plan}", flush=True)
+            writes = list(dict.fromkeys(written))
+            for i, text in enumerate(writes, 1):
+                section += [f"{'-' * 8} write plan {i} of {len(writes)}", text]
+            print("\n".join(section), flush=True)
         release_caches()
     spark.stop()
     if failed:

@@ -6,10 +6,10 @@ Compares per-query plan fingerprints between two bench detail files
 ``queries`` timing dict) and prints a markdown section suitable for
 appending to ``results/bench_notes.md``.
 
-A changed hash is not automatically a regression — AQE near-tie
-build-side flips and cache-state-dependent fingerprints exist (see
-bench_notes) — but every changed hash must be LOOKED AT, and a changed
-hash plus a slower time is the signature worth chasing.
+A changed hash is a changed plan (``runtime.plan_fingerprint`` masks what
+differs between two runs of the same code), not automatically a
+regression: every changed hash must be LOOKED AT, and a changed hash plus
+a slower time is the signature worth chasing.
 
 Usage: python scripts/plan_hash_diff.py PREV.json CURR.json
 """

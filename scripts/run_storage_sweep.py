@@ -36,23 +36,20 @@ from json_format_in_parquet_benchmark_spark.formats.base import (  # noqa: E402
     ZSTD_LEVEL,
 )
 from json_format_in_parquet_benchmark_spark.metrics import sweep_corpora  # noqa: E402
+from json_format_in_parquet_benchmark_spark.runtime import scratch_root  # noqa: E402
 from json_format_in_parquet_benchmark_spark.session import get_spark  # noqa: E402
 
 GEN_ROWS = 100_000
 GEN_NDVS = (0.1, 0.3, 0.6, 1.0)
-GEN_DIR = "/tmp/jfipb_gen_corpora"
-OUT_DIR = "/tmp/jfipb_sweep_out"
 
 
-def generate_corpus(spark, ndv: float) -> str:
+def generate_corpus(spark, ndv: float, gen_dir: str) -> str:
     """Write one NDJSON corpus file named like the reference's
-    (events_ndv_{ndv}_{rows}.json, so sweep_corpora parses the NDV).
-    Always regenerated: a cached file could silently carry output from an
-    older generator version into committed results."""
-    path = os.path.join(GEN_DIR, f"events_ndv_{ndv}_{GEN_ROWS}.json")
-    if os.path.exists(path):
-        os.remove(path)
-    tmp = os.path.join(GEN_DIR, f"_stage_{ndv}")
+    (events_ndv_{ndv}_{rows}.json, so sweep_corpora parses the NDV) under
+    ``gen_dir``.  The scratch root is new per run, so no output of an older
+    generator version can leak into committed results."""
+    path = os.path.join(gen_dir, f"events_ndv_{ndv}_{GEN_ROWS}.json")
+    tmp = os.path.join(gen_dir, f"_stage_{ndv}")
     df = generate_events_ndjson(spark, GEN_ROWS, ndv, seed="g1")
     df.coalesce(1).write.mode("overwrite").text(tmp)
     part = glob.glob(os.path.join(tmp, "part-*"))[0]
@@ -65,16 +62,18 @@ def main() -> None:
     csv_out = sys.argv[1] if len(sys.argv) > 1 else os.path.join(
         REPO_ROOT, "results", "storage_results.csv"
     )
-    os.makedirs(GEN_DIR, exist_ok=True)
+    gen_dir = os.path.join(scratch_root(), "gen_corpora")
+    out_dir = os.path.join(scratch_root(), "sweep_out")
+    os.makedirs(gen_dir)
     spark = get_spark(app_name="jfipb-storage-sweep")
     corpora = sorted(glob.glob("/root/reference/json/events_ndv_*.json"))
-    corpora += [generate_corpus(spark, ndv) for ndv in GEN_NDVS]
+    corpora += [generate_corpus(spark, ndv, gen_dir) for ndv in GEN_NDVS]
     # Headline grid at the reference writer's effective level (parquet-rs
     # ZstdLevel::default() = 1) -- the cross-framework-comparable numbers;
     # the engine's tuned level-9 arm lands in a sibling CSV so the Pareto
     # gain is visible but never conflated with format-representation wins.
     rows = sweep_corpora(
-        spark, corpora, OUT_DIR, csv_out, zstd_level=REF_ZSTD_LEVEL
+        spark, corpora, out_dir, csv_out, zstd_level=REF_ZSTD_LEVEL
     )
     for r in rows:
         print(r)
@@ -83,7 +82,7 @@ def main() -> None:
         f"storage_results_zstd{ZSTD_LEVEL}.csv",
     )
     sweep_corpora(
-        spark, corpora, OUT_DIR + f"_l{ZSTD_LEVEL}", tuned_out,
+        spark, corpora, out_dir + f"_l{ZSTD_LEVEL}", tuned_out,
         zstd_level=ZSTD_LEVEL,
     )
     spark.stop()

@@ -1,13 +1,15 @@
 """The query scope (``runtime``): cache ownership across registered query
 builds, package shipping keyed per application, session SQL confs (scoped
-and pinned), scratch storage keyed per input root and removed at exit, and
-Python kernels that import in a fresh vanilla session whatever the run
-order, cwd and core count."""
+and pinned), scratch storage keyed per input root and removed at exit, plan
+fingerprints that survive session counter drift, and Python kernels that
+import in a fresh vanilla session whatever the run order, cwd and core
+count."""
 
 from __future__ import annotations
 
 import json
 import os
+import re
 import shutil
 import subprocess
 import sys
@@ -211,6 +213,51 @@ def test_same_basename_roots_do_not_alias_memoized_sinks(spark, sf_dir, tmp_path
             )
         assert_oracle_match(query.fn(spark, root), con.sql(query.oracle), root)
         con.close()
+
+
+def test_plan_fingerprint_is_stable_across_session_counter_drift(spark, sf_dir):
+    """A query rebuilt after an unrelated one, which advances the session's
+    lambda-variable, common-expression and query-stage counters, keeps its
+    fingerprint, and its plan text carries no run-varying token."""
+    names = ("dedup_repeated_segments", "pipeline_multimodal_curation")
+
+    def build(name):
+        df = REGISTRY[name].fn(spark, sf_dir)
+        df.collect()
+        return df
+
+    before = {name: runtime.plan_fingerprint(build(name)) for name in names}
+    build("events_ab_cuped")
+    for name in names:
+        df = build(name)
+        assert runtime.plan_fingerprint(df) == before[name], name
+        text = runtime.plan_text(df)
+        assert runtime.scratch_root() not in text, name
+        assert not re.search(r"#\d|plan_id=\d|_common_expr_\d", text), name
+
+
+def test_plan_text_drops_each_aqe_final_block_up_to_its_own_initial_header():
+    """AQE's plan headers do not nest by indent: a cached relation inside a
+    final plan may print its headers at the outer headers' indent."""
+    plan = (
+        "InMemoryRelation [a#1]\n"
+        "   +- AdaptiveSparkPlan isFinalPlan=true\n"
+        "      +- == Final Plan ==\n"
+        "         BroadcastHashJoin BuildLeft\n"
+        "         +- InMemoryTableScan\n"
+        "               +- AdaptiveSparkPlan isFinalPlan=true\n"
+        "      +- == Final Plan ==\n"
+        "         ShuffleQueryStage 3\n"
+        "      +- == Initial Plan ==\n"
+        "         Exchange\n"
+        "      +- == Initial Plan ==\n"
+        "         SortMergeJoin\n"
+    )
+    assert runtime._without_aqe_reoptimized(plan) == (
+        "InMemoryRelation [a#1]\n"
+        "   +- AdaptiveSparkPlan isFinalPlan=true\n"
+        "         SortMergeJoin\n"
+    )
 
 
 _RUN_ORDER_SCRIPT = r"""

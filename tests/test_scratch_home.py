@@ -6,8 +6,8 @@ removes the root at exit.  A hand-rolled temp path elsewhere either aliases
 two input roots that share a basename, clobbers another process's files in
 a shared ``TMPDIR``, or is never cleaned up.  The check is AST-only (no
 Spark): any ``tempfile`` import, any ``gettempdir``/``mkdtemp`` reference,
-or any string literal starting with ``/tmp`` in the package fails unless it
-is in ``runtime.py``.
+or any string literal starting with ``/tmp`` in the package, ``scripts/``
+or ``bench.py`` fails unless it is in ``runtime.py`` or allowlisted.
 """
 
 from __future__ import annotations
@@ -20,6 +20,15 @@ PKG = ROOT / "json_format_in_parquet_benchmark_spark"
 HOME = PKG / "runtime.py"
 
 _CALLS = ("gettempdir", "mkdtemp")
+
+# (file, use) -> why the path outlives one process on purpose.
+ALLOWED = {
+    ("scripts/run_scale_probe.py", "'/tmp/jfipb_scale_probe'"):
+    "--workdir default: a cross-run cache of the multi-million-row synthetic "
+    "tiers, which take minutes to regenerate",
+    ("scripts/probe_quality_gate.py", "'/tmp/jfipb_quality_probe/docs_'"):
+    "staged probe documents, kept across runs for the same reason",
+}
 
 
 def _scratch_uses(path: Path) -> list[tuple[int, str]]:
@@ -44,14 +53,24 @@ def _scratch_uses(path: Path) -> list[tuple[int, str]]:
     return out
 
 
+def _scanned() -> list[Path]:
+    files = sorted(PKG.rglob("*.py")) + sorted((ROOT / "scripts").glob("*.py"))
+    return [p for p in files if p != HOME] + [ROOT / "bench.py"]
+
+
 def test_scratch_paths_are_placed_only_in_runtime():
-    stray = sorted(
-        f"{path.relative_to(ROOT)}:{line} ({what})"
-        for path in sorted(PKG.rglob("*.py"))
-        if path != HOME
+    uses = [
+        (str(path.relative_to(ROOT)), line, what)
+        for path in _scanned()
         for line, what in _scratch_uses(path)
+    ]
+    stray = sorted(
+        f"{rel}:{line} ({what})" for rel, line, what in uses
+        if (rel, what) not in ALLOWED
     )
     assert not stray, (
         "temp path chosen outside runtime.py (use runtime.scratch_dir, or "
         f"runtime.write_once for a write memoized per process): {stray}"
     )
+    stale = sorted(set(ALLOWED) - {(rel, what) for rel, _, what in uses})
+    assert not stale, f"ALLOWED entries no longer found: {stale}"

@@ -5,7 +5,6 @@ multiple micro-batches)."""
 from __future__ import annotations
 
 import os
-import tempfile
 import time
 
 import pytest
@@ -68,7 +67,7 @@ def test_stream_sessionize_matches_batch_minus_open(spark, sf_dir):
     assert len(want) > 0
 
 
-def test_watermark_drops_late_rows(spark):
+def test_watermark_drops_late_rows(spark, tmp_path):
     """Two micro-batches: batch 2 advances the watermark past batch 1's
     windows AND carries one event older than the new watermark; append-mode
     output must contain the finalized batch-1 windows but never count the
@@ -76,7 +75,7 @@ def test_watermark_drops_late_rows(spark):
     import glob
     import shutil
 
-    root = tempfile.mkdtemp(prefix="jfipb_late_")
+    root = str(tmp_path)
     in_dir = os.path.join(root, "in")
     os.makedirs(in_dir)
 
@@ -211,7 +210,7 @@ def test_stream_stream_interval_join_matches_batch(spark, sf_dir):
     assert want, "no click->purchase pairs in testdata; join untested"
 
 
-def test_streaming_dedup_within_watermark(spark, sf_dir):
+def test_streaming_dedup_within_watermark(spark, sf_dir, tmp_path):
     """Streaming exact dedup: duplicated input rows collapse to one within
     the watermark horizon (dropDuplicatesWithinWatermark keeps state only
     until the watermark passes -- the streaming arm of dedup_exact)."""
@@ -224,10 +223,7 @@ def test_streaming_dedup_within_watermark(spark, sf_dir):
     from json_format_in_parquet_benchmark_spark.tables import load_table
 
     # stage the events table DUPLICATED (union with itself) as one file
-    import os
-    import tempfile
-
-    out_dir = os.path.join(tempfile.mkdtemp(prefix="jfipb_dedup_"), "in")
+    out_dir = str(tmp_path / "in")
     events = load_table(spark, sf_dir, "events")
     events.unionByName(events).coalesce(1).write.mode("overwrite").parquet(out_dir)
 
@@ -276,13 +272,11 @@ def test_stream_sliding_matches_batch_minus_open(spark, sf_dir):
     assert got == want
 
 
-def test_late_data_actually_dropped_by_watermark(spark, sf_dir):
+def test_late_data_actually_dropped_by_watermark(spark, sf_dir, tmp_path):
     """stream_late_data_dropped's whole point is that the final batch's
     rows are dropped by the watermark filter -- pin the drop METRIC, not
     just the sink values (a staging regression that merged batches would
     keep the oracle green only by accident)."""
-    import tempfile
-
     from json_format_in_parquet_benchmark_spark.plans.queries_streaming import (
         _staged_events_late_first,
     )
@@ -297,7 +291,7 @@ def test_late_data_actually_dropped_by_watermark(spark, sf_dir):
         .parquet(d)
     )
     agg = tumbling_event_counts_simple(stream, "1 hour", watermark="1 hour")
-    ckpt = tempfile.mkdtemp(prefix="jfipb_late_pin_")
+    ckpt = str(tmp_path / "ckpt")
     q = (
         agg.writeStream.format("memory")
         .queryName("late_pin")
@@ -332,7 +326,7 @@ def test_late_data_actually_dropped_by_watermark(spark, sf_dir):
     assert state_after_late <= prev_state, (state_after_late, prev_state)
 
 
-def test_upsert_foreachbatch_restart_exactly_once(spark):
+def test_upsert_foreachbatch_restart_exactly_once(spark, tmp_path):
     """Kill-restart exactly-once for the foreachBatch upsert sink -- the
     third stateful-commit surface, matching the custom source/sink twins'
     restart tests.  Attempt 1 crashes inside the exact window foreachBatch's
@@ -342,8 +336,6 @@ def test_upsert_foreachbatch_restart_exactly_once(spark):
     it (re-merging would double n_events/total_vq), then batch 1 applies,
     and the final state table must equal the one-shot batch aggregate over
     ALL events."""
-    import shutil
-
     from json_format_in_parquet_benchmark_spark.plans.queries_streaming import (
         _staged_events_two_files,
         run_upsert_stream,
@@ -351,57 +343,52 @@ def test_upsert_foreachbatch_restart_exactly_once(spark):
 
     sf_dir = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
     events_dir = _staged_events_two_files(spark, sf_dir)
-    state_dir = tempfile.mkdtemp(prefix="jfipb_upsert_restart_state_")
-    shutil.rmtree(state_dir)  # the first merge must create it
-    ckpt = tempfile.mkdtemp(prefix="jfipb_upsert_restart_ckpt_")
-    try:
-        with scoped_conf(spark, {"spark.sql.shuffle.partitions": "4"}):
-            with pytest.raises(Exception, match="injected crash"):
-                run_upsert_stream(
-                    spark, events_dir, state_dir, ckpt, fail_after_batch=0
-                )
-            marker = os.path.join(state_dir, "_applied_batch")
-            assert os.path.isfile(marker), "crash window never materialized"
-            with open(marker, encoding="utf-8") as fh:
-                assert fh.read().strip() == "0"
-            partial = {
-                r["user_id"]: r["n_events"]
-                for r in spark.read.parquet(state_dir).collect()
-            }
-            assert partial, "crashed run applied nothing"
-
-            run_upsert_stream(spark, events_dir, state_dir, ckpt)
-
-            got = sorted(
-                (r["user_id"], r["n_events"], r["total_vq"], r["last_us"])
-                for r in spark.read.parquet(state_dir).collect()
+    state_dir = str(tmp_path / "state")  # the first merge must create it
+    ckpt = str(tmp_path / "ckpt")
+    with scoped_conf(spark, {"spark.sql.shuffle.partitions": "4"}):
+        with pytest.raises(Exception, match="injected crash"):
+            run_upsert_stream(
+                spark, events_dir, state_dir, ckpt, fail_after_batch=0
             )
-            want = sorted(
-                (r["user_id"], r["n_events"], r["total_vq"], r["last_us"])
-                for r in spark.read.parquet(events_dir)
-                .groupBy("user_id")
-                .agg(
-                    F.count(F.lit(1)).cast("bigint").alias("n_events"),
-                    F.sum("vq").cast("bigint").alias("total_vq"),
-                    F.max("us").cast("bigint").alias("last_us"),
-                )
-                .collect()
+        marker = os.path.join(state_dir, "_applied_batch")
+        assert os.path.isfile(marker), "crash window never materialized"
+        with open(marker, encoding="utf-8") as fh:
+            assert fh.read().strip() == "0"
+        partial = {
+            r["user_id"]: r["n_events"]
+            for r in spark.read.parquet(state_dir).collect()
+        }
+        assert partial, "crashed run applied nothing"
+
+        run_upsert_stream(spark, events_dir, state_dir, ckpt)
+
+        got = sorted(
+            (r["user_id"], r["n_events"], r["total_vq"], r["last_us"])
+            for r in spark.read.parquet(state_dir).collect()
+        )
+        want = sorted(
+            (r["user_id"], r["n_events"], r["total_vq"], r["last_us"])
+            for r in spark.read.parquet(events_dir)
+            .groupBy("user_id")
+            .agg(
+                F.count(F.lit(1)).cast("bigint").alias("n_events"),
+                F.sum("vq").cast("bigint").alias("total_vq"),
+                F.max("us").cast("bigint").alias("last_us"),
             )
-            assert got == want, "restart double-counted or lost a batch"
-            # The restart must have made progress past the crashed batch --
-            # some user's count strictly grew (batch 1 is non-empty by the
-            # chronological split construction).
-            grew = [
-                uid for uid, n, _vq, _us in got
-                if uid in partial and n > partial[uid]
-            ] + [uid for uid, *_ in got if uid not in partial]
-            assert grew, "batch 1 never applied after restart"
-    finally:
-        shutil.rmtree(state_dir, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
+            .collect()
+        )
+        assert got == want, "restart double-counted or lost a batch"
+        # The restart must have made progress past the crashed batch --
+        # some user's count strictly grew (batch 1 is non-empty by the
+        # chronological split construction).
+        grew = [
+            uid for uid, n, _vq, _us in got
+            if uid in partial and n > partial[uid]
+        ] + [uid for uid, *_ in got if uid not in partial]
+        assert grew, "batch 1 never applied after restart"
 
 
-def test_upsert_foreachbatch_swap_window_recovery(spark, monkeypatch):
+def test_upsert_foreachbatch_swap_window_recovery(spark, monkeypatch, tmp_path):
     """Kill-restart in the SECOND crash window of the upsert sink's commit:
     after rmtree(state_dir) but before rename(tmp -> state_dir).  At that
     instant neither directory is the state table -- the fully-written tmp
@@ -410,8 +397,6 @@ def test_upsert_foreachbatch_swap_window_recovery(spark, monkeypatch):
     lose every prior batch; with it, entry finishes the interrupted rename,
     the marker guard then skips the redelivery, and the final table equals
     the one-shot aggregate over all events."""
-    import shutil
-
     from json_format_in_parquet_benchmark_spark.plans import queries_streaming
     from json_format_in_parquet_benchmark_spark.plans.queries_streaming import (
         _staged_events_two_files,
@@ -420,59 +405,53 @@ def test_upsert_foreachbatch_swap_window_recovery(spark, monkeypatch):
 
     sf_dir = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
     events_dir = _staged_events_two_files(spark, sf_dir)
-    state_dir = tempfile.mkdtemp(prefix="jfipb_upsert_swap_state_")
-    shutil.rmtree(state_dir)
-    ckpt = tempfile.mkdtemp(prefix="jfipb_upsert_swap_ckpt_")
+    state_dir = str(tmp_path / "state")
+    ckpt = str(tmp_path / "ckpt")
 
     def torn_swap():
         raise RuntimeError("injected crash in swap window")
 
-    try:
-        with scoped_conf(spark, {"spark.sql.shuffle.partitions": "4"}):
-            monkeypatch.setattr(queries_streaming, "_SWAP_WINDOW_HOOK", torn_swap)
-            with pytest.raises(Exception, match="injected crash in swap window"):
-                run_upsert_stream(spark, events_dir, state_dir, ckpt)
-            # The torn state the docstring describes must actually exist:
-            # no state_dir, complete tmp with the batch-0 marker.
-            assert not os.path.isdir(state_dir), "swap window never materialized"
-            tmp_marker = os.path.join(state_dir + ".tmp", "_applied_batch")
-            assert os.path.isfile(tmp_marker)
-            with open(tmp_marker, encoding="utf-8") as fh:
-                assert fh.read().strip() == "0"
-
-            monkeypatch.setattr(
-                queries_streaming, "_SWAP_WINDOW_HOOK", lambda: None
-            )
+    with scoped_conf(spark, {"spark.sql.shuffle.partitions": "4"}):
+        monkeypatch.setattr(queries_streaming, "_SWAP_WINDOW_HOOK", torn_swap)
+        with pytest.raises(Exception, match="injected crash in swap window"):
             run_upsert_stream(spark, events_dir, state_dir, ckpt)
+        # The torn state the docstring describes must actually exist:
+        # no state_dir, complete tmp with the batch-0 marker.
+        assert not os.path.isdir(state_dir), "swap window never materialized"
+        tmp_marker = os.path.join(state_dir + ".tmp", "_applied_batch")
+        assert os.path.isfile(tmp_marker)
+        with open(tmp_marker, encoding="utf-8") as fh:
+            assert fh.read().strip() == "0"
 
-            assert not os.path.exists(state_dir + ".tmp") or os.path.isdir(
-                state_dir
+        monkeypatch.setattr(
+            queries_streaming, "_SWAP_WINDOW_HOOK", lambda: None
+        )
+        run_upsert_stream(spark, events_dir, state_dir, ckpt)
+
+        assert not os.path.exists(state_dir + ".tmp") or os.path.isdir(
+            state_dir
+        )
+        got = sorted(
+            (r["user_id"], r["n_events"], r["total_vq"], r["last_us"])
+            for r in spark.read.parquet(state_dir).collect()
+        )
+        want = sorted(
+            (r["user_id"], r["n_events"], r["total_vq"], r["last_us"])
+            for r in spark.read.parquet(events_dir)
+            .groupBy("user_id")
+            .agg(
+                F.count(F.lit(1)).cast("bigint").alias("n_events"),
+                F.sum("vq").cast("bigint").alias("total_vq"),
+                F.max("us").cast("bigint").alias("last_us"),
             )
-            got = sorted(
-                (r["user_id"], r["n_events"], r["total_vq"], r["last_us"])
-                for r in spark.read.parquet(state_dir).collect()
-            )
-            want = sorted(
-                (r["user_id"], r["n_events"], r["total_vq"], r["last_us"])
-                for r in spark.read.parquet(events_dir)
-                .groupBy("user_id")
-                .agg(
-                    F.count(F.lit(1)).cast("bigint").alias("n_events"),
-                    F.sum("vq").cast("bigint").alias("total_vq"),
-                    F.max("us").cast("bigint").alias("last_us"),
-                )
-                .collect()
-            )
-            assert got == want, "torn swap lost or double-counted a batch"
-    finally:
-        shutil.rmtree(state_dir, ignore_errors=True)
-        shutil.rmtree(state_dir + ".tmp", ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
+            .collect()
+        )
+        assert got == want, "torn swap lost or double-counted a batch"
 
 
 @pytest.mark.parametrize("state_marker_survives", [False, True])
 def test_upsert_foreachbatch_mid_rmtree_recovery(
-    spark, monkeypatch, state_marker_survives
+    spark, monkeypatch, state_marker_survives, tmp_path
 ):
     """Crash DURING shutil.rmtree(state_dir) (ADVICE r9): the state_dir
     still EXISTS but is torn -- parquet parts and/or the marker already
@@ -484,112 +463,98 @@ def test_upsert_foreachbatch_mid_rmtree_recovery(
     aggregate.  Drives upsert_merge_batch directly: batch 0 commits
     cleanly, batch 1 crashes in the swap window, then a torn state_dir is
     reconstructed around the surviving tmp before the redelivery."""
-    import shutil
-
     from json_format_in_parquet_benchmark_spark.plans import queries_streaming
     from json_format_in_parquet_benchmark_spark.plans.queries_streaming import (
         upsert_merge_batch,
     )
 
-    state_dir = tempfile.mkdtemp(prefix="jfipb_upsert_torn_state_")
-    shutil.rmtree(state_dir)
+    state_dir = str(tmp_path / "state")
     b0 = spark.createDataFrame(
         [(1, 10, 100), (1, 11, 50), (2, 12, 7)], "user_id long, us long, vq long"
     )
     b1 = spark.createDataFrame(
         [(1, 20, 1000), (3, 21, 3)], "user_id long, us long, vq long"
     )
-    try:
-        upsert_merge_batch(state_dir, b0, 0)
+    upsert_merge_batch(state_dir, b0, 0)
 
-        def torn_swap():
-            raise RuntimeError("injected crash in swap window")
+    def torn_swap():
+        raise RuntimeError("injected crash in swap window")
 
-        monkeypatch.setattr(queries_streaming, "_SWAP_WINDOW_HOOK", torn_swap)
-        with pytest.raises(RuntimeError, match="injected crash"):
-            upsert_merge_batch(state_dir, b1, 1)
-        monkeypatch.setattr(
-            queries_streaming, "_SWAP_WINDOW_HOOK", lambda: None
-        )
-        # Reconstruct the mid-rmtree wreckage: state_dir EXISTS again but
-        # is torn -- a stale parquet part survives; the marker either died
-        # first (False arm) or survives carrying batch 0 (True arm, <= the
-        # tmp's batch 1 either way).
-        assert not os.path.isdir(state_dir)
-        os.makedirs(state_dir)
-        with open(
-            os.path.join(state_dir, "part-00000-stale.snappy.parquet"), "wb"
-        ) as fh:
-            fh.write(b"PAR1 torn leftover")
-        if state_marker_survives:
-            with open(
-                os.path.join(state_dir, "_applied_batch"), "w", encoding="utf-8"
-            ) as fh:
-                fh.write("0")
-        tmp_marker = os.path.join(state_dir + ".tmp", "_applied_batch")
-        assert os.path.isfile(tmp_marker), "swap-window tmp must be complete"
-
-        # Redelivery of batch 1 (at-least-once) against the torn state.
+    monkeypatch.setattr(queries_streaming, "_SWAP_WINDOW_HOOK", torn_swap)
+    with pytest.raises(RuntimeError, match="injected crash"):
         upsert_merge_batch(state_dir, b1, 1)
-
-        assert not os.path.exists(state_dir + ".tmp")
-        assert not os.path.exists(
-            os.path.join(state_dir, "part-00000-stale.snappy.parquet")
-        ), "torn leftover must not survive recovery"
+    monkeypatch.setattr(
+        queries_streaming, "_SWAP_WINDOW_HOOK", lambda: None
+    )
+    # Reconstruct the mid-rmtree wreckage: state_dir EXISTS again but
+    # is torn -- a stale parquet part survives; the marker either died
+    # first (False arm) or survives carrying batch 0 (True arm, <= the
+    # tmp's batch 1 either way).
+    assert not os.path.isdir(state_dir)
+    os.makedirs(state_dir)
+    with open(
+        os.path.join(state_dir, "part-00000-stale.snappy.parquet"), "wb"
+    ) as fh:
+        fh.write(b"PAR1 torn leftover")
+    if state_marker_survives:
         with open(
-            os.path.join(state_dir, "_applied_batch"), encoding="utf-8"
+            os.path.join(state_dir, "_applied_batch"), "w", encoding="utf-8"
         ) as fh:
-            assert fh.read().strip() == "1"
-        got = sorted(
-            (r["user_id"], r["n_events"], r["total_vq"], r["last_us"])
-            for r in spark.read.parquet(state_dir).collect()
-        )
-        assert got == [(1, 3, 1150, 20), (2, 1, 7, 12), (3, 1, 3, 21)], got
-    finally:
-        shutil.rmtree(state_dir, ignore_errors=True)
-        shutil.rmtree(state_dir + ".tmp", ignore_errors=True)
+            fh.write("0")
+    tmp_marker = os.path.join(state_dir + ".tmp", "_applied_batch")
+    assert os.path.isfile(tmp_marker), "swap-window tmp must be complete"
+
+    # Redelivery of batch 1 (at-least-once) against the torn state.
+    upsert_merge_batch(state_dir, b1, 1)
+
+    assert not os.path.exists(state_dir + ".tmp")
+    assert not os.path.exists(
+        os.path.join(state_dir, "part-00000-stale.snappy.parquet")
+    ), "torn leftover must not survive recovery"
+    with open(
+        os.path.join(state_dir, "_applied_batch"), encoding="utf-8"
+    ) as fh:
+        assert fh.read().strip() == "1"
+    got = sorted(
+        (r["user_id"], r["n_events"], r["total_vq"], r["last_us"])
+        for r in spark.read.parquet(state_dir).collect()
+    )
+    assert got == [(1, 3, 1150, 20), (2, 1, 7, 12), (3, 1, 3, 21)], got
 
 
-def test_upsert_torn_tmp_marker_reads_as_absent(spark):
+def test_upsert_torn_tmp_marker_reads_as_absent(spark, tmp_path):
     """Crash INSIDE the marker write (review r10): tmp holds complete
     parquet but a 0-byte `_applied_batch`.  A torn marker must read as
     ABSENT -- the merge proceeds against the intact state and the
     overwrite rebuilds the tmp -- never as an int('') crash loop."""
-    import shutil
-
     from json_format_in_parquet_benchmark_spark.plans.queries_streaming import (
         upsert_merge_batch,
     )
 
-    state_dir = tempfile.mkdtemp(prefix="jfipb_upsert_tornmark_")
-    shutil.rmtree(state_dir)
+    state_dir = str(tmp_path / "state")
     b0 = spark.createDataFrame(
         [(1, 10, 100), (2, 12, 7)], "user_id long, us long, vq long"
     )
     b1 = spark.createDataFrame([(1, 20, 1000)], "user_id long, us long, vq long")
-    try:
-        upsert_merge_batch(state_dir, b0, 0)
-        # Reconstruct the torn-marker wreckage for batch 1's tmp.
-        tmp = state_dir + ".tmp"
-        os.makedirs(tmp)
-        with open(os.path.join(tmp, "part-00000-stale.parquet"), "wb") as fh:
-            fh.write(b"PAR1 leftover")
-        open(os.path.join(tmp, "_applied_batch"), "w").close()  # 0 bytes
+    upsert_merge_batch(state_dir, b0, 0)
+    # Reconstruct the torn-marker wreckage for batch 1's tmp.
+    tmp = state_dir + ".tmp"
+    os.makedirs(tmp)
+    with open(os.path.join(tmp, "part-00000-stale.parquet"), "wb") as fh:
+        fh.write(b"PAR1 leftover")
+    open(os.path.join(tmp, "_applied_batch"), "w").close()  # 0 bytes
 
-        upsert_merge_batch(state_dir, b1, 1)  # redelivery must succeed
+    upsert_merge_batch(state_dir, b1, 1)  # redelivery must succeed
 
-        got = sorted(
-            (r["user_id"], r["n_events"], r["total_vq"])
-            for r in spark.read.parquet(state_dir).collect()
-        )
-        assert got == [(1, 2, 1100), (2, 1, 7)], got
-        with open(
-            os.path.join(state_dir, "_applied_batch"), encoding="utf-8"
-        ) as fh:
-            assert fh.read().strip() == "1"
-    finally:
-        shutil.rmtree(state_dir, ignore_errors=True)
-        shutil.rmtree(state_dir + ".tmp", ignore_errors=True)
+    got = sorted(
+        (r["user_id"], r["n_events"], r["total_vq"])
+        for r in spark.read.parquet(state_dir).collect()
+    )
+    assert got == [(1, 2, 1100), (2, 1, 7)], got
+    with open(
+        os.path.join(state_dir, "_applied_batch"), encoding="utf-8"
+    ) as fh:
+        assert fh.read().strip() == "1"
 
 
 def test_upsert_fresh_run_ignores_previous_runs_tmp(spark, monkeypatch):
@@ -627,7 +592,7 @@ def test_upsert_fresh_run_ignores_previous_runs_tmp(spark, monkeypatch):
         shutil.rmtree(tmp, ignore_errors=True)
 
 
-def test_pyds_sink_restart_exactly_once(spark):
+def test_pyds_sink_restart_exactly_once(spark, tmp_path):
     """Sink-side exactly-once under a REAL restart, not just a re-invoked
     commit(): run the replay stream into the NDJSON manifest sink, stop it
     mid-corpus, then simulate the crash window the sink docstring claims to
@@ -638,8 +603,6 @@ def test_pyds_sink_restart_exactly_once(spark):
     corpus exactly once (the single-run manifest content), with first-
     attempt orphan data files invisible."""
     import os as _os
-    import shutil
-    import tempfile
     import time
 
     from json_format_in_parquet_benchmark_spark.plans.queries_streaming import (
@@ -656,8 +619,8 @@ def test_pyds_sink_restart_exactly_once(spark):
     n_total = len(corpus)
 
     register_ndjson_sink(spark)
-    out = tempfile.mkdtemp(prefix="jfipb_sink_restart_out_")
-    ckpt = tempfile.mkdtemp(prefix="jfipb_sink_restart_ckpt_")
+    out = str(tmp_path / "out")
+    ckpt = str(tmp_path / "ckpt")
 
     def start():
         stream = read_ndjson_replay_stream(spark, _REPLAY_LOGS, chunk=128)
@@ -676,104 +639,99 @@ def test_pyds_sink_restart_exactly_once(spark):
                 rows.extend(ln for ln in fh.read().split("\n") if ln)
         return rows
 
-    try:
-        with scoped_conf(spark, {"spark.sql.shuffle.partitions": "4"}):
-            q1 = start()
-            deadline = time.time() + 120
-            cdir_poll = _os.path.join(ckpt, "commits")
-            while time.time() < deadline:
-                # Wait for BOTH a sink-committed batch and an engine commit
-                # entry: the sink's commit() runs before the engine records
-                # the batch, so polling the manifest alone can stop q1 inside
-                # the crash window itself (leaving nothing to delete below).
-                engine_commits = (
-                    _os.path.isdir(cdir_poll)
-                    and any(f.isdigit() for f in _os.listdir(cdir_poll))
-                )
-                if len(committed_lines()) >= 128 and engine_commits:
-                    break
-                time.sleep(0.2)
-            q1.stop()
-            q1.awaitTermination(60)
-            seen = len(committed_lines())
-            assert seen > 0, "first run committed nothing"
-            if seen >= n_total:
-                import pytest
-
-                pytest.skip("stream drained before stop; restart path untestable")
-
-            # Crash-window simulation: the engine records a batch as done in
-            # checkpoint commits/<id> AFTER the sink's commit() has published
-            # the manifest.  Deleting the newest commits entry reproduces a
-            # crash between the two -- on restart the engine MUST replay that
-            # batch, and the sink's per-batchId manifest overwrite keeps the
-            # read side exactly-once.  Only delete when the commit log is
-            # LEVEL with the offset log: if the stop itself landed between
-            # offset-write and commit-write the crash window already exists,
-            # and deleting another entry would leave a 2-batch gap the engine
-            # rejects (it re-runs batch N, then offsetLog.add(N+1) hits the
-            # existing file -> SparkConcurrentModificationException).
-            cdir = _os.path.join(ckpt, "commits")
-            odir = _os.path.join(ckpt, "offsets")
-            commit_ids = sorted(
-                int(f) for f in _os.listdir(cdir) if f.isdigit()
+    with scoped_conf(spark, {"spark.sql.shuffle.partitions": "4"}):
+        q1 = start()
+        deadline = time.time() + 120
+        cdir_poll = _os.path.join(ckpt, "commits")
+        while time.time() < deadline:
+            # Wait for BOTH a sink-committed batch and an engine commit
+            # entry: the sink's commit() runs before the engine records
+            # the batch, so polling the manifest alone can stop q1 inside
+            # the crash window itself (leaving nothing to delete below).
+            engine_commits = (
+                _os.path.isdir(cdir_poll)
+                and any(f.isdigit() for f in _os.listdir(cdir_poll))
             )
-            offset_ids = sorted(
-                int(f) for f in _os.listdir(odir) if f.isdigit()
+            if len(committed_lines()) >= 128 and engine_commits:
+                break
+            time.sleep(0.2)
+        q1.stop()
+        q1.awaitTermination(60)
+        seen = len(committed_lines())
+        assert seen > 0, "first run committed nothing"
+        if seen >= n_total:
+            import pytest
+
+            pytest.skip("stream drained before stop; restart path untestable")
+
+        # Crash-window simulation: the engine records a batch as done in
+        # checkpoint commits/<id> AFTER the sink's commit() has published
+        # the manifest.  Deleting the newest commits entry reproduces a
+        # crash between the two -- on restart the engine MUST replay that
+        # batch, and the sink's per-batchId manifest overwrite keeps the
+        # read side exactly-once.  Only delete when the commit log is
+        # LEVEL with the offset log: if the stop itself landed between
+        # offset-write and commit-write the crash window already exists,
+        # and deleting another entry would leave a 2-batch gap the engine
+        # rejects (it re-runs batch N, then offsetLog.add(N+1) hits the
+        # existing file -> SparkConcurrentModificationException).
+        cdir = _os.path.join(ckpt, "commits")
+        odir = _os.path.join(ckpt, "offsets")
+        commit_ids = sorted(
+            int(f) for f in _os.listdir(cdir) if f.isdigit()
+        )
+        offset_ids = sorted(
+            int(f) for f in _os.listdir(odir) if f.isdigit()
+        )
+        assert offset_ids, "no engine offsets recorded before stop"
+        # Empty commit log == the stop landed before the FIRST engine
+        # commit: the crash window already exists for batch 0.
+        deleted_commit = bool(commit_ids) and commit_ids[-1] == offset_ids[-1]
+        if deleted_commit:
+            _os.remove(_os.path.join(cdir, str(commit_ids[-1])))
+            # Hadoop's local ChecksumFileSystem keeps a .<name>.crc sidecar;
+            # a stale one makes the replayed batch's atomic commit-log
+            # create fail as FileAlreadyExists (surfacing as the
+            # "multiple streaming queries" error) -- a crashed process
+            # would have written neither file, so remove both.
+            crc = _os.path.join(cdir, f".{commit_ids[-1]}.crc")
+            if _os.path.exists(crc):
+                _os.remove(crc)
+        files_before = set(committed_files(out))
+
+        q2 = start()
+        deadline = time.time() + 180
+        while time.time() < deadline:
+            if len(committed_lines()) == n_total:
+                break
+            time.sleep(0.3)
+        q2.stop()
+        q2.awaitTermination(60)
+
+        got = committed_lines()
+        assert len(got) == n_total, (
+            f"restart lost or duplicated rows: {len(got)} != {n_total}"
+        )
+        assert sorted(got) == sorted(corpus), "content diverged from corpus"
+        # When we deleted a sink-committed batch's engine commit entry, the
+        # replayed batch's manifest now points at the SECOND attempt's data
+        # files: at least one first-attempt file must have dropped out of
+        # the committed set (the orphan the manifest makes invisible).  In
+        # the natural-lag case (stop landed inside the crash window itself)
+        # the first attempt never reached the manifest, so there is nothing
+        # to overwrite -- the exactly-once content assertions above are the
+        # proof there.
+        if deleted_commit:
+            files_after = set(committed_files(out))
+            assert files_before - files_after, (
+                "replayed batch did not overwrite its manifest entry"
             )
-            assert offset_ids, "no engine offsets recorded before stop"
-            # Empty commit log == the stop landed before the FIRST engine
-            # commit: the crash window already exists for batch 0.
-            deleted_commit = bool(commit_ids) and commit_ids[-1] == offset_ids[-1]
-            if deleted_commit:
-                _os.remove(_os.path.join(cdir, str(commit_ids[-1])))
-                # Hadoop's local ChecksumFileSystem keeps a .<name>.crc sidecar;
-                # a stale one makes the replayed batch's atomic commit-log
-                # create fail as FileAlreadyExists (surfacing as the
-                # "multiple streaming queries" error) -- a crashed process
-                # would have written neither file, so remove both.
-                crc = _os.path.join(cdir, f".{commit_ids[-1]}.crc")
-                if _os.path.exists(crc):
-                    _os.remove(crc)
-            files_before = set(committed_files(out))
-
-            q2 = start()
-            deadline = time.time() + 180
-            while time.time() < deadline:
-                if len(committed_lines()) == n_total:
-                    break
-                time.sleep(0.3)
-            q2.stop()
-            q2.awaitTermination(60)
-
-            got = committed_lines()
-            assert len(got) == n_total, (
-                f"restart lost or duplicated rows: {len(got)} != {n_total}"
-            )
-            assert sorted(got) == sorted(corpus), "content diverged from corpus"
-            # When we deleted a sink-committed batch's engine commit entry, the
-            # replayed batch's manifest now points at the SECOND attempt's data
-            # files: at least one first-attempt file must have dropped out of
-            # the committed set (the orphan the manifest makes invisible).  In
-            # the natural-lag case (stop landed inside the crash window itself)
-            # the first attempt never reached the manifest, so there is nothing
-            # to overwrite -- the exactly-once content assertions above are the
-            # proof there.
-            if deleted_commit:
-                files_after = set(committed_files(out))
-                assert files_before - files_after, (
-                    "replayed batch did not overwrite its manifest entry"
-                )
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
 
 
-def test_pyds_replay_checkpoint_recovery(spark):
+def test_pyds_replay_checkpoint_recovery(spark, tmp_path):
     """Exactly-once across restart: stop the replay stream mid-corpus, then
     restart from the SAME checkpoint -- the line-index offset resumes and
     the final aggregate equals one full pass (no re-read, no gap)."""
-    import tempfile
     import time
 
     from pyspark.sql import functions as F
@@ -789,7 +747,7 @@ def test_pyds_replay_checkpoint_recovery(spark):
         lines = [ln for ln in fh.read().split(b"\n") if ln]
     n_total = len(lines)
 
-    ckpt = tempfile.mkdtemp(prefix="jfipb_replay_recover_")
+    ckpt = str(tmp_path / "ckpt")
 
     def start(name):
         # 128-line chunks under a 1s trigger: 8 micro-batches spaced a
@@ -843,7 +801,7 @@ def test_pyds_replay_checkpoint_recovery(spark):
         assert final["chars"] == want_chars, "restart duplicated or lost rows"
 
 
-def test_stream_louter_eviction_boundary(spark):
+def test_stream_louter_eviction_boundary(spark, tmp_path):
     """Pins the LEFT OUTER null-emission rule the oracle of
     stream_stream_left_outer encodes: a never-matched left row emits
     with nulls iff its join-window end is STRICTLY below the global
@@ -869,7 +827,7 @@ def test_stream_louter_eviction_boundary(spark):
             "event_id long, ts string, user_id long, event_type string,"
             " value double, props string",
         ).withColumn("ts", F.to_timestamp("ts"))
-        d = tempfile.mkdtemp(prefix=f"louter_bnd_{tag}_")
+        d = str(tmp_path / f"louter_bnd_{tag}")
         df.coalesce(1).write.mode("overwrite").parquet(d)
         stream = read_events_stream(spark, d)
         clicks = (
