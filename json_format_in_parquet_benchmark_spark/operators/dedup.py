@@ -53,16 +53,21 @@ from ..runtime import local_checkpoint_release, track_persist, track_release
 from ..runtime import release_caches  # noqa: F401  (perfbench imports it from here)
 
 
+# Partition count _spread raises a narrower input to.  A constant, not the
+# core count, so a plan is the same on every host.  4 is the width a 4-vCPU
+# host always had; at sf0.001 there it beat 8 (34 queries one-shot, summed).
+SPREAD_PARTITIONS = 4
+
+
 def _spread(df: DataFrame) -> DataFrame:
-    """Repartition up to the cluster's parallelism ONLY when the input has
-    fewer partitions (a small-file corpus arrives as one Parquet row group =
-    one task, serializing the whole tokenize/explode/aggregate chain).  At
-    real scale inputs already carry >= parallelism partitions and this is an
-    exact no-op -- no shuffle is ever added to a well-partitioned input.
+    """Repartition up to SPREAD_PARTITIONS ONLY when the input has fewer
+    partitions (a small-file corpus arrives as one Parquet row group = one
+    task, serializing the whole tokenize/explode/aggregate chain).  At real
+    scale inputs already carry more partitions and this is an exact no-op --
+    no shuffle is ever added to a well-partitioned input.
     """
-    sc = df.sparkSession.sparkContext
-    if df.rdd.getNumPartitions() < sc.defaultParallelism:
-        return df.repartition(sc.defaultParallelism)
+    if df.rdd.getNumPartitions() < SPREAD_PARTITIONS:
+        return df.repartition(SPREAD_PARTITIONS)
     return df
 
 

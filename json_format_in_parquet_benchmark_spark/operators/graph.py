@@ -76,18 +76,12 @@ def pagerank(
     All quantities are positive BIGINTs, divisions floor, sums are
     order-free -- bit-identical in any engine.  Returns (node, rank_q).
     """
-    # The graph is iterated n_iters times: persist the EDGE LIST ONLY, with
-    # an explicit partition count, so each superstep starts from the cache
-    # instead of re-deriving edges from the base tables (the oracle's
-    # MATERIALIZED CTE).  nodes/deg stay lazy views over the cached edges:
-    # cached plans pin their internal exchanges outside AQE's reach
-    # (canChangeCachedPlanOutputPartitioning defaults false), so caching
-    # the derived aggregates too would freeze three 200-partition shuffles
-    # per superstep in a default-config session -- measured 3.6x slower
-    # than caching edges alone and letting AQE coalesce the rest.
-    spark = edges.sparkSession
-    par = spark.sparkContext.defaultParallelism
-    edges = track_persist(edges.repartition(par, "src"))
+    # The graph is iterated n_iters times: persist the edge list, so each
+    # superstep starts from the cache instead of re-deriving edges from the
+    # base tables (the oracle's MATERIALIZED CTE).  It is hash-partitioned
+    # on src, the key of every superstep's degree aggregate and join, so
+    # those co-locate with the cached layout instead of reshuffling it.
+    edges = track_persist(edges.repartition("src"))
     # Callers pass symmetric edge lists (both directions present), so the
     # node set is distinct(src) -- scanning dst too would double the pass.
     nodes = edges.select(F.col("src").alias("node")).distinct()
@@ -144,9 +138,8 @@ def label_propagation(
     contract as :func:`pagerank`: edges scanned once per superstep, no
     driver-side graph state.
     """
-    spark = edges.sparkSession
-    par = spark.sparkContext.defaultParallelism
-    edges = track_persist(edges.repartition(par, "src"))
+    # Keyed on src, the key of every superstep's label join (as pagerank).
+    edges = track_persist(edges.repartition("src"))
     labels = edges.select(F.col("src").alias("node")).distinct().withColumn(
         "label", F.col("node").cast("bigint")
     )

@@ -109,7 +109,7 @@ def hll_estimate(df: DataFrame, value_expr: str, b: int = 8) -> DataFrame:
     regs = sel.groupBy("bucket").agg(F.max("rho").alias("M"))
     spark = df.sparkSession
     all_regs = (
-        spark.range(m)
+        spark.range(m, numPartitions=1)
         .select(F.col("id").alias("bucket"))
         .join(regs, "bucket", "left")
         .select(F.coalesce("M", F.lit(0)).alias("M"))

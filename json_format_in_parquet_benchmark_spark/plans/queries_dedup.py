@@ -1033,10 +1033,10 @@ FROM hits GROUP BY 1, 2
     tags=("dedup", "evaluation", "generator"),
 )
 def dedup_planted_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.dedup import ngram_jaccard_pairs_prefix
+    from ..operators.dedup import SPREAD_PARTITIONS, ngram_jaccard_pairs_prefix
     from .queries_generator import DOCGEN_N, _docgen_text
 
-    base = spark.range(DOCGEN_N).selectExpr(
+    base = spark.range(DOCGEN_N, numPartitions=SPREAD_PARTITIONS).selectExpr(
         "id as doc_id",
         "case when id % 20 = 19 then id - 3"
         " when id % 20 = 18 then id - 2 else id end as src_id",

@@ -8,6 +8,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..generator import generate_events, generator_oracle_sql
+from ..operators.dedup import SPREAD_PARTITIONS
 from .registry import register
 
 # 2048 rows: enough to exercise every generator invariant (pool coverage,
@@ -133,7 +134,7 @@ FROM groups
     tags=("generator", "dedup", "corpus"),
 )
 def generator_documents_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    base = spark.range(DOCGEN_N).selectExpr(
+    base = spark.range(DOCGEN_N, numPartitions=SPREAD_PARTITIONS).selectExpr(
         "id as doc_id",
         "case when id % 20 = 19 then id - 3"
         " when id % 20 = 18 then id - 2 else id end as src_id",

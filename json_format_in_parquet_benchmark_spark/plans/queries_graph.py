@@ -400,28 +400,16 @@ def graph_kcore_word(spark: SparkSession, sf_dir: str) -> DataFrame:
             & (F.length("b") >= KW_MIN_LEN)
             & (F.col("a") != F.col("b"))
         )
-        # Width discipline (the graph_bfs_distance lesson): cached plans
-        # pin their exchanges outside AQE, so every distinct here would
-        # otherwise run 200 fixed-width tasks and every peel round 400
-        # (measured 24.7s -> ~6s on the vanilla driver seam).  Explicit
-        # hash-partitioning at cluster parallelism lets the distincts
-        # reuse a satisfied partitioning.
-        .repartition(spark.sparkContext.defaultParallelism, "a", "b")
         .distinct()
     )
     # Persist each round's SHRINKING edge set: without it the lineage
     # doubles per round (degree agg + two semi-joins each re-derive the
     # full prior chain) and the plan recomputes exponentially -- measured
-    # 50s -> ~10s with per-round persists.  Each persisted round is
-    # re-keyed on u at cluster parallelism so the cached layout stays
-    # narrow and co-located for the next round's semi-joins.
-    par = spark.sparkContext.defaultParallelism
+    # 50s -> ~10s with per-round persists.
     edges = track_persist(
         adj.select(
             F.least("a", "b").alias("u"), F.greatest("a", "b").alias("v")
-        )
-        .repartition(par, "u", "v")
-        .distinct()
+        ).distinct()
     )
     for _ in range(KCORE_ROUNDS):
         deg = (
@@ -620,29 +608,16 @@ def graph_bfs_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
             & (F.length("b") >= KW_MIN_LEN)
             & (F.col("a") != F.col("b"))
         )
-        # Width discipline for the CACHED subtree: a cached plan's
-        # exchanges are pinned outside AQE
-        # (canChangeCachedPlanOutputPartitioning), so on a vanilla
-        # session every distinct here would run 200 fixed-width tasks
-        # and every BFS round 400 (measured: 27s collect).  Explicitly
-        # hash-partitioning at cluster parallelism lets each distinct
-        # reuse the satisfied partitioning instead of adding a pinned
-        # 200-partition exchange; the canonical edge distinct reuses the
-        # (u,v) layout.  (least,greatest) of (a,b) is a function of the
-        # (a,b) hash key, so one repartition serves both distincts.
-        .repartition(spark.sparkContext.defaultParallelism, "a", "b")
         .distinct()
         .select(F.least("a", "b").alias("u"), F.greatest("a", "b").alias("v"))
-        .repartition(spark.sparkContext.defaultParallelism, "u", "v")
         .distinct()
     )
     # Partition by the per-round join key before the persist: co-locates
-    # each round's frontier join with the cached edge layout (measured
-    # with the width fixes together: 27s -> ~3s collect).
+    # each round's frontier join with the cached edge layout.
     edges = track_persist(
         adj.selectExpr("u AS src", "v AS dst")
         .unionAll(adj.selectExpr("v AS src", "u AS dst"))
-        .repartition(spark.sparkContext.defaultParallelism, "src")
+        .repartition("src")
     )
     dist = spark.createDataFrame(
         [(BFS_SOURCE, 0)], "node string, dist bigint"
@@ -707,13 +682,11 @@ LIMIT {LINKPRED_TOP}
 def graph_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
-    par = spark.sparkContext.defaultParallelism
     eraw = track_persist(
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .select(
             F.col("l_suppkey").alias("supp"), F.col("o_custkey").alias("cust")
         )
-        .repartition(par, "supp", "cust")
         .distinct()
     )
     deg = eraw.groupBy("supp").agg(F.count(F.lit(1)).alias("d"))
@@ -866,7 +839,7 @@ def graph_random_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .crossJoin(
             F.broadcast(
-                adj.sparkSession.range(RW_WALKS).select(
+                adj.sparkSession.range(RW_WALKS, numPartitions=1).select(
                     F.col("id").cast("int").alias("walk_id")
                 )
             )
@@ -1014,7 +987,8 @@ def graph_betweenness_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = track_persist(
         eraw.selectExpr("a AS src", "b AS dst")
         .unionAll(eraw.selectExpr("b AS src", "a AS dst"))
-        .repartition(spark.sparkContext.defaultParallelism, "src")
+        # keyed on the per-level frontier join key, as in graph_bfs_distance
+        .repartition("src")
     )
     d = [
         spark.createDataFrame(
@@ -1029,10 +1003,8 @@ def graph_betweenness_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
             .join(edges.alias("e"), F.col("p.node") == F.col("e.src"))
             .select("p.src", F.col("e.dst").alias("node"), "p.sigma")
         )
-        # localCheckpoint, NOT persist: caching an aggregate pins its
-        # exchange outside AQE at 200 fixed tasks on a vanilla session
-        # (the dau_wau/random_walks lesson); the checkpoint both breaks
-        # the per-level lineage and keeps the exchanges AQE-sized.
+        # localCheckpoint, NOT persist: the checkpoint also cuts the
+        # per-level lineage, which `seen` would otherwise carry forward.
         dk = (
             cand.join(seen, ["src", "node"], "left_anti")
             .groupBy("src", "node")

@@ -572,7 +572,7 @@ def events_rollup_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
         groups = regs.select(*keys).distinct()
         full = (
             groups.crossJoin(
-                spark.range(_R_M).select(F.col("id").alias("bucket"))
+                spark.range(_R_M, numPartitions=1).select(F.col("id").alias("bucket"))
             )
             .join(regs, [*keys, "bucket"], "left")
             .select(*keys, F.coalesce("M", F.lit(0)).alias("M"))

@@ -798,7 +798,7 @@ def events_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
     denom = dev.groupBy("event_type").agg(
         F.sum("d2_q").cast("bigint").alias("ss_q")
     )
-    ks = spark.range(1, ACF_MAX_LAG + 1).selectExpr("id as lag_k")
+    ks = spark.range(1, ACF_MAX_LAG + 1, numPartitions=1).selectExpr("id as lag_k")
     a = dev.selectExpr(
         "event_type", "bucket", "cents AS cents_a", "n", "s1"
     )
@@ -1115,10 +1115,6 @@ ORDER BY day
 )
 def events_dau_wau(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events")
-    # NOT persisted: presence is an aggregate (distinct), and caching an
-    # aggregate pins its exchange outside AQE -- 200-task stages on a
-    # vanilla session (round-3 lesson).  Recomputing it per branch is one
-    # extra scan and lets AQE coalesce every stage.
     presence = events.select(
         "user_id",
         F.expr("unix_micros(date_trunc('day', ts)) div 86400000000").alias(

@@ -62,10 +62,14 @@ from pyspark.sql import DataFrame, SparkSession
 # Testdata timestamps are timezone-naive and the DuckDB oracle evaluates date
 # functions in naive/UTC terms, so a non-UTC session shifts every day/month
 # bucket.  events.parquet may carry TIMESTAMP(NANOS), which Spark rejects
-# unless read as long (tables.load_table converts it).
+# unless read as long (tables.load_table converts it).  Unless
+# canChangeCachedPlanOutputPartitioning is set, AQE never coalesces a
+# persisted plan's final shuffle, so every scan of a cached aggregate runs
+# all spark.sql.shuffle.partitions tasks.
 SESSION_PINS = {
     "spark.sql.session.timeZone": "UTC",
     "spark.sql.legacy.parquet.nanosAsLong": "true",
+    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
 }
 
 # (owner, release) per tracked cache; owner is the registry query whose

@@ -8,7 +8,8 @@ config choice is made for a real multi-executor cluster at ~100 TB:
 - Parquet ZSTD everywhere (the reference writes ZSTD for all four formats,
   /root/reference/src/format/plain_json.rs:38 and equivalents).
 - ``runtime.SESSION_PINS`` (UTC session timezone, so date/time results are
-  reproducible across engines; ``nanosAsLong`` for TIMESTAMP(NANOS) files).
+  reproducible across engines; ``nanosAsLong`` for TIMESTAMP(NANOS) files;
+  AQE may resize cached plans, so no persist needs a hand-picked width).
 - Broadcast threshold left at default 10 MB; dimension tables (region, nation,
   part, supplier at any SF that matters) broadcast automatically, and the
   query code additionally hints ``broadcast()`` where the stats may be absent.

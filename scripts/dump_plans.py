@@ -11,8 +11,10 @@ a refactor is its plan-identity check.
 Each query is built and collected twice and the second build is dumped: a
 query whose own caches are materialized plans the same way bench.py's
 repeated trials do.  The write plans are those of every frame either build
-wrote through ``DataFrame.write``, in first-write order; the returned frame
-of a sink query is its read-back side and never shows them.
+wrote through ``DataFrame.write``, in first-write order, each followed by
+the layout calls made on its writer (format, mode, options, partitionBy,
+bucketBy, sortBy, clusterBy); the returned frame of a sink query is its
+read-back side and never shows them.
 
 Usage:  python scripts/dump_plans.py [sf_dir] [name ...]
 
@@ -29,14 +31,33 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql.classic.dataframe import DataFrame
+from pyspark.sql.readwriter import DataFrameWriter
 
 from json_format_in_parquet_benchmark_spark.plans import REGISTRY
 from json_format_in_parquet_benchmark_spark.runtime import (
     plan_fingerprint,
     plan_text,
     release_caches,
+    scratch_root,
 )
 from json_format_in_parquet_benchmark_spark.session import get_spark
+
+# DataFrameWriter calls that set a write's layout.  The save methods
+# (parquet, saveAsTable, ...) route their keyword arguments through them.
+LAYOUT_CALLS = ("format", "mode", "option", "options", "partitionBy",
+                "bucketBy", "sortBy", "clusterBy")
+
+
+def record_layout(writer: DataFrameWriter, calls: list[str]) -> None:
+    """Append each layout call made on ``writer`` to ``calls`` as source
+    text, skipping calls that set nothing (``mode(None)``, ``options()``)."""
+    for name in LAYOUT_CALLS:
+        def call(*args, _name=name, _real=getattr(writer, name), **kw):
+            if any(a is not None for a in args) or kw:
+                shown = [repr(a) for a in args] + [f"{k}={v!r}" for k, v in sorted(kw.items())]
+                calls.append(f"{_name}({', '.join(shown)})")
+            return _real(*args, **kw)
+        setattr(writer, name, call)
 
 
 def main() -> int:
@@ -48,13 +69,15 @@ def main() -> int:
     if unknown:
         print(f"not registered: {' '.join(unknown)}", file=sys.stderr)
         return 1
-    # plan_text of each frame written since the current query started
-    written: list[str] = []
+    # (plan_text, layout calls) of each frame written in the current query
+    written: list[tuple[str, list[str]]] = []
     real_write = DataFrame.write
 
     def recording_write(df: DataFrame):
-        written.append(plan_text(df))
-        return real_write.fget(df)
+        writer, calls = real_write.fget(df), []
+        record_layout(writer, calls)
+        written.append((plan_text(df), calls))
+        return writer
 
     DataFrame.write = property(recording_write)
     spark = get_spark(app_name="jfipb-plans")
@@ -74,7 +97,11 @@ def main() -> int:
             print(f"{name}: {type(exc).__name__}: {exc}", file=sys.stderr)
             failed.append(name)
         else:
-            writes = list(dict.fromkeys(written))
+            root = scratch_root()
+            writes = list(dict.fromkeys(
+                f"{text}writer: {' '.join(calls)}\n".replace(root, "<scratch>")
+                for text, calls in written
+            ))
             for i, text in enumerate(writes, 1):
                 section += [f"{'-' * 8} write plan {i} of {len(writes)}", text]
             print("\n".join(section), flush=True)

@@ -7,6 +7,11 @@ either leaks a conf into the caller's session or copies that restore logic.
 The check is AST-only (no Spark): any call ``<x>.conf.set(...)`` or
 ``<x>.conf.unset(...)`` in the package, ``scripts/`` or ``bench.py`` fails
 unless its enclosing function is allowlisted.
+
+A second guard keeps plans independent of the host's core count: no
+``defaultParallelism`` read and no session ``.range(...)`` without an explicit
+``numPartitions`` in the package.  ``runtime.SESSION_PINS`` lets AQE size
+cached plans, so no persist needs a hand-picked width.
 """
 
 from __future__ import annotations
@@ -71,3 +76,51 @@ def test_session_confs_are_set_only_in_runtime():
     )
     stale = sorted(set(ALLOWED) - set(found))
     assert not stale, f"ALLOWED entries no longer set a conf: {stale}"
+
+
+# Package files allowed to read the core count -> why.
+CORE_COUNT_ALLOWED = {
+    "json_format_in_parquet_benchmark_spark/generator.py":
+    "builds the benchmark's input corpus; its plan is frozen with the benchmark",
+}
+
+
+def _core_count_reads(path: Path) -> list[tuple[int, str]]:
+    """(line, what) of each ``defaultParallelism`` attribute and each
+    ``<x>.range(...)`` call without a ``numPartitions`` (a session ``range``
+    takes its split count from ``defaultParallelism``).  A builtin
+    ``range(...)`` is a bare name and is never matched."""
+    out: list[tuple[int, str]] = []
+    for node in ast.walk(ast.parse(path.read_text(), str(path))):
+        if isinstance(node, ast.Attribute) and node.attr == "defaultParallelism":
+            out.append((node.lineno, "defaultParallelism"))
+        elif (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "range"
+            and len(node.args) < 4
+            and not any(k.arg == "numPartitions" for k in node.keywords)
+        ):
+            out.append((node.lineno, ".range() without numPartitions"))
+    return out
+
+
+def test_no_plan_reads_the_core_count():
+    found: dict[str, list[str]] = {}
+    for path in _scanned():
+        if PKG not in path.parents:
+            continue
+        for line, what in _core_count_reads(path):
+            found.setdefault(str(path.relative_to(ROOT)), []).append(f"{line}: {what}")
+    stray = sorted(
+        f"{rel}:{hit}"
+        for rel, hits in found.items()
+        if rel not in CORE_COUNT_ALLOWED
+        for hit in hits
+    )
+    assert not stray, (
+        "plan shape depends on the core count (key a persist by column only, "
+        f"or give an explicit partition count): {stray}"
+    )
+    stale = sorted(set(CORE_COUNT_ALLOWED) - set(found))
+    assert not stale, f"CORE_COUNT_ALLOWED entries no longer read it: {stale}"

@@ -17,9 +17,11 @@ import uuid
 
 import pytest
 from pyspark import StorageLevel
+from pyspark.sql import functions as F
 
 from conftest import assert_oracle_match
 from json_format_in_parquet_benchmark_spark import runtime, session
+from json_format_in_parquet_benchmark_spark.operators.dedup import SPREAD_PARTITIONS, _spread
 from json_format_in_parquet_benchmark_spark.plans.registry import REGISTRY, register
 from json_format_in_parquet_benchmark_spark.runtime import (
     query_scope,
@@ -165,18 +167,70 @@ def test_scoped_conf_restores_set_unset_and_on_raise(spark):
     assert spark.conf.get(prior) == before
 
 
+_CACHED_AQE = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
+
+
 def test_query_scope_pins_session_confs_on_hostile_session(spark, sf_dir):
     """The driver builds its own session with any timezone, and nothing but
-    the scope pins UTC and nanosAsLong before a query reads ``events``."""
+    the scope pins UTC, nanosAsLong and AQE sizing of cached plans before a
+    query reads ``events``."""
     from json_format_in_parquet_benchmark_spark.tables import load_table
 
     tz, nanos = "spark.sql.session.timeZone", "spark.sql.legacy.parquet.nanosAsLong"
-    with scoped_conf(spark, {tz: "America/New_York", nanos: "false"}):
+    with scoped_conf(spark, {tz: "America/New_York", nanos: "false", _CACHED_AQE: "false"}):
         spark.conf.unset(nanos)
         with query_scope(spark, "_pin_probe"):
             assert spark.conf.get(tz) == "UTC"
             assert spark.conf.get(nanos) == "true"
+            assert spark.conf.get(_CACHED_AQE) == "true"
             assert dict(load_table(spark, sf_dir, "events").dtypes)["ts"] == "timestamp"
+
+
+def _tasks_run(spark, action) -> int:
+    """Tasks of every stage the jobs of ``action()`` ran (skipped ones too)."""
+    sc, group = spark.sparkContext, f"tasks-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "task count probe")
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    return sum(
+        tracker.getStageInfo(stage).numTasks
+        for job in tracker.getJobIdsForGroup(group)
+        for stage in tracker.getJobInfo(job).stageIds
+        if tracker.getStageInfo(stage) is not None
+    )
+
+
+def test_cached_aggregate_scan_is_sized_by_aqe(spark):
+    """A persisted aggregate built in a query scope of a session that held
+    the cached-plan pin false is AQE-coalesced: scanning it runs fewer
+    tasks than ``spark.sql.shuffle.partitions``, not one per partition."""
+    width = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    with scoped_conf(spark, {_CACHED_AQE: "false"}):
+        with query_scope(spark, "_cached_width_probe"):
+            agg = track_persist(
+                spark.range(64, numPartitions=2)
+                .groupBy((F.col("id") % 5).alias("k"))
+                .count()
+            )
+        try:
+            agg.count()
+            assert _tasks_run(spark, agg.collect) < width
+        finally:
+            release_caches()
+
+
+def test_spread_raises_a_narrow_input_to_the_constant_width(spark):
+    narrow = spark.range(16, numPartitions=1)
+    assert _spread(narrow).rdd.getNumPartitions() == SPREAD_PARTITIONS
+
+
+def test_spread_leaves_a_wide_enough_input_unchanged(spark):
+    wide = spark.range(16, numPartitions=SPREAD_PARTITIONS)
+    assert _spread(wide) is wide
+    assert "Repartition" not in runtime.plan_text(_spread(wide))
 
 
 def test_scratch_dir_keys_on_resolved_root_and_write_once_writes_once(tmp_path):
@@ -325,3 +379,48 @@ def test_python_kernels_run_in_fresh_vanilla_session_outside_repo(tmp_path, sf_d
     assert all(n > 0 for n in results.values()), results
     left = sorted(p.name for p in tmpdir.iterdir() if p.name.startswith("jfipb"))
     assert not left, f"scratch left behind after exit: {left}"
+
+
+_CORE_COUNT_QUERIES = ("dedup_minhash_lsh", "graph_communities_trading", "events_rollup_hll")
+
+_FINGERPRINT_SCRIPT = r"""
+import json, sys
+repo, sf_dir, cpus = sys.argv[1], sys.argv[2], int(sys.argv[3])
+sys.path.insert(0, repo)
+from json_format_in_parquet_benchmark_spark.session import get_spark
+from json_format_in_parquet_benchmark_spark.plans import REGISTRY
+from json_format_in_parquet_benchmark_spark.runtime import plan_fingerprint, release_caches
+
+spark = get_spark(app_name="core-count", cpus=cpus)
+out = {}
+for name in sys.argv[4:]:
+    REGISTRY[name].fn(spark, sf_dir).collect()
+    df = REGISTRY[name].fn(spark, sf_dir)
+    df.collect()
+    out[name] = plan_fingerprint(df)
+    release_caches()
+spark.stop()
+print(json.dumps(out))
+"""
+
+
+def test_plans_do_not_depend_on_the_core_count(spark, sf_dir, tmp_path):
+    """Headliners that persist, spread a narrow input or call
+    ``spark.range`` fingerprint the same in a session with one more core
+    (built, collected and rebuilt as ``scripts/dump_plans.py`` does)."""
+    cpus = spark.sparkContext.defaultParallelism + 1
+    proc = subprocess.run(
+        [sys.executable, "-c", _FINGERPRINT_SCRIPT, REPO_ROOT, sf_dir, str(cpus),
+         *_CORE_COUNT_QUERIES],
+        cwd=tmp_path, capture_output=True, text=True, timeout=900,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    other = json.loads(proc.stdout.strip().splitlines()[-1])
+    here = {}
+    for name in _CORE_COUNT_QUERIES:
+        REGISTRY[name].fn(spark, sf_dir).collect()
+        df = REGISTRY[name].fn(spark, sf_dir)
+        df.collect()
+        here[name] = runtime.plan_fingerprint(df)
+        release_caches()
+    assert here == other
