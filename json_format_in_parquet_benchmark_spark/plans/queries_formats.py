@@ -18,12 +18,12 @@ from pyspark.sql import functions as F
 
 from ..formats import get_format
 from ..formats.base import DOC_COL
-from ..runtime import scratch_dir
+from ..runtime import corpus_path, scratch_dir
 from ..sources.ndjson import read_ndjson_raw
 from ..tables import load_table
 from .registry import register
 
-REFERENCE_LOGS = "/root/reference/json/logs.json"
+REFERENCE_LOGS = corpus_path("logs.json")
 
 
 def _events_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -64,9 +64,11 @@ SELECT COUNT(*) AS n_lines,
        CAST(SUM(length(doc)) AS BIGINT) AS total_chars
 FROM lines WHERE length(doc) > 0
 """,
-    doc="O1: raw NDJSON scan of a reference corpus (codec.rs:8-19) -- line "
-    "count + order-insensitive checksum proves byte-faithful line reading.",
+    doc="O1: raw NDJSON scan of the reference logs corpus or its in-repo "
+    "stand-in (codec.rs:8-19) -- line count + order-insensitive checksum "
+    "proves byte-faithful line reading.",
     tags=("source", "ndjson"),
+    inputs=(REFERENCE_LOGS,),
 )
 def scan_ndjson(spark: SparkSession, sf_dir: str) -> DataFrame:
     raw = read_ndjson_raw(spark, REFERENCE_LOGS)
@@ -608,7 +610,8 @@ SELECT COUNT(*) AS n_lines,
 FROM lines WHERE length(doc) > 0
 """,
     doc="CUSTOM PYTHON DATA SOURCE (Spark 4 pyspark.sql.datasource API): "
-    "the reference NDJSON corpus read through a from-scratch connector "
+    "the reference logs corpus or its in-repo stand-in read through a "
+    "from-scratch connector "
     "that plans one InputPartition per byte range and applies the "
     "Hadoop LineRecordReader boundary rule in each task, so every line "
     "is read exactly once wherever the split boundaries fall "
@@ -619,6 +622,7 @@ FROM lines WHERE length(doc) > 0
     "touches only the file size, tasks stream their range, nothing is "
     "read on the driver.",
     tags=("source", "ndjson", "datasource", "python"),
+    inputs=(REFERENCE_LOGS,),
 )
 def scan_pyds_ndjson_ranges(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.py_datasource import read_ndjson_ranges

@@ -29,43 +29,41 @@ is the slow arm the benchmark exists to demonstrate).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..runtime import scratch_dir, track_persist
+from ..runtime import corpus_path, scratch_dir, track_persist
 from ..tables import load_table
 from .registry import register
 
-REFERENCE_JSON_DIR = "/root/reference/json"
-
-# (probe name, file, spark json path, duckdb json path, expected)
-# Mirrors /root/reference/benches/query.rs:46-67.
+# (probe name, file path, spark json path, duckdb json path, expected)
+# Mirrors /root/reference/benches/query.rs:46-67.  The expected values are
+# pinned to the reference's own documents, so these files have no stand-in.
 GOLDEN_PROBES = (
-    ("canada_type", "canada.json", "$.type", "$.type", "FeatureCollection"),
+    ("canada_type", corpus_path("canada.json"), "$.type", "$.type", "FeatureCollection"),
     (
         "citm_area",
-        "citm_catalog.json",
+        corpus_path("citm_catalog.json"),
         "$.areaNames.205705994",
         '$.areaNames."205705994"',
         "1er balcon central",
     ),
     (
         "citm_topic",
-        "citm_catalog.json",
+        corpus_path("citm_catalog.json"),
         "$.topicNames.324846100",
         '$.topicNames."324846100"',
         "Formations musicales",
     ),
     (
         "twitter_max_id",
-        "twitter.json",
+        corpus_path("twitter.json"),
         "$.search_metadata.max_id_str",
         "$.search_metadata.max_id_str",
         "505874924095815681",
     ),
 )
+GOLDEN_INPUTS = tuple(dict.fromkeys(path for _, path, _, _, _ in GOLDEN_PROBES))
 
 
 @register(
@@ -211,11 +209,11 @@ def _golden_oracle() -> str:
     "(benches/query.rs:46-67) evaluated on the actual corpora; the oracle "
     "pins the expected literals, so a wrong extraction hash-mismatches.",
     tags=("json", "golden"),
+    inputs=GOLDEN_INPUTS,
 )
 def json_golden_probes(spark: SparkSession, sf_dir: str) -> DataFrame:
     parts = []
-    for name, fname, spath, _dpath, expected in GOLDEN_PROBES:
-        path = os.path.join(REFERENCE_JSON_DIR, fname)
+    for name, path, spath, _dpath, expected in GOLDEN_PROBES:
         doc = spark.read.text(path)
         parts.append(
             doc.select(
@@ -242,6 +240,7 @@ def json_golden_probes(spark: SparkSession, sf_dir: str) -> DataFrame:
     "json_golden_probes_variant (pre-parsed binary arm) this completes the "
     "reference's three-way query comparison on all three representations.",
     tags=("json", "golden", "tape"),
+    inputs=GOLDEN_INPUTS,
 )
 def json_golden_probes_tape(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..formats.base import DOC_COL
@@ -249,8 +248,7 @@ def json_golden_probes_tape(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     fmt = JsoncTapeFormat()
     parts = []
-    for name, fname, spath, _dpath, expected in GOLDEN_PROBES:
-        path = os.path.join(REFERENCE_JSON_DIR, fname)
+    for name, path, spath, _dpath, expected in GOLDEN_PROBES:
         # query.rs:70-72 probes one document per corpus (twitter.json repeats
         # the same line 5x); distinct the raw line before encoding
         doc = spark.read.text(path).distinct().select(F.col("value").alias(DOC_COL))
@@ -276,11 +274,11 @@ def json_golden_probes_tape(spark: SparkSession, sf_dir: str) -> DataFrame:
     "parse_json once into VariantType, then variant_get path access "
     "(the Spark-native jsonb equivalent; benches/query.rs:77-88).",
     tags=("json", "golden", "variant"),
+    inputs=GOLDEN_INPUTS,
 )
 def json_golden_probes_variant(spark: SparkSession, sf_dir: str) -> DataFrame:
     parts = []
-    for name, fname, spath, _dpath, expected in GOLDEN_PROBES:
-        path = os.path.join(REFERENCE_JSON_DIR, fname)
+    for name, path, spath, _dpath, expected in GOLDEN_PROBES:
         doc = spark.read.text(path).distinct()
         parts.append(
             doc.select(F.parse_json("value").alias("v")).select(
@@ -325,7 +323,7 @@ def json_roundtrip_plain(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-REFERENCE_LOGS_CORPUS = os.path.join(REFERENCE_JSON_DIR, "logs.json")
+REFERENCE_LOGS_CORPUS = corpus_path("logs.json")
 
 
 @register(
@@ -341,14 +339,15 @@ FROM docs, unnest(json_keys(doc)) AS t(key)
 GROUP BY 1
 """,
     doc="Schema discovery over a schema-less corpus: per-key document "
-    "frequency of the reference's logs corpus (nested objects, nulls, "
-    "string arrays).  The reference has NO schema inference (SURVEY.md "
+    "frequency of the reference logs corpus or its in-repo stand-in "
+    "(nested objects, nulls, string arrays).  The reference has NO schema inference (SURVEY.md "
     "section 1.3 -- its variant schema is hard-coded); Spark derives "
     "structure from the data itself (json_object_keys here; "
     "spark.read.json / schema_of_json for full inference), which is what "
     "makes the shredded representation usable on corpora without a "
     "declared schema.",
     tags=("json", "schema", "inference"),
+    inputs=(REFERENCE_LOGS_CORPUS,),
 )
 def json_keys_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.ndjson import read_ndjson_raw

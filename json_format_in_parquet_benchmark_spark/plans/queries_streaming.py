@@ -35,7 +35,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..runtime import scoped_conf, scratch_dir, sf_tag, write_once
+from ..runtime import corpus_path, scoped_conf, scratch_dir, sf_tag, write_once
 from ..streaming.events_stream import (
     read_events_stream,
     sessionize_batch,
@@ -1268,7 +1268,7 @@ def stream_topk_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- Custom Python STREAMING data source (deterministic replay) ---------------
 
-_REPLAY_LOGS = "/root/reference/json/logs.json"
+_REPLAY_LOGS = corpus_path("logs.json")
 _REPLAY_CHUNK = 256
 
 
@@ -1285,7 +1285,8 @@ SELECT COUNT(*) AS n_lines,
 FROM lines WHERE length(doc) > 0
 """,
     doc="CUSTOM PYTHON STREAMING SOURCE (Spark 4 "
-    "SimpleDataSourceStreamReader): the reference NDJSON corpus "
+    "SimpleDataSourceStreamReader): the reference logs corpus or its "
+    "in-repo stand-in "
     f"replayed as a REAL micro-batch stream in {_REPLAY_CHUNK}-line "
     "chunks with checkpointed line-index offsets (restart-exact; "
     "readBetweenOffsets replays any batch byte-identically), "
@@ -1300,6 +1301,7 @@ FROM lines WHERE length(doc) > 0
     "contract.",
     tags=("streaming", "source", "datasource", "python"),
     bench=True,
+    inputs=(_REPLAY_LOGS,),
 )
 def stream_pyds_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     import time
@@ -1332,7 +1334,8 @@ def stream_pyds_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         deadline = time.time() + 300
-        while time.time() < deadline:
+        # a failed stream goes inactive; awaitTermination below raises its error
+        while time.time() < deadline and q.isActive:
             rows = spark.table(name).collect()
             if rows and rows[0]["n_lines"] == n_expected:
                 break

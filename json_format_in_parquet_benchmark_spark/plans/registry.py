@@ -25,6 +25,7 @@ Cross-engine exactness rules used throughout the query modules:
 from __future__ import annotations
 
 import functools
+import os
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -43,6 +44,10 @@ class Query:
     doc: str = ""
     tags: tuple[str, ...] = ()
     bench: bool = False  # include in bench.py headline timings
+    inputs: tuple[str, ...] = ()  # external files the query reads
+
+    def missing_inputs(self) -> list[str]:
+        return [p for p in self.inputs if not os.path.exists(p)]
 
 
 REGISTRY: dict[str, Query] = {}
@@ -54,6 +59,7 @@ def register(
     doc: str = "",
     tags: tuple[str, ...] = (),
     bench: bool = False,
+    inputs: tuple[str, ...] = (),
 ) -> Callable[[QueryFn], QueryFn]:
     def deco(fn: QueryFn) -> QueryFn:
         if name in REGISTRY:
@@ -65,7 +71,13 @@ def register(
                 return fn(spark, sf_dir)
 
         REGISTRY[name] = Query(
-            name=name, fn=wrapped, oracle=oracle, doc=doc or (fn.__doc__ or ""), tags=tags, bench=bench
+            name=name,
+            fn=wrapped,
+            oracle=oracle,
+            doc=doc or (fn.__doc__ or ""),
+            tags=tags,
+            bench=bench,
+            inputs=inputs,
         )
         return fn
 

@@ -1,5 +1,5 @@
 """Query runtime: the one home of tracked persists, query scopes, session
-SQL confs, scratch storage and plan capture.
+SQL confs, scratch storage, plan capture and input corpus paths.
 
 A persist inside a returned-lazy plan cannot be unpersisted before the
 caller materializes the result, so operators register each persisted
@@ -41,6 +41,11 @@ layout, and two processes sharing a ``TMPDIR`` never clobber each other.
 with everything that differs between two runs of the same code masked,
 the scratch root included.  AQE's runtime choices (build sides, coalesced
 partitions) are not part of it, so two same-code runs agree.
+
+:func:`corpus_path` resolves a named input corpus: the reference's file
+when it is there, else the seeded stand-in committed under ``corpora/``
+(``generator.STAND_INS`` writes them), else the reference path again, so
+a missing corpus fails loudly and a skip condition can test for it.
 
 This module imports nothing from the package at load time, so any module
 may import it at top level.
@@ -179,6 +184,23 @@ def query_scope(spark: SparkSession, name: str) -> Iterator[None]:
         yield
     finally:
         _owner = prev
+
+
+REFERENCE_JSON_DIR = "/root/reference/json"
+CORPORA_DIR = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "corpora"
+)
+
+
+def corpus_path(name: str) -> str:
+    """Path of input corpus ``name`` (e.g. ``"logs.json"``): the reference
+    file if it exists, else the committed stand-in if that exists, else
+    the reference path."""
+    reference = os.path.join(REFERENCE_JSON_DIR, name)
+    if os.path.exists(reference):
+        return reference
+    stand_in = os.path.join(CORPORA_DIR, name)
+    return stand_in if os.path.exists(stand_in) else reference
 
 
 _ROOT: str | None = None

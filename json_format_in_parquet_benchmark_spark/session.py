@@ -26,10 +26,11 @@ from .runtime import SESSION_PINS, scratch_root
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
-_SHIPPED_APPS: set[str] = set()
+# application id -> path of the zip shipped to it
+_SHIPPED_APPS: dict[str, str] = {}
 
 
-def ship_package(spark: SparkSession) -> None:
+def ship_package(spark: SparkSession) -> str:
     """Make this package importable on executor Python workers.
 
     Local pytest runs inherit the repo cwd on sys.path, but an external
@@ -40,18 +41,20 @@ def ship_package(spark: SparkSession) -> None:
     Idempotent per SparkContext, keyed on its application id (an ``id()``
     can be reused by a context created after an earlier one was freed).
     The zip goes under this process's scratch root, so processes sharing a
-    ``TMPDIR`` never overwrite each other's shipped file.
+    ``TMPDIR`` never overwrite each other's shipped file.  Returns the
+    zip's path.
     """
     sc = spark.sparkContext
     key = sc.applicationId
     if key in _SHIPPED_APPS:
-        return
+        return _SHIPPED_APPS[key]
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
     base = os.path.join(scratch_root(), "pyfiles", os.path.basename(pkg_dir))
     zip_path = shutil.make_archive(base, "zip", os.path.dirname(pkg_dir),
                                    os.path.basename(pkg_dir))
     sc.addPyFile(zip_path)
-    _SHIPPED_APPS.add(key)
+    _SHIPPED_APPS[key] = zip_path
+    return zip_path
 
 
 def default_cpus() -> int:

@@ -182,7 +182,24 @@ class NdjsonReplayStreamSource(DataSource):
 
 
 def read_ndjson_replay_stream(spark, path: str, chunk: int = 256):
-    spark.dataSource.register(NdjsonReplayStreamSource)
+    # Spark plans a Python stream source in a driver-side runner started
+    # from the stream thread, whose SparkFiles directory is a job-artifact
+    # subdirectory the addPyFile'd package zip is never copied to; the
+    # runner then imports this module only if the caller's cwd holds the
+    # package.  The runner's PYTHONPATH merges the registered function's
+    # environment, captured at register(), so the zip goes there.
+    from ..session import ship_package
+
+    env = spark.sparkContext.environment
+    prev = env.get("PYTHONPATH")
+    env["PYTHONPATH"] = os.pathsep.join(filter(None, (ship_package(spark), prev)))
+    try:
+        spark.dataSource.register(NdjsonReplayStreamSource)
+    finally:
+        if prev is None:
+            del env["PYTHONPATH"]
+        else:
+            env["PYTHONPATH"] = prev
     return (
         spark.readStream.format("jfipb_ndjson_replay")
         .option("path", path)

@@ -2,12 +2,14 @@
 codec tests (src/format/*.rs #[cfg(test)]): encode -> decode recovers the
 document (semantically -- canonicalization may reorder nothing here but
 float formatting differs), and flush -> load recovers the representation.
-Corpora: the reference's tiny inline fixtures + real reference NDJSON files.
+Corpora: the reference's tiny inline fixtures + the reference NDJSON
+corpora or their in-repo stand-ins (``runtime.corpus_path``).
 """
 
 from __future__ import annotations
 
 import json
+import os
 
 import pyarrow as pa
 import pytest
@@ -20,7 +22,7 @@ from json_format_in_parquet_benchmark_spark.formats.jsonc_tape import (
 from json_format_in_parquet_benchmark_spark.formats.variant_shred import (
     VariantShredFormat,
 )
-from json_format_in_parquet_benchmark_spark.runtime import scoped_conf
+from json_format_in_parquet_benchmark_spark.runtime import corpus_path, scoped_conf
 from json_format_in_parquet_benchmark_spark.sources.ndjson import read_ndjson_raw
 
 # The reference's inline unit-test docs (plain_json.rs:74-78, jsonc.rs:168-172)
@@ -288,9 +290,9 @@ def test_arrow_udf_after_tape_decode_runs_under_zipimport_gate(spark):
 
 
 def test_reference_corpus_roundtrip(spark):
-    """Real reference corpus (logs.json: arrays, nulls, nested) through the
-    variant binary representation."""
-    raw = read_ndjson_raw(spark, "/root/reference/json/logs.json")
+    """The reference corpus or its in-repo stand-in (logs.json: arrays,
+    nulls, nested) through the variant binary representation."""
+    raw = read_ndjson_raw(spark, corpus_path("logs.json"))
     fmt = get_format("jsonb")
     decoded = fmt.decode(fmt.encode(raw)).collect()
     assert len(decoded) == 1024
@@ -298,8 +300,24 @@ def test_reference_corpus_roundtrip(spark):
     assert {"timestamp", "system", "actor", "action", "objects"} <= set(one)
 
 
+# twitter.json has no stand-in (FIXTURES.md section 5): only the reference's.
+_TWITTER = corpus_path("twitter.json")
+
+
 @pytest.mark.parametrize(
-    "corpus", ["logs", "tags", "tags_with_time", "trace", "twitter"]
+    "corpus",
+    [
+        "logs",
+        "tags",
+        "tags_with_time",
+        "trace",
+        pytest.param(
+            "twitter",
+            marks=pytest.mark.skipif(
+                not os.path.exists(_TWITTER), reason=f"corpus missing: {_TWITTER}"
+            ),
+        ),
+    ],
 )
 @pytest.mark.parametrize("fmt_name", ["plain_json", "jsonb", "jsonc"])
 def test_all_reference_corpora_roundtrip_semantically(spark, corpus, fmt_name):
@@ -308,7 +326,7 @@ def test_all_reference_corpora_roundtrip_semantically(spark, corpus, fmt_name):
     serializers differ in key order / float formatting (SURVEY.md section 7
     hard part c).  variant is excluded: its declared schema is
     events-specific by design (variant.rs:22-48)."""
-    raw = read_ndjson_raw(spark, f"/root/reference/json/{corpus}.json")
+    raw = read_ndjson_raw(spark, corpus_path(f"{corpus}.json"))
     fmt = get_format(fmt_name)
     originals = [r.doc for r in raw.collect()]
     decoded = [r.doc for r in fmt.decode(fmt.encode(raw)).collect()]
@@ -333,8 +351,9 @@ def test_all_reference_corpora_roundtrip_semantically(spark, corpus, fmt_name):
 
 def test_events_shred_reference_schema(spark):
     """The reference's hard-coded events shred schema (variant.rs:22-48)
-    against a real generated events line."""
-    raw = read_ndjson_raw(spark, "/root/reference/json/events_ndv_0.1_1024.json")
+    against a generated events line (the reference corpus or its in-repo
+    stand-in)."""
+    raw = read_ndjson_raw(spark, corpus_path("events_ndv_0.1_1024.json"))
     fmt = VariantShredFormat()  # default: reference events schema
     encoded = fmt.encode(raw)
     assert encoded.columns == ["name", "timestamp", "attributes"]
@@ -366,7 +385,7 @@ def test_storage_sweep_emits_reference_csv_layout(spark, tmp_path):
         sweep_corpora,
     )
 
-    corpus = "/root/reference/json/events_ndv_0.1_1024.json"
+    corpus = corpus_path("events_ndv_0.1_1024.json")
     assert parse_events_corpus_name(corpus) == 0.1
     assert parse_events_corpus_name("/x/events_ndv_1_8192.json") == 1.0
     assert parse_events_corpus_name("/x/twitter.json") is None
@@ -390,7 +409,7 @@ def test_storage_sweep_emits_reference_csv_layout(spark, tmp_path):
 def test_schema_inference_on_reference_corpus(spark):
     """spark.read.json infers the events corpus shape (the capability the
     reference lacks -- its variant schema is hard-coded, variant.rs:1-2)."""
-    df = spark.read.json("/root/reference/json/events_ndv_0.1_1024.json")
+    df = spark.read.json(corpus_path("events_ndv_0.1_1024.json"))
     fields = {f.name: f.dataType.simpleString() for f in df.schema.fields}
     assert set(fields) == {"name", "timestamp", "attributes"}
     assert fields["attributes"].startswith("struct<event_attributes:")

@@ -345,6 +345,7 @@ steps = [
     ("semantic_dup_flags_fast", semantic_fast),
     ("similarity_pq_topk", REGISTRY["similarity_pq_topk"].fn),
     ("scan_ndjson_gzip", REGISTRY["scan_ndjson_gzip"].fn),
+    ("stream_pyds_replay", REGISTRY["stream_pyds_replay"].fn),
 ]
 out = {}
 for name, fn in steps:
@@ -362,8 +363,10 @@ def test_python_kernels_run_in_fresh_vanilla_session_outside_repo(tmp_path, sf_d
     cwd is not the repo: executors can import the package only if it was
     shipped, ``pipeline_multimodal_curation`` runs first, before any query
     that used to ship it, and ``scan_ndjson_gzip``'s no-split check holds
-    when Spark packs several files into one partition.  The scratch root
-    (shipped zip included) is gone once the process exits."""
+    when Spark packs several files into one partition, and
+    ``stream_pyds_replay``'s Python stream source imports in the runner
+    Spark plans it in from the stream thread.  The scratch root (shipped
+    zip included) is gone once the process exits."""
     tmpdir = tmp_path / "tmp"
     tmpdir.mkdir()
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}

@@ -797,7 +797,8 @@ def test_pyds_replay_checkpoint_recovery(spark, tmp_path):
         q2.stop()
         q2.awaitTermination(60)
         assert final is not None, "restarted stream never drained"
-        want_chars = sum(len(ln) for ln in lines)
+        # Spark length() counts characters, not UTF-8 bytes
+        want_chars = sum(len(ln.decode()) for ln in lines)
         assert final["chars"] == want_chars, "restart duplicated or lost rows"
 
 
