@@ -10,11 +10,8 @@ assignment pass is a pure map-side argmin with ZERO shuffles; each Lloyd
 iteration costs exactly one groupBy shuffle (the centroid update, map-side
 combined).  The cluster count is the scale knob -- SemDeDup runs 50k
 clusters over 5B embeddings so within-cluster pair work stays ~ N^2/k.
-:func:`semantic_dup_flags` always runs the SQL-literal argmin
-(:func:`kmeans_assign`); the Arrow-batched numpy form at the bottom of this
-module is the separate :func:`semantic_dup_flags_fast` (same contract, same
-split as similarity.ivf_assign / ivf_assign_fast), which only the scale
-probe calls.
+:func:`semantic_dup_flags` runs the SQL-literal argmin
+(:func:`kmeans_assign`), whose expression grows with k*dim.
 
 Cross-engine exactness (the DuckDB oracle hash-matches bit-for-bit):
 
@@ -181,129 +178,4 @@ def semantic_dup_flags(
                 "semantic_dup"
             ),
         )
-    )
-
-
-# ---------------------------------------------------------------------------
-# At-scale kernels: the SQL-literal argmin above is the oracle-checkable
-# form, but its expression size grows with k*dim (25k literal nodes at
-# k=400) and higher-order folds run interpreted.  Production k (SemDeDup
-# uses 50k clusters) needs dense linear algebra: Arrow-batched numpy
-# matmuls, the same split as similarity.ivf_assign / ivf_assign_fast.
-# Tie-break matches (np.argmin returns the FIRST minimum = lowest cluster
-# id); only sub-ulp near-ties could ever disagree with the SQL path.
-# ---------------------------------------------------------------------------
-
-
-def _assign_fast_df(e: DataFrame, cents, dim: int) -> DataFrame:
-    import numpy as np
-
-    ids = np.array([c for c, _, _ in cents], dtype=np.int64)
-    C = np.array([cent for _, cent, _ in cents], dtype=np.float64)
-    cn = np.array([cn2 for _, _, cn2 in cents], dtype=np.float64)
-
-    def assign(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            X = np.array(pdf["vd"].tolist(), dtype=np.float64)
-            dk = cn[None, :] - 2.0 * (X @ C.T)
-            pdf = pdf.assign(cluster=ids[np.argmin(dk, axis=1)].astype("int32"))
-            yield pdf
-
-    return e.mapInPandas(assign, schema="vec_id long, vd array<double>, cluster int")
-
-
-def kmeans_assign_fast(
-    emb: DataFrame,
-    vec_col: str,
-    id_col: str,
-    k: int = 8,
-    iters: int = 2,
-    dim: int = 64,
-) -> DataFrame:
-    """Same contract and centroid math as :func:`kmeans_assign` (identical
-    quantized updates, identical seeds), with the assignment pass as an
-    Arrow-batched numpy matmul -- the at-scale path for large k."""
-    e = emb.select(
-        F.col(id_col).alias("vec_id"),
-        F.expr(f"cast({vec_col} as array<double>)").alias("vd"),
-    )
-
-    def with_norm2(rows):
-        out = []
-        for cluster, cent in rows:
-            acc = 0.0
-            for x in cent:
-                acc += x * x
-            out.append((cluster, cent, acc))
-        return out
-
-    seed_rows = e.orderBy("vec_id").limit(k).collect()
-    cents = with_norm2([(i, list(r["vd"])) for i, r in enumerate(seed_rows)])
-
-    for _ in range(iters):
-        assigned = _assign_fast_df(e, cents, dim)
-        sums = (
-            assigned.select("cluster", F.posexplode("vd").alias("pos", "x"))
-            .groupBy("cluster", "pos")
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum(
-                    F.expr(f"cast(floor(x * {QUANT_SQL}) as bigint)")
-                ).alias("s"),
-            )
-            .collect()
-        )
-        acc: dict[int, list[float]] = {}
-        for r in sums:
-            acc.setdefault(r["cluster"], [0.0] * dim)[r["pos"]] = r["s"] / (
-                r["n"] * QUANT
-            )
-        cents = with_norm2(sorted(acc.items()))
-
-    return _assign_fast_df(e, cents, dim)
-
-
-def semantic_dup_flags_fast(
-    emb: DataFrame,
-    vec_col: str,
-    id_col: str,
-    threshold: float,
-    k: int = 8,
-    iters: int = 2,
-    dim: int = 64,
-) -> DataFrame:
-    """At-scale SemDeDup verdict: numpy k-means assignment, then the
-    within-cluster pairwise cosine as ONE dense gram matrix per cluster
-    (applyInPandas) -- the CPU analogue of the paper's per-cluster GPU
-    matmul.  Cluster size (N/k) bounds the quadratic block, so k is chosen
-    to keep blocks in the hundreds-to-thousands."""
-    import numpy as np
-    import pandas as pd
-
-    fin = kmeans_assign_fast(emb, vec_col, id_col, k=k, iters=iters, dim=dim)
-
-    def per_cluster(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        order = pdf["vec_id"].to_numpy().argsort()
-        ids = pdf["vec_id"].to_numpy()[order]
-        X = np.array(pdf["vd"].tolist(), dtype=np.float64)[order]
-        nrm = np.sqrt((X * X).sum(axis=1))
-        S = (X @ X.T) / np.outer(nrm, nrm)
-        sim = S >= threshold
-        np.fill_diagonal(sim, False)
-        # dup[i] = exists j < i with sim -- strictly-lower-triangle any()
-        dup = np.tril(sim, k=-1).any(axis=1)
-        return pd.DataFrame(
-            {
-                "vec_id": ids,
-                "cluster": pdf["cluster"].iloc[0],
-                "n_cluster": len(ids),
-                "semantic_dup": dup.astype("int32"),
-            }
-        )
-
-    return fin.groupBy("cluster").applyInPandas(
-        per_cluster,
-        schema="vec_id long, cluster int, n_cluster long, semantic_dup int",
     )

@@ -148,7 +148,9 @@ def ivf_assign(
     computed once and persisted partitioned by cell, so queries touch only
     n_probe/n_cells of the corpus.  Assignment is a single corpus scan
     fanned out n_cells-fold before a per-id argmax — no shuffle wider than
-    the id itself.
+    the id itself.  Spark evaluates the higher-order dot INTERPRETED, so
+    this O(N * n_cells * dim) form is the small-n_cells reference; the
+    at-scale build is :func:`ivf_assign_hier_exact`.
     """
     cents = _centroids_spark_literal(centroids(n_cells, dim))
     cell_dots = df.select(
@@ -164,51 +166,6 @@ def ivf_assign(
         .where(F.col("rn") == 1)
         .select("vec_id", "cell")
     )
-
-
-def ivf_assign_fast(
-    df: DataFrame, vec_col: str, id_col: str, n_cells: int = 16, dim: int = 64
-) -> DataFrame:
-    """Arrow-vectorized IVF cell assignment: one numpy matmul
-    (batch x dim) @ (dim x n_cells) + argmax per Arrow batch via
-    ``mapInPandas``.
-
-    :func:`ivf_assign` expresses the argmax-dot declaratively, but Spark
-    evaluates higher-order array expressions INTERPRETED (outside
-    whole-stage codegen), so its cost O(N * n_cells * dim) dominates the
-    IVF build once n_cells grows with the corpus (measured ~5x the whole
-    rest of the pipeline at 200k x 400 cells).  Dense linear algebra is
-    exactly the workload where the guidance flips: an Arrow-batched numpy
-    kernel does the same flops vectorized, ~10x faster, and shuffles
-    nothing (assignment is embarrassingly parallel per partition).
-
-    Trade-off that keeps BOTH implementations: numpy's pairwise float
-    summation order differs from the SQL aggregate's left-to-right order,
-    so near-tie argmax decisions can differ in the last ulp -- fine for an
-    index build (any consistent assignment works; queries probe by the
-    same centroids), but not bit-reproducible in a SQL oracle.  The
-    oracle-checked registry queries therefore use :func:`ivf_assign`; only
-    the scale probe (scripts/run_scale_probe.py) runs this kernel.
-    """
-    import numpy as np
-    import pandas as pd
-
-    cents = np.array(centroids(n_cells, dim), dtype=np.float64).T  # dim x cells
-
-    def assign(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            mat = np.array(pdf["v"].tolist(), dtype=np.float64)  # batch x dim
-            dots = mat @ cents  # batch x cells
-            # argmax with ties to the LOWEST cell id (np.argmax keeps the
-            # first maximum, matching ivf_assign's tie-break).
-            yield pd.DataFrame(
-                {"vec_id": pdf["vec_id"], "cell": dots.argmax(axis=1).astype("int32")}
-            )
-
-    src = df.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("v"))
-    return src.mapInPandas(assign, schema="vec_id long, cell int")
 
 
 # --- integer-exact two-level assignment (the oracle-checkable scale arm) ---

@@ -799,10 +799,8 @@ LEFT JOIN dup d ON d.vec_id = f.vec_id
     "integer shuffle), then cosine near-dup flags computed ONLY within each "
     "final cluster.  Cluster count is the published scale knob (SemDeDup "
     "uses 50k clusters at 5B embeddings, bounding within-cluster pair work "
-    "to N^2/k).  The argmin pass here is always the SQL-literal "
-    "kmeans_assign; the numpy matmul form is the separate "
-    "semantic_dup_flags_fast, which only the scale probe calls.  Emits one "
-    "row per vector with its cluster, cluster size, and dup verdict.",
+    "to N^2/k).  The argmin pass is the SQL-literal kmeans_assign.  Emits "
+    "one row per vector with its cluster, cluster size, and dup verdict.",
     tags=("dedup", "embedding", "kmeans", "semantic"),
 )
 def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -69,9 +69,9 @@ def _docgen_text(spark_side: bool) -> str:
     """Engine-neutral text expression over (src_id, mutate, doc_id): 20-50
     tokens drawn from a 50k vocabulary by portable hash of the SOURCE id,
     so exact-dup rows reproduce their source's text verbatim and near-dup
-    rows replace token 2 with a doc-unique token.  Mirrors the scale
-    probe's corpus (scripts/run_scale_probe.py:synth_documents) so the
-    probe's input generator is itself a registered, oracled capability."""
+    rows replace token 2 with a doc-unique token.  The scale probe builds
+    its planted ``documents`` table from this expression, so the probe's
+    input generator is itself a registered, oracled capability."""
     if spark_side:
         h = (
             "cast(conv(substr(md5(concat(src_id, ':', i)), 1, 15), 16, 10)"
@@ -124,8 +124,8 @@ FROM groups
     "source and every other 20th is a one-token near-dup, with all "
     "pseudo-randomness as portable md5 arithmetic so DuckDB generates "
     "the byte-identical corpus -- the test-harness input the dedup "
-    "scale probe runs on (scripts/run_scale_probe.py), now a "
-    "first-class capability: a user can synthesize ground-truthed "
+    "scale probe runs on, built from the same text expression: a user "
+    "can synthesize ground-truthed "
     "dedup benchmarks at ANY scale from spark.range with no data "
     "movement.  The query verifies the planted structure (exact-dup "
     "group count and membership) by grouping the generated texts; "

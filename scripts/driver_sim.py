@@ -4,7 +4,9 @@ Builds a VANILLA SparkSession (not the repo's tuned ``session.get_spark`` --
 the real driver constructs its own), smoke-checks ``entry()``, then runs every
 ``queries()`` entry at sf0.01 against its ``oracle_sql()`` DuckDB twin using
 the same compare the driver applies: sorted column names, row count, and an
-order-insensitive value compare with floats repr()'d.
+order-insensitive value compare with floats repr()'d.  A query whose declared
+input files are absent (``Query.missing_inputs()``) is reported as skipped,
+not failed.
 
 Usage: python scripts/driver_sim.py [sf_dir] [name_filter ...]
 """
@@ -62,6 +64,7 @@ def main() -> int:
     spark.sparkContext.setLogLevel("ERROR")
 
     import __spark_entry__ as entrymod
+    from json_format_in_parquet_benchmark_spark.plans import REGISTRY
     from json_format_in_parquet_benchmark_spark.tables import TABLES, table_path
 
     n = entrymod.entry(spark).count()
@@ -77,14 +80,18 @@ def main() -> int:
 
     queries = entrymod.queries()
     oracles = entrymod.oracle_sql()
-    failures = []
+    failures, skipped = [], []
+    selected = [name for name in queries if not ONLY or name in ONLY]
     t_all = time.time()
-    for name, fn in queries.items():
-        if ONLY and name not in ONLY:
+    for name in selected:
+        missing = REGISTRY[name].missing_inputs()
+        if missing:
+            skipped.append(name)
+            print(f"SKIP {name}: missing {', '.join(missing)}")
             continue
         t0 = time.time()
         try:
-            sdf = fn(spark, SF_DIR)
+            sdf = queries[name](spark, SF_DIR)
             s_cols = list(sdf.columns)
             s_rows = [tuple(r) for r in sdf.collect()]
         except Exception as exc:  # noqa: BLE001
@@ -126,7 +133,8 @@ def main() -> int:
             print(f"ok   {name} ({len(s_rows)} rows) [{time.time() - t0:.1f}s]")
 
     print(f"\ntotal wall: {time.time() - t_all:.1f}s, "
-          f"{len(failures)} failures / {len(queries)} queries")
+          f"{len(selected) - len(skipped)} run, {len(skipped)} skipped, "
+          f"{len(failures)} failures")
     for name, why in failures:
         print(f"  FAIL {name}: {why}")
     spark.stop()

@@ -26,8 +26,6 @@ ALLOWED = {
     "tests/test_properties.py::test_pq_assign_fast_agrees_with_expr_path",
     "pack_shard_spark": "single-window reference of "
     "tests/test_properties.py::test_pack_shards_two_phase_equals_single_window",
-    "ivf_assign_fast": "flat-argmax IVF build kernel of scripts/run_scale_probe.py",
-    "semantic_dup_flags_fast": "large-k SemDeDup kernel of scripts/run_scale_probe.py",
 }
 
 

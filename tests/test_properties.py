@@ -106,22 +106,6 @@ def test_ivf_assign_matches_numpy_argmax(spark, sf_dir):
         assert got[r.vec_id] == want, r.vec_id
 
 
-def test_ivf_assign_fast_agrees_with_sql_path(spark, sf_dir):
-    """The Arrow-vectorized numpy assignment must agree with the exact SQL
-    argmax path on real vectors (both tie-break to the lowest cell; only
-    sub-ulp near-ties could ever differ, and none exist in this corpus)."""
-    from json_format_in_parquet_benchmark_spark.operators.similarity import (
-        ivf_assign_fast,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings").limit(500)
-    sql_cells = {r.vec_id: r.cell for r in ivf_assign(emb, "embedding", "vec_id").collect()}
-    fast_cells = {
-        r.vec_id: r.cell for r in ivf_assign_fast(emb, "embedding", "vec_id").collect()
-    }
-    assert sql_cells == fast_cells
-
-
 def test_lsh_topk_is_subset_of_bruteforce_scores(spark, sf_dir):
     """Every LSH-reported neighbor must carry the same cosine the exact
     brute-force assigns to that pair (LSH affects recall, never scores)."""
@@ -545,30 +529,6 @@ def test_bloom_decon_has_no_false_negatives(spark, sf_dir):
     assert exact_docs <= bloom_flagged, (
         f"bloom missed {sorted(exact_docs - bloom_flagged)}"
     )
-
-
-def test_semantic_fast_path_agrees_with_sql_path(spark, sf_dir):
-    """The numpy SemDeDup kernels must produce the identical verdict table
-    as the oracle-checked SQL path (same seeds, same quantized centroid
-    updates; only sub-ulp argmin near-ties could differ, none exist here)."""
-    from json_format_in_parquet_benchmark_spark.operators.semantic import (
-        semantic_dup_flags,
-        semantic_dup_flags_fast,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    kw = dict(threshold=0.4, k=4, iters=2)
-    sql_rows = {
-        r["vec_id"]: (r["cluster"], r["n_cluster"], r["semantic_dup"])
-        for r in semantic_dup_flags(emb, "embedding", "vec_id", **kw).collect()
-    }
-    fast_rows = {
-        r["vec_id"]: (r["cluster"], r["n_cluster"], r["semantic_dup"])
-        for r in semantic_dup_flags_fast(
-            emb, "embedding", "vec_id", **kw
-        ).collect()
-    }
-    assert sql_rows == fast_rows
 
 
 def test_ngram_prefix_exactness_and_df_cap_subset(spark, sf_dir):

@@ -325,24 +325,9 @@ spark.sparkContext.setLogLevel("ERROR")
 from json_format_in_parquet_benchmark_spark.plans import REGISTRY
 
 
-def semantic_fast(spark, sf_dir):
-    # operators/semantic's Python kernels back no registered query, so
-    # build one inside the same scope a registered query gets.
-    from json_format_in_parquet_benchmark_spark.operators.semantic import (
-        semantic_dup_flags_fast,
-    )
-    from json_format_in_parquet_benchmark_spark.runtime import query_scope
-    from json_format_in_parquet_benchmark_spark.tables import load_table
-
-    with query_scope(spark, "semantic_dup_flags_fast"):
-        emb = load_table(spark, sf_dir, "embeddings")
-        return semantic_dup_flags_fast(emb, "embedding", "vec_id", threshold=0.95)
-
-
 steps = [
     ("pipeline_multimodal_curation", REGISTRY["pipeline_multimodal_curation"].fn),
     ("multimodal_decode_features", REGISTRY["multimodal_decode_features"].fn),
-    ("semantic_dup_flags_fast", semantic_fast),
     ("similarity_pq_topk", REGISTRY["similarity_pq_topk"].fn),
     ("scan_ndjson_gzip", REGISTRY["scan_ndjson_gzip"].fn),
     ("stream_pyds_replay", REGISTRY["stream_pyds_replay"].fn),

@@ -24,10 +24,8 @@ _CALLS = ("gettempdir", "mkdtemp")
 # (file, use) -> why the path outlives one process on purpose.
 ALLOWED = {
     ("scripts/run_scale_probe.py", "'/tmp/jfipb_scale_probe'"):
-    "--workdir default: a cross-run cache of the multi-million-row synthetic "
-    "tiers, which take minutes to regenerate",
-    ("scripts/probe_quality_gate.py", "'/tmp/jfipb_quality_probe/docs_'"):
-    "staged probe documents, kept across runs for the same reason",
+    "--workdir default: the run's staged synthetic tables, removed when the "
+    "run ends; a flag, so a multi-million-row tier can stage on a larger disk",
 }
 
 
