@@ -1,7 +1,8 @@
 """SparkSession factory tuned for this engine.
 
-Local testing runs on ``local[$SPARK_GRAFT_CPUS]`` (default 32) but every
-config choice is made for a real multi-executor cluster at ~100 TB:
+Local testing runs on ``local[$SPARK_GRAFT_CPUS]`` (default: the host's core
+count, :func:`default_cpus`) but every config choice is made for a real
+multi-executor cluster at ~100 TB:
 
 - AQE on (runtime shuffle-partition coalescing + skew-join splitting), so the
   static ``spark.sql.shuffle.partitions`` only needs to be an upper bound.
@@ -24,7 +25,7 @@ from pyspark.sql import SparkSession
 
 from .runtime import SESSION_PINS, scratch_root
 
-DEFAULT_SHUFFLE_PARTITIONS = 32
+SHUFFLE_PARTITIONS = 32
 
 # application id -> path of the zip shipped to it
 _SHIPPED_APPS: dict[str, str] = {}
@@ -58,6 +59,7 @@ def ship_package(spark: SparkSession) -> str:
 
 
 def default_cpus() -> int:
+    """Local core count: ``$SPARK_GRAFT_CPUS``, else the host's cores."""
     env = os.environ.get("SPARK_GRAFT_CPUS")
     if env:
         return int(env)
@@ -67,17 +69,15 @@ def default_cpus() -> int:
 def get_spark(
     app_name: str = "json-format-in-parquet-benchmark-spark",
     cpus: int | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with the engine's standard config,
     with the package shipped to its executors."""
     cpus = cpus or default_cpus()
-    shuffle_partitions = shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.sql.shuffle.partitions", str(SHUFFLE_PARTITIONS))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

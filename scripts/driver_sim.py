@@ -3,8 +3,9 @@
 Builds a VANILLA SparkSession (not the repo's tuned ``session.get_spark`` --
 the real driver constructs its own), smoke-checks ``entry()``, then runs every
 ``queries()`` entry at sf0.01 against its ``oracle_sql()`` DuckDB twin using
-the same compare the driver applies: sorted column names, row count, and an
-order-insensitive value compare with floats repr()'d.  A query whose declared
+the gate of ``tests/conftest.py::assert_oracle_match`` (loaded, not copied):
+both sides fetched through pandas, sorted column names, row count, dtype
+families, and an order-insensitive value compare.  A query whose declared
 input files are absent (``Query.missing_inputs()``) is reported as skipped,
 not failed.
 
@@ -13,12 +14,11 @@ Usage: python scripts/driver_sim.py [sf_dir] [name_filter ...]
 
 from __future__ import annotations
 
-import math
+import importlib.util
 import os
 import sys
 import time
-from datetime import date, datetime
-from decimal import Decimal
+from types import SimpleNamespace
 
 import duckdb
 
@@ -29,35 +29,21 @@ SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 ONLY = set(sys.argv[2:])
 
 
-def _norm(v):
-    if v is None:
-        return "<null>"
-    if isinstance(v, float):
-        return "NaN" if math.isnan(v) else repr(v)
-    if isinstance(v, Decimal):
-        return repr(float(v))
-    if isinstance(v, (datetime, date)):
-        return v.isoformat()
-    if isinstance(v, (bytes, bytearray)):
-        return v.hex()
-    if isinstance(v, (list, tuple)):
-        return "[" + ",".join(_norm(x) for x in v) + "]"
-    return str(v)
-
-
-def _normalize(cols, rows):
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    out = sorted(tuple(_norm(r[i]) for i in order) for r in rows)
-    return [cols[i] for i in order], out
+def _gate():
+    path = os.path.join(REPO_ROOT, "tests", "conftest.py")
+    spec = importlib.util.spec_from_file_location("oracle_gate", path)
+    module = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(module)
+    return module.assert_oracle_match
 
 
 def main() -> int:
     from pyspark.sql import SparkSession
 
+    from json_format_in_parquet_benchmark_spark.session import default_cpus
+
     spark = (
-        SparkSession.builder.master(
-            f"local[{os.environ.get('SPARK_GRAFT_CPUS', '8')}]"
-        )
+        SparkSession.builder.master(f"local[{default_cpus()}]")
         .appName("driver-sim")
         .getOrCreate()
     )
@@ -66,6 +52,8 @@ def main() -> int:
     import __spark_entry__ as entrymod
     from json_format_in_parquet_benchmark_spark.plans import REGISTRY
     from json_format_in_parquet_benchmark_spark.tables import TABLES, table_path
+
+    gate = _gate()
 
     n = entrymod.entry(spark).count()
     print(f"entry() rows: {n}")
@@ -91,52 +79,35 @@ def main() -> int:
             continue
         t0 = time.time()
         try:
-            sdf = queries[name](spark, SF_DIR)
-            s_cols = list(sdf.columns)
-            s_rows = [tuple(r) for r in sdf.collect()]
+            s_pdf = queries[name](spark, SF_DIR).toPandas()
         except Exception as exc:  # noqa: BLE001
-            failures.append((name, f"spark error: {exc}"))
-            print(f"FAIL {name}: spark error: {exc}")
+            failures.append(f"{name}: spark error: {exc}")
+            print(f"FAIL {failures[-1]}")
             continue
         if name not in oracles:
-            print(f"ok   {name} (rows-only: {len(s_rows)}) "
+            print(f"ok   {name} (rows-only: {len(s_pdf)}) "
                   f"[{time.time() - t0:.1f}s]")
             continue
         try:
-            rel = con.sql(oracles[name])
-            d_cols = list(rel.columns)
-            d_rows = rel.fetchall()
+            d_pdf = con.sql(oracles[name]).df()
         except Exception as exc:  # noqa: BLE001
-            failures.append((name, f"oracle error: {exc}"))
-            print(f"FAIL {name}: oracle error: {exc}")
+            failures.append(f"{name}: oracle error: {exc}")
+            print(f"FAIL {failures[-1]}")
             continue
-        if sorted(s_cols) != sorted(d_cols):
-            failures.append(
-                (name, f"columns spark={sorted(s_cols)} duck={sorted(d_cols)}")
-            )
-            print(f"FAIL {name}: column mismatch")
+        try:
+            gate(SimpleNamespace(toPandas=lambda: s_pdf),
+                 SimpleNamespace(df=lambda: d_pdf), name)
+        except AssertionError as exc:
+            failures.append(str(exc))
+            print(f"FAIL {failures[-1]}")
             continue
-        if len(s_rows) != len(d_rows):
-            failures.append(
-                (name, f"rows spark={len(s_rows)} duck={len(d_rows)}")
-            )
-            print(f"FAIL {name}: row count spark={len(s_rows)} "
-                  f"duck={len(d_rows)}")
-            continue
-        _, sn = _normalize(s_cols, s_rows)
-        _, dn = _normalize(d_cols, d_rows)
-        bad = [(a, b) for a, b in zip(sn, dn) if a != b]
-        if bad:
-            failures.append((name, f"{len(bad)} value mismatches: {bad[:2]}"))
-            print(f"FAIL {name}: {len(bad)} value mismatches; first: {bad[0]}")
-        else:
-            print(f"ok   {name} ({len(s_rows)} rows) [{time.time() - t0:.1f}s]")
+        print(f"ok   {name} ({len(s_pdf)} rows) [{time.time() - t0:.1f}s]")
 
     print(f"\ntotal wall: {time.time() - t_all:.1f}s, "
           f"{len(selected) - len(skipped)} run, {len(skipped)} skipped, "
           f"{len(failures)} failures")
-    for name, why in failures:
-        print(f"  FAIL {name}: {why}")
+    for why in failures:
+        print(f"  FAIL {why}")
     spark.stop()
     return 1 if failures else 0
 

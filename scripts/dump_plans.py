@@ -1,12 +1,11 @@
 """Print each registry query's plan text and fingerprint, plus the plan of
 every frame the query writes in batch.
 
-Both come from ``runtime.plan_text`` / ``runtime.plan_fingerprint``, the
-same rendering bench.py records as ``plan_hash``, so a timing drift can be
-attributed to either a plan change (fingerprint differs) or machine noise
-(fingerprint equal).  The text masks every run-varying token, so two dumps
-of the same code are byte-identical and ``diff`` of a dump before and after
-a refactor is its plan-identity check.
+Both come from ``runtime.plan_text`` / ``runtime.plan_fingerprint``, so a
+timing drift can be attributed to either a plan change (fingerprint
+differs) or machine noise (fingerprint equal).  The text masks every
+run-varying token, so two dumps of the same code are byte-identical and
+``diff`` of a dump before and after a refactor is its plan-identity check.
 
 Each query is built and collected twice and the second build is dumped: a
 query whose own caches are materialized plans the same way bench.py's

@@ -19,7 +19,9 @@ Usage:
 
 Prints one JSON line per (size, arm) with the min-of-trials seconds and
 the output rows, then the time growth per 10x of data (quadratic would be
-~100x; the blocked shapes stay near ~10x or below).  Arms retired after
+~100x; the blocked shapes stay near ~10x or below).  The first arm that
+is not ``once`` runs once untimed before its trials, so the session's
+warm-up does not land in its row.  Arms retired after
 their A/B was decided keep their rows in ``results/scale_probe.txt``.
 """
 
@@ -625,6 +627,7 @@ def main() -> None:
 
     spark = get_spark("scale-probe")
     results: dict[int, dict[str, tuple[float, int]]] = {}
+    warm = False
     for n in sizes:
         staged: set[str] = set()
         r = results[n] = {}
@@ -638,6 +641,12 @@ def main() -> None:
             sf = sf_dir(args.workdir, arm.tables[0], n)
             run = _query(arm.run) if isinstance(arm.run, str) else arm.run
             print(f"[probe] start {arm.label}", file=sys.stderr, flush=True)
+            if not (warm or arm.once):
+                # One untimed run takes the session's warm-up (first
+                # Python worker, JIT) off the first timed arm's row.
+                run(spark, sf)
+                release_caches()
+                warm = True
             secs, rows = timed(lambda: run(spark, sf), 1 if arm.once else trials)
             r[arm.label] = secs, rows
             print(

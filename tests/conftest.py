@@ -23,7 +23,7 @@ TEST_SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001"
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="jfipb-tests", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "8")))
+    s = get_spark(app_name="jfipb-tests")
     yield s
     from json_format_in_parquet_benchmark_spark.runtime import release_caches
 

@@ -511,8 +511,8 @@ def test_bench_exec_metrics_report_python_boundary(spark):
 
 def test_bench_headliner_failure_is_recorded_and_loop_continues(spark):
     """A headliner that raises lands in query_failures with its repr and
-    the loop moves on: the next query is still timed, counted, hashed
-    and measured, and no failure map carries a placeholder."""
+    the loop moves on: the next query is still timed, counted and
+    measured, and no failure map carries a placeholder."""
     from types import SimpleNamespace
 
     import bench
@@ -531,5 +531,5 @@ def test_bench_headliner_failure_is_recorded_and_loop_continues(spark):
     assert list(out["queries"]) == ["b_ok"]
     assert len(out["queries_trials"]["b_ok"]) == 3
     assert out["rows"] == {"b_ok": 3}
-    assert list(out["plan_hash"]) == list(out["exec_metrics"]) == ["b_ok"]
-    assert out["plan_hash_failures"] == out["exec_metric_failures"] == {}
+    assert list(out["exec_metrics"]) == ["b_ok"]
+    assert out["exec_metric_failures"] == {}
