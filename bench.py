@@ -51,8 +51,10 @@ from json_format_in_parquet_benchmark_spark.plans.queries_json import (
 )
 from json_format_in_parquet_benchmark_spark.runtime import (
     REFERENCE_JSON_DIR,
+    free,
     release_caches,
     scratch_dir,
+    track_persist,
 )
 from json_format_in_parquet_benchmark_spark.session import get_spark
 from json_format_in_parquet_benchmark_spark.sources.ndjson import read_ndjson_raw
@@ -253,8 +255,8 @@ def _path_query(spark: SparkSession) -> dict:
     pre-parsed variant access (the jsonb/jsonc arm) vs shredded column
     access -- same comparison, measured over the events table at SF."""
     events = load_table(spark, SF_DIR, "events")
-    variant = events.select(F.parse_json("props").alias("v")).persist()
-    shredded = events.select(F.from_json("props", "k BIGINT").alias("s")).persist()
+    variant = track_persist(events.select(F.parse_json("props").alias("v")))
+    shredded = track_persist(events.select(F.from_json("props", "k BIGINT").alias("s")))
     arms = {
         "reparse_get_json_object": lambda: events.select(
             F.get_json_object("props", "$.k").alias("k")
@@ -268,7 +270,7 @@ def _path_query(spark: SparkSession) -> dict:
     }
     variant.count(), shredded.count()  # materialize pre-parsed arms
     out = {arm: _best_of(run, 2) for arm, run in arms.items()}
-    variant.unpersist(), shredded.unpersist()
+    free(variant), free(shredded)
     return out
 
 
@@ -286,14 +288,13 @@ def _path_query_golden(spark: SparkSession) -> dict:
     out: dict[str, dict[str, float]] = {}
     for name, fpath, spath, _dpath, _expected in GOLDEN_PROBES:
         n_copies = max(32, min(2048, target_bytes // max(1, os.path.getsize(fpath))))
-        doc = (
+        doc = track_persist(
             spark.read.text(fpath)
             .distinct()
             .crossJoin(spark.range(n_copies))
             .select("value")
-            .persist()
         )
-        variant = doc.select(F.parse_json("value").alias("v")).persist()
+        variant = track_persist(doc.select(F.parse_json("value").alias("v")))
         doc.count(), variant.count()
         arms = {
             "reparse": lambda d=doc, p=spath: d.select(
@@ -304,7 +305,7 @@ def _path_query_golden(spark: SparkSession) -> dict:
             ).agg(F.count("x")).collect(),
         }
         out[name] = {arm: _best_of(run, 2) for arm, run in arms.items()}
-        doc.unpersist(), variant.unpersist()
+        free(doc), free(variant)
     return out
 
 

@@ -31,30 +31,10 @@ class VariantShredFormat(JsonFormatBase):
 
     def __init__(self, ddl: str = EVENTS_SHRED_DDL):
         self.schema = ddl
-        self._fields = [f.strip().split()[0] for f in _split_top_level(ddl)]
 
     def encode(self, raw: DataFrame) -> DataFrame:
         return raw.select(F.from_json(F.col(DOC_COL), self.schema).alias("s")).select("s.*")
 
     def decode(self, encoded: DataFrame) -> DataFrame:
-        return encoded.select(
-            F.to_json(F.struct(*[F.col(c) for c in self._fields])).alias(DOC_COL)
-        )
+        return encoded.select(F.to_json(F.struct(*encoded.columns)).alias(DOC_COL))
 
-
-def _split_top_level(ddl: str) -> list[str]:
-    """Split a DDL column list on top-level commas (ignoring <...> nesting)."""
-    out, depth, cur = [], 0, []
-    for ch in ddl:
-        if ch == "<":
-            depth += 1
-        elif ch == ">":
-            depth -= 1
-        if ch == "," and depth == 0:
-            out.append("".join(cur))
-            cur = []
-        else:
-            cur.append(ch)
-    if cur:
-        out.append("".join(cur))
-    return out

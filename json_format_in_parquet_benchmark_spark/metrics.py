@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 from .formats import FORMATS, get_format
 from .formats.base import DOC_COL, PAGE_SIZE, ZSTD_LEVEL
+from .runtime import free, track_persist
 
 
 def dir_bytes(path: str) -> int:
@@ -70,7 +71,7 @@ def measure_format(
     which is pinned per arm for like-for-likeness."""
     fmt = get_format(fmt) if isinstance(fmt, str) else fmt
     fmt_name = fmt.name
-    raw = raw.persist()
+    raw = track_persist(raw)
     stats = raw.agg(
         F.count(F.lit(1)).alias("n"), F.sum(F.length(DOC_COL)).alias("chars")
     ).collect()[0]
@@ -80,7 +81,7 @@ def measure_format(
 
     t0 = time.perf_counter()
     encoded = fmt.encode(raw)
-    encoded.persist().count()  # materialize the representation
+    track_persist(encoded).count()  # materialize the representation
     t1 = time.perf_counter()
 
     path = os.path.join(out_dir, f"{fmt_name}.parquet")
@@ -88,7 +89,7 @@ def measure_format(
     t2 = time.perf_counter()
 
     loaded = fmt.load(spark, path)
-    loaded.persist().count()
+    track_persist(loaded).count()
     t3 = time.perf_counter()
 
     fmt.decode(loaded).select(F.max(F.length(DOC_COL))).collect()
@@ -106,9 +107,8 @@ def measure_format(
         load_s=t3 - t2,
         decode_s=t4 - t3,
     )
-    encoded.unpersist()
-    loaded.unpersist()
-    raw.unpersist()
+    for df in (encoded, loaded, raw):
+        free(df)
     return metric
 
 

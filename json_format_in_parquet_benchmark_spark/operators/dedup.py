@@ -49,7 +49,7 @@ from pyspark.sql import functions as F
 
 from ..functions.hashing import P31, hash64_sql_spark, perm_consts
 from ..functions.text import shingles_spark, tokens_spark
-from ..runtime import local_checkpoint_release, track_persist, track_release
+from ..runtime import free, track_checkpoint, track_persist
 from ..runtime import release_caches  # noqa: F401  (perfbench imports it from here)
 
 
@@ -526,14 +526,14 @@ def connected_components(
     # edge table (labels is likewise node-partitioned by its producing
     # aggregation/join).  One shuffle per round remains: the groupBy on the
     # destination node.
-    both = both.repartition("s").persist()
+    both = track_persist(both.repartition("s"))
 
     # both holds 2x directed copies; compare UNDIRECTED pairs to the knob
     # so driver_max_edges means what the docstring says.
     n_edges = both.count() // 2
     if n_edges <= driver_max_edges:
         rows = both.collect()
-        both.unpersist()
+        free(both)
         parent: dict = {}
 
         def find(x):
@@ -561,19 +561,17 @@ def connected_components(
         return spark.createDataFrame(
             out, f"doc_id {node_type}, cluster_rep {node_type}"
         )
-    labels = (
+    labels = track_persist(
         both.select(F.col("s").alias("node"))
         .distinct()
         .withColumn("label", F.col("node"))
-        .persist()
     )
     # Convergence check: labels only ever DECREASE (least of own and
     # neighbor minima), so sum(label) strictly decreases until the fixpoint
     # -- one cheap aggregate per round instead of a change-detection join.
     prev_sum = labels.agg(F.sum("label")).first()[0]
     converged = False
-    prev_ckpt_free = None  # frees checkpoint k-1 once checkpoint k lands
-    pending_free = None
+    ckpt = None  # the last checkpoint: every later round's lineage reads it
     for it in range(max_iter):
         # One round = one aggregation: min over (own label ∪ labels arriving
         # over edges).  Union + groupBy-min replaces the former
@@ -588,38 +586,35 @@ def connected_components(
             .groupBy("node")
             .agg(F.min("label").alias("label"))
         )
-        if (it + 1) % 5 == 0:
+        cut = (it + 1) % 5 == 0
+        if cut:
             # Every 5th round, truncate lineage instead of only caching:
             # the per-round persists bound RECOMPUTATION but the logical
             # plan still deepens every round, and analyzer/optimizer time
             # grows with it on long-diameter graphs.  eager=True both
             # materializes (so the convergence sum below reads the
             # checkpointed RDD) and serves as this round's cache.
-            new_labels = round_df.localCheckpoint(eager=True)
-            # This checkpoint truncated all lineage back to the PREVIOUS
-            # one, so once the frame between them is unpersisted below,
-            # checkpoint k-1's pinned blocks are unreachable -- queue the
-            # free (unpersist() on the frame itself is a no-op for local
-            # checkpoints).  At most two checkpointed label frames (|V|
-            # rows each) are ever live; the final one stays pinned because
-            # the returned frame's lineage may still read it.
-            pending_free, prev_ckpt_free = (
-                prev_ckpt_free,
-                local_checkpoint_release(new_labels),
-            )
+            new_labels = track_checkpoint(round_df, eager=True)
         else:
-            new_labels = round_df.persist()
+            new_labels = track_persist(round_df)
         new_sum = new_labels.agg(F.sum("label")).first()[0]
-        labels.unpersist()
+        # The previous round goes now, except the last checkpoint: later
+        # rounds read it through their lineage until a new checkpoint cuts
+        # it.  Between rounds only the newest round and the last checkpoint
+        # (|V| rows each) stay pinned; they stay tracked after the loop,
+        # since the returned frame reads them.
+        if labels is not ckpt:
+            free(labels)
+        if cut:
+            if ckpt is not None:
+                free(ckpt)
+            ckpt = new_labels
         labels = new_labels
-        if pending_free is not None:
-            pending_free()
-            pending_free = None
         if new_sum == prev_sum:
             converged = True
             break
         prev_sum = new_sum
-    both.unpersist()
+    free(both)
     if not converged:
         # Non-converged labels WILL diverge from the recursive-CTE oracle on
         # long-chain graphs; surface it so a mismatch is attributable.
@@ -630,14 +625,6 @@ def connected_components(
             RuntimeWarning,
             stacklevel=2,
         )
-    track_release(labels.unpersist)
-    if prev_ckpt_free is not None:
-        # The final checkpoint's blocks are invisible to labels.unpersist()
-        # (they belong to the checkpointed internal RDD, not the
-        # CacheManager); track them so release_caches reclaims them when
-        # this query's caches are released instead of pinning them for the
-        # life of the session.
-        track_release(prev_ckpt_free)
     return labels.select(F.col("node").alias("doc_id"), F.col("label").alias("cluster_rep"))
 
 

@@ -27,40 +27,24 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..runtime import track_persist
+from ..runtime import track_checkpoint, track_persist
 
 RANK_SCALE = 10**12  # integer grid PageRank mass lives on
 DAMP_NUM, DAMP_DEN = 85, 100  # damping factor 0.85 as an exact rational
 
-
-CHECKPOINT_EVERY = 5  # truncate iterative lineage every k supersteps
-
-
-def _maybe_checkpoint(df: DataFrame, step: int, total: int, every: int) -> DataFrame:
-    """Truncate the evolving state frame's lineage every ``every`` steps.
-
-    Fixed 3-round loops carry a small plan, but at the 10-20 rounds a
-    100x graph needs, each superstep re-analyzes and re-optimizes the
-    whole accumulated chain — optimizer time and plan size grow
-    superlinearly with depth (the label_prop 2.8x step at 500k in
-    results/scale_probe.txt).  ``localCheckpoint(eager=False)``
-    materializes the RDD at the next action and cuts the logical plan
-    back to a leaf; non-eager so no extra job is spawned.  Local (not
-    reliable) checkpointing is the right trade here: state is |V| rows,
-    rebuilt from scratch in minutes if an executor dies; a production
-    run on preemptible nodes would use rdd.checkpoint to HDFS instead —
-    same call site, one flag of difference.
-    """
-    if every and (step + 1) % every == 0 and (step + 1) < total:
-        return df.localCheckpoint(eager=False)
-    return df
+# Every CHECKPOINT_EVERY supersteps (not after the last) the state frame's
+# lineage is cut.  Fixed 3-round loops carry a small plan, but at the 10-20
+# rounds a 100x graph needs, each superstep re-analyzes and re-optimizes the
+# whole accumulated chain -- optimizer time and plan size grow superlinearly
+# with depth (the label_prop 2.8x step at 500k in results/scale_probe.txt).
+# A non-eager local checkpoint materializes at the next action (no extra
+# job) and cuts the logical plan back to a leaf.  Local, not reliable,
+# checkpointing is the right trade here: state is |V| rows, rebuilt from
+# scratch in minutes if an executor dies.
+CHECKPOINT_EVERY = 5
 
 
-def pagerank(
-    edges: DataFrame,
-    n_iters: int = 3,
-    checkpoint_every: int = CHECKPOINT_EVERY,
-) -> DataFrame:
+def pagerank(edges: DataFrame, n_iters: int = 3) -> DataFrame:
     """Integer-grid PageRank over directed ``edges`` (columns src, dst).
 
     Contract: every node must appear as a src (symmetric/undirected edge
@@ -114,15 +98,12 @@ def pagerank(
                 ).alias("rank_q"),
             )
         )
-        ranks = _maybe_checkpoint(ranks, it, n_iters, checkpoint_every)
+        if (it + 1) % CHECKPOINT_EVERY == 0 and it + 1 < n_iters:
+            ranks = track_checkpoint(ranks)
     return ranks
 
 
-def label_propagation(
-    edges: DataFrame,
-    n_iters: int = 3,
-    checkpoint_every: int = CHECKPOINT_EVERY,
-) -> DataFrame:
+def label_propagation(edges: DataFrame, n_iters: int = 3) -> DataFrame:
     """Synchronous label-propagation community detection over symmetric
     ``edges`` (src, dst): labels start as node ids; each superstep every
     node adopts the most frequent label among its neighbors, ties broken
@@ -158,5 +139,6 @@ def label_propagation(
             )
             .select("node", (-F.col("m.neg_label")).cast("bigint").alias("label"))
         )
-        labels = _maybe_checkpoint(labels, it, n_iters, checkpoint_every)
+        if (it + 1) % CHECKPOINT_EVERY == 0 and it + 1 < n_iters:
+            labels = track_checkpoint(labels)
     return labels

@@ -63,9 +63,6 @@ def alpha_m(m: int) -> float:
     return 0.7213 / (1.0 + 1.079 / m)
 
 
-_alpha = alpha_m  # original name kept for callers
-
-
 def hll_bucket_rho_spark(value_expr: str, b: int) -> tuple[str, str, str]:
     """Spark SQL fragments (bucket, w, rho-from-w) for one HLL row -- the
     per-row part of the sketch, shared by the batch estimator and the
@@ -114,7 +111,7 @@ def hll_estimate(df: DataFrame, value_expr: str, b: int = 8) -> DataFrame:
         .join(regs, "bucket", "left")
         .select(F.coalesce("M", F.lit(0)).alias("M"))
     )
-    alpha = _alpha(m)
+    alpha = alpha_m(m)
     return all_regs.agg(
         F.expr(
             f"cast({alpha!r}D * {m} * {m} * cast(shiftleft(1L, 61) as double)"
@@ -419,7 +416,7 @@ def hll_estimate_duckdb(table_expr: str, value_expr: str, b: int = 8) -> str:
     m = 1 << b
     top = HASH_BITS - b
     h = hash64_sql_duckdb(value_expr)
-    alpha = _alpha(m)
+    alpha = alpha_m(m)
     return f"""(
   WITH hll_sel AS (
     SELECT ({h}) % {m} AS bucket, (({h}) >> {b}) AS w

@@ -37,7 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..runtime import track_persist
+from ..runtime import free, track_persist
 from ..tables import load_table
 from .registry import register
 
@@ -363,7 +363,7 @@ def kcenter_select(
         # 2M-vector probe tier would otherwise pin multi-GB of dead
         # copies until release_caches()).
         if prev_round is not None:
-            prev_round.unpersist()
+            free(prev_round)
         prev_round = cur
         picks.append((r, top["vec_id"], int(top["mind"])))
         center_qv = list(top["qv"])

@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.graph import DAMP_DEN, DAMP_NUM, RANK_SCALE, pagerank
-from ..runtime import track_persist
+from ..runtime import track_checkpoint, track_persist
 from ..tables import load_table
 from .registry import register
 
@@ -826,13 +826,12 @@ def graph_random_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).unionByName(
         eraw.select(F.col("b").alias("src"), F.col("a").alias("dst"))
     )
-    adj = (
-        edges.groupBy("src")
-        .agg(
+    adj = track_checkpoint(
+        edges.groupBy("src").agg(
             F.sort_array(F.collect_list("dst")).alias("nbrs"),
             F.count(F.lit(1)).cast("bigint").alias("deg"),
-        )
-        .localCheckpoint()
+        ),
+        eager=True,
     )
     walks = (
         edges.select("src")
@@ -1005,11 +1004,10 @@ def graph_betweenness_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # localCheckpoint, NOT persist: the checkpoint also cuts the
         # per-level lineage, which `seen` would otherwise carry forward.
-        dk = (
+        dk = track_checkpoint(
             cand.join(seen, ["src", "node"], "left_anti")
             .groupBy("src", "node")
             .agg(F.sum("sigma").cast("long").alias("sigma"))
-            .localCheckpoint(eager=False)
         )
         d.append(dk)
         seen = seen.unionAll(dk.select("src", "node"))
@@ -1033,7 +1031,7 @@ def graph_betweenness_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .alias("dq")
             )
         )
-        delta = (
+        delta = track_checkpoint(
             d[k]
             .join(contrib, ["src", "node"], "left")
             .select(
@@ -1042,7 +1040,6 @@ def graph_betweenness_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "sigma",
                 F.coalesce("dq", F.lit(0).cast("long")).alias("dq"),
             )
-            .localCheckpoint(eager=False)
         )
         parts.append(delta)
     allv = parts[0].select("node", "dq")

@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.hashing import hash64_sql_duckdb, hash64_sql_spark
-from ..runtime import scratch_dir, track_persist
+from ..runtime import scratch_dir, track_persist, track_view
 from ..tables import load_table
 from .registry import register
 
@@ -804,6 +804,7 @@ WHERE o.o_totalprice > (
 def subquery_orders_above_cust_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
     orders.createOrReplaceTempView("orders_sq")
+    track_view(spark, "orders_sq")
     return spark.sql(
         """
         SELECT o.o_orderkey, o.o_custkey,
@@ -835,6 +836,7 @@ GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())
 def agg_grouping_sets_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
     orders.createOrReplaceTempView("orders_gs")
+    track_view(spark, "orders_gs")
     return spark.sql(
         """
         SELECT o_orderstatus, o_orderpriority,

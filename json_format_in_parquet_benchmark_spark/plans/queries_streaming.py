@@ -35,13 +35,12 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..runtime import corpus_path, scoped_conf, scratch_dir, sf_tag, write_once
+from ..runtime import corpus_path, scoped_conf, scratch_dir, sf_tag, track_view, write_once
 from ..streaming.events_stream import (
     read_events_stream,
     sessionize_batch,
     sessionize_stream,
-    tumbling_event_counts,
-    tumbling_event_counts_simple,
+    window_event_counts,
 )
 from ..tables import load_table
 from .registry import register
@@ -101,6 +100,7 @@ def _run_to_memory(
             .option("checkpointLocation", ckpt)
             .start()
         )
+        track_view(spark, unique)
         q.awaitTermination()
     return spark.table(unique)
 
@@ -135,7 +135,7 @@ sessions AS (
 )
 """
 
-# DuckDB twin of streaming/events_stream.py::tumbling_event_counts.  Spark's
+# DuckDB twin of streaming/events_stream.py::window_event_counts.  Spark's
 # window('1 hour') is epoch-aligned, identical to date_trunc('hour') for
 # whole-hour durations.
 _TUMBLING_SQL = """
@@ -168,7 +168,7 @@ def _fmt_win_start(df: DataFrame) -> DataFrame:
 )
 def stream_tumbling_window_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events")
-    return _fmt_win_start(tumbling_event_counts(events, "1 hour"))
+    return _fmt_win_start(window_event_counts(events, "1 hour"))
 
 
 # Watermarked append-mode twin: a finite availableNow run ends with
@@ -209,7 +209,7 @@ WHERE epoch_ms(ws + INTERVAL 1 HOUR) <= wm.wm_ms
 def stream_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     events_dir = _staged_events(spark, sf_dir)
     stream = read_events_stream(spark, events_dir)
-    agg = tumbling_event_counts(stream, "1 hour", watermark="1 hour")
+    agg = window_event_counts(stream, "1 hour", watermark="1 hour")
     sink = _run_to_memory(agg, sf_dir, "tumbling_wm", "append")
     return _fmt_win_start(sink)
 
@@ -614,10 +614,8 @@ GROUP BY 1, 2
     tags=("streaming", "window", "aggregation"),
 )
 def stream_sliding_window_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming.events_stream import sliding_event_counts
-
     events = load_table(spark, sf_dir, "events")
-    return _fmt_win_start(sliding_event_counts(events, "2 hours", "30 minutes"))
+    return _fmt_win_start(window_event_counts(events, "2 hours", "30 minutes"))
 
 
 _SLIDING_WATERMARKED_SQL = f"""
@@ -655,11 +653,9 @@ WHERE (ws_us + {_SLIDE_K * _SLIDE_US}) // 1000 <= wm.wm_ms
     tags=("streaming", "window", "aggregation", "stateful", "watermark"),
 )
 def stream_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming.events_stream import sliding_event_counts
-
     events_dir = _staged_events(spark, sf_dir)
     stream = read_events_stream(spark, events_dir)
-    agg = sliding_event_counts(stream, "2 hours", "30 minutes", watermark="1 hour")
+    agg = window_event_counts(stream, "2 hours", "30 minutes", watermark="1 hour")
     sink = _run_to_memory(agg, sf_dir, "sliding_wm", "append")
     return _fmt_win_start(sink)
 
@@ -1026,7 +1022,7 @@ def stream_late_data_dropped(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(events_dir)
     )
-    agg = tumbling_event_counts_simple(stream, "1 hour", watermark="1 hour")
+    agg = window_event_counts(stream, "1 hour", watermark="1 hour")
     sink = _run_to_memory(agg, sf_dir, "late_drop", "append")
     from pyspark.sql import functions as F
 
@@ -1333,6 +1329,7 @@ def stream_pyds_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             .option("checkpointLocation", ckpt)
             .start()
         )
+        track_view(spark, name)
         deadline = time.time() + 300
         # a failed stream goes inactive; awaitTermination below raises its error
         while time.time() < deadline and q.isActive:

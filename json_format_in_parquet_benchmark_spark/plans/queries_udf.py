@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.text import tokens_duckdb
+from ..runtime import track_view
 from ..tables import load_table
 from .registry import register
 
@@ -95,6 +96,7 @@ def udtf_tokenize_positions(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark.udtf.register("jfipb_tokenize", Tokenize)
     docs = load_table(spark, sf_dir, "documents").where("doc_id < 50")
     docs.createOrReplaceTempView("docs_udtf")
+    track_view(spark, "docs_udtf")
     return spark.sql(
         "SELECT d.doc_id, t.token, t.pos"
         " FROM docs_udtf d, LATERAL jfipb_tokenize(d.text) t"
@@ -169,6 +171,7 @@ def udtf_event_streaks(spark: SparkSession, sf_dir: str) -> DataFrame:
     events.select("user_id", "event_type", "ts").createOrReplaceTempView(
         "events_streaks_v"
     )
+    track_view(spark, "events_streaks_v")
     return spark.sql(
         """
         SELECT * FROM jfipb_streaks(

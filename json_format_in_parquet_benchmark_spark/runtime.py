@@ -1,24 +1,29 @@
-"""Query runtime: the one home of tracked persists, query scopes, session
-SQL confs, scratch storage, plan capture and input corpus paths.
+"""Query runtime: the one home of the state a query pins, query scopes,
+session SQL confs, scratch storage, plan capture and input corpus paths.
 
 A persist inside a returned-lazy plan cannot be unpersisted before the
-caller materializes the result, so operators register each persisted
-intermediate here (:func:`track_persist`, or :func:`track_release` for
-blocks ``unpersist()`` cannot reach) and long-lived sessions free them
-later.  Every registered query builds inside :func:`query_scope`, which
-tags what the build tracks with the query's name:
+caller materializes the result, so everything a query pins is registered
+here and freed later: persisted frames (:func:`track_persist`), local
+checkpoints (:func:`track_checkpoint`) and session temp views, a memory
+sink's included (:func:`track_view`).  :func:`release_caches` frees them
+all; :func:`free` frees one tracked frame now, for loops that keep only
+their last rounds.  Every registered query builds inside
+:func:`query_scope`, which tags what the build tracks with the query's
+name:
 
-- only the OUTERMOST build frees other queries' caches -- a registered
+- only the OUTERMOST build frees other queries' state -- a registered
   query invoked from inside another (composed pipelines call sibling
   builders) must not free its caller's intermediates mid-build;
-- a query's OWN caches survive its rebuild, so bench.py's repeated
+- a query's OWN state survives its rebuild, so bench.py's repeated
   measured iterations stay warm via Spark's CacheManager;
 - the previous owner is restored on exit.
 
 So a long-lived consumer (the external driver runs every sampled query in
 one vanilla 1g-heap JVM and never releases anything) keeps at most one
-query's persisted intermediates live.  Spark's CacheManager matches by
-canonicalized plan, so re-running a query re-uses (not re-adds) an entry.
+query's pinned state live.  Spark's CacheManager matches by canonicalized
+plan, so re-running a query re-uses (not re-adds) an entry.  A released
+checkpoint cannot be recomputed, so a query's frame must be collected
+before another outermost query builds.
 
 The scope also ships the package to executor Python workers
 (:func:`session.ship_package`), so a query's Python kernels import in any
@@ -77,15 +82,15 @@ SESSION_PINS = {
     "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
 }
 
-# (owner, release) per tracked cache; owner is the registry query whose
-# build tracked it ("" outside any query scope).
-_TRACKED: list[tuple[str, Callable[[], None]]] = []
+# (owner, frame, release) per tracked entry: owner is the registry query
+# whose build tracked it ("" outside any query scope); frame is what
+# :func:`free` matches by identity (None for a view).
+_TRACKED: list[tuple[str, DataFrame | None, Callable[[], None]]] = []
 _owner = ""
 
 
-def track_release(release: Callable[[], None]) -> None:
-    """Register ``release`` to run when the current owner's caches go."""
-    _TRACKED.append((_owner, release))
+def _track(frame: DataFrame | None, release: Callable[[], None]) -> None:
+    _TRACKED.append((_owner, frame, release))
 
 
 def track_persist(df: DataFrame, storage_level=None) -> DataFrame:
@@ -98,38 +103,50 @@ def track_persist(df: DataFrame, storage_level=None) -> DataFrame:
         df.persist()
     else:
         df.persist(storage_level)
-    track_release(df.unpersist)
+    _track(df, df.unpersist)
     return df
 
 
-def local_checkpoint_release(df: DataFrame) -> Callable[[], None] | None:
-    """Release callable for the blocks behind a ``localCheckpoint`` frame.
+def track_checkpoint(df: DataFrame, eager: bool = False) -> DataFrame:
+    """``df.localCheckpoint(eager)``, tracked for :func:`release_caches`.
 
-    ``df.unpersist()`` is a NO-OP on a locally-checkpointed DataFrame: the
+    ``unpersist()`` is a no-op on a locally-checkpointed DataFrame: the
     blocks belong to the checkpointed *internal* RDD, not the CacheManager,
-    so they stay pinned in the block manager until session end.  The
-    analyzed plan of such a frame is a ``LogicalRDD`` whose ``rdd()``
-    accessor is the checkpointed RDD; the callable unpersists it
-    (non-blocking).  Local checkpoints are non-recomputable, so call it
-    only once no live lineage can reach the RDD.  Returns None if the Py4J
-    surface differs (the caller then keeps the bounded leak)."""
-    try:
-        plan = df._jdf.queryExecution().analyzed()
-        if not plan.getClass().getName().endswith("LogicalRDD"):
-            return None
-        jrdd = plan.rdd()
-    except Exception:
-        return None
-    return lambda: jrdd.unpersist(False)
+    so untracked they stay in the block manager until a driver GC lets
+    Spark's ContextCleaner find that RDD unreachable.  The analyzed plan of
+    the checkpointed frame is a ``LogicalRDD`` whose ``rdd()`` is that RDD;
+    the release unpersists it (non-blocking).  Local checkpoints are
+    non-recomputable: a frame that reads one fails once it is released."""
+    ckpt = df.localCheckpoint(eager=eager)
+    jrdd = ckpt._jdf.queryExecution().analyzed().rdd()
+    _track(ckpt, lambda: jrdd.unpersist(False))
+    return ckpt
+
+
+def track_view(spark: SparkSession, name: str) -> None:
+    """Track session temp view ``name`` (a memory sink's, or one a query's
+    SQL reads) to be dropped with the owner's other state.  A frame built
+    over the view holds its analyzed plan, so it still collects after the
+    drop."""
+    _track(None, lambda: spark.catalog.dropTempView(name))
+
+
+def free(df: DataFrame) -> None:
+    """Run tracked frame ``df``'s release now and drop it from the registry."""
+    hits = [t for t in _TRACKED if t[1] is df]
+    _TRACKED[:] = [t for t in _TRACKED if t[1] is not df]
+    for _, _, release in hits:
+        release()
 
 
 def _release(keep_owner: str = "") -> None:
     """Run every tracked release except those of ``keep_owner`` (idempotent)."""
-    kept: list[tuple[str, Callable[[], None]]] = []
+    kept = []
     while _TRACKED:
-        owner, release = _TRACKED.pop()
+        entry = _TRACKED.pop()
+        owner, _, release = entry
         if owner and owner == keep_owner:
-            kept.append((owner, release))
+            kept.append(entry)
             continue
         try:
             release()
@@ -139,7 +156,7 @@ def _release(keep_owner: str = "") -> None:
 
 
 def release_caches() -> None:
-    """Free every tracked cache (idempotent)."""
+    """Free every tracked persist, checkpoint and view (idempotent)."""
     _release()
 
 
@@ -167,7 +184,7 @@ def scoped_conf(spark: SparkSession, settings: dict[str, str]) -> Iterator[None]
 @contextmanager
 def query_scope(spark: SparkSession, name: str) -> Iterator[None]:
     """Build registry query ``name``: ship the package, pin
-    :data:`SESSION_PINS`, free other queries' caches when outermost, and own
+    :data:`SESSION_PINS`, free other queries' state when outermost, and own
     what the build tracks.  The pins are never restored: the returned plan
     is lazy and runs after the scope exits."""
     global _owner

@@ -15,5 +15,5 @@ from .events_stream import (  # noqa: F401
     read_events_stream,
     sessionize_batch,
     sessionize_stream,
-    tumbling_event_counts,
+    window_event_counts,
 )

@@ -83,67 +83,37 @@ def read_events_stream(
     return reader.parquet(events_dir)
 
 
-def tumbling_event_counts(
-    events: DataFrame, window_dur: str = "1 hour", watermark: str | None = None
+def window_event_counts(
+    events: DataFrame,
+    window_dur: str = "1 hour",
+    slide: str | None = None,
+    watermark: str | None = None,
 ) -> DataFrame:
-    """Tumbling-window counts + exact-decimal value sum per event_type.
+    """Epoch-aligned window counts per event_type, plus the exact-decimal
+    ``value`` sum when the input has a ``value`` column (a stream staged
+    with a pruned schema has none).
+
+    Windows tumble unless ``slide`` is given; then they hop, and every
+    event lands in duration/slide overlapping windows.  State is dur/slide
+    concurrent windows per (window, event_type) group -- a constant factor
+    over tumbling, still O(open windows), not O(stream).
 
     Works identically on a batch or streaming DataFrame; pass ``watermark``
     on the streaming side to bound state ("append" output becomes legal).
     """
     if watermark is not None:
         events = events.withWatermark("ts", watermark)
-    return (
-        events.groupBy(F.window("ts", window_dur).alias("win"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
+    aggs = [F.count(F.lit(1)).alias("n_events")]
+    if "value" in events.columns:
+        aggs.append(
             F.expr("cast(sum(cast(value as decimal(18,2))) as double)").alias(
                 "total_value"
-            ),
+            )
         )
-        .select(
-            F.col("win.start").alias("win_start"),
-            "event_type",
-            "n_events",
-            "total_value",
-        )
-    )
-
-
-def sliding_event_counts(
-    events: DataFrame,
-    window_dur: str = "2 hours",
-    slide: str = "30 minutes",
-    watermark: str | None = None,
-) -> DataFrame:
-    """Sliding (hopping) window counts + exact-decimal value sum per
-    event_type: every event lands in duration/slide overlapping windows
-    (epoch-aligned starts every ``slide``).
-
-    Works identically on a batch or streaming DataFrame; pass ``watermark``
-    on the streaming side to bound state.  State is dur/slide concurrent
-    windows per (window, event_type) group -- a constant factor over
-    tumbling, still O(open windows), not O(stream).
-    """
-    if watermark is not None:
-        events = events.withWatermark("ts", watermark)
-    return (
-        events.groupBy(
-            F.window("ts", window_dur, slide).alias("win"), "event_type"
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.expr("cast(sum(cast(value as decimal(18,2))) as double)").alias(
-                "total_value"
-            ),
-        )
-        .select(
-            F.col("win.start").alias("win_start"),
-            "event_type",
-            "n_events",
-            "total_value",
-        )
-    )
+    counts = events.groupBy(
+        F.window("ts", window_dur, slide).alias("win"), "event_type"
+    ).agg(*aggs)
+    return counts.select(F.col("win.start").alias("win_start"), *counts.columns[1:])
 
 
 def sessionize_batch(
@@ -263,21 +233,5 @@ def session_window_counts(
             F.unix_micros("win.start").alias("start_us"),
             F.unix_micros("win.end").alias("end_us"),
             "n_events",
-        )
-    )
-
-
-def tumbling_event_counts_simple(
-    events: DataFrame, window_dur: str = "1 hour", watermark: str | None = None
-) -> DataFrame:
-    """Count-only tumbling windows per event_type (no value column -- for
-    streams staged with a pruned schema)."""
-    if watermark is not None:
-        events = events.withWatermark("ts", watermark)
-    return (
-        events.groupBy(F.window("ts", window_dur).alias("win"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            F.col("win.start").alias("win_start"), "event_type", "n_events"
         )
     )

@@ -83,11 +83,19 @@ SRC_ID = (
     "     when id % 20 = 18 then id - 2 else id end as src_id"
 )
 SPAN_60D_US = 60 * 86_400_000_000
+# Split count of every synthesized and staged table: a constant, so the
+# staged files and every arm's rows do not depend on the host's core count
+# (4, the width staging took from a 4-core host's defaultParallelism).
+STAGE_PARTITIONS = 4
 
 
 def _h(arg: str, hexdigits: int = 15) -> str:
     """Portable pseudo-random bigint: the first hex digits of ``md5(arg)``."""
     return f"cast(conv(substr(md5({arg}), 1, {hexdigits}), 16, 10) as bigint)"
+
+
+def _range(spark: SparkSession, n: int) -> DataFrame:
+    return spark.range(n, numPartitions=STAGE_PARTITIONS)
 
 
 def n_embeddings(n: int) -> int:
@@ -100,7 +108,7 @@ def n_embeddings(n: int) -> int:
 def _documents(spark: SparkSession, n: int) -> DataFrame:
     """Planted-duplicate documents: 20..50 tokens chosen by the SOURCE id."""
     return (
-        spark.range(n)
+        _range(spark, n)
         .selectExpr("id as doc_id", SRC_ID, "cast(id % 20 = 18 as int) as mutate")
         .selectExpr(
             "doc_id",
@@ -118,7 +126,7 @@ def _text_documents(spark: SparkSession, n: int) -> DataFrame:
         f" when {h} % 97 = {i} then '{w}'"
         for i, w in enumerate(("spark", "merge", "vector", "window"))
     )
-    return spark.range(n).selectExpr(
+    return _range(spark, n).selectExpr(
         "id as doc_id",
         "concat_ws(' ', transform(sequence(1, 20 + cast(id % 31 as int)), "
         f" i -> case{terms} else concat('w', {h} % {DOCGEN_VOCAB}) end)) as text",
@@ -131,7 +139,7 @@ def _embeddings(spark: SparkSession, n: int) -> DataFrame:
     0.01 (cosine stays ~1)."""
     h = _h("concat(src_id, '#', j)")
     return (
-        spark.range(n_embeddings(n))
+        _range(spark, n_embeddings(n))
         .selectExpr(
             "id as vec_id",
             "case when id % 20 = 19 then id - 1 else id end as src_id",
@@ -149,7 +157,7 @@ def _embeddings(spark: SparkSession, n: int) -> DataFrame:
 
 def _graph_edges(spark: SparkSession, n: int) -> DataFrame:
     """Symmetric 4-regular graph over n nodes."""
-    raw = spark.range(n).selectExpr(
+    raw = _range(spark, n).selectExpr(
         "id as a", f"(id * 7 + 1) % {n} as b", f"(id * 13 + 3) % {n} as c"
     )
     return (
@@ -163,11 +171,11 @@ def _graph_edges(spark: SparkSession, n: int) -> DataFrame:
 def _cc_edges(spark: SparkSession, n: int) -> DataFrame:
     """10-node components (ring + star chords, diameter 2) over 5n nodes:
     ~10x the minhash pair graph, every node's rep its block start."""
-    ring = spark.range(n * 5).selectExpr(
+    ring = _range(spark, n * 5).selectExpr(
         "id as doc_a", "case when id % 10 < 9 then id + 1 else id - 9 end as doc_b"
     )
     star = (
-        spark.range(n * 5)
+        _range(spark, n * 5)
         .where("id % 10 >= 2")
         .selectExpr("id as doc_a", "id - id % 10 as doc_b")
     )
@@ -186,7 +194,7 @@ def _sweep_events(spark: SparkSession, n: int) -> DataFrame:
     """Evenly spaced events over 60 days with md5 sub-second jitter (the
     spacing is computed in Python: id * span overflows int64 past ~1.8M
     rows under ANSI mode)."""
-    return spark.range(n).selectExpr(
+    return _range(spark, n).selectExpr(
         "id as event_id",
         f"{_user(n)} as user_id",
         f"timestamp_micros(id * {max(SPAN_60D_US // n, 1)}L"
@@ -198,7 +206,7 @@ def _arrival_events(spark: SparkSession, n: int) -> DataFrame:
     """Uniform random arrival times over 60 days: per-user gaps spread over
     decades of magnitude, like the real events table (evenly spaced ids
     make every gap equal and collapse the two-phase bucketing)."""
-    return spark.range(n).selectExpr(
+    return _range(spark, n).selectExpr(
         "id as event_id",
         f"{_user(n)} as user_id",
         f"timestamp_micros({_h(_salted('t:'), 14)} % {SPAN_60D_US}L) as ts",
@@ -207,7 +215,7 @@ def _arrival_events(spark: SparkSession, n: int) -> DataFrame:
 
 def _sink_events(spark: SparkSession, n: int) -> DataFrame:
     """Full-schema events for the sink arms."""
-    return spark.range(n).selectExpr(
+    return _range(spark, n).selectExpr(
         "id as event_id",
         f"{_user(n)} as user_id",
         f"timestamp_micros(1700000000000000L + {_h(_salted('t:'), 14)}"
@@ -220,21 +228,21 @@ def _sink_events(spark: SparkSession, n: int) -> DataFrame:
 
 def _trading_lineitem(spark: SparkSession, n: int) -> DataFrame:
     """Key columns of a trading graph: n lines, n/10 orders, n/100 suppliers."""
-    return spark.range(n).selectExpr(
+    return _range(spark, n).selectExpr(
         f"{_h(_salted('o:'))} % {max(n // 10, 10)} as l_orderkey",
         f"{_h(_salted('s:'))} % {max(n // 100, 10)} as l_suppkey",
     )
 
 
 def _trading_orders(spark: SparkSession, n: int) -> DataFrame:
-    return spark.range(max(n // 10, 10)).selectExpr(
+    return _range(spark, max(n // 10, 10)).selectExpr(
         "id as o_orderkey", f"{_h(_salted('c:'))} % {max(n // 20, 25)} as o_custkey"
     )
 
 
 def _sketch_lineitem(spark: SparkSession, n: int) -> DataFrame:
     """The three key columns the NDV estimators read (~4 lines per order)."""
-    return spark.range(n).selectExpr(
+    return _range(spark, n).selectExpr(
         "id div 4 as l_orderkey",
         f"{_h(_salted('p:'), 12)} % {max(n // 10, 100)} as l_partkey",
         "cast(id % 4 + 1 as int) as l_linenumber",
@@ -242,7 +250,7 @@ def _sketch_lineitem(spark: SparkSession, n: int) -> DataFrame:
 
 
 def _pareto_lineitem(spark: SparkSession, n: int) -> DataFrame:
-    return spark.range(n).selectExpr(
+    return _range(spark, n).selectExpr(
         "id div 6 as l_partkey",
         f"cast(900 + {_h(_salted('e:'), 12)} % 5000000 as double) / 100.0"
         " as l_extendedprice",
@@ -254,7 +262,7 @@ def _rfm_orders(spark: SparkSession, n: int) -> DataFrame:
     """Orders over 1992-1998 like TPC-H, ~20 per customer."""
     span_7y_us = 7 * 365 * 86_400_000_000
     base_us = 694_224_000_000_000  # 1992-01-01 UTC
-    return spark.range(n).selectExpr(
+    return _range(spark, n).selectExpr(
         "id as o_orderkey",
         f"{_h(_salted('c:'))} % {max(n // 20, 100)} as o_custkey",
         f"timestamp_micros({base_us}L + {_h(_salted('d:'), 14)} % {span_7y_us}L)"
@@ -266,7 +274,7 @@ def _rfm_orders(spark: SparkSession, n: int) -> DataFrame:
 
 def _json_docs(spark: SparkSession, n: int) -> DataFrame:
     """One small JSON document per row, stored as a plain string."""
-    return spark.range(n).selectExpr(
+    return _range(spark, n).selectExpr(
         "concat('{\"k\": ', id % 1000000, ', \"name\": \"evt_', id % 97,"
         " '\", \"pad\": \"', substr(md5(cast(id as string)), 1, 16), '\"}') as doc"
     )
@@ -316,7 +324,7 @@ def sf_dir(workdir: str, key: str, n: int) -> str:
 def stage(spark: SparkSession, workdir: str, key: str, n: int) -> None:
     """Synthesize table ``key`` at size n and write it under its sf_dir."""
     t = TABLES[key]
-    df = t.synth(spark, n).repartition(spark.sparkContext.defaultParallelism)
+    df = t.synth(spark, n).repartition(STAGE_PARTITIONS)
     path = table_path(sf_dir(workdir, key, n), t.name)
     if t.fmt:
         get_format(t.fmt).flush(df, path)
@@ -350,7 +358,8 @@ def _planted_recall(spark: SparkSession, sf: str, n: int) -> int:
     scale?  Truth is structural (19s copy 16s, 18s copy 16s one token off,
     so 18 and 19 are near-dups too); returns the truth size."""
     docs = _read(spark, sf, "documents")
-    base = spark.range(n).selectExpr("id as doc_id", SRC_ID)
+    base = _range(spark, n).selectExpr("id as doc_id", SRC_ID)
+    # Filters over a range: each detector's join recomputes it, unpinned.
     truth = (
         base.where("doc_id % 20 = 19")
         .selectExpr("src_id as doc_a", "doc_id as doc_b", "'exact' as kind")
@@ -364,7 +373,7 @@ def _planted_recall(spark: SparkSession, sf: str, n: int) -> int:
                 "doc_id as doc_a", "doc_id + 1 as doc_b", "'near' as kind"
             )
         )
-    ).persist()
+    )
     n_truth = truth.count()
     for det, pairs in (
         ("minhash_lsh", lambda: dedup.minhash_lsh_pairs(docs, "text", "doc_id")),
@@ -410,7 +419,6 @@ def _planted_recall(spark: SparkSession, sf: str, n: int) -> int:
                 flush=True,
             )
         release_caches()
-    truth.unpersist()
     return n_truth
 
 

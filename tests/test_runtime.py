@@ -22,6 +22,8 @@ from pyspark.sql import functions as F
 from conftest import assert_oracle_match
 from json_format_in_parquet_benchmark_spark import runtime, session
 from json_format_in_parquet_benchmark_spark.operators.dedup import SPREAD_PARTITIONS, _spread
+from json_format_in_parquet_benchmark_spark.operators.graph import CHECKPOINT_EVERY, pagerank
+from json_format_in_parquet_benchmark_spark.plans.queries_streaming import _run_to_memory
 from json_format_in_parquet_benchmark_spark.plans.registry import REGISTRY, register
 from json_format_in_parquet_benchmark_spark.runtime import (
     query_scope,
@@ -91,11 +93,36 @@ def scoped_queries(spark):
         REGISTRY.pop(name, None)
 
 
-def test_building_another_query_frees_previous_querys_caches(spark, scoped_queries):
+def _session_pins(spark) -> tuple[set[int], set[str]]:
+    """(ids of the RDDs holding cached partitions, temp view names)."""
+    rdds = {info.id() for info in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+    views = {t.name for t in spark.catalog.listTables() if t.isTemporary}
+    return rdds, views
+
+
+def _pin_checkpoint_and_sink(spark, work_dir: str) -> None:
+    """Collect a pagerank long enough to cut its lineage once (a local
+    checkpoint) and a stream run into a memory sink (a view)."""
+    ring = spark.range(8, numPartitions=1).selectExpr("id as src", "(id + 1) % 8 as dst")
+    ranks = pagerank(
+        ring.unionByName(ring.selectExpr("dst as src", "src as dst")),
+        n_iters=CHECKPOINT_EVERY + 1,
+    )
+    rows = os.path.join(work_dir, "rows")
+    if not os.path.isdir(rows):
+        spark.range(4, numPartitions=1).write.parquet(rows)
+    stream = spark.readStream.schema("id long").parquet(rows)
+    sink = _run_to_memory(stream, work_dir, "pin_probe", "append")
+    for df in (ranks, sink):
+        df.collect()
+
+
+def test_building_another_query_frees_previous_querys_caches(spark, scoped_queries, tmp_path):
     frames = {}
 
     def build_a(spark, sf_dir):
         frames["a"] = track_persist(spark.range(10).selectExpr("id * 2 as x"))
+        _pin_checkpoint_and_sink(spark, str(tmp_path))
         return frames["a"]
 
     def build_b(spark, sf_dir):
@@ -103,26 +130,43 @@ def test_building_another_query_frees_previous_querys_caches(spark, scoped_queri
         return frames["b"]
 
     query_a, query_b = scoped_queries(build_a), scoped_queries(build_b)
+    rdds, views = _session_pins(spark)
     query_a(spark, "")
     assert _cached(frames["a"])
+    now_rdds, now_views = _session_pins(spark)
+    held_rdds, held_views = now_rdds - rdds, now_views - views
+    # pagerank's persisted edges and its checkpoint; the sink's view
+    assert len(held_rdds) >= 2 and len(held_views) == 1
     query_b(spark, "")
     assert not _cached(frames["a"])
     assert _cached(frames["b"])
+    now_rdds, now_views = _session_pins(spark)
+    assert not held_rdds & now_rdds
+    assert not held_views & now_views
 
 
-def test_rebuilding_a_query_keeps_its_own_caches(spark, scoped_queries):
+def test_rebuilding_a_query_keeps_its_own_caches(spark, scoped_queries, tmp_path):
     frames = []
 
     def build_a(spark, sf_dir):
         frames.append(track_persist(spark.range(10).selectExpr("id * 5 as x")))
+        _pin_checkpoint_and_sink(spark, str(tmp_path))
         return frames[-1]
 
     query_a = scoped_queries(build_a)
+    rdds, views = _session_pins(spark)
     query_a(spark, "")
+    first_rdds, first_views = _session_pins(spark)
     query_a(spark, "")
     assert all(_cached(df) for df in frames)
+    now_rdds, now_views = _session_pins(spark)
+    assert first_rdds <= now_rdds and first_views <= now_views
+    assert len(now_views - views) == 2  # one sink per build
     release_caches()
     assert not any(_cached(df) for df in frames)
+    now_rdds, now_views = _session_pins(spark)
+    assert not now_rdds - rdds
+    assert not now_views - views
 
 
 def test_nested_registered_query_keeps_callers_caches(spark, scoped_queries):

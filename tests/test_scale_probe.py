@@ -46,7 +46,7 @@ class _Recorder:
     def __init__(self):
         self.exprs: list[str] = []
 
-    def range(self, n):
+    def range(self, n, numPartitions=None):
         return self
 
     def selectExpr(self, *exprs):

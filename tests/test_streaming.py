@@ -18,7 +18,7 @@ from json_format_in_parquet_benchmark_spark.runtime import scoped_conf
 from json_format_in_parquet_benchmark_spark.streaming.events_stream import (
     EVENTS_SCHEMA,
     sessionize_batch,
-    tumbling_event_counts,
+    window_event_counts,
 )
 from json_format_in_parquet_benchmark_spark.tables import load_table
 
@@ -43,6 +43,24 @@ def _oracle(duck, name):
 def test_streaming_queries_match_oracle(spark, duck, sf_dir, name):
     df = REGISTRY[name].fn(spark, sf_dir)
     assert_oracle_match(df, _oracle(duck, name), name)
+
+
+def test_stream_frame_collects_after_another_build_drops_its_view(spark, duck, sf_dir):
+    """A stream query returns its memory sink's view as a frame, and the
+    next outermost query build drops that view; the frame holds its
+    analyzed plan, so collecting it afterwards still gives the oracle's
+    rows."""
+
+    def views():
+        return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+    before = views()
+    sink = REGISTRY["stream_tumbling_window"].fn(spark, sf_dir)
+    held = views() - before
+    assert len(held) == 1
+    REGISTRY["stream_tumbling_window_batch"].fn(spark, sf_dir)
+    assert not held & views()
+    assert_oracle_match(sink, _oracle(duck, "stream_tumbling_window"), "stream_tumbling_window")
 
 
 def test_stream_sessionize_matches_batch_minus_open(spark, sf_dir):
@@ -123,7 +141,7 @@ def test_watermark_drops_late_rows(spark, tmp_path):
         .option("latestFirst", "false")
         .parquet(in_dir)
     )
-    agg = tumbling_event_counts(stream, "1 hour", watermark="1 hour")
+    agg = window_event_counts(stream, "1 hour", watermark="1 hour")
     name = f"late_{int(time.time() * 1000) % 10**9}"
     q = (
         agg.writeStream.format("memory")
@@ -246,10 +264,6 @@ def test_stream_sliding_matches_batch_minus_open(spark, sf_dir):
     """The watermarked sliding-window stream must emit exactly the batch
     sliding windows whose END is at or below the final watermark
     (max event time - 1h, at ms precision)."""
-    from json_format_in_parquet_benchmark_spark.streaming.events_stream import (
-        sliding_event_counts,
-    )
-
     stream_out = REGISTRY["stream_sliding_window"].fn(spark, sf_dir)
     events = load_table(spark, sf_dir, "events")
     wm_ms = (
@@ -257,7 +271,7 @@ def test_stream_sliding_matches_batch_minus_open(spark, sf_dir):
             (F.expr("unix_micros(max(ts)) div 1000") - 3_600_000).alias("wm")
         ).first()[0]
     )
-    batch = sliding_event_counts(events, "2 hours", "30 minutes")
+    batch = window_event_counts(events, "2 hours", "30 minutes")
     expected = batch.where(
         F.expr("unix_micros(win_start + interval 2 hours) div 1000")
         <= F.lit(wm_ms)
@@ -280,9 +294,6 @@ def test_late_data_actually_dropped_by_watermark(spark, sf_dir, tmp_path):
     from json_format_in_parquet_benchmark_spark.plans.queries_streaming import (
         _staged_events_late_first,
     )
-    from json_format_in_parquet_benchmark_spark.streaming.events_stream import (
-        tumbling_event_counts_simple,
-    )
 
     d = _staged_events_late_first(spark, sf_dir)
     stream = (
@@ -290,7 +301,7 @@ def test_late_data_actually_dropped_by_watermark(spark, sf_dir, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(d)
     )
-    agg = tumbling_event_counts_simple(stream, "1 hour", watermark="1 hour")
+    agg = window_event_counts(stream, "1 hour", watermark="1 hour")
     ckpt = str(tmp_path / "ckpt")
     q = (
         agg.writeStream.format("memory")
